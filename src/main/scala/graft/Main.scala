@@ -195,7 +195,7 @@ object Main {
         "DESC", "ASC", "NULLS", "FIRST", "LAST", "BETWEEN", "IN", "LIKE")
       val tables = graft.engine.Engine.tableNames ++ Seq("types", "test")
       val fns = graft.functions.Registry.builders.map(_._1) ++
-        Seq("sum_custom", "sum_cudarc", "sum_coercing", "sum_cubecl")
+        graft.udaf.Udafs.sums.map(_._1)
       (kw ++ tables ++ fns).distinct.asJava
     }
     val reader = LineReaderBuilder.builder()

@@ -10,8 +10,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Here the same responsibilities are: build a local SparkSession with
   * scale-appropriate defaults (AQE on, shuffle partitions sized to the
   * machine, UTC timezone), register the seeded `types` view, optionally
-  * register the testdata parquet tables as views, and register the custom
-  * aggregate functions (`sum_custom`, `sum_coercing`).
+  * register the testdata parquet tables as views, and register the 32-bit
+  * sum aggregates (one class in two modes, [[graft.udaf.Udafs]]).
   *
   * All SQL surface beyond the custom aggregates is inherited from Catalyst,
   * exactly as the reference inherits DataFusion's default SQL surface via

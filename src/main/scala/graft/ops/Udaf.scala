@@ -52,21 +52,15 @@ object Udaf {
 
     // the reference's headline benchmark (README.md:57-75): the sum trio
     // over a 1,000,000-row `types` table — built-in sum vs both custom
-    // aggregates. Oracle-checked since r11 (r10 verdict task 4): Verify
-    // dumps the seeded table to parquet and DuckDB re-aggregates the
-    // same float32 column. builtin_sum compares EXACTLY (double
-    // accumulation both sides, round 1); the two 32-bit custom sums are
-    // inherently merge-order-nondeterministic at the f32 ulp scale
-    // (64 partials merged in task-arrival order), so they are checked
-    // as error-bound BOOLEANS: |f32 sum − double sum| < 64, far above
-    // the realistic reorder noise (~3: per-partition worst case
-    // 15625·ulp(7812)/2 ≈ 1.9, 64-way merge ≤ 64·ulp(5e5)/2 ≈ 2) and
-    // far below any real aggregation bug (a dropped partition is
-    // ~7800 off, a broken coercion ~5·10⁵ off).
-    // Timing provenance: the r9 0.43s-vs-r8 0.177s drift was bisected in
-    // r10 to the MACHINE window, not code — the unchanged r8 binary
-    // re-measures 0.30-0.32s today while this code measures ~0.26-0.28s
-    // (COVERAGE.md "Bench provenance notes" has the full decomposition).
+    // aggregates. Verify dumps the seeded table to parquet and DuckDB
+    // re-aggregates the same float32 column. builtin_sum compares EXACTLY
+    // (double accumulation both sides, round 1); the 32-bit sums are
+    // checked as BOOLEANS, |f32 sum − double sum| < 64. The table scans
+    // in one task, so each is one sequential f32 accumulation, fixed for
+    // the seeded table. Its error is a random walk of 10⁶ roundings of at
+    // most ulp(5e5)/2 = 1/64: rms ≈ √10⁶·(1/32)/√12 ≈ 9; measured 0.145
+    // for both. 64 stays far below a real bug (a dropped 15,625-row
+    // generation range is ~7800 off, a broken coercion ~5·10⁵ off).
     "q_types_1m_trio" -> ((s, _) => {
       withUdafs(s)
       graft.engine.TypesTable.generate(s, 1000000L, seed = 42)

@@ -1,89 +1,65 @@
 package graft.udaf
 
-import org.apache.spark.sql.{Column, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.catalyst.dsl.expressions._
-import org.apache.spark.sql.catalyst.expressions.{Add, AttributeReference, Cast, Coalesce, EvalMode, Expression, Literal}
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Add, AttributeReference, Cast, Coalesce, EvalMode, Expression, ImplicitCastInputTypes, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
-/** `sum_custom(x) -> Float32` — same observable semantics as the
-  * reference's `sum_cudarc` UDAF (reference: src/cudarc_sum_udaf.rs):
+/** The reference's two 32-bit sum UDAFs, one aggregate in two modes.
+  * Both return Float32 (Spark's built-in `sum` widens to Double), skip
+  * nulls, and give 0.0f, not NULL, over zero rows
+  * (src/cubecl_sum_udaf.rs:105,207-209).
+  *  - `Float32` — `sum_custom`, the reference's `sum_cudarc`: the one
+  *    argument is cast to Float32 whatever its numeric type
+  *    (src/cudarc_sum_udaf.rs:71), by the analyzer's implicit cast to a
+  *    FLOAT parameter; partials merge by addition (:154-160).
+  *  - `Coercing` — `sum_coercing`, the reference's `sum_cubecl`: signed
+  *    ints sum as wrapping Int32, floats as Float32, anything else is
+  *    rejected (coerce_types, src/cubecl_sum_udaf.rs:69-75); the result
+  *    is cast to Float32 (:195-199). Spark has no unsigned types (SURVEY
+  *    §2.4 deviation 3).
   *
-  *  - exactly one argument, coerced to Float32 regardless of the input's
-  *    numeric type (coerce_types, src/cudarc_sum_udaf.rs:71);
-  *  - returns Float32 (src/cudarc_sum_udaf.rs:45-47) — unlike Spark's
-  *    built-in `sum`, which widens FloatType to DoubleType;
-  *  - the partial/final protocol is partial sums merged by addition
-  *    (state()/merge_batch, src/cudarc_sum_udaf.rs:154-160), which is
-  *    exactly the Aggregator reduce/merge split;
-  *  - over zero rows the result is 0.0f, NOT NULL (the accumulator starts
-  *    at 0.0 and evaluate returns it; see the cubecl twin at
-  *    src/cubecl_sum_udaf.rs:105,207-209).
+  * A DeclarativeAggregate (pure Catalyst expressions), so the whole
+  * aggregate, partial aggregation included, runs inside whole-stage
+  * codegen with no buffer serialization; a typed `Aggregator` can express
+  * neither that nor the type-dependent buffer width.
   *
-  * The reference's GPU offload (host→device copy + block-reduction kernel,
-  * src/sum.cu:18-29) is an engine detail, not an observable semantic; the
-  * Aggregator's reduce/merge is the Spark-native equivalent of the
-  * batchwise partial reduction. Float32 accumulation order differs from the
-  * 256-thread tree reduction, so tests compare with tolerance.
+  * The reference's GPU offload (src/sum.cu:18-29) is not observable, but
+  * its tree reduction orders the Float32 adds differently, so tests
+  * compare with tolerance. Its merge_batch skips zero-valued partials
+  * (src/cubecl_sum_udaf.rs:222-232), value-neutral for a sum (SURVEY §7
+  * deviation 4).
   */
-class SumCustomAgg extends Aggregator[java.lang.Float, Float, Float] {
-  override def zero: Float = 0.0f
-  override def reduce(b: Float, a: java.lang.Float): Float =
-    if (a == null) b else b + a.floatValue()
-  override def merge(b1: Float, b2: Float): Float = b1 + b2
-  override def finish(reduction: Float): Float = reduction
-  override def bufferEncoder: Encoder[Float] = Encoders.scalaFloat
-  override def outputEncoder: Encoder[Float] = Encoders.scalaFloat
-}
+case class SumCoercingAgg(
+    child: Expression,
+    name: String = "sum_coercing",
+    mode: SumCoercingAgg.Mode = SumCoercingAgg.Coercing)
+    extends DeclarativeAggregate with ImplicitCastInputTypes {
 
-/** `sum_coercing(x) -> Float32` — same observable semantics as the
-  * reference's `sum_cubecl` UDAF (reference: src/cubecl_sum_udaf.rs):
-  *
-  *  - coerce_types trichotomy (src/cubecl_sum_udaf.rs:69-75): signed ints
-  *    sum as Int32, unsigned ints as UInt32, floats as Float32; anything
-  *    else is a type error;
-  *  - the on-device sum therefore happens at 32-bit width, and the final
-  *    result is cast to Float32 (src/cubecl_sum_udaf.rs:195-199);
-  *  - empty input yields 0.0f, not NULL (src/cubecl_sum_udaf.rs:105,207-209).
-  *
-  * Spark has no unsigned types (SURVEY §2.4 deviation 3): unsigned inputs
-  * cannot occur; signed integer inputs take the Int32 path with Java 32-bit
-  * wraparound, matching the reference's i32 device arithmetic.
-  *
-  * Implemented as a DeclarativeAggregate (pure Catalyst expressions) so the
-  * whole aggregate stays inside whole-stage codegen — the type-dependent
-  * buffer width cannot be expressed with a single `Aggregator`, and a
-  * declarative form beats an imperative buffer at 100 TB because partial
-  * aggregation happens map-side in generated code with no serialization.
-  *
-  * The reference's merge_batch skips zero-valued partial states
-  * (src/cubecl_sum_udaf.rs:222-232); for sum that quirk is value-neutral,
-  * so plain addition here is observationally equivalent (SURVEY §7
-  * deviation 4 — documented, not replicated).
-  */
-case class SumCoercingAgg(child: Expression, name: String = "sum_coercing")
-    extends DeclarativeAggregate {
+  // Float32 mode asks the analyzer for a FLOAT argument; Coercing mode
+  // declares no input type, so nothing is cast, and types it below
+  override def inputTypes: Seq[DataType] =
+    if (mode == SumCoercingAgg.Float32) Seq(FloatType) else Nil
 
   // lazy: child.dataType is unavailable until the plan is resolved
-  private lazy val sumType: DataType = child.dataType match {
-    case FloatType | DoubleType => FloatType
-    case ByteType | ShortType | IntegerType | LongType => IntegerType
-    case NullType => FloatType
-    case other =>
+  private lazy val sumType: DataType = (mode, child.dataType) match {
+    case (SumCoercingAgg.Float32, _) => FloatType
+    case (_, FloatType | DoubleType) => FloatType
+    case (_, ByteType | ShortType | IntegerType | LongType) => IntegerType
+    case (_, NullType) => FloatType
+    case (_, other) =>
       throw new IllegalArgumentException(
         s"$name: unsupported input type $other (reference coerce_types rejects it)")
   }
 
   private lazy val sum = AttributeReference("sum", sumType, nullable = false)()
 
+  private lazy val zero = Literal.default(sumType)
+
   override lazy val aggBufferAttributes: Seq[AttributeReference] = sum :: Nil
 
-  override lazy val initialValues: Seq[Expression] = Seq(sumType match {
-    case FloatType => Literal(0.0f)
-    case IntegerType => Literal(0)
-  })
+  override lazy val initialValues: Seq[Expression] = Seq(zero)
 
   // LEGACY eval mode: the reference's device arithmetic is wrapping i32
   // (src/sum.cu adds in 32-bit); ANSI Add would throw on overflow instead
@@ -91,11 +67,7 @@ case class SumCoercingAgg(child: Expression, name: String = "sum_coercing")
     Add(l, r, EvalMode.LEGACY)
 
   override lazy val updateExpressions: Seq[Expression] = Seq(
-    wrapAdd(sum, Coalesce(Seq(Cast(child, sumType, None, EvalMode.LEGACY), sumType match {
-      case FloatType => Literal(0.0f)
-      case IntegerType => Literal(0)
-    })))
-  )
+    wrapAdd(sum, Coalesce(Seq(Cast(child, sumType, None, EvalMode.LEGACY), zero))))
 
   override lazy val mergeExpressions: Seq[Expression] = Seq(wrapAdd(sum.left, sum.right))
 
@@ -107,39 +79,49 @@ case class SumCoercingAgg(child: Expression, name: String = "sum_coercing")
   override def children: Seq[Expression] = child :: Nil
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
     copy(child = newChildren.head)
-  // registered under both our name and the reference's (`sum_cubecl`);
-  // carrying the invoked name keeps REPL output headers verbatim
+  // registered under both our name and the reference's; carrying the
+  // invoked name keeps REPL output headers verbatim
   override def prettyName: String = name
+  // plans print the name, which implies the mode
+  override protected def stringArgs: Iterator[Any] = Iterator(child, name)
+}
+
+object SumCoercingAgg {
+  sealed trait Mode
+  case object Float32 extends Mode
+  case object Coercing extends Mode
 }
 
 object Udafs {
 
-  /** Register both custom aggregates in the session's function registry,
+  /** Every 32-bit sum name and its mode: our descriptive names and the
+    * reference's published ones (`sum_cudarc` / `sum_cubecl`, reference:
+    * src/lib.rs:53-55), so the README's REPL transcript (reference:
+    * README.md:71-75) replays verbatim. */
+  val sums: Seq[(String, SumCoercingAgg.Mode)] = Seq(
+    "sum_custom" -> SumCoercingAgg.Float32,
+    "sum_cudarc" -> SumCoercingAgg.Float32,
+    "sum_coercing" -> SumCoercingAgg.Coercing,
+    "sum_cubecl" -> SumCoercingAgg.Coercing)
+
+  /** Register every name in [[sums]] in the session's function registry,
     * the analogue of `ctx.register_udaf(...)` (reference: src/lib.rs:53-55).
-    * Each is registered under BOTH our descriptive name and the
-    * reference's published name (`sum_cudarc` / `sum_cubecl`,
-    * reference: src/lib.rs:53-55), so the README's REPL transcript
-    * (reference: README.md:71-75) replays verbatim. */
+    * The builder returns the bare aggregate function, so the analyzer
+    * wraps it with the call's DISTINCT and FILTER like a built-in. */
   def registerAll(spark: SparkSession): Unit = {
-    Seq("sum_custom", "sum_cudarc").foreach { name =>
-      spark.udf.register(name, functions.udaf(new SumCustomAgg, Encoders.FLOAT))
-    }
-    Seq("sum_coercing", "sum_cubecl").foreach { name =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name,
-        exprs => SumCoercingAgg(exprs.head, name).toAggregateExpression(),
-        "scala_udf")
+    sums.foreach { case (name, mode) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, {
+        case Seq(c) => SumCoercingAgg(c, name, mode)
+        case _ => throw new IllegalArgumentException(s"$name takes exactly one argument")
+      }, "scala_udf")
     }
     graft.functions.Registry.registerAll(spark)
   }
 
   /** Column-API forms. */
-  def sum_custom(c: Column): Column = {
-    val agg = functions.udaf(new SumCustomAgg, Encoders.FLOAT)
-    agg(c)
-  }
-  def sum_coercing(c: Column): Column = {
-    import org.apache.spark.sql.graftbridge.Bridge
+  def sum_custom(c: Column): Column =
+    Bridge.column(SumCoercingAgg(Bridge.expression(c), "sum_custom", SumCoercingAgg.Float32)
+      .toAggregateExpression())
+  def sum_coercing(c: Column): Column =
     Bridge.column(SumCoercingAgg(Bridge.expression(c)).toAggregateExpression())
-  }
 }

@@ -184,8 +184,9 @@ class PlanHygieneSpec extends SparkSpecBase {
     //    only q_join_cross builds one on purpose, at its tiny scale;
     //    BroadcastNestedLoopJoin is NOT flagged (its build side is
     //    small by construction — seeds, admission tables, non-equi dims)
-    //  - ScalaUDF (opaque to codegen and to every optimizer rule; the
-    //    engine's position is native expressions only)
+    //  - ScalaUDF and ScalaAggregator (opaque to codegen and to every
+    //    optimizer rule; the engine's position is native expressions
+    //    only — the 32-bit sums are declarative aggregates)
     //  - Window with an EMPTY partition spec (the whole frame in one
     //    sort task — the r8 pipe_curriculum scale bug class); the one
     //    sanctioned instance is q_skew_report's rank over an
@@ -203,7 +204,14 @@ class PlanHygieneSpec extends SparkSpecBase {
             .explainString(org.apache.spark.sql.execution.FormattedMode)
           dump ++= s"===== $name =====\n${normalizePlan(p)}\n"
           val cart = !intentionalCartesian(name) && p.contains("CartesianProduct")
-          val udf = p.contains("ScalaUDF")
+          // found by node class: a typed Aggregator prints under its
+          // own class name, so a text search of the plan misses it
+          val udf = df.queryExecution.optimizedPlan.collectWithSubqueries { case n => n }
+            .flatMap(_.expressions.flatMap(_.collect {
+              case _: org.apache.spark.sql.catalyst.expressions.ScalaUDF => "ScalaUDF"
+              case _: org.apache.spark.sql.execution.aggregate.ScalaAggregator[_, _, _] =>
+                "ScalaAggregator"
+            })).distinct
           // empty partition spec OR an all-foldable one: partitionBy
           // (lit(1)) is the same single sort task wearing a disguise
           // (the r8 pipe_curriculum shape) and must not pass the sweep
@@ -214,7 +222,7 @@ class PlanHygieneSpec extends SparkSpecBase {
             }.nonEmpty
           val msgs = Seq(
             if (cart) Some("CartesianProduct") else None,
-            if (udf) Some("ScalaUDF") else None,
+            if (udf.nonEmpty) Some(udf.mkString(", ")) else None,
             if (gw) Some("unpartitioned Window (whole frame in one sort task)")
             else None).flatten
           if (msgs.isEmpty) None else Some(s"$name: ${msgs.mkString(", ")}")
