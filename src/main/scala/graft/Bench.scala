@@ -666,7 +666,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_LOCAL.json")
     // suite wall budget (r12 verdict task 1c): the r12 driver bench was
     // externally killed at ~55 min with nothing written. Default 25 min:
@@ -722,13 +721,7 @@ object Bench {
     def elapsed(): Double = (System.nanoTime() - suiteT0) / 1e9
     def mode(): String = BenchStats.budgetMode(elapsed(), budgetSec)
     val suiteLoadStart = loadavg1()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.engine.Engine.tune(spark)
+    val spark = graft.engine.Engine.session()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
         val m = e.taskMetrics

@@ -135,7 +135,7 @@ object ScaleProbe {
     val diversified = sys.env.get("SPARK_GRAFT_PROBE_DIVERSIFIED").contains("1")
     val out = sys.env.getOrElse("SPARK_GRAFT_PROBE_DIR",
       s"/tmp/graft_scale_probe_${factor}x" + (if (diversified) "_div" else ""))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Engine.cores
     // per-run disk scratch (reclaimed at exit): replay layouts and
     // streaming checkpoints at 1000x are multi-GB and used to persist in
     // /tmp forever — exactly the churn debris that degraded the windows
@@ -143,14 +143,7 @@ object ScaleProbe {
     // outside the scratch so gated reruns can reuse it; see the keep
     // policy at the bottom of main.
     Scratch.install("probe", preferTmpfs = false): Unit
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.engine.Engine.tune(spark)
+    val spark = Engine.session(cpus)
 
     // shard-need predicates for gated runs (SPARK_GRAFT_ONLY): the
     // orders-shard rule generalized in r12 — a 1000× gated run of
@@ -227,7 +220,7 @@ object ScaleProbe {
             length(text).cast("long").as("n_chars"))
       }
       replicated
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$out/documents.parquet")
       println(f"generated ${factor}x${if (diversified) " diversified" else ""} shard in ${(System.nanoTime() - t0) / 1e9}%.1fs -> $out")
     }
@@ -248,7 +241,7 @@ object ScaleProbe {
         .select(
           (col("vec_id") * factor + col("k")).as("vec_id"),
           vec.as("embedding"), col("label"))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
       println(f"generated ${factor}x embeddings in ${(System.nanoTime() - t0) / 1e9}%.1fs")
     }
@@ -265,7 +258,7 @@ object ScaleProbe {
         .select((col("event_id") * factor + col("k")).as("event_id"),
           col("ts"), col("user_id"), col("event_type"), col("value"),
           col("props"))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$out/events.parquet")
       println(f"generated ${factor}x events in ${(System.nanoTime() - t0) / 1e9}%.1fs")
     }
@@ -273,9 +266,11 @@ object ScaleProbe {
     // lineitem rows replicated over REMAPPED order keys — 100× more
     // baskets at the SAME basket size (the per-group bound the query's
     // self-join claims), narrowed to the two columns the query reads;
-    // `part` (the broadcast dim side) passes through verbatim.
+    // `part` (the broadcast dim side) passes through verbatim. The gate
+    // checks `part`, the last write, so a run killed between the two
+    // writes regenerates both.
     if (needBaskets &&
-        !Files.exists(Paths.get(s"$out/lineitem.parquet/_SUCCESS"))) {
+        !Files.exists(Paths.get(s"$out/part.parquet/_SUCCESS"))) {
       val t0 = System.nanoTime()
       val li = Engine.table(spark, base, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"))
@@ -283,7 +278,7 @@ object ScaleProbe {
       li.crossJoin(reps)
         .select((col("l_orderkey") * factor + col("k")).as("l_orderkey"),
           col("l_partkey"))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$out/lineitem.parquet")
       Engine.table(spark, base, "part")
         .write.mode("overwrite").parquet(s"$out/part.parquet")
@@ -447,7 +442,7 @@ object ScaleProbe {
     // the histogram probe reads orders — generate that shard only when
     // it will actually run (the other probes never touch it)
     if (toRun.contains("q_histogram"))
-      ScaleProbe.ordersShard(spark, base, out, factor, cpus.toInt): Unit
+      ScaleProbe.ordersShard(spark, base, out, factor, cpus): Unit
     // 1-min /proc/loadavg bracketing each probed query (−1 when
     // unreadable): this machine's walls swing 2-10× under co-tenant
     // load — with the readings in the row, a slow wall is attributable
@@ -608,7 +603,7 @@ object ScaleProbe {
               (expr(s"doc_id div $factor") + (col("doc_id") % factor) * m)
                 .as("doc_id"),
               col("text"), col("lang"), col("source"), col("n_chars"))
-            .repartition(cpus.toInt)
+            .repartition(cpus)
             .write.mode("overwrite").parquet(s"$remapDir/documents.parquet")
         }
         val t0 = System.nanoTime()
@@ -789,7 +784,7 @@ object ScaleProbe {
     // bounded by WindowExec's spillable buffer + frame rather than the
     // partition: measure per-key row counts (uniformity) and the actual
     // per-task peak memory on a factor-x orders shard.
-    def ordersShard(): String = ScaleProbe.ordersShard(spark, base, out, factor, cpus.toInt)
+    def ordersShard(): String = ScaleProbe.ordersShard(spark, base, out, factor, cpus)
     var wrTotal: Option[Long] = None   // framed totals: the two window
     var wrpTotal: Option[Long] = None  // probes must agree exactly
     val windowRange: Option[String] =
@@ -902,7 +897,7 @@ object ScaleProbe {
         val vocab = spark.range(v)
           .select(md5(col("id").cast("string")).as("w"),
             expr(s"greatest(1L, $v div (id + 1))").as("wc"))
-          .repartition(cpus.toInt)
+          .repartition(cpus)
           .localCheckpoint(true) // both paths rank the SAME blocks
         def checksum(ranked: org.apache.spark.sql.DataFrame): Long = ranked
           .select(conv(substring(md5(concat_ws("|",
@@ -951,7 +946,7 @@ object ScaleProbe {
         val zDir = s"$out/orders_z.parquet"
         if (!Files.exists(Paths.get(s"$linDir/_SUCCESS"))) {
           val t0 = System.nanoTime()
-          ord.repartitionByRange(cpus.toInt, col("o_orderkey"))
+          ord.repartitionByRange(cpus, col("o_orderkey"))
             .sortWithinPartitions(col("o_orderkey"))
             .write.mode("overwrite")
             .option("parquet.block.size", 8L << 20).parquet(linDir)
@@ -960,7 +955,7 @@ object ScaleProbe {
         if (!Files.exists(Paths.get(s"$zDir/_SUCCESS"))) {
           val t0 = System.nanoTime()
           graft.ops.Scale.writeZOrdered(ord, zDir, "o_orderkey", "o_totalprice",
-            cpus.toInt)
+            cpus)
           println(f"z-order layout written in ${(System.nanoTime() - t0) / 1e9}%.1fs")
         }
         // ~10% of the key domain (keys are orig*factor+k, orig ≤ ~600k at

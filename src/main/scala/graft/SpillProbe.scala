@@ -5,7 +5,6 @@ import java.nio.file.{Files, Paths}
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Spill-under-pressure probe for the prefix-sum RANGE-frame rewrite.
@@ -40,23 +39,17 @@ object SpillProbe {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SPARK_GRAFT_PROBE_DIR",
       s"/tmp/graft_scale_probe_${factor}x")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // reclaim spill/checkpoint debris at exit (the ScaleProbe policy);
     // the shard dir stays outside the scratch for reuse
     Scratch.install("spillprobe", preferTmpfs = false): Unit
     // 0.05 of an 8 GB heap ≈ 400 MB unified pool shared by all tasks —
     // far under the rewrite's measured 1149 MB single-task peak, so the
     // sort CANNOT fit and must spill to finish. Overridable for tuning.
+    // Static per JVM, so it goes in as a system property, which SparkConf
+    // reads when the session is built.
     val frac = sys.env.getOrElse("SPARK_GRAFT_MEM_FRACTION", "0.05")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.memory.fraction", frac)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.engine.Engine.tune(spark)
+    System.setProperty("spark.memory.fraction", frac)
+    val spark = graft.engine.Engine.session()
 
     val memSpill = new java.util.concurrent.atomic.AtomicLong(0L)
     val diskSpill = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -74,7 +67,7 @@ object SpillProbe {
     })
 
     val ord = spark.read.parquet(
-      ScaleProbe.ordersShard(spark, base, out, factor, cpus.toInt))
+      ScaleProbe.ordersShard(spark, base, out, factor, graft.engine.Engine.cores))
     val t0 = System.nanoTime()
     val total = graft.ops.Scale.rangeFramePrefixSum(ord,
         "o_orderpriority", "o_orderkey", "o_totalprice", 1000L * factor)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Streaming state-boundedness probe for [[graft.streaming.Sessionize]].
@@ -29,7 +28,6 @@ object StreamStateProbe {
     val users = args.headOption.map(_.toInt).getOrElse(2000)
     val batches = args.drop(1).headOption.map(_.toInt).getOrElse(12)
     val perUser = 25 // events per user per batch
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // default = HDFS-backed (state lives in executor heap). At real
     // state sizes the production pick is RocksDB — state off-heap on
     // local disk, heap holds only block cache — same API, one conf.
@@ -38,16 +36,9 @@ object StreamStateProbe {
     val rocks = sys.env.get("SPARK_GRAFT_STATE_STORE").contains("rocksdb")
     // reclaim checkpoint/state-store debris at exit (the ScaleProbe policy)
     Scratch.install("stateprobe", preferTmpfs = false): Unit
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    if (rocks) builder.config("spark.sql.streaming.stateStore.providerClass",
+    val spark = graft.engine.Engine.session()
+    if (rocks) spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.engine.Engine.tune(spark)
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     import graft.streaming.Sessionize

@@ -7,11 +7,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * SessionContext with default features, registers the random `types`
   * table, the `test` CSV, and the two custom sum UDAFs.
   *
-  * Here the same responsibilities are: build a local SparkSession with
-  * scale-appropriate defaults (AQE on, shuffle partitions sized to the
-  * machine, UTC timezone), register the seeded `types` view, optionally
-  * register the testdata parquet tables as views, and register the 32-bit
-  * sum aggregates (one class in two modes, [[graft.udaf.Udafs]]).
+  * Here the same responsibilities are split in two. [[session]] is the
+  * one place a SparkSession is built: `local[cores]` with `cores`
+  * shuffle partitions ([[cores]] reads `SPARK_GRAFT_CPUS`, else the
+  * machine's processors), AQE with partition coalescing, the UTC session
+  * zone, UI off, WARN logging and the [[tune]] planner relaxation.
+  * [[configure]] then registers the seeded `types` view, the `test` CSV
+  * and the 32-bit sum aggregates (one class in two modes,
+  * [[graft.udaf.Udafs]]); [[registerTestdata]] adds the testdata parquet
+  * tables as views. [[build]] is both steps.
   *
   * All SQL surface beyond the custom aggregates is inherited from Catalyst,
   * exactly as the reference inherits DataFusion's default SQL surface via
@@ -20,10 +24,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Engine {
 
   case class Options(
-      master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
       typesTableLength: Long = 1024L, // reference default: src/main.rs:16-17
       seed: Long = 42L, // reference is unseeded (rand::thread_rng); we seed for test stability
-      shufflePartitions: Int = 32,
       // reference registers datasets/test.csv unconditionally (src/lib.rs:57-58);
       // we bundle the public Apache Arrow aggregate_test_100 fixture and default
       // to it when present so `SELECT * FROM test` works out of the box
@@ -75,22 +77,38 @@ object Engine {
       } catch { case _: Throwable => Nil }
   }
 
-  /** Build (or reuse) the session and register tables + UDAFs. */
-  def build(opts: Options = Options()): SparkSession = {
-    val spark = SparkSession
-      .builder()
-      .master(opts.master)
+  /** Cores the engine runs on: `SPARK_GRAFT_CPUS` when set, else the
+    * machine's available processors. Read once per JVM. */
+  lazy val cores: Int = parseCores(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  private[graft] def parseCores(raw: Option[String]): Int = raw match {
+    case None => Runtime.getRuntime.availableProcessors
+    case Some(s) => s.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'"))
+  }
+
+  /** Build (or reuse) the local session: `local[cores]`, one shuffle
+    * partition per core, AQE + coalescing, UTC, UI off, then [[tune]].
+    * Static confs a caller needs beyond these go in as `spark.*` JVM
+    * system properties before the call; SparkConf reads those. */
+  def session(cores: Int = Engine.cores): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
       .appName("graft")
-      .config("spark.sql.shuffle.partitions", opts.shufflePartitions.toString)
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    configure(spark, opts)
-    spark
+    tune(spark)
   }
+
+  /** Build (or reuse) the session and register tables + UDAFs. */
+  def build(opts: Options = Options()): SparkSession =
+    configure(session(), opts)
 
   /** Session-wide planner tuning, owned HERE — at session construction,
     * where global scope is explicit — rather than hidden inside one
@@ -106,9 +124,9 @@ object Engine {
     * the exchange; equal block-hashes still co-locate equal (block, id)
     * rows, so accepting the subset is purely a planner relaxation —
     * performance-only, it can only remove provably-redundant exchanges
-    * and never changes results. Idempotent; every main and the test
-    * base apply it so one query's plan never depends on which session
-    * ran it. */
+    * and never changes results. Idempotent; [[session]] applies it, and
+    * [[configure]] applies it to sessions built elsewhere, so one
+    * query's plan never depends on which session ran it. */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
     spark

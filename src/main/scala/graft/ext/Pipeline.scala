@@ -23,29 +23,21 @@ object Pipeline {
   private def md5Bucket(c: org.apache.spark.sql.Column, mod: Int) =
     graft.functions.HashExpressions.md5Bucket(c, mod)
 
-  /** Packing shard count. The running-sum window in `pipe_pack`
-    * partitions by (lang, shard), so this value bounds its parallelism:
-    * a hard-coded 16 meant ~#lang×16 sequential window tasks at corpus
-    * scale (round-4 verdict's one named scale-killer). Now derived from
-    * the granted cores — SPARK_GRAFT_CPUS is the same env that sizes
-    * `local[N]` in Verify/Bench, with the physical core count as the
-    * fallback and 16 as the floor — so shard count grows with the
-    * cluster instead of capping it. On a real deployment a caller would
-    * pass `spark.sparkContext.defaultParallelism` (or an input-size
-    * derivation); the env route is used here because the value must be
-    * known OUTSIDE a session too: it is interpolated into the DuckDB
-    * oracle SQL below, and both sides must use the same constant for
-    * the driver's hash-compare to stay exact.
+  /** Packing shard count. The shard is an OUTPUT column of pipe_pack,
+    * pipe_pack_stats and pipe_end_to_end (the published training-data
+    * layout), so it is a constant: the same corpus packs the same way on
+    * every host. It is also interpolated into the DuckDB oracle SQL
+    * below, which must use the same value. The running-sum window
+    * partitions by (lang, shard), so this also bounds that window's
+    * parallelism to ~#lang×16 tasks.
     */
-  val packShards: Int = math.max(16,
-    sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
-      .getOrElse(Runtime.getRuntime.availableProcessors))
+  val packShards: Int = 16
 
   /** The sequence-packing assignment: concatenate documents in
     * deterministic order and cut at a fixed 512-token context length —
     * each doc gets (shard, bin, offset). Partitioned by (lang, shard):
     * the running sum is a window per shard, so parallelism scales with
-    * shard count (`packShards`, cores-derived), not language count.
+    * shard count (`packShards`), not language count.
     * Shared by pipe_pack and pipe_pack_stats so the efficiency report
     * audits the exact frame the pack ships. */
   private def packFrame(s: SparkSession, dir: String): DataFrame = {
@@ -121,8 +113,8 @@ object Pipeline {
     // sequence packing: concatenate documents in deterministic order and
     // cut at a fixed context length — each doc gets (shard, bin, offset).
     // Partitioned by (lang, shard): the running sum is a window per
-    // shard, so parallelism scales with shard count (`packShards`,
-    // cores-derived), not language count
+    // shard, so parallelism scales with shard count (`packShards`), not
+    // language count
     "pipe_pack" -> ((s, dir) =>
       packFrame(s, dir).orderBy(col("doc_id"))),
 

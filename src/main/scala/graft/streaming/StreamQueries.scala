@@ -34,7 +34,8 @@ import org.apache.spark.sql.functions._
 object StreamQueries {
 
   /** Plan a streaming query with `n` state partitions instead of the
-    * session's 32, restoring the session conf after `start` returns.
+    * session's one per core ([[graft.engine.Engine.session]]), restoring
+    * the session conf after `start` returns.
     * A stateful operator commits one state-store file PER PARTITION
     * (per side, for joins) PER BATCH; on the finite single-batch
     * replays below that fixed commit overhead dominates wall time

@@ -418,6 +418,11 @@ class PlanHygieneSpec extends SparkSpecBase {
     // and only the 100x probe would notice. Pin it in the plan instead.
     assert(spark.conf.get("spark.sql.requireAllClusterKeysForCoPartition")
       == "false", "Engine.tune not applied to the test session")
+    // the shared session comes from Engine.session(cores = 8): one
+    // shuffle partition per core and the UTC zone
+    assert(spark.sparkContext.master == "local[8]")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "8")
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     val p = plan("dedup_incremental_minhash")
     assert("hashpartitioning\\(cpart".r.findFirstIn(p).isDefined,
       s"expected the explicit block repartitions on cpart:\n$p")

@@ -16,16 +16,7 @@ object SparkTestSession {
   lazy val scratch: String = Scratch.install("test", preferTmpfs = false)
   lazy val spark: SparkSession = {
     scratch: Unit
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.engine.Engine.tune(s)
-    s
+    graft.engine.Engine.session(cores = 8)
   }
 }
 
