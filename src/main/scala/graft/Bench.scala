@@ -5,44 +5,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One query's bench record: timing stats plus the task-metric columns
   * that make a slow run attributable (see Bench scaladoc). `raw` is
-  * `warmup +: timed₁ ++ timed₂ ++ …` — raw(0) is the untimed warmup and
-  * every later entry is a timed run, appended window by window, which is
-  * what lets the pooled stats be recomputed from `raw` alone (exception:
-  * a RECOVERED row's published median/min cover only its retry window —
-  * the pre-kill runs stay in `raw` as evidence but are excluded as
-  * burst-contaminated by construction; see the artifact note). `load` is
-  * the 1-minute /proc/loadavg read before and after each timed window
-  * ([b₁,a₁,b₂,a₂,…]) — this machine's walls swing 2-10× under co-tenant
-  * load and every round has spent effort re-adjudicating phantom
-  * regressions; with the readings in the artifact a slow window is
-  * attributable without a paired re-run. `tSec` (r14 verdict task 1)
-  * is the suite-relative wall-clock second at which each `raw` run
-  * STARTED, index-aligned with `raw` — it lets any run be placed
-  * against the canary_series timeline, so a burst that lands between
-  * spot canary samples is still attributable from the artifact alone
-  * (the r14 q_date_funcs gap: a 186× wall carrying a 25-row-stale 3×
-  * sched stamp). */
+  * `warmup +: timed` — raw(0) is the untimed warmup (degraded rows have
+  * none: their `raw` is the single timed run). `tSec` is the
+  * suite-relative wall-clock second at which each `raw` run STARTED,
+  * index-aligned with `raw` — it places any run against the
+  * canary_series timeline. `schedMs` is the series reading that scaled
+  * the row's cap. */
 private[graft] case class BenchRow(name: String, median: Double, min: Double,
     raw: Seq[Double], shufWriteB: Long, shufReadB: Long, gcMsRuns: Seq[Long],
-    load: Seq[Double], schedMs: Double = -1.0, tSec: Seq[Double] = Seq.empty)
+    schedMs: Double = -1.0, tSec: Seq[Double] = Seq.empty)
 
 /** Pure stat/guard policies for [[Bench]], extracted so they are
-  * unit-testable without a SparkSession (BenchStatsSpec). Both carried a
-  * silent bias before r12:
-  *
-  *  - the heal published min(median₁, median₂) — a best-of-two selection
-  *    bias on bimodal queries (the lower window wins even when it is the
-  *    outlier), and a rerun window that did NOT improve the stat was
-  *    dropped from `raw`, contradicting the artifact's own "all raw runs
-  *    stay auditable" note;
-  *  - the env-guard's 15-row re-window budget had never fired in anger,
-  *    so its budget-exhausted path (flag without re-measurement) was
-  *    untested.
-  */
+  * unit-testable without a SparkSession (BenchStatsSpec). Every flag
+  * here is derived from the row's one measured window; nothing is
+  * re-measured. */
 private[graft] object BenchStats {
 
   /** Median with the standard even-count convention (mean of the two
-    * middle elements) — pooled windows have even run counts. */
+    * middle elements) — stable rows have two timed runs. */
   def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     val n = s.length
@@ -56,69 +36,6 @@ private[graft] object BenchStats {
   def isSuspect(median: Double, min: Double): Boolean =
     median >= 0 && min > 0.05 && median / min > 2.0
 
-  /** Merge one rerun window into a row.
-    *
-    * `raw`/`gcMsRuns`/`load` grow by the rerun's data UNCONDITIONALLY —
-    * a rerun that fails or fails to improve the stat is exactly the
-    * evidence a later reader needs (it proves the reference could not be
-    * reproduced). The published median/min are recomputed over ALL
-    * successful timed runs from EVERY window pooled (raw minus the
-    * warmup minus failed runs): no window is privileged, so there is no
-    * best-of-N selection bias, and re-merging a second window (a row can
-    * pass through both the heal and the env-guard rerun) just extends
-    * the pool. A row whose original runs all failed stays failed
-    * (median −1) regardless of rerun outcomes — a query that ever
-    * poisoned its session must fail loudly, not average out. */
-  def combineWindows(r: BenchRow, rerunTimed: Seq[Double],
-      rerunGc: Seq[Long], rerunLoad: Seq[Double],
-      rerunT: Seq[Double] = Seq.empty): BenchRow = {
-    val grown = r.copy(raw = r.raw ++ rerunTimed,
-      gcMsRuns = r.gcMsRuns ++ rerunGc, load = r.load ++ rerunLoad,
-      tSec = r.tSec ++ rerunT)
-    val pooled = grown.raw.drop(1).filter(_ >= 0)
-    if (r.median < 0 || pooled.isEmpty) grown
-    else grown.copy(median = median(pooled), min = pooled.min)
-  }
-
-  /** In-sweep burst probe trigger (r14 verdict task 1): a timed run
-    * that blows 3× its committed reference median (with a 0.5s floor —
-    * sub-second walls swing on scheduling jitter alone) is the
-    * full-mode equivalent of a cap kill, and like a cap kill it earns
-    * an IMMEDIATE spot sched-canary reading: the r14 artifact's worst
-    * row (q_date_funcs, 141.8s = 186× committed, runs 23.8/169.9/
-    * 113.6s) carried only a 25-row-stale 1115ms periodic stamp that
-    * could not explain it — the burst fell between spot samples. The
-    * 3× bar matches the env-guard's divergence threshold, so every
-    * row the post-sweep guard could flag has a trip-time reading. */
-  def burstProbe(refMedian: Option[Double], runSec: Double): Boolean =
-    refMedian.exists(m => m > 0 && runSec > math.max(0.5, 3.0 * m))
-
-  /** Capped-row adjudication partition (r14 ADVICE): `capped` rows
-    * whose pooled stats stayed healthy — a kill during a post-sweep
-    * pass (heal / env re-window / degraded re-window) whose other
-    * windows still publish a valid median — need no retry and land in
-    * `capped_healthy`; before r15 they sat in `capped` with neither
-    * `recovered` nor `capped_twice` adjudication. `medians` maps row
-    * name → published median at artifact render time. */
-  def cappedHealthy(capped: Seq[String], recovered: Set[String],
-      cappedTwice: Set[String], medians: Map[String, Double]): Seq[String] =
-    capped.filter(n => !recovered.contains(n) && !cappedTwice.contains(n) &&
-      medians.get(n).exists(_ >= 0))
-
-  /** Degraded-row rewindow selection (r14 verdict task 4): degraded
-    * rows are medians-of-one measured past the blown budget — unlike
-    * cap-killed rows they got no retry, so a taxed window published
-    * 186 single-run walls in r14. Post-sweep, the `budget` worst rows
-    * by ratio-to-committed-median (>3×, same bar as the env guard;
-    * ratio needs both sides positive) get one more bounded window.
-    * `rows` are (name, publishedMedian). */
-  def selectDegradedRewindow(rows: Seq[(String, Double)],
-      refMedians: Map[String, Double], budget: Int): Seq[String] =
-    rows.flatMap { case (n, med) =>
-      refMedians.get(n).filter(_ > 0).collect {
-        case ref if med > 0 && med / ref > 3.0 => (n, med / ref) }
-    }.sortBy(-_._2).take(budget).map(_._1)
-
   /** Shuffle signature match: plan-determined bytes agree within ±20%
     * (AQE jitter) or 1 MB, whichever is wider. */
   def sameSignature(refSwMb: Double, swNowMb: Double): Boolean =
@@ -129,39 +46,28 @@ private[graft] object BenchStats {
   def divergent(refMin: Double, minNow: Double): Boolean =
     minNow > 0.3 && refMin > 0.02 && minNow > 3.0 * refMin
 
-  /** Env-guard selection. `rows` are (name, min, shuffle_write_mb) of
-    * the post-heal sweep; returns (rewindow, flaggedWithoutRewindow):
-    * every same-signature divergent row is flagged, the `budget` worst
-    * by absolute excess seconds (where phantom regression actually
-    * distorts the total) get one more measured window, and the rest are
-    * reported `env_suspect` WITHOUT re-measurement — in a fully
-    * contaminated window every row diverges and 3 extra runs × 307 rows
-    * would triple the sweep. */
-  def selectRewindow(rows: Seq[(String, Double, Double)],
-      refStats: Map[String, (Double, Double)],
-      budget: Int): (Set[String], Set[String]) = {
-    val flagged = rows.filter { case (n, minNow, swNow) =>
-      refStats.get(n).exists { case (refMin, refSw) =>
-        sameSignature(refSw, swNow) && divergent(refMin, minNow) } }
-    val rewindow = flagged
-      .sortBy { case (n, minNow, _) => -(minNow - refStats(n)._1) }
-      .take(budget).map(_._1).toSet
-    (rewindow, flagged.map(_._1).toSet -- rewindow)
-  }
+  /** The `env_suspect` list: rows (name, min, shuffle_write_mb) whose
+    * min diverged from the committed reference min while the shuffle
+    * signature stayed unchanged — same plan, slower window. The
+    * median/min suspect heuristic is blind to UNIFORMLY slow windows
+    * (every run equally slow, identical shuffle bytes, zero GC), which
+    * is what this flag catches. Rows absent from the reference are never
+    * flagged. Input order is kept. */
+  def envSuspects(rows: Seq[(String, Double, Double)],
+      refStats: Map[String, (Double, Double)]): Seq[String] =
+    rows.collect { case (n, minNow, swNow) if refStats.get(n).exists {
+      case (refMin, refSw) => sameSignature(refSw, swNow) && divergent(refMin, minNow) } => n }
 
-  /** Per-query wall cap (r12 verdict task 1b): a query that stalls —
-    * environment collapse, a pathological plan, a hung stream — must be
-    * recorded failed at the cap instead of eating the whole suite (the
-    * r12 driver bench died rc=124 with ZERO rows reported). 10× the
-    * committed reference median tolerates any plausible contention
-    * window (the worst attributed degradation on this machine is ~4×)
-    * while still bounding a stall; the 60s floor keeps sub-second rows
-    * from being cap-killed by one GC pause; a query with no committed
-    * reference (a new row) gets a generous fixed cap — the suite budget
-    * is the backstop for those. */
-  def capSeconds(refMedian: Option[Double], floorSec: Double = 60.0): Double =
-    refMedian.filter(_ > 0).map(m => math.max(floorSec, 10.0 * m))
-      .getOrElse(math.max(600.0, floorSec))
+  /** Per-query wall cap: a query that stalls — environment collapse, a
+    * pathological plan, a hung stream — must be recorded failed at the
+    * cap instead of eating the whole suite. 10× the committed reference
+    * median tolerates any plausible contention window while still
+    * bounding a stall; the 60s floor keeps sub-second rows from being
+    * cap-killed by one GC pause; a query with no committed reference (a
+    * new row) gets a generous fixed 600s cap — the suite budget is the
+    * backstop for those. */
+  def capSeconds(refMedian: Option[Double]): Double =
+    refMedian.filter(_ > 0).map(m => math.max(60.0, 10.0 * m)).getOrElse(600.0)
 
   /** Canary-scaled per-query wall cap (r13 verdict task 5). The plain
     * [[capSeconds]] 10×-median floor assumed the worst attributed
@@ -178,21 +84,20 @@ private[graft] object BenchStats {
     * meaningful); non-positive canary readings (unmeasured, or a
     * reference that predates the canary field) fall back to ×1. */
   def scaledCap(refMedian: Option[Double], schedNowMs: Double,
-      schedRefMs: Double, floorSec: Double = 60.0): Double = {
+      schedRefMs: Double): Double = {
     val scale =
       if (schedNowMs > 0 && schedRefMs > 0)
         math.min(50.0, math.max(1.0, schedNowMs / schedRefMs))
       else 1.0
-    capSeconds(refMedian, floorSec) * scale
+    capSeconds(refMedian) * scale
   }
 
   /** Timed-run count per row (r13 verdict task 6): a clean full sweep
     * ran ~16 min inside a 25-min budget — <1.6× headroom, so any taxed
     * window immediately degraded 200+ rows. Rows whose committed
     * reference shows median/min within 5% are stable enough that a
-    * third run adds no information (the median of 2 = their mean, and
-    * the pooled heal/env passes still extend the pool when anything
-    * looks off); streaming rows and rows without a committed reference
+    * third run adds no information (the median of 2 = their mean);
+    * streaming rows and rows without a committed reference
     * keep 3 — streaming walls are the suite's most window-sensitive
     * and a new row has no stability history to lean on. */
   def timedRuns(refMedian: Option[Double], refMin: Option[Double],
@@ -211,21 +116,21 @@ private[graft] object BenchStats {
     * if it is complete (`partial` false) and every guard list —
     * failed, degraded, capped, skipped, env_suspect, zombie_after —
     * is empty. zombie_after matters even with every other list clean:
-    * a suite-warmup cap kill never reaches `capped` (stampKill is
-    * per-row), so an un-reaped warmup worker can taint every row of an
+    * a suite-warmup cap kill never reaches `capped` (only row kills
+    * do), so an un-reaped warmup worker can taint every row of an
     * otherwise flag-free sweep. (`suspect` alone is tolerated: a
-    * genuinely bimodal row that survived the heal is information, not
-    * contamination. `capped_twice` ⊆ failed, `recovered` ⊆ capped —
-    * both are covered transitively.) */
+    * bimodal row is information, not contamination. Snapshots written
+    * before the one-window bench also carry `capped_twice` ⊆ failed and
+    * `recovered` ⊆ capped — both covered transitively.) */
   def refAcceptable(partial: Boolean, failed: Int, degraded: Int,
       capped: Int, skipped: Int, envSuspect: Int, zombies: Int = 0): Boolean =
     !partial && failed == 0 && degraded == 0 && capped == 0 &&
       skipped == 0 && envSuspect == 0 && zombies == 0
 
   /** Suite wall-budget mode (r12 verdict task 1c). `full` below the
-    * budget: warmup + 3 timed runs + heal/env-guard passes. `degraded`
-    * between 1× and 2×: one capped timed run, no warmup, no post-sweep
-    * passes — completion beats precision once the window has already
+    * budget: warmup + 2-3 timed runs. `degraded` between 1× and 2×:
+    * one capped timed run, no warmup — completion beats precision once
+    * the window has already
     * degraded past the budget, and degraded rows are flagged so a reader
     * never mistakes them for clean medians. `skip` past 2×: remaining
     * rows are recorded failed WITHOUT running — the hard stop that
@@ -261,12 +166,24 @@ private[graft] object BenchStats {
   * run count. All raw times (warmup + timed) are emitted per query so
   * a contaminated window stays self-evident in the artifact.
   *
+  * Each row is measured in ONE window and never re-measured. Its flags
+  * are derived from that window: `suspect` (median/min > 2×),
+  * `env_suspect` ([[BenchStats.envSuspects]]: unchanged shuffle
+  * signature, min > 3× the committed reference min), `capped` (a run
+  * blew the canary-scaled wall cap and was cancelled), `degraded` /
+  * `skipped` (past the suite budget) and `zombie_after`. Paired A/B
+  * runs, not re-windows, decide whether a change is faster. The stdout
+  * line keeps `recovered`, `capped_twice` and `rewindowed` because its
+  * reader JSON-decodes a fixed key set; they counted the outcomes of
+  * post-sweep re-measurement passes the bench no longer runs, so they
+  * are always 0.
+  *
   * Execution is forced with the `noop` sink, not `.count()`: under a
   * count, Catalyst prunes projections and eliminates sorts, so pure
   * per-row-expression queries would be timed as bare scans. The noop
   * sink materializes every output column through the full plan.
   *
-  * The full JSON (median + min + raw runs + per-window loadavg) goes to
+  * The full JSON (median + min + raw runs + task metrics) goes to
   * BENCH_LOCAL.json; stdout gets a SHORT single line (total +
   * slowest-10 medians + file pointer) because the driver captures only
   * a ~2,000-char stdout tail. The line is printed AFTER spark.stop() so
@@ -298,13 +215,6 @@ object Bench {
     org.apache.spark.graftbridge.ListenerBridge.drain(sc)
     (shufWrite.get(), shufRead.get(), gcMs.get())
   }
-
-  /** 1-minute system load average (−1 when unreadable — non-Linux or a
-    * locked-down /proc). Sampled around every timed window so co-tenant
-    * contamination is attributable from the artifact alone. */
-  private def loadavg1(): Double =
-    try Files.readString(Paths.get("/proc/loadavg")).split(" ")(0).toDouble
-    catch { case NonFatal(_) => -1.0 }
 
   /** Host-pressure counters (r14 verdict task 5). The r14 bursts were
     * invisible to every guest-side metric the artifact carried —
@@ -385,9 +295,9 @@ object Bench {
     * job — mid-suite the scheduler is warm. The r13 driver window's
     * burst (emb_kmeans at 60× committed) fell BETWEEN the suite-start
     * and suite-end canaries and was invisible in the artifact; a
-    * ~0.1-0.5s spot reading every 25 full-mode rows, before every
-    * degraded-mode row, and AT every cap kill / retry makes per-row
-    * window attribution possible from the artifact alone. */
+    * ~0.1-0.5s spot reading every 25 full-mode rows and before every
+    * degraded-mode row makes per-row window attribution possible from
+    * the artifact alone, and is the live input of the cap scaling. */
   private def spotSchedMs(sc: org.apache.spark.SparkContext): Double = {
     val t0 = System.nanoTime()
     var i = 0
@@ -419,21 +329,24 @@ object Bench {
     * row's timings and snapMetrics deltas. Recording the row name here
     * (emitted as `zombie_after` in the artifact) makes later rows
     * readable as tainted instead of clean medians. */
-  private val zombies =
+  private[graft] val zombies =
     new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
   /** [[timeOnce]] under a wall cap, enforced by running the query on a
     * worker thread inside its own job group and cancelling the group
     * when the cap elapses (the only way to bound a single Spark action
     * from outside — there is no per-action timeout API). Returns
-    * (seconds-or-−1, capped?). On a cap kill the jobs are cancelled with
-    * task interruption, the worker is given 30s to unwind, and any
+    * (seconds-or-−1, capped?). On a cap kill the group's running jobs are
+    * cancelled with task interruption and its FUTURE jobs are refused —
+    * the cap can fire while the worker is still planning, or between the
+    * driver jobs a builder runs, and a plain group cancel would then miss
+    * the job that stalls. The worker is given 30s to unwind, and any
     * streaming query the row left running is stopped so later rows
     * aren't contaminated by a zombie micro-batch thread (job-group
     * cancellation doesn't reach a stream's own execution thread). A
     * worker still alive 5s after the interrupt is recorded in
     * [[zombies]] under `tag`. */
-  private def timeOnceCapped(spark: SparkSession, df: => DataFrame,
+  private[graft] def timeOnceCapped(spark: SparkSession, df: => DataFrame,
       capSec: Double, tag: String = ""): (Double, Boolean) = {
     val sc = spark.sparkContext
     val group = "bench-cap-" + java.util.UUID.randomUUID().toString.take(8)
@@ -444,13 +357,11 @@ object Bench {
     }, group)
     worker.setDaemon(true)
     worker.start()
-    // floor 50ms, NOT 1000: join(0) would wait forever, but a 1s floor
-    // silently defeats sub-second caps — the SPARK_GRAFT_CAP_FLOOR
-    // burst-replay knob needs caps of ~0.2s to actually kill
+    // floor 50ms: join(0) would wait forever
     worker.join(math.max(50L, (capSec * 1000).toLong))
     if (worker.isAlive) {
       System.err.println(f"[bench] cap $capSec%.1fs blown — cancelling $group")
-      try sc.cancelJobGroup(group) catch { case NonFatal(_) => () }
+      try sc.cancelJobGroupAndFutureJobs(group) catch { case NonFatal(_) => () }
       worker.join(30000)
       if (worker.isAlive) {
         worker.interrupt()
@@ -468,19 +379,15 @@ object Bench {
   }
 
   /** One timed window: `runs` measured executions with per-run metric
-    * snapshots, bracketed by loadavg readings. Each run also records
-    * its suite-relative start second via `tClock` (r14 verdict task 1:
-    * aligning runs against the canary_series timeline is what makes a
-    * between-spot-samples burst attributable). Returns the runs
-    * ((sec, shufW, shufR, gc, tStart) each), the loadavg bracket, and
-    * whether any run was cap-killed. */
+    * snapshots. Each run also records its suite-relative start second
+    * via `tClock`, which aligns it against the canary_series timeline.
+    * Returns the runs ((sec, shufW, shufR, gc, tStart) each) and whether
+    * any run was cap-killed. */
   private def timedWindow(sc: org.apache.spark.SparkContext,
       spark: SparkSession, sfDir: String,
       fn: (SparkSession, String) => DataFrame, capSec: Double,
-      tClock: () => Double,
-      runs: Int = Runs, tag: String = "")
-      : (Seq[(Double, Long, Long, Long, Double)], Seq[Double], Boolean) = {
-    val lb = loadavg1()
+      tClock: () => Double, runs: Int, tag: String)
+      : (Seq[(Double, Long, Long, Long, Double)], Boolean) = {
     var capped = false
     val measured = (1 to runs).map { _ =>
       resetMetrics(sc)
@@ -492,7 +399,7 @@ object Bench {
       val (sw, sr, gc) = snapMetrics(sc)
       (sec, sw, sr, gc, t)
     }
-    (measured, Seq(lb, loadavg1()), capped)
+    (measured, capped)
   }
 
   /** One parsed reference snapshot: per-query (median, min,
@@ -608,9 +515,8 @@ object Bench {
   private def obj(kvs: Seq[(String, String)]): String =
     kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
 
-  /** The full BENCH_LOCAL.json body. Extracted because it is now written
-    * INCREMENTALLY — after every completed row of the main sweep and
-    * after each post-sweep pass — with `"partial": true` until the suite
+  /** The full BENCH_LOCAL.json body. Written INCREMENTALLY — after
+    * every completed row — with `"partial": true` until the suite
     * finishes (r12 verdict task 1a: the r12 driver run was killed by an
     * external timeout and, because the old code wrote the file once at
     * the very end, left NOTHING — an interrupted sweep must still leave
@@ -618,16 +524,11 @@ object Bench {
     * run's readRefStats). */
   private[graft] def artifactJson(rows: Seq[BenchRow], envSuspects: Seq[String],
       partial: Boolean, degraded: Seq[String], capped: Seq[String],
-      skipped: Seq[String], refSource: String, suiteLoadStart: Double,
-      budgetSec: Double, sfDir: String, scratch: String,
-      canaries: Seq[(String, Double)],
+      skipped: Seq[String], refSource: String, budgetSec: Double,
+      sfDir: String, scratch: String, canaries: Seq[(String, Double)],
       canarySeries: Seq[(Int, String, Double, Long)],
-      recovered: Seq[(String, String)], cappedTwice: Seq[String],
       timedRunsPlan: Seq[(String, Int)], schedRefMs: Double,
-      streamingNames: Set[String],
-      rewindowed: Seq[(String, String)],
-      schedProbe: Seq[(String, Double)],
-      host: Seq[(String, Long)]): String = {
+      streamingNames: Set[String], host: Seq[(String, Long)]): String = {
     def q(names: Seq[String]): String =
       names.map("\"" + _ + "\"").mkString("[", ",", "]")
     val medians = obj(rows.map(r => r.name -> r3(r.median).toString))
@@ -640,28 +541,18 @@ object Bench {
     val shufR = obj(rows.map(r => r.name -> mb(r.shufReadB).toString))
     val gc = obj(rows.map(r =>
       r.name -> r.gcMsRuns.mkString("[", ",", "]")))
-    val loads = obj(rows.map(r =>
-      r.name -> r.load.map(r2).mkString("[", ",", "]")))
     val schedRows = obj(rows.filter(_.schedMs > 0).map(r =>
       r.name -> r2(r.schedMs).toString))
     val series = canarySeries.map { case (i, tag, ms, steal) =>
       s"""{"i":$i,"tag":"$tag","sched_ms":${r2(ms)},"steal":$steal}"""
     }.mkString("[", ",", "]")
-    val cappedHealthy = BenchStats.cappedHealthy(capped,
-      recovered.map(_._1).toSet, cappedTwice.toSet,
-      rows.map(r => r.name -> r.median).toMap)
     val ok = rows.filter(_.median >= 0)
     val failed = rows.collect { case r if r.median < 0 => r.name }
     val total = r3(ok.map(_.median).sum)
-    // drift guard: median/min > 2× means the timed runs split across a
-    // contention window wider than the warmup absorbed — the artifact
-    // self-reports suspects instead of requiring archaeology over the
-    // raw runs. Sub-50ms queries are exempt: at scheduling-floor
-    // timescales the ratio is all jitter, no signal.
     val suspects = rows.collect {
-      case r if r.median >= 0 && BenchStats.isSuspect(r.median, r.min) => r.name
+      case r if BenchStats.isSuspect(r.median, r.min) => r.name
     }
-    s"""{"metric":"total","value":$total,"unit":"sec","partial":$partial,"queries":$medians,"min":$mins,"runs":$runs,"run_t":$runT,"shuffle_write_mb":$shufW,"shuffle_read_mb":$shufR,"gc_ms":$gc,"loadavg":$loads,"loadavg_suite":[${r2(suiteLoadStart)},${r2(loadavg1())}],"bench_ref":"$refSource","sched_ref_ms":${r2(schedRefMs)},"budget_sec":${r2(budgetSec)},"scratch":"$scratch","canary_ms":${obj(canaries.map { case (k, v) => k -> r2(v).toString })},"canary_series":$series,"sched_ms":$schedRows,"failed":${q(failed)},"suspect":${q(suspects)},"env_suspect":${q(envSuspects)},"degraded":${q(degraded)},"capped":${q(capped)},"recovered":${obj(recovered)},"capped_twice":${q(cappedTwice)},"capped_healthy":${q(cappedHealthy)},"rewindowed":${obj(rewindowed)},"sched_probe_ms":${obj(schedProbe.map { case (k, v) => k -> r2(v).toString })},"host":${obj(host.map { case (k, v) => k -> v.toString })},"zombie_after":${q({ import scala.jdk.CollectionConverters._; zombies.iterator().asScala.toSeq })},"skipped":${q(skipped)},"streaming":${q(rows.map(_.name).filter(streamingNames.contains))},"sf":"$sfDir","timed_runs":${obj(timedRunsPlan.map { case (k, v) => k -> v.toString })},"runs_max":$Runs,"stat":"median","note":"runs[0] is the untimed warmup, excluded from median/min (degraded rows have no warmup: their runs array holds the single timed run); suspect = median/min > 2x (contaminated window); shuffle_* = median-run task totals (MB), gc_ms = per-timed-run JVM GC totals across every window; loadavg = 1-min /proc/loadavg before/after each timed window ([b1,a1,b2,a2,...]) — same-shuffle+high-gc-or-load reads as environment pressure, higher-shuffle reads as a plan change; suspect rows were re-measured once post-sweep and median/min recomputed over ALL timed runs pooled across windows (no best-of-window selection; runs holds every window, improving or not) — a surviving suspect is genuinely bimodal; env_suspect = min > 3x the committed reference min (bench_ref = most recent GIT-COMMITTED snapshot of this file whose own flag lists are all empty — a flagged snapshot is evidence, never a baseline) with unchanged shuffle signature, and either a post-sweep re-window could not reproduce the reference or the re-window budget (15 rows, or the suite wall budget) was exhausted — read as uniform environment contamination, not code; partial = the suite was still running when this file was last flushed (the file is rewritten after every completed row, so an externally killed sweep still leaves its finished rows here); capped = a run blew the per-query wall cap (max(60s, 10x committed reference median) x max(1, sched_now/sched_ref_ms), capped at 50x; 600s base when unreferenced) and was cancelled; every capped row LEFT FAILED by its kill gets ONE post-sweep retry window (warmup + 2 timed runs under a freshly scaled cap): recovered = the retry was clean — its stats replace the row's (the cap-kill was the window, not the query; sched_at_kill_ms vs sched_at_retry_ms show the burst), capped_twice = the retry ALSO blew its cap or failed — the row stays failed and is a genuine stall, capped_healthy = the kill landed during a post-sweep pass (heal/re-window) while the row's pooled stats from its other windows stayed healthy — no retry needed, the published median already excludes the killed run; canary_series = spot sched-canary readings (5 no-op 32-task jobs scaled x4 to the 20-job canary_ms unit) every 25 full-mode rows, on the first row after any kill/burst-tagged reading (so a transient burst's reading scales at most one later row's cap instead of 24), before each degraded-mode row, and at every cap kill, burst trip, env_suspect trip and retry, with i = how many rows had completed and steal = cumulative /proc/stat steal ticks at the reading; sched_ms = the series reading that scaled the row's cap (captured BEFORE the window ran — a kill/burst reading taken during the row lands in the series and sched_probe_ms, not here); run_t = suite-relative start second of each runs[] entry, index-aligned, so any run can be placed against the canary_series timeline; sched_probe_ms = a spot canary taken AT a guard trip for non-capped rows — an in-sweep timed run blowing max(0.5s, 3x committed median) (series tag burst:NAME) or an env_suspect flag after its re-window (tag env:NAME) — the kill-time-equivalent reading that lets a full-mode burst be read from the artifact alone (budgeted at 40 probes/sweep: probes cost seconds DURING the bursts they measure; rows past the budget still align via run_t); rewindowed = worst degraded rows (ratio to committed median > 3x, up to 8, budget permitting) re-measured post-sweep with warmup + 2 timed runs — published median/min pool the degraded run with the rewindow runs (two-window stats; prior_sec preserves the single-run value), rows stay listed in degraded; host = cumulative /proc/stat steal ticks (USER_HZ, all-vCPU) and cgroup throttled ms at suite start/end — a wall burst with flat guest loadavg/gc but a steal delta is host CPU steal, one with neither is hypervisor-level (the r14 failure mode); zombie_after = cap-killed workers that survived interrupt — rows measured after these entries may be contaminated by the un-reaped thread; degraded = measured past the suite wall budget (budget_sec) with a single timed run, no warmup, no heal/env passes; skipped = not run at all past 2x the budget — the hard stop that guarantees this artifact exists before any external timeout; timed_runs = planned first-window timed runs per row (2 for rows whose committed reference median/min is within 5% and which are not streaming, else 3 = runs_max); streaming = the registry-derived micro-batch replay row set (StreamQueries.queries — includes q_sessionize_tws, which a name grep misses): always 3 timed runs, and the adoption gate's 1.3x-of-committed-min guard applies to exactly these rows; scratch = the medium (tmpfs|disk) of the per-run java.io.tmpdir root holding checkpoints, state stores, shuffle and layout caches — tmpfs decouples the streaming rows from co-tenant disk churn; canary_ms = fixed window-speed workloads at suite start/end (cpu = 20k md5 of 1KB single-core; sched = 20 no-op 32-task jobs, the per-stage scheduling cost micro-batch streaming amplifies) — host-level slowness is invisible to guest loadavg/pressure, so compare these against sched_ref_ms (the committed reference's pinned clean-window sched canary; 500 is the calibrated fallback for a reference that predates the field — the r13 judge-measured clean-window range was 388-502) before adjudicating a wall delta"}"""
+    s"""{"metric":"total","value":$total,"unit":"sec","partial":$partial,"queries":$medians,"min":$mins,"runs":$runs,"run_t":$runT,"shuffle_write_mb":$shufW,"shuffle_read_mb":$shufR,"gc_ms":$gc,"bench_ref":"$refSource","sched_ref_ms":${r2(schedRefMs)},"budget_sec":${r2(budgetSec)},"scratch":"$scratch","canary_ms":${obj(canaries.map { case (k, v) => k -> r2(v).toString })},"canary_series":$series,"sched_ms":$schedRows,"failed":${q(failed)},"suspect":${q(suspects)},"env_suspect":${q(envSuspects)},"degraded":${q(degraded)},"capped":${q(capped)},"host":${obj(host.map { case (k, v) => k -> v.toString })},"zombie_after":${q({ import scala.jdk.CollectionConverters._; zombies.iterator().asScala.toSeq })},"skipped":${q(skipped)},"streaming":${q(rows.map(_.name).filter(streamingNames.contains))},"sf":"$sfDir","timed_runs":${obj(timedRunsPlan.map { case (k, v) => k -> v.toString })},"runs_max":$Runs,"stat":"median","note":"every row is measured in ONE window and never re-measured; runs[0] is the untimed warmup, excluded from median/min (degraded rows have no warmup: their runs array holds the single timed run); run_t = suite-relative start second of each runs[] entry, index-aligned, for placing runs against canary_series; suspect = median/min > 2x (contaminated window); shuffle_* = median-run task totals (MB), gc_ms = per-timed-run JVM GC totals — same shuffle + high gc reads as environment pressure, higher shuffle as a plan change; env_suspect = min > 3x the committed reference min with an unchanged shuffle signature, read as uniform environment contamination, not code (bench_ref = most recent GIT-COMMITTED snapshot of this file whose own flag lists are all empty — a flagged snapshot is evidence, never a baseline); partial = the suite was still running when this file was last flushed (the file is rewritten after every completed row, so an externally killed sweep still leaves its finished rows here); capped = a run blew the per-query wall cap (max(60s, 10x committed reference median) x max(1, sched_now/sched_ref_ms), capped at 50x; 600s base when unreferenced), was cancelled and the row reports failed; canary_series = spot sched-canary readings (5 no-op 32-task jobs scaled x4 to the 20-job canary_ms unit) every 25 full-mode rows and before each degraded-mode row, with i = how many rows had completed and steal = cumulative /proc/stat steal ticks at the reading; sched_ms = the series reading that scaled the row's cap; host = cumulative /proc/stat steal ticks (USER_HZ, all-vCPU) and cgroup throttled ms at suite start/end; zombie_after = cap-killed workers that survived interrupt — rows measured after these entries may be contaminated by the un-reaped thread; degraded = measured past the suite wall budget (budget_sec) with a single timed run, no warmup; skipped = not run at all past 2x the budget — the hard stop that guarantees this artifact exists before any external timeout; timed_runs = planned timed runs per row (2 for rows whose committed reference median/min is within 5% and which are not streaming, else 3 = runs_max); streaming = the registry-derived micro-batch replay row set (StreamQueries.queries): always 3 timed runs, and the adoption gate's 1.3x-of-committed-min guard applies to exactly these rows; scratch = the medium (tmpfs|disk) of the per-run java.io.tmpdir root; canary_ms = fixed window-speed workloads at suite start/end (cpu = 20k md5 of 1KB single-core; sched = 20 no-op 32-task jobs) — compare against sched_ref_ms (the committed reference's clean-window sched canary; 500 when the reference predates the field) before adjudicating a wall delta"}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -703,12 +594,6 @@ object Bench {
     // also emitted in the artifact so tools/adopt_bench.py gates the
     // same 17 rows the bench protects.
     val streamingNames: Set[String] = graft.streaming.StreamQueries.queries.keySet
-    // TEST KNOB (never set by the driver): shrink the 60s cap floor so
-    // the cap-kill → retry → recovered/capped_twice adjudication path
-    // can be exercised deterministically at sub-second timescales — the
-    // r13 burst replay the verdict's task 1 asks for
-    val capFloor = sys.env.get("SPARK_GRAFT_CAP_FLOOR")
-      .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(60.0)
     // spot sched-canary series (r13 task 2): (rows-completed, tag, ms,
     // cumulative host-steal ticks at the reading — r14 task 5)
     val series = scala.collection.mutable.ArrayBuffer[(Int, String, Double, Long)]()
@@ -716,11 +601,10 @@ object Bench {
       series += ((i, tag, ms, hostStealTicks()))
     def latestSched(): Double = series.lastOption.map(_._3).getOrElse(-1.0)
     def cap(name: String): Double = BenchStats.scaledCap(
-      refStats.get(name).map(_._1), latestSched(), schedRefMs, capFloor)
+      refStats.get(name).map(_._1), latestSched(), schedRefMs)
     val suiteT0 = System.nanoTime()
     def elapsed(): Double = (System.nanoTime() - suiteT0) / 1e9
     def mode(): String = BenchStats.budgetMode(elapsed(), budgetSec)
-    val suiteLoadStart = loadavg1()
     val spark = graft.engine.Engine.session()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
@@ -736,30 +620,18 @@ object Bench {
     val capped = scala.collection.mutable.LinkedHashSet[String]()
     val skipped = scala.collection.mutable.LinkedHashSet[String]()
     val canaries = scala.collection.mutable.ArrayBuffer[(String, Double)]()
-    val recovered = scala.collection.mutable.LinkedHashMap[String, String]()
-    val cappedTwice = scala.collection.mutable.LinkedHashSet[String]()
     val timedRunsPlan = scala.collection.mutable.LinkedHashMap[String, Int]()
-    // degraded rows re-measured post-sweep (r14 verdict task 4)
-    val rewindowed = scala.collection.mutable.LinkedHashMap[String, String]()
-    // spot canary taken AT a guard trip (burst run / env_suspect flag)
-    // for non-capped rows — the r14 task-1 fix: q_date_funcs published
-    // a 186x wall whose only sched stamp was 25 rows stale
-    val schedProbe = scala.collection.mutable.LinkedHashMap[String, Double]()
     // host-pressure counters at suite start/end (r14 task 5)
     val host = scala.collection.mutable.LinkedHashMap[String, Long](
       "steal_ticks_start" -> hostStealTicks(),
       "throttled_ms_start" -> hostThrottledMs())
-    // sched spot reading taken AT each cap kill, keyed by row name —
-    // surfaces in the recovered record so a reader can see the burst
-    val killSched = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val killCap = scala.collection.mutable.LinkedHashMap[String, Double]()
-    def flush(rows: Seq[BenchRow], envSuspects: Seq[String],
-        partial: Boolean): Unit = {
-      val json = artifactJson(rows, envSuspects, partial, degraded.toSeq,
-        capped.toSeq, skipped.toSeq, refSource, suiteLoadStart, budgetSec,
+    def envSuspectsOf(rows: Seq[BenchRow]): Seq[String] =
+      BenchStats.envSuspects(rows.map(r => (r.name, r.min, mb(r.shufWriteB))), refMinSw)
+    def flush(rows: Seq[BenchRow], partial: Boolean): Unit = {
+      val json = artifactJson(rows, envSuspectsOf(rows), partial,
+        degraded.toSeq, capped.toSeq, skipped.toSeq, refSource, budgetSec,
         sfDir, scratchMedium, canaries.toSeq, series.toSeq,
-        recovered.toSeq, cappedTwice.toSeq, timedRunsPlan.toSeq, schedRefMs,
-        streamingNames, rewindowed.toSeq, schedProbe.toSeq, host.toSeq)
+        timedRunsPlan.toSeq, schedRefMs, streamingNames, host.toSeq)
       // temp + atomic rename: an external kill landing mid-write must
       // never truncate the artifact the flush exists to preserve
       try {
@@ -803,102 +675,46 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     val acc = scala.collection.mutable.ArrayBuffer[BenchRow]()
-    var rowIdx = 0
-    // eager decay (r14 ADVICE): a kill/burst-tagged series reading is
-    // the live cap-scaling input for every later row until the next
-    // periodic sample — up to 24 rows of up-to-50x caps after a
-    // transient burst has passed. Setting this forces a fresh spot
-    // reading before the NEXT row, so a burst reading scales at most
-    // one row's cap.
-    var forceSpot = false
-    // a cap kill gets an immediate spot reading: the burst that killed
-    // the row is only attributable if it is measured AT the kill
-    def stampKill(name: String, capUsed: Double): Unit = {
-      capped += name
-      val s = spotSchedMs(sc)
-      mark(rowIdx, s"kill:$name", s)
-      killSched(name) = s
-      killCap(name) = capUsed
-      forceSpot = true
-    }
-    // in-sweep burst probe (r14 verdict task 1): the full-mode
-    // equivalent of stampKill — a run that blew 3x its committed
-    // median gets a trip-time canary reading into the series AND the
-    // row's sched_probe_ms record. Budgeted at 40 per sweep: the r14
-    // window would have tripped 28 of its 121 full-mode rows (probes
-    // cost ~0.1s clean but seconds DURING the burst they measure —
-    // that window's kill-time readings ran 27-60s for the 20-job
-    // unit), so an unbounded pathological window could spend minutes
-    // probing; past the budget rows still carry run_t for alignment
-    // against the existing series.
-    // env-pass trips (≤ the 15-row rewindow budget by construction)
-    // don't consume the in-sweep budget: an env_suspect flag that
-    // survives its re-window must ALWAYS carry a trip-time reading
-    var burstBudget = 40
-    def stampBurst(name: String, tag: String): Unit =
-      if (tag != "burst" || burstBudget > 0) {
-        if (tag == "burst") burstBudget -= 1
-        val s = spotSchedMs(sc)
-        mark(rowIdx, s"$tag:$name", s)
-        schedProbe(name) = s
-        forceSpot = true
-      }
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
+        val rowIdx = acc.size
         val m = mode()
-        // periodic spot canary: every 25 full-mode rows; on the first
-        // row after any kill/burst reading (eager decay); before EVERY
+        // periodic spot canary: every 25 full-mode rows; before EVERY
         // degraded-mode row (those have a single timed run each, so
         // per-row attribution is all the artifact will ever have)
-        if (m == "degraded" ||
-            (m == "full" && (forceSpot || (rowIdx % 25 == 0 && rowIdx > 0)))) {
-          mark(rowIdx,
-            if (m == "degraded") "degraded"
-            else if (forceSpot) "refresh" else "periodic", spotSchedMs(sc))
-          forceSpot = false
-        }
-        // captured BEFORE the window runs: sched_ms documents the
-        // reading that actually scaled this row's cap — r14 stamped
-        // latestSched() AFTER stampKill had appended the kill reading
+        if (m == "degraded") mark(rowIdx, "degraded", spotSchedMs(sc))
+        else if (m == "full" && rowIdx % 25 == 0 && rowIdx > 0)
+          mark(rowIdx, "periodic", spotSchedMs(sc))
         val schedUsed = latestSched()
-        val capNow = BenchStats.scaledCap(refStats.get(name).map(_._1),
-          schedUsed, schedRefMs, capFloor)
+        val capNow = cap(name)
         val row = m match {
           case "skip" =>
             skipped += name
             timedRunsPlan(name) = 0
-            BenchRow(name, -1.0, -1.0, Seq.empty, 0L, 0L, Seq.empty, Seq.empty)
+            BenchRow(name, -1.0, -1.0, Seq.empty, 0L, 0L, Seq.empty)
           case "degraded" =>
             degraded += name
             timedRunsPlan(name) = 1
-            val (runsM, load, c) =
+            val (runsM, c) =
               timedWindow(sc, spark, sfDir, fn, capNow, elapsed _, runs = 1, tag = name)
-            if (c) stampKill(name, capNow)
+            if (c) capped += name
             val sec = runsM.head._1
             BenchRow(name, sec, sec, runsM.map(_._1), runsM.head._2,
-              runsM.head._3, runsM.map(_._4), load, schedUsed,
-              runsM.map(_._5))
+              runsM.head._3, runsM.map(_._4), schedUsed, runsM.map(_._5))
           case _ =>
             val nRuns = BenchStats.timedRuns(refStats.get(name).map(_._1),
               refStats.get(name).map(_._2), streamingNames.contains(name))
             timedRunsPlan(name) = nRuns
             val warmT = elapsed()
             val (warm, wCapped) = timeOnceCapped(spark, fn(spark, sfDir), capNow, name)
-            if (wCapped) stampKill(name, capNow)
             // a failed warmup means the query itself fails — don't run
             // it N more times just to fail N more times
-            val (runsM, load, c) =
-              if (warm < 0) (Seq.fill(nRuns)((-1.0, 0L, 0L, 0L, elapsed())), Seq.empty[Double], false)
+            val (runsM, c) =
+              if (warm < 0) (Seq.fill(nRuns)((-1.0, 0L, 0L, 0L, elapsed())), false)
               else timedWindow(sc, spark, sfDir, fn, capNow, elapsed _, runs = nRuns, tag = name)
-            if (c) stampKill(name, capNow)
+            if (wCapped || c) capped += name
             val timed = runsM.map(_._1)
-            // guard trip: a timed run past 3x the committed median is
-            // a burst — take the canary reading AT the trip, not 25
-            // rows later (skip when a kill already stamped this row)
-            if (!wCapped && !c && timed.exists(t =>
-                BenchStats.burstProbe(refStats.get(name).map(_._1), t)))
-              stampBurst(name, "burst")
             // any failed run poisons the stats: report -1, never a
             // healthy-looking near-zero exception time
             val bad = timed.contains(-1.0)
@@ -909,263 +725,43 @@ object Bench {
             def med(xs: Seq[Long]): Long = xs.sorted.apply(xs.size / 2)
             BenchRow(name, median, min, warm +: timed,
               med(runsM.map(_._2)), med(runsM.map(_._3)), runsM.map(_._4),
-              load, schedUsed, warmT +: runsM.map(_._5))
+              schedUsed, warmT +: runsM.map(_._5))
         }
-        rowIdx += 1
         acc += row
-        flush(acc.toSeq, Seq.empty, partial = true)
+        flush(acc.toSeq, partial = true)
       }
     val results = acc.toSeq
-    // self-heal pass (r9 verdict #3): a suspect row (median/min > 2×)
-    // means two of three timed runs hit a contention window — GC pause,
-    // co-tenant burst — that the per-query warmup couldn't absorb. The
-    // r9 artifact carried three such rows with 13.5s GC pauses inside
-    // one run. Re-measure each suspect ONCE after the full sweep (by
-    // then the JVM has settled and nothing else is in flight) and
-    // publish the median over ALL timed runs from both windows
-    // (BenchStats.combineWindows — r11 published the LOWER of the two
-    // medians, a best-of-two selection bias); every raw run from both
-    // windows stays in `runs` whatever the rerun showed, and a row
-    // still suspect AFTER the heal is a genuine bimodal query, not
-    // noise. Skipped entirely once past the suite budget — in a window
-    // that degraded, more windows are more contamination, not less.
-    val live = scala.collection.mutable.LinkedHashMap(
-      results.map(r => r.name -> r): _*)
-    // post-sweep eager decay: the main loop consumes forceSpot, so a
-    // kill DURING a heal/env-pass window would otherwise leave its
-    // burst reading (up to 50x) as every remaining pass row's
-    // cap-scaling input — the same stickiness the main sweep's
-    // `refresh` closes, one level down
-    def freshSchedAfterKill(): Unit =
-      if (series.lastOption.exists(_._2.startsWith("kill:")))
-        mark(rowIdx, "refresh", spotSchedMs(sc))
-    results.foreach { r =>
-      if (BenchStats.isSuspect(r.median, r.min) && mode() == "full" &&
-          !degraded.contains(r.name) && !skipped.contains(r.name)) {
-        freshSchedAfterKill()
-        val healCap = cap(r.name)
-        val (rerunsM, load2, c) = timedWindow(sc, spark, sfDir,
-          SparkEntry.queries(r.name), healCap, elapsed _, tag = r.name)
-        if (c) stampKill(r.name, healCap)
-        live(r.name) = BenchStats.combineWindows(r, rerunsM.map(_._1),
-          rerunsM.map(_._4), load2, rerunsM.map(_._5))
-        flush(live.values.toSeq, Seq.empty, partial = true)
-      }
-    }
-    // capped-row retry pass (r13 verdict task 1): BENCH_r13 recorded 12
-    // environmental cap-kills as `failed` with no in-artifact
-    // adjudication — every one judge-re-measured green at 1.0-1.8× its
-    // committed median (the burst was the window, not the query), but
-    // the artifact alone could not prove it. Each cap-killed row gets
-    // ONE retry window (warmup + 2 timed runs under a freshly scaled
-    // cap, ~seconds per row at committed medians) stamped with the
-    // sched reading at the kill AND at the retry: a clean retry
-    // REPLACES the row's stats and lands in `recovered` with both
-    // readings — the reader can see the burst without a judge re-run —
-    // while a row that blows its cap twice stays failed and lands in
-    // `capped_twice`, a genuine stall. Runs even in degraded mode (cap
-    // kills concentrate in exactly the windows that degrade; the per-
-    // row cost is bounded by the cap) but not past the hard stop.
-    capped.toSeq.foreach { name =>
-      val cur = live.get(name)
-      if (cur.exists(_.median < 0) && mode() != "skip") {
-        val r = cur.get
-        val sRetry = spotSchedMs(sc)
-        mark(rowIdx, s"retry:$name", sRetry)
-        val retryCap = BenchStats.scaledCap(
-          refStats.get(name).map(_._1), sRetry, schedRefMs, capFloor)
-        val (warm, wc) = timeOnceCapped(spark,
-          SparkEntry.queries(name)(spark, sfDir), retryCap, name)
-        val (runsM, load2, c2) =
-          if (wc || warm < 0)
-            (Seq.empty[(Double, Long, Long, Long, Double)], Seq.empty[Double], wc)
-          else timedWindow(sc, spark, sfDir, SparkEntry.queries(name),
-            retryCap, elapsed _, runs = 2, tag = name)
-        val timed = runsM.map(_._1)
-        if (wc || c2 || warm < 0 || timed.isEmpty || timed.contains(-1.0)) {
-          if (wc || c2) cappedTwice += name
-          // an error-failed retry (warm < 0, not capped) stays plain
-          // failed: the retry only adjudicates CAP kills
-        } else {
-          def med(xs: Seq[Long]): Long = xs.sorted.apply(xs.size / 2)
-          // the retry REPLACES the row's stats (median/min over the
-          // retry runs ONLY — pre-kill runs from the burst window that
-          // killed the row are contaminated by construction and must
-          // not be pooled into a field documented as a clean recovery);
-          // `raw` still grows so every pre-kill run stays auditable
-          live(name) = r.copy(median = BenchStats.median(timed),
-            min = timed.min, raw = r.raw ++ timed,
-            shufWriteB = med(runsM.map(_._2)), shufReadB = med(runsM.map(_._3)),
-            gcMsRuns = r.gcMsRuns ++ runsM.map(_._4), load = r.load ++ load2,
-            schedMs = sRetry, tSec = r.tSec ++ runsM.map(_._5))
-          recovered(name) = obj(Seq(
-            "sec" -> r3(BenchStats.median(timed)).toString,
-            "min" -> r3(timed.min).toString,
-            "sched_at_kill_ms" -> r2(killSched.getOrElse(name, -1.0)).toString,
-            "sched_at_retry_ms" -> r2(sRetry).toString,
-            "cap_at_kill_sec" -> r2(killCap.getOrElse(name, -1.0)).toString,
-            "retry_cap_sec" -> r2(retryCap).toString))
-        }
-        flush(live.values.toSeq, Seq.empty, partial = true)
-      }
-    }
-    val healed = live.values.toSeq
-    flush(healed, Seq.empty, partial = true)
-    // reference-window guard (r10 verdict #3): the intra-window suspect
-    // heuristic (median/min > 2×) is blind to UNIFORMLY slow windows —
-    // r10's driver window ran the alphabetically-contiguous dedup_*/
-    // emb_* block 4-13× slow across ALL runs (identical shuffle bytes,
-    // zero GC), so nothing tripped the ratio and ~31s of phantom
-    // regression was published. Guard: a query whose min is >3× the
-    // committed reference min (readRefStats — git HEAD, not the file a
-    // local back-to-back run just overwrote) while its shuffle signature
-    // is unchanged (same plan ⇒ same bytes, ±20% AQE jitter) gets ONE
-    // more post-sweep window; if even that window can't reproduce the
-    // reference, the row keeps its pooled measured time but is flagged
-    // `env_suspect` in the artifact — reported, never silently
-    // rewritten, and all raw runs from every window stay auditable.
-    // Selection and budget policy live in BenchStats.selectRewindow
-    // (unit-tested, incl. the budget-exhausted path). A re-window that
-    // the SUITE budget cancels is flagged without re-measurement — the
-    // same semantics as exhausting the 15-row budget.
-    val rewindowBudget = 15
-    // recovered rows are excluded: their stats were just REPLACED by a
-    // clean retry window and carry a full adjudication record; a
-    // combineWindows re-pool here would mix the pre-kill burst runs
-    // back into the published median
-    val eligible = healed.filterNot(r =>
-      degraded.contains(r.name) || skipped.contains(r.name) ||
-        recovered.contains(r.name))
-    val (rewindowSet, overBudget) = BenchStats.selectRewindow(
-      eligible.map(r => (r.name, r.min, mb(r.shufWriteB))), refMinSw,
-      rewindowBudget)
-    val rechecked = healed.map { r =>
-      if (overBudget.contains(r.name)) (r, true)
-      else if (!rewindowSet.contains(r.name)) (r, false)
-      else if (mode() != "full") (r, true)
-      else {
-        freshSchedAfterKill()
-        val envCap = cap(r.name)
-        val (rerunsM, load2, c) = timedWindow(sc, spark, sfDir,
-          SparkEntry.queries(r.name), envCap, elapsed _, tag = r.name)
-        if (c) stampKill(r.name, envCap)
-        val timed = rerunsM.map(_._1)
-        val refMin = refStats(r.name)._2
-        val stillSlow = timed.contains(-1.0) || timed.min > 3.0 * refMin
-        // guard trip (r14 verdict task 1): a row the re-window could
-        // not clear gets a canary reading AT the flag, the same
-        // standard cap kills get — unless a kill during this very
-        // window already stamped one
-        if (stillSlow && !c) stampBurst(r.name, "env")
-        (BenchStats.combineWindows(r, timed, rerunsM.map(_._4), load2,
-          rerunsM.map(_._5)), stillSlow)
-      }
-    }
-    val healed2 = rechecked.map(_._1)
-    val envSuspects = rechecked.collect { case (r, true) => r.name }
-    // degraded-row rewindow pass (r14 verdict task 4): degraded rows
-    // are single timed runs measured past the blown budget — unlike
-    // cap-killed rows they got no retry, so the r14 driver window
-    // published 186 medians-of-one. The worst (ratio to committed
-    // median > 3x, up to 8) get one more window (warmup + 2 timed runs
-    // under a freshly scaled cap) whose runs are POOLED with the
-    // degraded run (two-window stats; the degraded run stays in the
-    // pool as evidence — with 2 clean runs the median lands on a clean
-    // one). Recovered rows are excluded (their stats were already
-    // replaced by a clean retry); rows stay in `degraded` — the
-    // `rewindowed` record is the adjudication. Bounded by the same
-    // hard stop as the capped-retry pass: never past 2x the budget.
-    val finalRows = scala.collection.mutable.LinkedHashMap(
-      healed2.map(r => r.name -> r): _*)
-    val rwCandidates = BenchStats.selectDegradedRewindow(
-      finalRows.values.toSeq
-        .filter(r => degraded.contains(r.name) && !recovered.contains(r.name))
-        .map(r => (r.name, r.median)),
-      refStats.map { case (n, (md, _, _)) => n -> md }, budget = 8)
-    rwCandidates.foreach { name =>
-      if (mode() != "skip") {
-        val r = finalRows(name)
-        val sRw = spotSchedMs(sc)
-        mark(rowIdx, s"rewindow:$name", sRw)
-        // a rewindow is only worth its runs in a CLEAN window: the
-        // spot reading is taken before anything runs, and past 2x the
-        // pinned clean sched_ref the new window would pool taxed runs
-        // with taxed runs — silently "improving" the stat with more
-        // contamination. Skip; the attempted reading stays in the
-        // series as evidence the pass looked and declined.
-        if (schedRefMs > 0 && sRw > 2.0 * schedRefMs) {
-          flush(finalRows.values.toSeq, envSuspects, partial = true)
-        } else {
-        val rwCap = BenchStats.scaledCap(
-          refStats.get(name).map(_._1), sRw, schedRefMs, capFloor)
-        val warmT = elapsed()
-        val (warm, wc) = timeOnceCapped(spark,
-          SparkEntry.queries(name)(spark, sfDir), rwCap, name)
-        if (wc) stampKill(name, rwCap)
-        val (runsM, load2, c2) =
-          if (wc || warm < 0)
-            (Seq.empty[(Double, Long, Long, Long, Double)], Seq.empty[Double], false)
-          else timedWindow(sc, spark, sfDir, SparkEntry.queries(name),
-            rwCap, elapsed _, runs = 2, tag = name)
-        if (c2) stampKill(name, rwCap)
-        val timed = runsM.map(_._1)
-        if (!wc && !c2 && warm >= 0 && timed.nonEmpty &&
-            !timed.contains(-1.0)) {
-          // degraded raw has NO warmup slot — pool ALL of raw with the
-          // rewindow runs (combineWindows would drop raw(0), which here
-          // is the real degraded timed run, not a warmup); the rewindow
-          // warmup is excluded from the pool like any warmup but its
-          // timestamp is recorded via the runs that follow it
-          val pool = (r.raw ++ timed).filter(_ >= 0)
-          finalRows(name) = r.copy(median = BenchStats.median(pool),
-            min = pool.min, raw = r.raw ++ timed,
-            gcMsRuns = r.gcMsRuns ++ runsM.map(_._4), load = r.load ++ load2,
-            tSec = r.tSec ++ runsM.map(_._5))
-          rewindowed(name) = obj(Seq(
-            "sec" -> r3(BenchStats.median(pool)).toString,
-            "min" -> r3(pool.min).toString,
-            "prior_sec" -> r3(r.median).toString,
-            "sched_at_rewindow_ms" -> r2(sRw).toString,
-            "rewindow_t" -> r2(warmT).toString))
-        }
-        flush(finalRows.values.toSeq, envSuspects, partial = true)
-        }
-      }
-    }
-    val healed3 = finalRows.values.toSeq
     canaries += ("cpu_end" -> cpuCanaryMs())
     val schedEnd = schedCanaryMs(sc)
     canaries += ("sched_end" -> schedEnd)
-    mark(rowIdx, "end", schedEnd)
+    mark(results.size, "end", schedEnd)
     host("steal_ticks_end") = hostStealTicks()
     host("throttled_ms_end") = hostThrottledMs()
-    flush(healed3, envSuspects, partial = false)
-    val ok = healed3.filter(_.median >= 0)
-    val failed = healed3.filter(_.median < 0)
+    flush(results, partial = false)
+    val ok = results.filter(_.median >= 0)
+    val failed = results.filter(_.median < 0)
     val suspects = ok.filter(r => BenchStats.isSuspect(r.median, r.min))
+    val envSuspects = envSuspectsOf(results)
     val total = r3(ok.map(_.median).sum)
     // stdout: short + complete beats long + truncated
     val topRows = ok.sortBy(-_.median).take(10).sortBy(_.name)
     val top = obj(topRows.map(r => r.name -> r3(r.median).toString))
-    // per-row adjudication for the top-10 (r15 verdict task 5): the
-    // one-line JSON used to carry only flag COUNTS, so a reader of the
-    // driver's stdout tail could not tell a steal burst (r15's 102.8s
-    // dedup_ngram_jaccard, min 1.7s, flagged) from a plan regression
-    // without BENCH_LOCAL internals. Additions-only: `queries` and
-    // every existing key keep their exact shape.
+    // per-row flags for the top-10, so a reader of the stdout tail can
+    // tell a contaminated window from a plan regression without opening
+    // BENCH_LOCAL.json
     val flagSets: Seq[(String, String => Boolean)] = Seq(
       "suspect" -> suspects.map(_.name).toSet,
       "env_suspect" -> envSuspects.toSet,
-      "degraded" -> degraded.toSet, "capped" -> capped.toSet,
-      "recovered" -> recovered.keySet, "capped_twice" -> cappedTwice.toSet,
-      "rewindowed" -> rewindowed.keySet)
+      "degraded" -> degraded.toSet, "capped" -> capped.toSet)
     val detail = obj(topRows.map { r =>
       val fl = BenchStats.flagsOf(r.name, flagSets)
       r.name -> obj(Seq("median" -> r3(r.median).toString,
         "min" -> r3(r.min).toString, "flagged" -> ("\"" + fl + "\"")))
     })
+    // recovered / capped_twice / rewindowed stay in the key set the
+    // line's reader decodes; nothing sets them any more (Bench scaladoc)
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$top,"queries_detail":$detail,"failed":${failed.size},"suspect":${suspects.size},"env_suspect":${envSuspects.size},"degraded":${degraded.size},"capped":${capped.size},"recovered":${recovered.size},"capped_twice":${cappedTwice.size},"rewindowed":${rewindowed.size},"zombies":${zombies.size},"skipped":${skipped.size},"n":${healed3.size},"sf":"$sfDir","stat":"median_of_2_or_3","file":"$outFile"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$top,"queries_detail":$detail,"failed":${failed.size},"suspect":${suspects.size},"env_suspect":${envSuspects.size},"degraded":${degraded.size},"capped":${capped.size},"recovered":0,"capped_twice":0,"rewindowed":0,"zombies":${zombies.size},"skipped":${skipped.size},"n":${results.size},"sf":"$sfDir","stat":"median_of_2_or_3","file":"$outFile"}"""
     // silence shutdown logs, stop, THEN print: the line must be last
     spark.sparkContext.setLogLevel("ERROR")
     spark.stop()

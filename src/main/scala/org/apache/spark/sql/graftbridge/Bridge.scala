@@ -13,19 +13,27 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Unpersist the block-backed RDD behind a materialized
-    * (localCheckpoint'd) DataFrame (ADVICE r15): iterative loops that
-    * checkpoint a new frame per round otherwise accumulate O(rounds ×
-    * corpus) executor storage — the previous round's blocks are
-    * unreferenced the moment the new round's are materialized, but
-    * Dataset exposes no way to release them (`unpersist` only clears
-    * CacheManager entries). Reaches the `private[sql]` LogicalRDD the
-    * checkpoint left as the plan root. MUST only be called on frames
-    * no later plan references: localCheckpoint truncates lineage, so an
-    * unpersisted frame cannot be recomputed. No-op for reliable
-    * checkpoints (their RDD is file-backed, not block-persisted). */
+  /** Release the storage behind a materialized DataFrame
+    * (`Engine.materialize`): iterative loops that checkpoint a new
+    * frame per round otherwise accumulate O(rounds × corpus) of it —
+    * the previous round's data is unreferenced the moment the new
+    * round's is materialized, but Dataset exposes no way to release it
+    * (`unpersist` only clears CacheManager entries). Reaches the
+    * `private[sql]` LogicalRDD the checkpoint left as the plan root. A
+    * local checkpoint's executor blocks are unpersisted; a reliable
+    * checkpoint's files are deleted through their Hadoop FileSystem
+    * (Spark only cleans them with `spark.cleaner.referenceTracking.
+    * cleanCheckpoints`, off by default). MUST only be called on frames
+    * no later plan references: both checkpoints truncate lineage, so a
+    * released frame cannot be recomputed. */
   def unpersistMaterialized(df: org.apache.spark.sql.DataFrame): Unit =
     df.queryExecution.analyzed.collectFirst {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(_.unpersist(blocking = false))
+    }.foreach { rdd =>
+      rdd.unpersist(blocking = false)
+      rdd.getCheckpointFile.foreach { f =>
+        val path = new org.apache.hadoop.fs.Path(f)
+        path.getFileSystem(rdd.context.hadoopConfiguration).delete(path, true)
+      }
+    }
 }

@@ -2,119 +2,34 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Unit tests for [[BenchStats]] — the bench's window-merge and
-  * env-guard policies, pure of any SparkSession. Two r11 findings are
-  * pinned here: the heal's best-of-two-medians selection bias (replaced
-  * by a pooled all-runs median) and the never-exercised budget-exhausted
-  * path of the re-window guard. */
+/** Unit tests for [[BenchStats]] — the bench's one-window flag, cap
+  * and budget policies, pure of any SparkSession — and for the
+  * artifact's render/parse round-trip. */
 class BenchStatsSpec extends AnyFunSuite {
-
-  private def row(name: String, raw: Seq[Double]): BenchRow = {
-    val timed = raw.drop(1)
-    BenchRow(name, BenchStats.median(timed), timed.min, raw,
-      1000000L, 2000000L, Seq(1L, 2L, 3L), Seq(0.5, 0.6))
-  }
 
   test("median: odd and even run counts") {
     assert(BenchStats.median(Seq(3.0, 1.0, 2.0)) == 2.0)
     assert(BenchStats.median(Seq(4.0, 1.0, 2.0, 3.0)) == 2.5)
   }
 
-  test("combineWindows pools ALL timed runs — no best-of-window bias") {
-    // planted bimodal pair of windows: window 1 contaminated (two 10s
-    // runs), window 2 clean. min-of-medians (the r11 policy) would
-    // publish 1.1 — the pooled median over all six runs is 1.15, the
-    // unbiased center of what was actually measured.
-    val r = row("q", raw = Seq(12.0, 1.0, 10.0, 10.0)) // warm, then timed
-    assert(BenchStats.isSuspect(r.median, r.min))
-    val c = BenchStats.combineWindows(r, Seq(1.1, 1.0, 1.2), Seq(4L, 5L, 6L),
-      Seq(0.7, 0.8))
-    assert(c.median == BenchStats.median(Seq(1.0, 10.0, 10.0, 1.1, 1.0, 1.2)))
-    assert(math.abs(c.median - 1.15) < 1e-12)
-    assert(c.min == 1.0)
-    // every raw run from both windows stays auditable
-    assert(c.raw == Seq(12.0, 1.0, 10.0, 10.0, 1.1, 1.0, 1.2))
-    assert(c.gcMsRuns == Seq(1L, 2L, 3L, 4L, 5L, 6L))
-    assert(c.load == Seq(0.5, 0.6, 0.7, 0.8))
-  }
-
-  test("combineWindows keeps a NON-improving rerun window's evidence") {
-    // r11 discarded the rerun raw when med2 >= median, contradicting the
-    // artifact's "all raw runs stay auditable" note — the evidence that
-    // a re-window failed to reproduce the reference was lost.
-    val r = row("q", raw = Seq(2.0, 1.0, 1.0, 1.0))
-    val c = BenchStats.combineWindows(r, Seq(5.0, 5.0, 5.0), Seq(9L, 9L, 9L),
-      Seq(3.0, 3.1))
-    assert(c.raw == Seq(2.0, 1.0, 1.0, 1.0, 5.0, 5.0, 5.0))
-    assert(c.median == 3.0) // pooled (1,1,1,5,5,5) — not min(1, 5)
-    assert(c.load == Seq(0.5, 0.6, 3.0, 3.1))
-  }
-
-  test("combineWindows: failed rerun runs are appended but excluded from stats") {
-    val r = row("q", raw = Seq(2.0, 1.0, 9.0, 9.0))
-    val c = BenchStats.combineWindows(r, Seq(-1.0, 1.2, -1.0), Seq(0L, 0L, 0L),
-      Seq(1.0, 1.0))
-    assert(c.raw.count(_ == -1.0) == 2) // evidence kept
-    assert(c.median == BenchStats.median(Seq(1.0, 9.0, 9.0, 1.2)))
-  }
-
-  test("combineWindows: an all-failed row stays failed") {
-    val r = BenchRow("q", -1.0, -1.0, Seq(-1.0, -1.0, -1.0, -1.0),
-      0L, 0L, Seq(0L, 0L, 0L), Seq.empty)
-    val c = BenchStats.combineWindows(r, Seq(1.0, 1.0, 1.0), Seq(0L, 0L, 0L),
-      Seq(1.0, 1.0))
-    assert(c.median == -1.0 && c.min == -1.0)
-    assert(c.raw.takeRight(3) == Seq(1.0, 1.0, 1.0))
-  }
-
-  test("combineWindows is idempotent across heal + env-guard merges") {
-    val r = row("q", raw = Seq(2.0, 1.0, 10.0, 10.0))
-    val once = BenchStats.combineWindows(r, Seq(1.0, 1.0, 1.0), Seq(0L, 0L, 0L),
-      Seq(1.0, 1.0))
-    val twice = BenchStats.combineWindows(once, Seq(1.0, 1.0, 1.0),
-      Seq(0L, 0L, 0L), Seq(1.0, 1.0))
-    // pooled over raw.drop(1) — a second merge extends the same pool
-    assert(twice.median ==
-      BenchStats.median(Seq(1.0, 10.0, 10.0, 1.0, 1.0, 1.0, 1.0, 1.0, 1.0)))
-    assert(twice.raw.length == 10)
-  }
-
-  test("selectRewindow: divergence needs an unchanged shuffle signature") {
+  test("envSuspects: divergence needs an unchanged shuffle signature") {
     val ref = Map("a" -> (1.0, 100.0), "b" -> (1.0, 100.0))
-    // a: 4x slower, same signature -> selected; b: 4x slower but shuffle
+    // a: 4x slower, same signature -> flagged; b: 4x slower but shuffle
     // signature moved 2x (a real plan change) -> not an env artifact
-    val (rw, over) = BenchStats.selectRewindow(
-      Seq(("a", 4.0, 101.0), ("b", 4.0, 200.0)), ref, budget = 15)
-    assert(rw == Set("a") && over.isEmpty)
+    assert(BenchStats.envSuspects(
+      Seq(("a", 4.0, 101.0), ("b", 4.0, 200.0)), ref) == Seq("a"))
   }
 
-  test("selectRewindow: floors exempt scheduling-jitter rows") {
+  test("envSuspects: floors exempt scheduling-jitter rows") {
     val ref = Map("tiny" -> (0.01, 5.0), "small" -> (0.05, 5.0))
-    val (rw, over) = BenchStats.selectRewindow(
-      Seq(("tiny", 0.2, 5.0), ("small", 0.31, 5.0)), ref, budget = 15)
     // tiny: refMin 0.01 <= 0.02 floor; small: 0.31 > 3*0.05 and past both
-    // floors -> selected
-    assert(rw == Set("small") && over.isEmpty)
+    // floors -> flagged
+    assert(BenchStats.envSuspects(
+      Seq(("tiny", 0.2, 5.0), ("small", 0.31, 5.0)), ref) == Seq("small"))
   }
 
-  test("budget exhaustion flags the excess rows env_suspect WITHOUT re-measurement") {
-    // synthetic fully-contaminated window: 20 divergent same-signature
-    // rows against a budget of 15 — the 15 worst by absolute excess
-    // seconds get the re-window, the other 5 are flagged directly.
-    // Excess for row i is (10 + i) - 1, so the five SMALLEST-excess rows
-    // (q0..q4) must be the flagged-without-rewindow set.
-    val ref = (0 until 20).map(i => s"q$i" -> (1.0, 50.0)).toMap
-    val rows = (0 until 20).map(i => (s"q$i", 10.0 + i, 50.0))
-    val (rw, over) = BenchStats.selectRewindow(rows, ref, budget = 15)
-    assert(rw.size == 15)
-    assert(over == Set("q0", "q1", "q2", "q3", "q4"))
-    assert((rw ++ over).size == 20)
-  }
-
-  test("selectRewindow ignores rows absent from the reference") {
-    val (rw, over) = BenchStats.selectRewindow(
-      Seq(("new_query", 100.0, 50.0)), Map.empty, budget = 15)
-    assert(rw.isEmpty && over.isEmpty)
+  test("envSuspects ignores rows absent from the reference") {
+    assert(BenchStats.envSuspects(Seq(("new_query", 100.0, 50.0)), Map.empty).isEmpty)
   }
 
   test("capSeconds: 10x reference median with a 60s floor; 600s unreferenced") {
@@ -181,54 +96,9 @@ class BenchStatsSpec extends AnyFunSuite {
     assert(!BenchStats.refAcceptable(partial = false, 0, 0, 0, 1, 0))
     assert(!BenchStats.refAcceptable(partial = false, 0, 0, 0, 0, 1))
     // zombie_after vetoes too: a suite-warmup cap kill never reaches
-    // `capped` (stampKill is per-row), so an un-reaped warmup worker
+    // `capped` (only row kills do), so an un-reaped warmup worker
     // can taint an otherwise flag-free sweep
     assert(!BenchStats.refAcceptable(partial = false, 0, 0, 0, 0, 0, zombies = 1))
-  }
-
-  test("burstProbe: trips past max(0.5s, 3x committed median), never unreferenced") {
-    // the r14 gap this closes: q_date_funcs ran 169.9s against a
-    // 0.759s committed median with only a 25-row-stale sched stamp
-    assert(BenchStats.burstProbe(Some(0.759), 169.9))
-    // 3x bar — matches the env-guard's divergence threshold
-    assert(!BenchStats.burstProbe(Some(1.0), 2.9))
-    assert(BenchStats.burstProbe(Some(1.0), 3.1))
-    // 0.5s floor: sub-second walls swing on scheduling jitter alone
-    assert(!BenchStats.burstProbe(Some(0.05), 0.4))
-    assert(BenchStats.burstProbe(Some(0.05), 0.6))
-    // no committed reference / failed reference → never trips
-    assert(!BenchStats.burstProbe(None, 100.0))
-    assert(!BenchStats.burstProbe(Some(-1.0), 100.0))
-    // a failed run (-1) never trips
-    assert(!BenchStats.burstProbe(Some(1.0), -1.0))
-  }
-
-  test("selectDegradedRewindow: worst ratios first, >3x bar, bounded") {
-    val ref = Map("a" -> 1.0, "b" -> 1.0, "c" -> 1.0, "d" -> 0.1)
-    val rows = Seq(("a", 10.0), ("b", 4.0), ("c", 2.0), ("d", 0.9),
-      ("e", 50.0), ("f", -1.0))
-    // c is only 2x (below bar), e has no reference, f failed; order is
-    // by descending ratio: a 10x, d 9x, b 4x
-    assert(BenchStats.selectDegradedRewindow(rows, ref, 8) ==
-      Seq("a", "d", "b"))
-    // the budget takes the WORST ratios, not the first names
-    assert(BenchStats.selectDegradedRewindow(rows, ref, 2) == Seq("a", "d"))
-    // a zero/negative reference median never divides
-    assert(BenchStats.selectDegradedRewindow(
-      Seq(("x", 10.0)), Map("x" -> 0.0), 8).isEmpty)
-  }
-
-  test("cappedHealthy: pass-window kills on healthy rows, nothing else") {
-    val meds = Map("a" -> 2.0, "b" -> -1.0, "c" -> 1.5, "d" -> 0.5)
-    // a: killed in a pass, pooled stats healthy → capped_healthy
-    // b: killed, still failed (retry errored or skip mode) → plain capped
-    // c: killed then cleanly retried → recovered, not healthy-tagged
-    // d: killed twice → capped_twice (median map value is irrelevant)
-    assert(BenchStats.cappedHealthy(Seq("a", "b", "c", "d"),
-      recovered = Set("c"), cappedTwice = Set("d"), medians = meds) == Seq("a"))
-    // a capped row absent from the rows map (should not happen, but a
-    // partial flush could) is never claimed healthy
-    assert(BenchStats.cappedHealthy(Seq("x"), Set.empty, Set.empty, meds).isEmpty)
   }
 
   test("artifact render → reference parse round-trip (format-drift guard)") {
@@ -239,21 +109,17 @@ class BenchStatsSpec extends AnyFunSuite {
     def render(degraded: Seq[String]): String = Bench.artifactJson(
       rows = Seq(
         BenchRow("q_a", 2.0, 1.8, Seq(3.0, 2.0, 1.8), 1000000L, 500000L,
-          Seq(10L, 20L), Seq(0.5, 0.6), schedMs = 300.0,
-          tSec = Seq(5.0, 8.0, 10.0)),
+          Seq(10L, 20L), schedMs = 300.0, tSec = Seq(5.0, 8.0, 10.0)),
         BenchRow("q_b", 0.5, 0.4, Seq(0.9, 0.5, 0.4), 2000000L, 0L,
-          Seq(0L, 0L), Seq(0.5, 0.5), schedMs = 310.0,
-          tSec = Seq(12.0, 13.0, 13.6))),
+          Seq(0L, 0L), schedMs = 310.0, tSec = Seq(12.0, 13.0, 13.6))),
       envSuspects = Seq.empty, partial = false, degraded = degraded,
       capped = Seq.empty, skipped = Seq.empty, refSource = "test",
-      suiteLoadStart = 1.0, budgetSec = 1500.0, sfDir = "/tmp/sf",
+      budgetSec = 1500.0, sfDir = "/tmp/sf",
       scratch = "tmpfs", canaries = Seq("cpu_start" -> 40.0,
         "sched_start" -> 900.0, "cpu_end" -> 38.0, "sched_end" -> 350.0),
       canarySeries = Seq((0, "start", 900.0, 100L), (0, "warm", 400.0, 101L)),
-      recovered = Seq.empty, cappedTwice = Seq.empty,
       timedRunsPlan = Seq("q_a" -> 2, "q_b" -> 2), schedRefMs = 357.78,
-      streamingNames = Set.empty, rewindowed = Seq.empty,
-      schedProbe = Seq("q_a" -> 1200.5), host = Seq("steal_ticks_start" -> 7L))
+      streamingNames = Set.empty, host = Seq("steal_ticks_start" -> 7L))
     val (stats, acceptable, sched) = Bench.parseBenchSnapshot(render(Seq.empty))
     assert(acceptable, "a flag-free artifact must parse as an acceptable reference")
     // (median, min, shuffle_write_mb) — mb() renders bytes/1e6 at 2dp
@@ -266,24 +132,15 @@ class BenchStatsSpec extends AnyFunSuite {
     assert(!flagged)
   }
 
-  test("combineWindows grows tSec alongside raw") {
-    val r = row("q", Seq(2.0, 1.0, 1.1, 0.9)).copy(
-      tSec = Seq(10.0, 12.0, 13.1, 14.2))
-    val m = BenchStats.combineWindows(r, Seq(1.0, 1.0), Seq(4L, 5L),
-      Seq(0.7, 0.8), Seq(100.0, 101.0))
-    assert(m.tSec == Seq(10.0, 12.0, 13.1, 14.2, 100.0, 101.0))
-    assert(m.raw.length == m.tSec.length)
-  }
-
   test("flagsOf joins every matching adjudication list in caller order (r16 queries_detail)") {
     val sets: Seq[(String, String => Boolean)] = Seq(
       "suspect" -> Set("q_a", "q_b"),
       "env_suspect" -> Set("q_b"),
       "degraded" -> Set("q_c"),
-      "recovered" -> Set("q_b"))
+      "capped" -> Set("q_b"))
     assert(BenchStats.flagsOf("q_a", sets) == "suspect")
     // multi-membership joins with '+' in the caller's (stable) order
-    assert(BenchStats.flagsOf("q_b", sets) == "suspect+env_suspect+recovered")
+    assert(BenchStats.flagsOf("q_b", sets) == "suspect+env_suspect+capped")
     assert(BenchStats.flagsOf("q_c", sets) == "degraded")
     // a clean row renders as the empty string, not a missing key
     assert(BenchStats.flagsOf("q_clean", sets) == "")

@@ -44,6 +44,28 @@ class MaterializeSpec extends SparkSpecBase {
     }
   }
 
+  test("configured checkpoint dir: unpersistMaterialized deletes the reliable checkpoint files") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_spec")
+    import scala.jdk.CollectionConverters._
+    // the rdd-<id> directories a reliable checkpoint writes under the dir
+    def rddDirs(): List[java.nio.file.Path] =
+      java.nio.file.Files.walk(dir).iterator().asScala
+        .filter(p => java.nio.file.Files.isDirectory(p) &&
+          p.getFileName.toString.startsWith("rdd-")).toList
+    try {
+      spark.sparkContext.setCheckpointDir(dir.toString)
+      val m = Engine.materialize(probeDf, eager = true)
+      assert(rddDirs().nonEmpty, s"expected an rdd-* checkpoint dir under $dir")
+      org.apache.spark.sql.graftbridge.Bridge.unpersistMaterialized(m)
+      assert(rddDirs().isEmpty, s"checkpoint dirs left behind: ${rddDirs()}")
+    } finally {
+      org.apache.spark.graftbridge.ListenerBridge
+        .clearCheckpointDir(spark.sparkContext)
+      assert(spark.sparkContext.getCheckpointDir.isEmpty)
+      graft.ops.Scale.deleteTree(dir)
+    }
+  }
+
   test("lazy materialize folds into the first action in both branches") {
     val m = Engine.materialize(probeDf, eager = false)
     assert(m.filter(col("v") >= 100).count() === 50)

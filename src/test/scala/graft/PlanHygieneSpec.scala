@@ -177,9 +177,10 @@ class PlanHygieneSpec extends SparkSpecBase {
   test("EVERY query plan is cartesian-free, UDF-free and global-window-free (sweep → PLANS.txt)") {
     // the three scale-killer node classes, swept over the whole
     // contract surface so a future query can't reintroduce one
-    // silently, and every formatted plan dumped (normalized) to the
-    // checked-in PLANS.txt — the audit artifact a reviewer reads
-    // instead of re-deriving 200+ explains:
+    // silently, and every formatted plan dumped (normalized) to
+    // target/PLANS.txt. The checked-in PLANS.txt — the audit artifact a
+    // reviewer reads instead of re-deriving 200+ explains — is refreshed
+    // on purpose with `cp target/PLANS.txt PLANS.txt`, never by a test run:
     //  - CartesianProduct (unbroadcast all-pairs: O(n*m) rows moved) —
     //    only q_join_cross builds one on purpose, at its tiny scale;
     //    BroadcastNestedLoopJoin is NOT flagged (its build side is
@@ -232,8 +233,9 @@ class PlanHygieneSpec extends SparkSpecBase {
             Some(s"$name: PLANNING FAILED: $e")
         }
       }
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("PLANS.txt"), dump.toString)
+    val out = java.nio.file.Paths.get("target", "PLANS.txt")
+    java.nio.file.Files.createDirectories(out.getParent)
+    java.nio.file.Files.writeString(out, dump.toString)
     assert(failures.isEmpty, s"plan hygiene violations:\n${failures.mkString("\n")}")
   }
 

@@ -7,9 +7,9 @@ rounds 12-13, so a clean-window reference can finally land without a
 human in the loop:
 
   1. complete, and every guard list empty — partial/failed/degraded/
-     capped/skipped/env_suspect, plus the r14 fields capped_twice and
-     zombie_after, plus suspect (a bimodal row must not seed the
-     reference mins);
+     capped/skipped/env_suspect/zombie_after, plus suspect (a bimodal
+     row must not seed the reference mins). Bench measures each row in
+     one window, so every list is a flag on that window;
   2. full sweep — at least as many rows as the current committed clean
      reference (a gated run must never become the baseline);
   3. every streaming row's min within 1.3x of the committed clean
@@ -47,11 +47,11 @@ SERIES_MEDIAN_MAX_MS = 500.0
 CPU_MAX_MS = 55.0
 STREAM_RATIO_MAX = 1.3
 FLAG_LISTS = ["failed", "degraded", "capped", "skipped", "env_suspect",
-              "capped_twice", "zombie_after", "suspect"]
+              "zombie_after", "suspect"]
 # the lists a COMMITTED snapshot must have empty to serve as the
 # baseline — exactly the set Bench.scala's refAcceptable vetoes
-# (suspect is tolerated there: a surviving bimodal row is information;
-# capped_twice ⊆ failed and recovered ⊆ capped are covered
+# (suspect is tolerated there: a bimodal row is information; older
+# snapshots' capped_twice ⊆ failed and recovered ⊆ capped are covered
 # transitively). Before r15 this omitted zombie_after, so the gate
 # could compare streaming mins against a zombie-tainted baseline
 # Bench itself would refuse (ADVICE r14).
@@ -163,12 +163,6 @@ def main():
 
     total = cand.get("value")
     ref_total = ref.get("value") if ref else None
-    # non-gating visibility: guard-trip probes (burst:/env: canary
-    # stamps) can exist in a snapshot whose medians/mins survived every
-    # gate (one bursty run out of 3); a reviewer should see them
-    # without opening the artifact
-    probes = cand.get("sched_probe_ms", {}) or {}
-    probe_note = f"  guard-trip probes={len(probes)}" if probes else ""
     # host-steal delta across the sweep (USER_HZ ticks ≈ 10ms CPU
     # each): the first live taxed window measured 96,933 ticks (~969
     # CPU-seconds) against 176 in a clean replay — a reviewer should
@@ -177,7 +171,7 @@ def main():
     steal_note = ""
     if h.get("steal_ticks_start", -1) >= 0 and h.get("steal_ticks_end", -1) >= 0:
         steal_note = f"  steal={h['steal_ticks_end'] - h['steal_ticks_start']}t"
-    print(f"candidate: {cand_path}  total={total}s  rows={len(cand.get('queries', {}))}{probe_note}{steal_note}")
+    print(f"candidate: {cand_path}  total={total}s  rows={len(cand.get('queries', {}))}{steal_note}")
     print(f"reference: git:{ref_sha}  total={ref_total}s" if ref else "reference: NONE")
     if problems:
         print("NOT ADOPTABLE:")
