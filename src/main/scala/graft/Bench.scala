@@ -194,28 +194,6 @@ private[graft] object BenchStats {
 object Bench {
   private val Runs = 3
 
-  /** Per-run task-metric totals (shuffle write/read bytes, JVM GC ms),
-    * accumulated by a TaskEnd listener and drained through the
-    * listener-bus barrier before each snapshot (the ScaleProbe
-    * attribution pattern — without the drain a straggling async event
-    * credits its bytes to the NEXT query). These columns exist so a
-    * driver-window-vs-quiet-window divergence is attributable from the
-    * artifact alone: identical shuffle bytes + inflated gc_ms = JVM/
-    * co-tenant pressure; inflated shuffle bytes = a real plan change. */
-  private val shufWrite = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val shufRead = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val gcMs = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  private def resetMetrics(sc: org.apache.spark.SparkContext): Unit = {
-    org.apache.spark.graftbridge.ListenerBridge.drain(sc)
-    shufWrite.set(0L); shufRead.set(0L); gcMs.set(0L)
-  }
-
-  private def snapMetrics(sc: org.apache.spark.SparkContext): (Long, Long, Long) = {
-    org.apache.spark.graftbridge.ListenerBridge.drain(sc)
-    (shufWrite.get(), shufRead.get(), gcMs.get())
-  }
-
   /** Host-pressure counters (r14 verdict task 5). The r14 bursts were
     * invisible to every guest-side metric the artifact carried —
     * loadavg 1.0-1.5 and gc_ms 0 during a 186× wall — because a
@@ -233,7 +211,7 @@ object Bench {
     * Both are read at suite start/end and at every spot canary (two
     * file reads, microseconds), emitted cumulatively; a reader takes
     * deltas across any window of interest. −1 = unreadable. */
-  private def hostStealTicks(): Long =
+  private[graft] def hostStealTicks(): Long =
     try {
       val cpu = Files.readString(Paths.get("/proc/stat")).linesIterator
         .find(_.startsWith("cpu ")).getOrElse("")
@@ -326,7 +304,7 @@ object Bench {
     * worker stuck in driver-side (non-job) computation can survive
     * cancelJobGroup + the 30s grace + interrupt and keep burning CPU /
     * launching jobs as a daemon thread, contaminating every subsequent
-    * row's timings and snapMetrics deltas. Recording the row name here
+    * row's timings and shuffle/GC profiles. Recording the row name here
     * (emitted as `zombie_after` in the artifact) makes later rows
     * readable as tainted instead of clean medians. */
   private[graft] val zombies =
@@ -378,26 +356,28 @@ object Bench {
     } else (Option(out.get()).map(_.doubleValue()).getOrElse(-1.0), false)
   }
 
-  /** One timed window: `runs` measured executions with per-run metric
-    * snapshots. Each run also records its suite-relative start second
-    * via `tClock`, which aligns it against the canary_series timeline.
-    * Returns the runs ((sec, shufW, shufR, gc, tStart) each) and whether
-    * any run was cap-killed. */
-  private def timedWindow(sc: org.apache.spark.SparkContext,
+  /** One timed window: `runs` measured executions, each with its own
+    * [[Profile]] window. The per-run shuffle bytes and GC ms make a
+    * driver-window-vs-quiet-window divergence attributable from the
+    * artifact alone: identical shuffle bytes + inflated gc_ms = JVM/
+    * co-tenant pressure; inflated shuffle bytes = a real plan change.
+    * Each run also records its suite-relative start second via `tClock`,
+    * which aligns it against the canary_series timeline. Returns the runs
+    * ((sec, shufW, shufR, gc, tStart) each) and whether any run was
+    * cap-killed. */
+  private def timedWindow(profiler: Profiler,
       spark: SparkSession, sfDir: String,
       fn: (SparkSession, String) => DataFrame, capSec: Double,
       tClock: () => Double, runs: Int, tag: String)
       : (Seq[(Double, Long, Long, Long, Double)], Boolean) = {
     var capped = false
     val measured = (1 to runs).map { _ =>
-      resetMetrics(sc)
       val t = tClock()
-      val (sec, c) =
+      val ((sec, c), p) = profiler.measure(
         if (capped) (-1.0, false) // cap already blown — don't re-stall
-        else timeOnceCapped(spark, fn(spark, sfDir), capSec, tag)
+        else timeOnceCapped(spark, fn(spark, sfDir), capSec, tag))
       capped ||= c
-      val (sw, sr, gc) = snapMetrics(sc)
-      (sec, sw, sr, gc, t)
+      (sec, p.shuffleWriteBytes, p.shuffleReadBytes, p.gcMs, t)
     }
     (measured, capped)
   }
@@ -606,16 +586,7 @@ object Bench {
     def elapsed(): Double = (System.nanoTime() - suiteT0) / 1e9
     def mode(): String = BenchStats.budgetMode(elapsed(), budgetSec)
     val spark = graft.engine.Engine.session()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) {
-          shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          gcMs.addAndGet(m.jvmGCTime)
-        }
-      }
-    })
+    val profiler = new Profiler(spark)
     val degraded = scala.collection.mutable.LinkedHashSet[String]()
     val capped = scala.collection.mutable.LinkedHashSet[String]()
     val skipped = scala.collection.mutable.LinkedHashSet[String]()
@@ -697,7 +668,7 @@ object Bench {
             degraded += name
             timedRunsPlan(name) = 1
             val (runsM, c) =
-              timedWindow(sc, spark, sfDir, fn, capNow, elapsed _, runs = 1, tag = name)
+              timedWindow(profiler, spark, sfDir, fn, capNow, elapsed _, runs = 1, tag = name)
             if (c) capped += name
             val sec = runsM.head._1
             BenchRow(name, sec, sec, runsM.map(_._1), runsM.head._2,
@@ -712,7 +683,7 @@ object Bench {
             // it N more times just to fail N more times
             val (runsM, c) =
               if (warm < 0) (Seq.fill(nRuns)((-1.0, 0L, 0L, 0L, elapsed())), false)
-              else timedWindow(sc, spark, sfDir, fn, capNow, elapsed _, runs = nRuns, tag = name)
+              else timedWindow(profiler, spark, sfDir, fn, capNow, elapsed _, runs = nRuns, tag = name)
             if (wCapped || c) capped += name
             val timed = runsM.map(_._1)
             // any failed run poisons the stats: report -1, never a

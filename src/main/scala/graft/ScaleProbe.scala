@@ -1,8 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Engine
 
@@ -42,87 +41,39 @@ object ScaleProbe {
     ordDir
   }
 
-  /** Merge one probe row into the existing factor artifact WITHOUT
-    * rewriting the rest — how gated (`SPARK_GRAFT_ONLY`) runs record a
-    * row next to full-run results (a partial run must never clobber a
-    * full one). Shared policy with [[SpillProbe]]. */
-  private[graft] def mergeArtifact(factor: Int, key: String, json: String): Unit = {
-    val f = Paths.get(sys.env.getOrElse("SPARK_GRAFT_PROBE_OUT_DIR",
-      "/root/repo") + s"/PROBE_LOCAL_${factor}x.json")
-    if (!Files.exists(f)) {
-      println(s"[probe] $f missing — $key not recorded (run the full probe first)")
-      return
-    }
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(Files.readString(f))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    root.set(key, mapper.readTree(json))
-    Files.writeString(f, mapper.writeValueAsString(root) + "\n")
-    println(s"[probe] merged $key into $f")
+  /** Order-independent checksum of a frame: bit_xor over rows of the
+    * first 15 hex digits of md5(`cols` joined by "|") — the
+    * `q_table_checksum` fold. The committed PROBE_LOCAL checksums were
+    * computed with exactly this expression; keep it bit-identical. */
+  private[graft] def rowChecksum(df: DataFrame, cols: Column*): Long =
+    df.select(conv(substring(md5(concat_ws("|", cols: _*)), 1, 15), 16, 10)
+        .cast("long").as("h"))
+      .agg(expr("bit_xor(h)")).head().getLong(0)
+
+  /** Full-output checksums of the spill-squeeze targets: artifact key ->
+    * (query, output columns). The unconstrained sweep records them and
+    * [[SpillProbe]]'s memory-squeezed rerun must reproduce them (spill
+    * must change the cost, not the answer); one table, so the two values
+    * cannot drift. */
+  private[graft] val checksums: Seq[(String, (String, Seq[Column]))] = Seq(
+    "inverted_index_checksum" -> ("text_inverted_index", Seq(col("term"),
+      col("df").cast("string"), col("cf").cast("string"),
+      col("postings_head"))),
+    "bm25_checksum" -> ("text_bm25", Seq(col("q_id").cast("string"),
+      col("rk").cast("string"), col("doc_id").cast("string"),
+      col("score_u6").cast("string"))),
+    // the r10 blocked-attach minhash verify: its 269 MB peak task is the
+    // dedup family's largest (per-doc collect_set, block-join sorts, agg)
+    "inc_minhash_checksum" -> ("dedup_incremental_minhash", Seq(
+      col("doc_id").cast("string"), col("n_shingles").cast("string"),
+      coalesce(col("dup_partner").cast("string"), lit("-")),
+      col("n_corpus_matches").cast("string"),
+      col("dup_of_corpus").cast("string"))))
+
+  private[graft] def checksum(spark: SparkSession, dir: String, key: String): Long = {
+    val (query, cols) = checksums.toMap.apply(key)
+    rowChecksum(SparkEntry.queries(query)(spark, dir), cols: _*)
   }
-
-  /** Same non-clobbering policy for a single per-query row under
-    * `"probes"`: a gated run contributes its rows next to the full
-    * sweep's instead of requiring a fresh multi-minute unfiltered run
-    * (the 100× sweep re-measures the ~22-minute linear window-frame
-    * baseline, so full reruns are deliberately rare). */
-  private[graft] def mergeProbeRow(factor: Int, name: String, json: String): Unit = {
-    val f = Paths.get(sys.env.getOrElse("SPARK_GRAFT_PROBE_OUT_DIR",
-      "/root/repo") + s"/PROBE_LOCAL_${factor}x.json")
-    if (!Files.exists(f)) {
-      println(s"[probe] $f missing — $name not recorded (run the full probe first)")
-      return
-    }
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(Files.readString(f))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    val probes = root.get("probes") match {
-      case o: com.fasterxml.jackson.databind.node.ObjectNode => o
-      case _ => root.putObject("probes")
-    }
-    probes.set(name, mapper.readTree(json))
-    root.set("probes", probes)
-    Files.writeString(f, mapper.writeValueAsString(root) + "\n")
-    println(s"[probe] merged probes.$name into $f")
-  }
-
-  /** Order-independent reduction of `text_inverted_index`'s full output
-    * (term, df, cf, postings_head) — bit_xor of per-row md5-longs, the
-    * `q_table_checksum` fold. Shared by the unconstrained probe run and
-    * [[SpillProbe]]'s squeezed rerun so the two values cannot drift. */
-  private[graft] def invertedIndexChecksum(
-      spark: SparkSession, dir: String): Long =
-    graft.SparkEntry.queries("text_inverted_index")(spark, dir)
-      .select(conv(substring(md5(concat_ws("|",
-        col("term"), col("df").cast("string"), col("cf").cast("string"),
-        col("postings_head"))),
-        1, 15), 16, 10).cast("long").as("h"))
-      .agg(expr("bit_xor(h)")).head().getLong(0)
-
-  /** Order-independent checksum of the full dedup_incremental_minhash
-    * output — the r10 blocked-attach verify's spill-squeeze reference
-    * (its 269 MB peak task is the dedup family's largest: the per-doc
-    * collect_set, the block-join sorts, and the final agg are all
-    * spillable hash/sort machinery). */
-  private[graft] def incMinhashChecksum(spark: SparkSession, dir: String): Long =
-    graft.SparkEntry.queries("dedup_incremental_minhash")(spark, dir)
-      .select(conv(substring(md5(concat_ws("|",
-        col("doc_id").cast("string"), col("n_shingles").cast("string"),
-        coalesce(col("dup_partner").cast("string"), lit("-")),
-        col("n_corpus_matches").cast("string"),
-        col("dup_of_corpus").cast("string"))),
-        1, 15), 16, 10).cast("long").as("h"))
-      .agg(expr("bit_xor(h)")).head().getLong(0)
-
-  /** Order-independent checksum of the full text_bm25 output — the
-    * reference value SpillProbe's memory-squeezed rerun must reproduce. */
-  private[graft] def bm25Checksum(spark: SparkSession, dir: String): Long =
-    graft.SparkEntry.queries("text_bm25")(spark, dir)
-      .select(conv(substring(md5(concat_ws("|",
-        col("q_id").cast("string"), col("rk").cast("string"),
-        col("doc_id").cast("string"), col("score_u6").cast("string"))),
-        1, 15), 16, 10).cast("long").as("h"))
-      .agg(expr("bit_xor(h)")).head().getLong(0)
 
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(100)
@@ -145,15 +96,18 @@ object ScaleProbe {
     Scratch.install("probe", preferTmpfs = false): Unit
     val spark = Engine.session(cpus)
 
-    // shard-need predicates for gated runs (SPARK_GRAFT_ONLY): the
-    // orders-shard rule generalized in r12 — a 1000× gated run of
-    // document-family rows must not pay the 100M-row events crossJoin
-    // (minutes of generation for a shard no gated row reads). A full
-    // (ungated) run still generates everything.
-    val gatedNames = sys.env.get("SPARK_GRAFT_ONLY")
+    // gated run (SPARK_GRAFT_ONLY): only the named probes run, and the
+    // artifact merges their keys instead of being rewritten
+    val onlyProbes = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
+    val artifact = ProbeArtifact.forFactor(factor, merge = onlyProbes.isDefined)
+    // shard-need predicates for gated runs: the orders-shard rule
+    // generalized in r12 — a 1000× gated run of document-family rows
+    // must not pay the 100M-row events crossJoin (minutes of generation
+    // for a shard no gated row reads). A full (ungated) run still
+    // generates everything.
     def gatedNeeds(p: String => Boolean): Boolean =
-      gatedNames.forall(_.exists(p))
+      onlyProbes.forall(_.exists(p))
     val needEmbeddings = gatedNeeds(n => n.startsWith("ann_") ||
       n.startsWith("emb_") || Set("dedup_embedding", "dedup_semantic",
         "text_rrf_fusion", "text_retrieval_eval",
@@ -288,25 +242,27 @@ object ScaleProbe {
     val nVecs = if (needEmbeddings)
       Engine.table(spark, out, "embeddings").count() else -1L
     println(s"shard: $nDocs documents, $nVecs embeddings")
+    if (onlyProbes.isEmpty) Seq("factor" -> factor.toLong, "docs" -> nDocs,
+      "vecs" -> nVecs).foreach { case (k, v) => artifact.record(k, v.toString) }
 
     // shuffle volume = sum of per-operator "shuffle bytes written"
     // SQLMetrics over the executed (post-AQE) plan, via Explain.analyze.
     // The probed set covers every heavy family: hash dedup, LSH banding,
     // label-propagation clustering, the narrow curation composite,
     // gram-explode decontamination, and bucketed/cell-pruned ANN.
-    // per-TASK peak execution memory across the probed query — the
+    def shuffleWrittenMb(df: DataFrame): Double =
+      Explain.analyze(df)
+        .filter(col("metric") === "shuffleBytesWritten")
+        .agg(sum(col("value")).as("bytes"))
+        .collect() // 1 row — diagnostic main, not an operator
+        .headOption.filterNot(_.isNullAt(0))
+        .map(_.getLong(0) / 1e6).getOrElse(0.0)
+    // per-TASK peak execution memory across a probed window — the
     // number that answers "does one partition's working set fit in an
     // executor": shuffle bytes say what moves, this says what must be
     // RESIDENT while an operator (hash agg, sort, join build) runs
-    val peakTask = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null)
-          peakTask.accumulateAndGet(m.peakExecutionMemory,
-            (a: Long, b: Long) => math.max(a, b))
-      }
-    })
+    val profiler = new Profiler(spark)
+    def r1(v: Double): Double = math.rint(v * 10) / 10
 
     val probes = Seq("dedup_exact", "dedup_minhash_lsh",
       "dedup_minhash_inbucket", "dedup_clusters",
@@ -434,46 +390,27 @@ object ScaleProbe {
       "q_stream_recovery_tws")
     // probe-only variants measured AGAINST a queries() entry (never part
     // of the driver contract): the in-bucket LSH verify alternative
-    val extraProbes: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
+    val extraProbes: Map[String, (SparkSession, String) => DataFrame] =
       Map("dedup_minhash_inbucket" -> ((s, d) => ext.Dedup.minhashLshInBucket(s, d)))
-    val onlyProbes = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
     val toRun = probes.filter(n => onlyProbes.forall(_.contains(n)))
     // the histogram probe reads orders — generate that shard only when
     // it will actually run (the other probes never touch it)
     if (toRun.contains("q_histogram"))
       ScaleProbe.ordersShard(spark, base, out, factor, cpus): Unit
-    // 1-min /proc/loadavg bracketing each probed query (−1 when
-    // unreadable): this machine's walls swing 2-10× under co-tenant
-    // load — with the readings in the row, a slow wall is attributable
-    // from the artifact alone (shuffle/peak-mem are the durable,
-    // plan-determined signals; wall + loadavg together explain the rest)
-    def loadavg1(): Double =
-      try Files.readString(Paths.get("/proc/loadavg")).split(" ")(0).toDouble
-      catch { case scala.util.control.NonFatal(_) => -1.0 }
-    // cumulative host-steal ticks bracketing each probe (r15, the bench
-    // `host` field's sibling): guest loadavg cannot see host-level
-    // contention, but a probe under load accrues steal when the host
-    // schedules someone else — the r15 taxed windows measured 65-70
-    // ticks/s suite-wide against ~3 clean, so the delta adjudicates a
-    // slow probe wall without a paired rerun
-    def stealTicks(): Long =
-      try {
-        val f = Files.readString(Paths.get("/proc/stat")).linesIterator
-          .find(_.startsWith("cpu ")).getOrElse("").trim.split("\\s+")
-        if (f.length > 8) f(8).toLong else -1L
-      } catch { case scala.util.control.NonFatal(_) => -1L }
-    val rows = toRun.map { name =>
+    toRun.foreach { name =>
       val q = SparkEntry.queries.getOrElse(name, extraProbes(name))
-      peakTask.set(0L)
-      val loadBefore = loadavg1()
-      val stealBefore = stealTicks()
-      val t0 = System.nanoTime()
+      // cumulative host-steal ticks bracketing each probe (r15): guest
+      // loadavg cannot see host-level contention, but a probe under load
+      // accrues steal when the host schedules someone else — the r15
+      // taxed windows measured 65-70 ticks/s suite-wide against ~3
+      // clean, so the delta adjudicates a slow probe wall without a
+      // paired rerun
+      val stealBefore = Bench.hostStealTicks()
       // fail FAST and attributably when a gated probe reads a shard the
       // needEmbeddings/needEvents patterns skipped (ADVICE r12): the raw
       // PATH_NOT_FOUND surfaces mid-probe with no hint that the fix is
       // the gate patterns, not the data
-      val m = (try Explain.analyze(q(spark, out))
+      val (shuffleMb, p) = profiler.measure(try shuffleWrittenMb(q(spark, out))
         catch {
           case e: org.apache.spark.sql.AnalysisException
               if e.getMessage.contains(out) &&
@@ -484,59 +421,16 @@ object ScaleProbe {
                 s"${e.getMessage.linesIterator.next()} — update the " +
                 "gatedNeeds patterns in ScaleProbe", e)
         })
-        .filter(col("metric") === "shuffleBytesWritten")
-        .agg(sum(col("value")).as("bytes"))
-        .collect() // 1 row — diagnostic main, not an operator
-      val secs = (System.nanoTime() - t0) / 1e9
-      val loadAfter = loadavg1()
       val stealDelta =
         if (stealBefore < 0) -1L
-        else math.max(-1L, stealTicks() - stealBefore)
-      // real listener-bus flush: a straggling TaskEnd would otherwise be
-      // credited to the NEXT probe after peakTask.set(0)
-      org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-      val peakMb = peakTask.get() / 1e6
-      val shuffleMb = m.headOption.filterNot(_.isNullAt(0))
-        .map(_.getLong(0) / 1e6).getOrElse(0.0)
-      println(f"PROBE $name%-22s wall=$secs%8.1fs shuffle_written=$shuffleMb%10.1f MB peak_task_mem=$peakMb%8.1f MB loadavg=$loadBefore%.2f->$loadAfter%.2f steal=${stealDelta}t")
-      (name, secs, shuffleMb, peakMb, (loadBefore, loadAfter), stealDelta)
+        else math.max(-1L, Bench.hostStealTicks() - stealBefore)
+      val peakMb = p.peakTaskMemBytes / 1e6
+      println(f"PROBE $name%-22s wall=${p.wallS}%8.1fs shuffle_written=$shuffleMb%10.1f MB peak_task_mem=$peakMb%8.1f MB steal=${stealDelta}t")
+      artifact.recordProbe(if (diversified) s"${name}_diversified" else name,
+        s"""{"wall_s":${r1(p.wallS)},"shuffle_mb":${r1(shuffleMb)},"peak_task_mem_mb":${r1(peakMb)},"steal_ticks":$stealDelta}""")
     }
-    if (onlyProbes.isDefined) rows.foreach { case (n, w, mb, pk, (lb, la), st) =>
-      def r1(v: Double): Double = math.rint(v * 10) / 10
-      def r2(v: Double): Double = math.rint(v * 100) / 100
-      mergeProbeRow(factor, if (diversified) s"${n}_diversified" else n,
-        s"""{"wall_s":${r1(w)},"shuffle_mb":${r1(mb)},"peak_task_mem_mb":${r1(pk)},"loadavg":[${r2(lb)},${r2(la)}],"steal_ticks":$st}""")
-    }
-    // order-independent output checksum of the inverted index over this
-    // shard — the reference value graft.SpillProbe compares its
-    // memory-squeezed rerun against (the window_range_prefix
-    // framed_total pattern: spill must change the cost, not the answer)
-    val invChecksum: Option[Long] =
-      if (rows.exists(_._1 == "text_inverted_index"))
-        Some(invertedIndexChecksum(spark, out))
-      else None
-    invChecksum.foreach { c =>
-      if (onlyProbes.isDefined)
-        mergeArtifact(factor, "inverted_index_checksum", s"""{"checksum":$c}""")
-    }
-    // same pattern for BM25 — its 100× hits aggregation + dl join are the
-    // spill-squeeze target SpillProbe reruns against this reference value
-    val bm25Ck: Option[Long] =
-      if (rows.exists(_._1 == "text_bm25")) Some(bm25Checksum(spark, out))
-      else None
-    bm25Ck.foreach { c =>
-      if (onlyProbes.isDefined)
-        mergeArtifact(factor, "bm25_checksum", s"""{"checksum":$c}""")
-    }
-    // and for the r10 blocked-attach minhash verify (see incMinhashChecksum)
-    val incCk: Option[Long] =
-      if (rows.exists(_._1 == "dedup_incremental_minhash"))
-        Some(incMinhashChecksum(spark, out))
-      else None
-    incCk.foreach { c =>
-      if (onlyProbes.isDefined)
-        mergeArtifact(factor, "inc_minhash_checksum", s"""{"checksum":$c}""")
-    }
+    for ((key, (query, _)) <- checksums if toRun.contains(query))
+      artifact.record(key, s"""{"checksum":${checksum(spark, out, key)}}""")
     // amortized-recovery probe (r10 verdict task 8): the recovery ROWS
     // replay at maxFilesPerTrigger=1 (maximal commit count — their 100×
     // walls are nearly all per-batch commit overhead, the cost the row
@@ -544,20 +438,14 @@ object ScaleProbe {
     // a production batch size and compares it against the UNINTERRUPTED
     // run of the same input at the same trigger: the ratio isolates the
     // restart's own cost and must sit well under 2×.
-    val recAmort: Option[String] =
-      if (rows.exists(_._1 == "q_stream_recovery") ||
-          onlyProbes.exists(_.contains("recovery_amortized"))) Some {
-        val (u, r, n) = streaming.StreamQueries.recoveryAmortized(spark, out)
-        def r1(v: Double): Double = math.rint(v * 10) / 10
-        val ratio = math.rint(r / u * 100) / 100
-        val json = s"""{"uninterrupted_s":${r1(u)},"recovered_s":${r1(r)},""" +
-          s""""ratio":$ratio,"sessions":$n}"""
-        println(s"PROBE recovery_amortized $json")
-        json
-      } else None
-    recAmort.foreach { json =>
-      if (onlyProbes.isDefined)
-        mergeArtifact(factor, "recovery_amortized", json)
+    if (toRun.contains("q_stream_recovery") ||
+        onlyProbes.exists(_.contains("recovery_amortized"))) {
+      val (u, r, n) = streaming.StreamQueries.recoveryAmortized(spark, out)
+      val ratio = math.rint(r / u * 100) / 100
+      val json = s"""{"uninterrupted_s":${r1(u)},"recovered_s":${r1(r)},""" +
+        s""""ratio":$ratio,"sessions":$n}"""
+      println(s"PROBE recovery_amortized $json")
+      artifact.record("recovery_amortized", json)
     }
     // survivor funnel of the end-to-end corpus build — the evidence the
     // bare probe row can't carry on this shard: near-dup replicas
@@ -566,18 +454,12 @@ object ScaleProbe {
     // (AQE then propagates EmptyRelation, which is also why the probe's
     // shuffle metric reads 0 for the final plan). Each count re-executes
     // the chain prefix — probe-only diagnostics, not an operator.
-    val e2eFunnel: Option[String] =
-      if (rows.exists(_._1 == "pipe_end_to_end")) Some {
-        val t0 = System.nanoTime()
-        val funnel = ext.Pipeline.endToEndStages(spark, out)
-          .map { case (stage, df) => s""""$stage":${df.count()}""" }
-        val secs = math.rint((System.nanoTime() - t0) / 1e8) / 10
-        val json = funnel.mkString("{", ",", s""","wall_s":$secs}""")
-        println(s"PROBE e2e_funnel $json")
-        json
-      } else None
-    e2eFunnel.foreach { json =>
-      if (onlyProbes.isDefined) mergeArtifact(factor, "e2e_funnel", json)
+    if (toRun.contains("pipe_end_to_end")) {
+      val (funnel, p) = profiler.measure(ext.Pipeline.endToEndStages(spark, out)
+        .map { case (stage, df) => s""""$stage":${df.count()}""" })
+      val json = funnel.mkString("{", ",", s""","wall_s":${r1(p.wallS)}}""")
+      println(s"PROBE e2e_funnel $json")
+      artifact.record("e2e_funnel", json)
     }
     // Remapped-id twin of the funnel. The zero tail above is an artifact
     // of the shard BUILDER's id arithmetic (doc_id = orig·factor + k ⇒
@@ -591,128 +473,112 @@ object ScaleProbe {
     // bench set is 2% of originals, exactly as at 1× — and the whole
     // tail runs live; wall/shuffle/peak of the full chain are recorded
     // alongside the stage counts.
-    val e2eRemapFunnel: Option[String] =
-      if (rows.exists(_._1 == "pipe_end_to_end")) Some {
-        val remapDir = s"$out/e2e_remap"
-        if (!Files.exists(Paths.get(s"$remapDir/documents.parquet/_SUCCESS"))) {
-          val docs = Engine.table(spark, out, "documents")
-          val maxOrig = docs
-            .agg(max(expr(s"doc_id div $factor")).as("m")).head().getLong(0)
-          val m = ((maxOrig + 1 + 49) / 50) * 50
-          docs.select(
-              (expr(s"doc_id div $factor") + (col("doc_id") % factor) * m)
-                .as("doc_id"),
-              col("text"), col("lang"), col("source"), col("n_chars"))
-            .repartition(cpus)
-            .write.mode("overwrite").parquet(s"$remapDir/documents.parquet")
-        }
-        val t0 = System.nanoTime()
-        val funnel = ext.Pipeline.endToEndStages(spark, remapDir)
-          .map { case (stage, df) => s""""$stage":${df.count()}""" }
-        peakTask.set(0L)
-        val chain = Explain.analyze(
-            ext.Pipeline.endToEndStages(spark, remapDir).last._2)
-          .filter(col("metric") === "shuffleBytesWritten")
-          .agg(sum(col("value")).as("bytes"))
-          .collect() // 1 row — diagnostic main, not an operator
-        org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-        val shuffleMb = chain.headOption.filterNot(_.isNullAt(0))
-          .map(_.getLong(0) / 1e6).getOrElse(0.0)
-        def r1(v: Double): Double = math.rint(v * 10) / 10
-        val secs = r1((System.nanoTime() - t0) / 1e9)
-        val json = funnel.mkString("{", ",",
-          s""","wall_s":$secs,"chain_shuffle_mb":${r1(shuffleMb)}""" +
-            s""","chain_peak_task_mem_mb":${r1(peakTask.get() / 1e6)}}""")
-        println(s"PROBE e2e_funnel_remapped $json")
-        json
-      } else None
-    e2eRemapFunnel.foreach { json =>
-      if (onlyProbes.isDefined) mergeArtifact(factor, "e2e_funnel_remapped", json)
+    if (toRun.contains("pipe_end_to_end")) {
+      val remapDir = s"$out/e2e_remap"
+      if (!Files.exists(Paths.get(s"$remapDir/documents.parquet/_SUCCESS"))) {
+        val docs = Engine.table(spark, out, "documents")
+        val maxOrig = docs
+          .agg(max(expr(s"doc_id div $factor")).as("m")).head().getLong(0)
+        val m = ((maxOrig + 1 + 49) / 50) * 50
+        docs.select(
+            (expr(s"doc_id div $factor") + (col("doc_id") % factor) * m)
+              .as("doc_id"),
+            col("text"), col("lang"), col("source"), col("n_chars"))
+          .repartition(cpus)
+          .write.mode("overwrite").parquet(s"$remapDir/documents.parquet")
+      }
+      val t0 = System.nanoTime()
+      val funnel = ext.Pipeline.endToEndStages(spark, remapDir)
+        .map { case (stage, df) => s""""$stage":${df.count()}""" }
+      val (shuffleMb, p) = profiler.measure(shuffleWrittenMb(
+        ext.Pipeline.endToEndStages(spark, remapDir).last._2))
+      val secs = r1((System.nanoTime() - t0) / 1e9)
+      val json = funnel.mkString("{", ",",
+        s""","wall_s":$secs,"chain_shuffle_mb":${r1(shuffleMb)}""" +
+          s""","chain_peak_task_mem_mb":${r1(p.peakTaskMemBytes / 1e6)}}""")
+      println(s"PROBE e2e_funnel_remapped $json")
+      artifact.record("e2e_funnel_remapped", json)
     }
-    // durable artifact (only for unfiltered runs — a partial probe must
-    // not overwrite a full one): walls are single-run ±30%; the
-    // shuffle-bytes column is deterministic and is the scale evidence
     // ---- IVF partition-pruned layout demonstration -------------------
     // ann_ivf's comment claims "cells are the partitioning key so a
     // probe is partition-pruned, not a full scan". Make that MEASURED:
     // write the probe shard cell-partitioned, run one query's probe
     // phase against it, and read PartitionFilters + partitions/files
     // actually scanned off the executed plan.
-    val ivfPruning: Option[String] =
-      if (onlyProbes.forall(_.contains("ann_ivf_pruned"))) Some {
-        import graft.ext.Similarity.{cosineWithNorms, l2norm}
-        val nCells = 16
-        val nProbe = 6
-        val ivfDir = s"$out/embeddings_ivf.parquet"
-        val emb = Engine.table(spark, out, "embeddings")
-          .withColumn("nrm", l2norm(col("embedding")))
-        // layout seeds: 16 DISTINCT base vectors (replica 0 of base ids
-        // 0..15) — the 1× ann_ivf seed rule lifted to the replicated
-        // shard, where "first 16 vec_ids" would be 16 near-identical
-        // replicas of one vector and every cell would collapse into one
-        val seeds = broadcast(
-          emb.filter(col("vec_id") % factor === 0 &&
-              col("vec_id") < nCells.toLong * factor)
-            .select((col("vec_id") / factor).cast("int").as("cell"),
-              col("embedding").as("c_vec"), col("nrm").as("c_nrm"))
-            .localCheckpoint(true))
-        if (!Files.exists(Paths.get(s"$ivfDir/_SUCCESS"))) {
-          val t0 = System.nanoTime()
-          emb.crossJoin(seeds)
-            .withColumn("__csim", cosineWithNorms(col("embedding"), col("c_vec"),
-              col("nrm"), col("c_nrm")))
-            .groupBy(col("vec_id"))
-            .agg(max_by(struct(col("cell"), col("embedding")),
-              struct(col("__csim"), negate(col("cell")))).as("best"))
-            .select(col("vec_id"), col("best.embedding").as("embedding"),
-              col("best.cell").as("cell"))
-            .write.mode("overwrite").partitionBy("cell").parquet(ivfDir)
-          println(f"cell-partitioned layout written in ${(System.nanoTime() - t0) / 1e9}%.1fs")
-        }
-        // probe phase for ONE query (the serving shape is per-query):
-        // its nProbe nearest cells become partition-filter literals.
-        // The collect is 6 planning values, not data — same class as a
-        // broadcast build.
-        val q0 = emb.filter(col("vec_id") === 0)
-          .select(col("embedding").as("q_vec"), col("nrm").as("q_nrm"))
-        val probeCells: Array[Int] = q0.crossJoin(seeds)
-          .withColumn("__csim", cosineWithNorms(col("q_vec"), col("c_vec"),
-            col("q_nrm"), col("c_nrm")))
-          .orderBy(col("__csim").desc, col("cell"))
-          .limit(nProbe)
-          .select(col("cell")).collect().map(_.getInt(0))
-        val scan = spark.read.parquet(ivfDir)
+    if (onlyProbes.forall(_.contains("ann_ivf_pruned"))) {
+      import graft.ext.Similarity.{cosineWithNorms, l2norm}
+      val nCells = 16
+      val nProbe = 6
+      val ivfDir = s"$out/embeddings_ivf.parquet"
+      val emb = Engine.table(spark, out, "embeddings")
+        .withColumn("nrm", l2norm(col("embedding")))
+      // layout seeds: 16 DISTINCT base vectors (replica 0 of base ids
+      // 0..15) — the 1× ann_ivf seed rule lifted to the replicated
+      // shard, where "first 16 vec_ids" would be 16 near-identical
+      // replicas of one vector and every cell would collapse into one
+      val seeds = broadcast(
+        emb.filter(col("vec_id") % factor === 0 &&
+            col("vec_id") < nCells.toLong * factor)
+          .select((col("vec_id") / factor).cast("int").as("cell"),
+            col("embedding").as("c_vec"), col("nrm").as("c_nrm"))
+          .localCheckpoint(true))
+      if (!Files.exists(Paths.get(s"$ivfDir/_SUCCESS"))) {
+        val t0 = System.nanoTime()
+        emb.crossJoin(seeds)
+          .withColumn("__csim", cosineWithNorms(col("embedding"), col("c_vec"),
+            col("nrm"), col("c_nrm")))
+          .groupBy(col("vec_id"))
+          .agg(max_by(struct(col("cell"), col("embedding")),
+            struct(col("__csim"), negate(col("cell")))).as("best"))
+          .select(col("vec_id"), col("best.embedding").as("embedding"),
+            col("best.cell").as("cell"))
+          .write.mode("overwrite").partitionBy("cell").parquet(ivfDir)
+        println(f"cell-partitioned layout written in ${(System.nanoTime() - t0) / 1e9}%.1fs")
+      }
+      // probe phase for ONE query (the serving shape is per-query):
+      // its nProbe nearest cells become partition-filter literals.
+      // The collect is 6 planning values, not data — same class as a
+      // broadcast build.
+      val q0 = emb.filter(col("vec_id") === 0)
+        .select(col("embedding").as("q_vec"), col("nrm").as("q_nrm"))
+      val probeCells: Array[Int] = q0.crossJoin(seeds)
+        .withColumn("__csim", cosineWithNorms(col("q_vec"), col("c_vec"),
+          col("q_nrm"), col("c_nrm")))
+        .orderBy(col("__csim").desc, col("cell"))
+        .limit(nProbe)
+        .select(col("cell")).collect().map(_.getInt(0))
+      val scan = spark.read.parquet(ivfDir)
+        .filter(col("cell").isin(probeCells.toIndexedSeq.map(Int.box): _*))
+        .agg(count(lit(1)).as("n"))
+      val nScanned = scan.collect().head.getLong(0)
+      val metrics = Explain.analyze(
+        spark.read.parquet(ivfDir)
           .filter(col("cell").isin(probeCells.toIndexedSeq.map(Int.box): _*))
-          .agg(count(lit(1)).as("n"))
-        val nScanned = scan.collect().head.getLong(0)
-        val metrics = Explain.analyze(
-          spark.read.parquet(ivfDir)
-            .filter(col("cell").isin(probeCells.toIndexedSeq.map(Int.box): _*))
-            .agg(count(lit(1)).as("n")))
-          .filter(col("operator").startsWith("Scan") ||
-            col("operator").contains("FileScan"))
-          .select(col("metric"), col("value")).collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        val partsRead = metrics.getOrElse("numPartitions", -1L)
-        val filesRead = metrics.getOrElse("numFiles", -1L)
-        import scala.jdk.CollectionConverters._
-        val partsTotal = Files.list(Paths.get(ivfDir)).iterator().asScala
-          .count(_.getFileName.toString.startsWith("cell="))
-        val filesTotal = Files.walk(Paths.get(ivfDir)).iterator().asScala
-          .count(_.getFileName.toString.endsWith(".parquet"))
-        val pf = spark.read.parquet(ivfDir)
-          .filter(col("cell").isin(probeCells.toIndexedSeq.map(Int.box): _*))
-          .agg(count(lit(1)))
-          .queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
-        val pruned = "PartitionFilters: \\[[^\\]]*cell[^\\]]*\\]".r
-          .findFirstIn(pf).isDefined
-        println(f"IVF PRUNING: partitions $partsRead/$partsTotal files $filesRead/$filesTotal rows=$nScanned partitionFilters=$pruned")
-        // loud failure: the pruning claim is the point of this probe
-        require(pruned, s"no PartitionFilters on the cell scan:\n$pf")
-        require(partsRead > 0 && partsRead < partsTotal,
-          s"scan read $partsRead of $partsTotal partitions — not pruned")
-        s""""ivf_pruning":{"cells_probed":${probeCells.length},"partitions_read":$partsRead,"partitions_total":$partsTotal,"files_read":$filesRead,"files_total":$filesTotal,"rows_scanned":$nScanned}"""
-      } else None
+          .agg(count(lit(1)).as("n")))
+        .filter(col("operator").startsWith("Scan") ||
+          col("operator").contains("FileScan"))
+        .select(col("metric"), col("value")).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val partsRead = metrics.getOrElse("numPartitions", -1L)
+      val filesRead = metrics.getOrElse("numFiles", -1L)
+      import scala.jdk.CollectionConverters._
+      val partsTotal = Files.list(Paths.get(ivfDir)).iterator().asScala
+        .count(_.getFileName.toString.startsWith("cell="))
+      val filesTotal = Files.walk(Paths.get(ivfDir)).iterator().asScala
+        .count(_.getFileName.toString.endsWith(".parquet"))
+      val pf = spark.read.parquet(ivfDir)
+        .filter(col("cell").isin(probeCells.toIndexedSeq.map(Int.box): _*))
+        .agg(count(lit(1)))
+        .queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
+      val pruned = "PartitionFilters: \\[[^\\]]*cell[^\\]]*\\]".r
+        .findFirstIn(pf).isDefined
+      println(f"IVF PRUNING: partitions $partsRead/$partsTotal files $filesRead/$filesTotal rows=$nScanned partitionFilters=$pruned")
+      // loud failure: the pruning claim is the point of this probe
+      require(pruned, s"no PartitionFilters on the cell scan:\n$pf")
+      require(partsRead > 0 && partsRead < partsTotal,
+        s"scan read $partsRead of $partsTotal partitions — not pruned")
+      artifact.record("ivf_pruning", s"""{"cells_probed":${probeCells.length},"partitions_read":$partsRead,"partitions_total":$partsTotal,"files_read":$filesRead,"files_total":$filesTotal,"rows_scanned":$nScanned}""")
+    }
 
     // ---- incremental-dedup bucketed-layout demonstration -------------
     // dedup_incremental's scale comment claims "at 100 TB the corpus
@@ -723,59 +589,58 @@ object ScaleProbe {
     // from the EXECUTED plan that the only exchange is the shard-sized
     // one aligning to the bucket layout — the corpus side never rides a
     // shuffle again, for this and every future shard.
-    val incrBucketed: Option[String] =
-      if (onlyProbes.forall(_.contains("incr_bucketed"))) Some {
-        import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-        val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
-        val bcWas = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        try {
-          // plan-SHAPE demonstration: no runtime re-plan, no broadcast
-          // rescue — the corpus side must stand on its bucket layout
-          // alone (at 100 TB the corpus is far past broadcast size)
-          spark.conf.set("spark.sql.adaptive.enabled", "false")
-          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-          val nBuckets = 32
-          val tbl = "graft_probe_corpus_hashes"
-          val docs = Engine.table(spark, out, "documents")
-          if (!spark.catalog.tableExists(tbl)) {
-            val t0 = System.nanoTime()
-            docs.filter(col("doc_id") % 2 === 0)
-              .select(md5(col("text")).as("h"))
-              .distinct()
-              .write.bucketBy(nBuckets, "h").sortBy("h")
-              .option("path", s"$out/corpus_hashes")
-              .mode("overwrite").saveAsTable(tbl)
-            println(f"bucketed corpus hash table in ${(System.nanoTime() - t0) / 1e9}%.1fs")
-          }
-          val corpus = spark.table(tbl)
-          val shard = docs.filter(col("doc_id") % 3 === 0)
-            .select(col("doc_id"), md5(col("text")).as("h"))
-          val dup = shard.join(corpus.hint("merge"), Seq("h"), "left_semi")
+    if (onlyProbes.forall(_.contains("incr_bucketed"))) {
+      import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+      val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
+      val bcWas = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      try {
+        // plan-SHAPE demonstration: no runtime re-plan, no broadcast
+        // rescue — the corpus side must stand on its bucket layout
+        // alone (at 100 TB the corpus is far past broadcast size)
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        val nBuckets = 32
+        val tbl = "graft_probe_corpus_hashes"
+        val docs = Engine.table(spark, out, "documents")
+        if (!spark.catalog.tableExists(tbl)) {
           val t0 = System.nanoTime()
-          val nDup = dup.count()
-          val wall = (System.nanoTime() - t0) / 1e9
-          val exchanges = dup.queryExecution.executedPlan
-            .collect { case e: ShuffleExchangeLike => e }
-          // every exchange subtree must be the SHARD scan; the bucketed
-          // corpus table must appear under none of them
-          val corpusExchanged = exchanges.exists(_.toString.contains("corpus_hashes"))
-          val planStr = dup.queryExecution
-            .explainString(org.apache.spark.sql.execution.SimpleMode)
-          val bucketScan = planStr.contains("SelectedBucketsCount") ||
-            planStr.contains("Bucketed: true")
-          println(s"INCR BUCKETED: dups=$nDup exchanges=${exchanges.length} " +
-            f"corpusExchanged=$corpusExchanged bucketScan=$bucketScan wall=$wall%.1fs")
-          // loud failure: the exchange-free claim is the point
-          require(exchanges.length == 1,
-            s"expected exactly the shard-side exchange, got ${exchanges.length}:\n$planStr")
-          require(!corpusExchanged, s"corpus side rode an exchange:\n$planStr")
-          require(bucketScan, s"corpus scan is not bucket-aware:\n$planStr")
-          s""""incremental_bucketed":{"buckets":$nBuckets,"dup_rows":$nDup,"exchanges":${exchanges.length},"corpus_side_exchange_free":true,"wall_s":${math.rint(wall * 10) / 10}}"""
-        } finally {
-          spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcWas)
+          docs.filter(col("doc_id") % 2 === 0)
+            .select(md5(col("text")).as("h"))
+            .distinct()
+            .write.bucketBy(nBuckets, "h").sortBy("h")
+            .option("path", s"$out/corpus_hashes")
+            .mode("overwrite").saveAsTable(tbl)
+          println(f"bucketed corpus hash table in ${(System.nanoTime() - t0) / 1e9}%.1fs")
         }
-      } else None
+        val corpus = spark.table(tbl)
+        val shard = docs.filter(col("doc_id") % 3 === 0)
+          .select(col("doc_id"), md5(col("text")).as("h"))
+        val dup = shard.join(corpus.hint("merge"), Seq("h"), "left_semi")
+        val t0 = System.nanoTime()
+        val nDup = dup.count()
+        val wall = (System.nanoTime() - t0) / 1e9
+        val exchanges = dup.queryExecution.executedPlan
+          .collect { case e: ShuffleExchangeLike => e }
+        // every exchange subtree must be the SHARD scan; the bucketed
+        // corpus table must appear under none of them
+        val corpusExchanged = exchanges.exists(_.toString.contains("corpus_hashes"))
+        val planStr = dup.queryExecution
+          .explainString(org.apache.spark.sql.execution.SimpleMode)
+        val bucketScan = planStr.contains("SelectedBucketsCount") ||
+          planStr.contains("Bucketed: true")
+        println(s"INCR BUCKETED: dups=$nDup exchanges=${exchanges.length} " +
+          f"corpusExchanged=$corpusExchanged bucketScan=$bucketScan wall=$wall%.1fs")
+        // loud failure: the exchange-free claim is the point
+        require(exchanges.length == 1,
+          s"expected exactly the shard-side exchange, got ${exchanges.length}:\n$planStr")
+        require(!corpusExchanged, s"corpus side rode an exchange:\n$planStr")
+        require(bucketScan, s"corpus scan is not bucket-aware:\n$planStr")
+        artifact.record("incremental_bucketed", s"""{"buckets":$nBuckets,"dup_rows":$nDup,"exchanges":${exchanges.length},"corpus_side_exchange_free":true,"wall_s":${r1(wall)}}""")
+      } finally {
+        spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcWas)
+      }
+    }
 
     // ---- RANGE-frame window at shard scale ---------------------------
     // q_window_range partitions by o_orderpriority — FIVE distinct keys,
@@ -785,33 +650,26 @@ object ScaleProbe {
     // partition: measure per-key row counts (uniformity) and the actual
     // per-task peak memory on a factor-x orders shard.
     def ordersShard(): String = ScaleProbe.ordersShard(spark, base, out, factor, cpus)
-    var wrTotal: Option[Long] = None   // framed totals: the two window
-    var wrpTotal: Option[Long] = None  // probes must agree exactly
-    val windowRange: Option[String] =
-      if (onlyProbes.forall(_.contains("window_range"))) Some {
-        val ord = spark.read.parquet(ordersShard())
-        val keyCounts = ord.groupBy(col("o_orderpriority"))
-          .agg(count(lit(1)).as("n"))
-          .collect().map(_.getLong(1)) // 5 diagnostic rows — the key domain
-        org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-        peakTask.set(0L)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("o_orderpriority")).orderBy(col("o_orderkey"))
-          .rangeBetween(-1000L * factor, 0) // frame scaled with key density
-        val t0 = System.nanoTime()
-        val total = ord
-          .select(col("o_orderpriority"),
-            count(lit(1)).over(w).as("n_in_range"),
-            sum(col("o_totalprice")).over(w).as("sum_in_range"))
-          .agg(sum(col("n_in_range"))).collect().head.getLong(0) // 1-row reduce
-        val wall = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-        val peakMb = peakTask.get() / 1e6
-        wrTotal = Some(total)
-        println(f"WINDOW RANGE: rows=${keyCounts.sum} keyMax=${keyCounts.max} " +
-          f"keyMin=${keyCounts.min} framedTotal=$total wall=$wall%.1fs peak_task_mem=$peakMb%.1f MB")
-        s""""window_range":{"rows":${keyCounts.sum},"keys":${keyCounts.length},"key_rows_max":${keyCounts.max},"key_rows_min":${keyCounts.min},"framed_total":$total,"wall_s":${math.rint(wall * 10) / 10},"peak_task_mem_mb":${math.rint(peakMb * 10) / 10}}"""
-      } else None
+    var wrTotal: Option[Long] = None // the two window probes' framed totals must agree
+    if (onlyProbes.forall(_.contains("window_range"))) {
+      val ord = spark.read.parquet(ordersShard())
+      val keyCounts = ord.groupBy(col("o_orderpriority"))
+        .agg(count(lit(1)).as("n"))
+        .collect().map(_.getLong(1)) // 5 diagnostic rows — the key domain
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("o_orderpriority")).orderBy(col("o_orderkey"))
+        .rangeBetween(-1000L * factor, 0) // frame scaled with key density
+      val (total, p) = profiler.measure(ord
+        .select(col("o_orderpriority"),
+          count(lit(1)).over(w).as("n_in_range"),
+          sum(col("o_totalprice")).over(w).as("sum_in_range"))
+        .agg(sum(col("n_in_range"))).collect().head.getLong(0)) // 1-row reduce
+      val peakMb = p.peakTaskMemBytes / 1e6
+      wrTotal = Some(total)
+      println(f"WINDOW RANGE: rows=${keyCounts.sum} keyMax=${keyCounts.max} " +
+        f"keyMin=${keyCounts.min} framedTotal=$total wall=${p.wallS}%.1fs peak_task_mem=$peakMb%.1f MB")
+      artifact.record("window_range", s"""{"rows":${keyCounts.sum},"keys":${keyCounts.length},"key_rows_max":${keyCounts.max},"key_rows_min":${keyCounts.min},"framed_total":$total,"wall_s":${r1(p.wallS)},"peak_task_mem_mb":${r1(peakMb)}}""")
+    }
 
     // ---- prefix-sum rewrite of the same RANGE frame ------------------
     // The sliding frame above is O(rows × frame_rows); the rewrite is
@@ -819,25 +677,18 @@ object ScaleProbe {
     // (ops/Scale.rangeFramePrefixSum — oracle-proven equal at sf0.01 by
     // q_window_range_prefix). The framed totals are asserted identical,
     // so the two probe rows measure the SAME computation both ways.
-    val windowRangePrefix: Option[String] =
-      if (onlyProbes.forall(_.contains("window_range_prefix"))) Some {
-        val ord = spark.read.parquet(ordersShard())
-        org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-        peakTask.set(0L)
-        val t0 = System.nanoTime()
-        val total = graft.ops.Scale.rangeFramePrefixSum(ord,
-            "o_orderpriority", "o_orderkey", "o_totalprice", 1000L * factor)
-          .agg(sum(col("n_in_range"))).collect().head.getLong(0) // 1-row reduce
-        val wall = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-        val peakMb = peakTask.get() / 1e6
-        wrpTotal = Some(total)
-        for (a <- wrTotal; b <- wrpTotal)
-          require(a == b, s"prefix rewrite diverged: sliding=$a prefix=$b")
-        println(f"WINDOW RANGE PREFIX: framedTotal=$total wall=$wall%.1fs " +
-          f"peak_task_mem=$peakMb%.1f MB totalsAgree=${wrTotal.forall(_ == total)}")
-        s""""window_range_prefix":{"framed_total":$total,"wall_s":${math.rint(wall * 10) / 10},"peak_task_mem_mb":${math.rint(peakMb * 10) / 10}}"""
-      } else None
+    if (onlyProbes.forall(_.contains("window_range_prefix"))) {
+      val ord = spark.read.parquet(ordersShard())
+      val (total, p) = profiler.measure(graft.ops.Scale.rangeFramePrefixSum(ord,
+          "o_orderpriority", "o_orderkey", "o_totalprice", 1000L * factor)
+        .agg(sum(col("n_in_range"))).collect().head.getLong(0)) // 1-row reduce
+      val peakMb = p.peakTaskMemBytes / 1e6
+      for (a <- wrTotal)
+        require(a == total, s"prefix rewrite diverged: sliding=$a prefix=$total")
+      println(f"WINDOW RANGE PREFIX: framedTotal=$total wall=${p.wallS}%.1fs " +
+        f"peak_task_mem=$peakMb%.1f MB totalsAgree=${wrTotal.forall(_ == total)}")
+      artifact.record("window_range_prefix", s"""{"framed_total":$total,"wall_s":${r1(p.wallS)},"peak_task_mem_mb":${r1(peakMb)}}""")
+    }
 
     // ---- quality-cut formulation comparison --------------------------
     // pipe_quality_cut's comment claims Spark's percentile() aggregate
@@ -846,39 +697,24 @@ object ScaleProbe {
     // formulations over the shard's documents: same cutoffs required
     // (they implement the same R-7 definition), peak task memory is the
     // verdict metric.
-    val qualityCutAlt: Option[String] =
-      if (onlyProbes.forall(_.contains("quality_cut_alternative"))) Some {
-        val docs = Engine.table(spark, out, "documents")
-          .select(col("lang"), col("n_chars"))
-        org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-        peakTask.set(0L)
-        val t0 = System.nanoTime()
-        val buffered = docs.groupBy(col("lang"))
-          .agg(expr("percentile(n_chars, 0.75)").as("cutoff"))
-          .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-        val bufWall = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-        val bufPeak = peakTask.get() / 1e6
-        peakTask.set(0L)
-        val t1 = System.nanoTime()
-        val ranked = graft.SparkEntry.queries("pipe_quality_cut")(spark, out)
+    if (onlyProbes.forall(_.contains("quality_cut_alternative"))) {
+      val docs = Engine.table(spark, out, "documents")
+        .select(col("lang"), col("n_chars"))
+      val (buffered, pBuf) = profiler.measure(docs.groupBy(col("lang"))
+        .agg(expr("percentile(n_chars, 0.75)").as("cutoff"))
+        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap)
+      val (ranked, pRk) = profiler.measure(
+        graft.SparkEntry.queries("pipe_quality_cut")(spark, out)
           .select(col("lang"), col("cutoff"))
-          .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-        val rkWall = (System.nanoTime() - t1) / 1e9
-        org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-        val rkPeak = peakTask.get() / 1e6
-        require(buffered == ranked,
-          s"formulations diverged: percentile()=$buffered rank=$ranked")
-        println(f"QUALITY CUT ALT: percentile() wall=$bufWall%.1fs peak=$bufPeak%.1f MB " +
-          f"vs rank-selection wall=$rkWall%.1fs peak=$rkPeak%.1f MB, cutoffs agree")
-        // bare JSON object (no key prefix): mergeArtifact parses this
-        // with Jackson, and a key-prefixed string parses as a lone text
-        // node — the bug that wrote "quality_cut_alternative" as its
-        // own value into the r8 artifact
-        s"""{"cutoffs_agree":true,"percentile_wall_s":${math.rint(bufWall * 10) / 10},"percentile_peak_task_mb":${math.rint(bufPeak * 10) / 10},"rank_wall_s":${math.rint(rkWall * 10) / 10},"rank_peak_task_mb":${math.rint(rkPeak * 10) / 10}}"""
-      } else None
-    if (onlyProbes.isDefined && qualityCutAlt.isDefined)
-      mergeArtifact(factor, "quality_cut_alternative", qualityCutAlt.get)
+          .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap)
+      val (bufWall, bufPeak) = (pBuf.wallS, pBuf.peakTaskMemBytes / 1e6)
+      val (rkWall, rkPeak) = (pRk.wallS, pRk.peakTaskMemBytes / 1e6)
+      require(buffered == ranked,
+        s"formulations diverged: percentile()=$buffered rank=$ranked")
+      println(f"QUALITY CUT ALT: percentile() wall=$bufWall%.1fs peak=$bufPeak%.1f MB " +
+        f"vs rank-selection wall=$rkWall%.1fs peak=$rkPeak%.1f MB, cutoffs agree")
+      artifact.record("quality_cut_alternative", s"""{"cutoffs_agree":true,"percentile_wall_s":${r1(bufWall)},"percentile_peak_task_mb":${r1(bufPeak)},"rank_wall_s":${r1(rkWall)},"rank_peak_task_mb":${r1(rkPeak)}}""")
+    }
 
     // ---- vocab-scale rank: global window vs two-level DistRank -------
     // text_vocab_coverage/text_zipf_fit rest on "the vocab is small
@@ -891,46 +727,33 @@ object ScaleProbe {
     // The verdict metric is peak task memory: the global window puts
     // all 10⁷ rows in ONE sort task; DistRank's biggest sort is a
     // (count-band × first-byte) shard.
-    val vocabRankScale: Option[String] =
-      if (onlyProbes.forall(_.contains("vocab_rank_scale"))) Some {
-        val v = 10L * 1000 * 1000
-        val vocab = spark.range(v)
-          .select(md5(col("id").cast("string")).as("w"),
-            expr(s"greatest(1L, $v div (id + 1))").as("wc"))
-          .repartition(cpus)
-          .localCheckpoint(true) // both paths rank the SAME blocks
-        def checksum(ranked: org.apache.spark.sql.DataFrame): Long = ranked
-          .select(conv(substring(md5(concat_ws("|",
-            col("w"), col("rn").cast("string"))), 1, 15), 16, 10)
-            .cast("long").as("h"))
-          .agg(expr("bit_xor(h)")).head().getLong(0)
-        def measure(ranked: => org.apache.spark.sql.DataFrame): (Long, Double, Double) = {
-          org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-          peakTask.set(0L)
-          val t0 = System.nanoTime()
-          val ck = checksum(ranked)
-          val wall = (System.nanoTime() - t0) / 1e9
-          org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-          (ck, wall, peakTask.get() / 1e6)
-        }
-        val (ckG, wallG, peakG) = measure(
-          vocab.withColumn("rn", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .orderBy(col("wc").desc, col("w"))).cast("long")))
-        val (ckD, wallD, peakD) = measure(
-          graft.ext.DistRank.rowNumber(spark, vocab,
-            graft.ext.DistRank.countDescWordShard(col("wc"), col("w")),
-            Seq(col("wc").desc, col("w")), "rn"))
-        require(ckG == ckD,
-          s"rank formulations diverged: global=$ckG distributed=$ckD")
-        def r1(x: Double): Double = math.rint(x * 10) / 10
-        println(f"VOCAB RANK SCALE: types=$v global wall=$wallG%.1fs " +
-          f"peak=$peakG%.1f MB vs two-level wall=$wallD%.1fs peak=$peakD%.1f MB " +
-          "(checksums agree)")
-        s"""{"n_types":$v,"checksums_agree":true,"global_wall_s":${r1(wallG)},"global_peak_task_mb":${r1(peakG)},"twolevel_wall_s":${r1(wallD)},"twolevel_peak_task_mb":${r1(peakD)}}"""
-      } else None
-    if (onlyProbes.isDefined && vocabRankScale.isDefined)
-      mergeArtifact(factor, "vocab_rank_scale", vocabRankScale.get)
+    if (onlyProbes.forall(_.contains("vocab_rank_scale"))) {
+      val v = 10L * 1000 * 1000
+      val vocab = spark.range(v)
+        .select(md5(col("id").cast("string")).as("w"),
+          expr(s"greatest(1L, $v div (id + 1))").as("wc"))
+        .repartition(cpus)
+        .localCheckpoint(true) // both paths rank the SAME blocks
+      def measure(ranked: => DataFrame): (Long, Double, Double) = {
+        val (ck, p) = profiler.measure(
+          rowChecksum(ranked, col("w"), col("rn").cast("string")))
+        (ck, p.wallS, p.peakTaskMemBytes / 1e6)
+      }
+      val (ckG, wallG, peakG) = measure(
+        vocab.withColumn("rn", row_number().over(
+          org.apache.spark.sql.expressions.Window
+            .orderBy(col("wc").desc, col("w"))).cast("long")))
+      val (ckD, wallD, peakD) = measure(
+        graft.ext.DistRank.rowNumber(spark, vocab,
+          graft.ext.DistRank.countDescWordShard(col("wc"), col("w")),
+          Seq(col("wc").desc, col("w")), "rn"))
+      require(ckG == ckD,
+        s"rank formulations diverged: global=$ckG distributed=$ckD")
+      println(f"VOCAB RANK SCALE: types=$v global wall=$wallG%.1fs " +
+        f"peak=$peakG%.1f MB vs two-level wall=$wallD%.1fs peak=$peakD%.1f MB " +
+        "(checksums agree)")
+      artifact.record("vocab_rank_scale", s"""{"n_types":$v,"checksums_agree":true,"global_wall_s":${r1(wallG)},"global_peak_task_mb":${r1(peakG)},"twolevel_wall_s":${r1(wallD)},"twolevel_peak_task_mb":${r1(peakD)}}""")
+    }
 
     // ---- z-order layout pruning demonstration ------------------------
     // writeZOrdered claims parquet footer stats prune 2-D box predicates.
@@ -939,54 +762,53 @@ object ScaleProbe {
     // perfectly and the other not at all). Metric: the scan's
     // numOutputRows, i.e. rows surviving row-group/page pruning before
     // the residual filter runs; the box answer itself must be identical.
-    val zorderPruning: Option[String] =
-      if (onlyProbes.forall(_.contains("zorder_pruning"))) Some {
-        val ord = spark.read.parquet(ordersShard())
-        val linDir = s"$out/orders_lin.parquet"
-        val zDir = s"$out/orders_z.parquet"
-        if (!Files.exists(Paths.get(s"$linDir/_SUCCESS"))) {
-          val t0 = System.nanoTime()
-          ord.repartitionByRange(cpus, col("o_orderkey"))
-            .sortWithinPartitions(col("o_orderkey"))
-            .write.mode("overwrite")
-            .option("parquet.block.size", 8L << 20).parquet(linDir)
-          println(f"linear layout written in ${(System.nanoTime() - t0) / 1e9}%.1fs")
-        }
-        if (!Files.exists(Paths.get(s"$zDir/_SUCCESS"))) {
-          val t0 = System.nanoTime()
-          graft.ops.Scale.writeZOrdered(ord, zDir, "o_orderkey", "o_totalprice",
-            cpus)
-          println(f"z-order layout written in ${(System.nanoTime() - t0) / 1e9}%.1fs")
-        }
-        // ~10% of the key domain (keys are orig*factor+k, orig ≤ ~600k at
-        // sf0.1) × ~10% of the price domain — both dimensions selective,
-        // the regime where a 1-D sort must over-read
-        val loK = 120000L * factor
-        val hiK = 180000L * factor
-        def boxQ(dir: String) = spark.read.parquet(dir)
-          .filter(col("o_orderkey").between(loK, hiK) &&
-            col("o_totalprice").between(50000, 110000))
-          .agg(count(lit(1)).as("n"))
-        def measure(dir: String): (Long, Long, Double) = {
-          val t0 = System.nanoTime()
-          val m = Explain.analyze(boxQ(dir))
-          val wall = (System.nanoTime() - t0) / 1e9
-          val scanRows = m.filter((col("operator").startsWith("Scan") ||
-              col("operator").contains("FileScan")) &&
-              col("metric") === "numOutputRows")
-            .agg(sum(col("value"))).collect().head.getLong(0)
-          val n = boxQ(dir).collect().head.getLong(0) // 1-row reduce
-          (scanRows, n, wall)
-        }
-        val (linScan, linN, linWall) = measure(linDir)
-        val (zScan, zN, zWall) = measure(zDir)
-        require(linN == zN, s"layouts disagree on the box answer: $linN vs $zN")
-        require(zScan < linScan,
-          s"z-order read MORE rows than the 1-D sort: $zScan vs $linScan")
-        println(f"ZORDER PRUNING: box_rows=$zN scan_linear=$linScan scan_zorder=$zScan " +
-          f"ratio=${linScan.toDouble / zScan}%.1fx wall_lin=$linWall%.1fs wall_z=$zWall%.1fs")
-        s""""zorder_pruning":{"box_rows":$zN,"scan_rows_linear":$linScan,"scan_rows_zorder":$zScan,"wall_linear_s":${math.rint(linWall * 10) / 10},"wall_zorder_s":${math.rint(zWall * 10) / 10}}"""
-      } else None
+    if (onlyProbes.forall(_.contains("zorder_pruning"))) {
+      val ord = spark.read.parquet(ordersShard())
+      val linDir = s"$out/orders_lin.parquet"
+      val zDir = s"$out/orders_z.parquet"
+      if (!Files.exists(Paths.get(s"$linDir/_SUCCESS"))) {
+        val t0 = System.nanoTime()
+        ord.repartitionByRange(cpus, col("o_orderkey"))
+          .sortWithinPartitions(col("o_orderkey"))
+          .write.mode("overwrite")
+          .option("parquet.block.size", 8L << 20).parquet(linDir)
+        println(f"linear layout written in ${(System.nanoTime() - t0) / 1e9}%.1fs")
+      }
+      if (!Files.exists(Paths.get(s"$zDir/_SUCCESS"))) {
+        val t0 = System.nanoTime()
+        graft.ops.Scale.writeZOrdered(ord, zDir, "o_orderkey", "o_totalprice",
+          cpus)
+        println(f"z-order layout written in ${(System.nanoTime() - t0) / 1e9}%.1fs")
+      }
+      // ~10% of the key domain (keys are orig*factor+k, orig ≤ ~600k at
+      // sf0.1) × ~10% of the price domain — both dimensions selective,
+      // the regime where a 1-D sort must over-read
+      val loK = 120000L * factor
+      val hiK = 180000L * factor
+      def boxQ(dir: String) = spark.read.parquet(dir)
+        .filter(col("o_orderkey").between(loK, hiK) &&
+          col("o_totalprice").between(50000, 110000))
+        .agg(count(lit(1)).as("n"))
+      def measure(dir: String): (Long, Long, Double) = {
+        val t0 = System.nanoTime()
+        val m = Explain.analyze(boxQ(dir))
+        val wall = (System.nanoTime() - t0) / 1e9
+        val scanRows = m.filter((col("operator").startsWith("Scan") ||
+            col("operator").contains("FileScan")) &&
+            col("metric") === "numOutputRows")
+          .agg(sum(col("value"))).collect().head.getLong(0)
+        val n = boxQ(dir).collect().head.getLong(0) // 1-row reduce
+        (scanRows, n, wall)
+      }
+      val (linScan, linN, linWall) = measure(linDir)
+      val (zScan, zN, zWall) = measure(zDir)
+      require(linN == zN, s"layouts disagree on the box answer: $linN vs $zN")
+      require(zScan < linScan,
+        s"z-order read MORE rows than the 1-D sort: $zScan vs $linScan")
+      println(f"ZORDER PRUNING: box_rows=$zN scan_linear=$linScan scan_zorder=$zScan " +
+        f"ratio=${linScan.toDouble / zScan}%.1fx wall_lin=$linWall%.1fs wall_z=$zWall%.1fs")
+      artifact.record("zorder_pruning", s"""{"box_rows":$zN,"scan_rows_linear":$linScan,"scan_rows_zorder":$zScan,"wall_linear_s":${r1(linWall)},"wall_zorder_s":${r1(zWall)}}""")
+    }
 
     // ---- dynamic partition pruning (join-driven) ---------------------
     // The static layouts above (IVF cells, z-order) prune on literals
@@ -998,51 +820,48 @@ object ScaleProbe {
     // column; dim maps days to months; the query filters ONE month on
     // the dim side only. The fact scan must read ~1/12 of the
     // partitions with zero partition literals in the query text.
-    val dppPruning: Option[String] =
-      if (onlyProbes.forall(_.contains("dpp"))) Some {
-        val dppDir = s"$out/orders_byday.parquet"
-        if (!Files.exists(Paths.get(s"$dppDir/_SUCCESS"))) {
-          val t0 = System.nanoTime()
-          spark.read.parquet(ordersShard())
-            .withColumn("day_id", pmod(col("o_orderkey"), lit(365L)))
-            .repartition(col("day_id")) // one file per day directory
-            .write.mode("overwrite").partitionBy("day_id").parquet(dppDir)
-          println(f"day-partitioned layout written in ${(System.nanoTime() - t0) / 1e9}%.1fs")
-        }
-        val dim = spark.range(365).select(col("id").as("day_id"),
-          (col("id") % 12).as("month"))
-        val fact = spark.read.parquet(dppDir)
-        val q = fact.join(broadcast(dim), "day_id")
-          .filter(col("month") === 3)
-          .agg(count(lit(1)).as("n"), sum(col("o_totalprice")).as("sp"))
+    if (onlyProbes.forall(_.contains("dpp"))) {
+      val dppDir = s"$out/orders_byday.parquet"
+      if (!Files.exists(Paths.get(s"$dppDir/_SUCCESS"))) {
         val t0 = System.nanoTime()
-        val m = Explain.analyze(q)
-          .filter((col("operator").startsWith("Scan") ||
-            col("operator").contains("FileScan")) &&
-            col("metric").isin("numPartitions", "numFiles", "numOutputRows"))
-          .groupBy(col("metric")).agg(max(col("value")).as("v"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val wall = (System.nanoTime() - t0) / 1e9
-        val partsRead = m.getOrElse("numPartitions", -1L)
-        val filesRead = m.getOrElse("numFiles", -1L)
-        val rowsRead = m.getOrElse("numOutputRows", -1L)
-        import scala.jdk.CollectionConverters._
-        val partsTotal = Files.list(Paths.get(dppDir)).iterator().asScala
-          .count(_.getFileName.toString.startsWith("day_id="))
-        // Explain.analyze executed q's OWN queryExecution, so this is
-        // the final post-AQE plan of the run measured above
-        val plan = q.queryExecution
-          .explainString(org.apache.spark.sql.execution.SimpleMode)
-        require(plan.contains("dynamicpruning"),
-          s"fact scan has no dynamic pruning filter:\n$plan")
-        require(partsRead > 0 && partsRead <= partsTotal / 10,
-          s"DPP read $partsRead of $partsTotal partitions — not pruned")
-        println(f"DPP: partitions $partsRead/$partsTotal files=$filesRead " +
-          f"rows_scanned=$rowsRead wall=$wall%.1fs")
-        s"""{"partitions_read":$partsRead,"partitions_total":$partsTotal,"files_read":$filesRead,"rows_scanned":$rowsRead,"wall_s":${math.rint(wall * 10) / 10}}"""
-      } else None
-    if (onlyProbes.isDefined && dppPruning.isDefined)
-      mergeArtifact(factor, "dpp_pruning", dppPruning.get)
+        spark.read.parquet(ordersShard())
+          .withColumn("day_id", pmod(col("o_orderkey"), lit(365L)))
+          .repartition(col("day_id")) // one file per day directory
+          .write.mode("overwrite").partitionBy("day_id").parquet(dppDir)
+        println(f"day-partitioned layout written in ${(System.nanoTime() - t0) / 1e9}%.1fs")
+      }
+      val dim = spark.range(365).select(col("id").as("day_id"),
+        (col("id") % 12).as("month"))
+      val fact = spark.read.parquet(dppDir)
+      val q = fact.join(broadcast(dim), "day_id")
+        .filter(col("month") === 3)
+        .agg(count(lit(1)).as("n"), sum(col("o_totalprice")).as("sp"))
+      val t0 = System.nanoTime()
+      val m = Explain.analyze(q)
+        .filter((col("operator").startsWith("Scan") ||
+          col("operator").contains("FileScan")) &&
+          col("metric").isin("numPartitions", "numFiles", "numOutputRows"))
+        .groupBy(col("metric")).agg(max(col("value")).as("v"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val wall = (System.nanoTime() - t0) / 1e9
+      val partsRead = m.getOrElse("numPartitions", -1L)
+      val filesRead = m.getOrElse("numFiles", -1L)
+      val rowsRead = m.getOrElse("numOutputRows", -1L)
+      import scala.jdk.CollectionConverters._
+      val partsTotal = Files.list(Paths.get(dppDir)).iterator().asScala
+        .count(_.getFileName.toString.startsWith("day_id="))
+      // Explain.analyze executed q's OWN queryExecution, so this is
+      // the final post-AQE plan of the run measured above
+      val plan = q.queryExecution
+        .explainString(org.apache.spark.sql.execution.SimpleMode)
+      require(plan.contains("dynamicpruning"),
+        s"fact scan has no dynamic pruning filter:\n$plan")
+      require(partsRead > 0 && partsRead <= partsTotal / 10,
+        s"DPP read $partsRead of $partsTotal partitions — not pruned")
+      println(f"DPP: partitions $partsRead/$partsTotal files=$filesRead " +
+        f"rows_scanned=$rowsRead wall=$wall%.1fs")
+      artifact.record("dpp_pruning", s"""{"partitions_read":$partsRead,"partitions_total":$partsTotal,"files_read":$filesRead,"rows_scanned":$rowsRead,"wall_s":${r1(wall)}}""")
+    }
 
     // ---- small-files compaction at shard scale -----------------------
     // The DPP layout above is the canonical fragmentation shape: 365
@@ -1052,44 +871,41 @@ object ScaleProbe {
     // sort) and require content invariance plus a real file-count cut.
     // At 100 TB the same call runs per fragmented PARTITION, bounded by
     // the fragmented subset; the full-layout pass here is the worst case.
-    val compaction: Option[String] =
-      if (onlyProbes.forall(_.contains("compaction"))) Some {
-        val dppDir = s"$out/orders_byday.parquet"
-        require(Files.exists(Paths.get(s"$dppDir/_SUCCESS")),
-          "run the dpp probe first — compaction reuses its fragmented layout")
-        val compDir = s"$out/orders_compacted.parquet"
-        import scala.jdk.CollectionConverters._
-        val filesBefore = Files.walk(Paths.get(dppDir)).iterator().asScala
-          .count(_.getFileName.toString.endsWith(".parquet"))
-        val src = spark.read.parquet(dppDir) // day_id partition col → row col
-        val t0 = System.nanoTime()
-        val nOut = {
-          // size-derived like compactParquet, but over the partitioned tree
-          val bytes = Files.walk(Paths.get(dppDir)).iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet"))
-            .map(_.toFile.length()).sum
-          math.max(1L, (bytes + (64L << 20) - 1) / (64L << 20)).toInt
-        }
-        src.repartitionByRange(nOut, col("o_orderkey"))
-          .sortWithinPartitions(col("o_orderkey"))
-          .write.mode("overwrite").parquet(compDir)
-        val wall = (System.nanoTime() - t0) / 1e9
-        val filesAfter = Files.list(Paths.get(compDir)).iterator().asScala
-          .count(_.getFileName.toString.endsWith(".parquet"))
-        // content invariance on an order-free aggregate fingerprint
-        def fp(d: org.apache.spark.sql.DataFrame) = d
-          .agg(count(lit(1)), sum(col("o_orderkey")),
-            sum(col("o_totalprice").cast("decimal(20,2)")), sum(col("day_id")))
-          .collect().head.toSeq
-        require(fp(src) == fp(spark.read.parquet(compDir)),
-          "compaction changed content")
-        require(filesAfter * 4 < filesBefore,
-          s"compaction barely helped: $filesBefore -> $filesAfter")
-        println(f"COMPACTION: files $filesBefore -> $filesAfter wall=$wall%.1fs")
-        s"""{"files_before":$filesBefore,"files_after":$filesAfter,"wall_s":${math.rint(wall * 10) / 10}}"""
-      } else None
-    if (onlyProbes.isDefined && compaction.isDefined)
-      mergeArtifact(factor, "compaction", compaction.get)
+    if (onlyProbes.forall(_.contains("compaction"))) {
+      val dppDir = s"$out/orders_byday.parquet"
+      require(Files.exists(Paths.get(s"$dppDir/_SUCCESS")),
+        "run the dpp probe first — compaction reuses its fragmented layout")
+      val compDir = s"$out/orders_compacted.parquet"
+      import scala.jdk.CollectionConverters._
+      val filesBefore = Files.walk(Paths.get(dppDir)).iterator().asScala
+        .count(_.getFileName.toString.endsWith(".parquet"))
+      val src = spark.read.parquet(dppDir) // day_id partition col → row col
+      val t0 = System.nanoTime()
+      val nOut = {
+        // size-derived like compactParquet, but over the partitioned tree
+        val bytes = Files.walk(Paths.get(dppDir)).iterator().asScala
+          .filter(_.getFileName.toString.endsWith(".parquet"))
+          .map(_.toFile.length()).sum
+        math.max(1L, (bytes + (64L << 20) - 1) / (64L << 20)).toInt
+      }
+      src.repartitionByRange(nOut, col("o_orderkey"))
+        .sortWithinPartitions(col("o_orderkey"))
+        .write.mode("overwrite").parquet(compDir)
+      val wall = (System.nanoTime() - t0) / 1e9
+      val filesAfter = Files.list(Paths.get(compDir)).iterator().asScala
+        .count(_.getFileName.toString.endsWith(".parquet"))
+      // content invariance on an order-free aggregate fingerprint
+      def fp(d: DataFrame) = d
+        .agg(count(lit(1)), sum(col("o_orderkey")),
+          sum(col("o_totalprice").cast("decimal(20,2)")), sum(col("day_id")))
+        .collect().head.toSeq
+      require(fp(src) == fp(spark.read.parquet(compDir)),
+        "compaction changed content")
+      require(filesAfter * 4 < filesBefore,
+        s"compaction barely helped: $filesBefore -> $filesAfter")
+      println(f"COMPACTION: files $filesBefore -> $filesAfter wall=$wall%.1fs")
+      artifact.record("compaction", s"""{"files_before":$filesBefore,"files_after":$filesAfter,"wall_s":${r1(wall)}}""")
+    }
 
     // ---- AQE skew-join vs explicit salting ---------------------------
     // Scale.saltedJoin's doc claims "AQE's skew-join handles moderate
@@ -1103,152 +919,123 @@ object ScaleProbe {
     //   (c) explicit salting (Scale.saltedJoin, 64 salts), AQE off.
     // All three must produce the identical join cardinality; the skew
     // metric is max task duration (p100 IS the straggler story — wall
-    // clock hides it behind the other 31 cores).
-    // max duration over SHUFFLE-READING tasks only: the scan stage (no
+    // clock hides it behind the other 31 cores), over SHUFFLE-READING
+    // tasks only (the Profile `readTask*` fields): the scan stage (no
     // shuffle read, identical across treatments, and for the salted plan
     // also carrying the salt-hash compute) would otherwise mask the join
     // stage, which is where the hot key lives; the final 1-row reduce
     // also reads shuffle but is single-digit-ms noise under any max
-    val maxTaskMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    val maxTaskRead = new java.util.concurrent.atomic.AtomicLong(0L)
-    val sumTaskRead = new java.util.concurrent.atomic.AtomicLong(0L)
-    val nReadTasks = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (e.taskInfo != null && e.taskMetrics != null &&
-            e.taskMetrics.shuffleReadMetrics.totalBytesRead > 0) {
-          maxTaskMs.accumulateAndGet(e.taskInfo.duration,
-            (a: Long, b: Long) => math.max(a, b))
-          maxTaskRead.accumulateAndGet(
-            e.taskMetrics.shuffleReadMetrics.totalBytesRead,
-            (a: Long, b: Long) => math.max(a, b))
-          sumTaskRead.addAndGet(e.taskMetrics.shuffleReadMetrics.totalBytesRead)
-          nReadTasks.incrementAndGet()
+    if (onlyProbes.forall(_.contains("skew_join"))) {
+      val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
+      val bcWas = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      try {
+        // the dim side is 1000 rows — broadcast would dissolve the
+        // skew (correct at this size, but the probe models a dim far
+        // past broadcast size at 100 TB), so force the shuffle path
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        val ord = spark.read.parquet(ordersShard())
+        val left = ord.select(
+          when(col("o_orderkey") % 10 < 3, 0L)
+            .otherwise(pmod(col("o_orderkey"), lit(1000L))).as("k"),
+          col("o_orderkey"), col("o_totalprice"))
+        val dim = spark.range(1000).select(col("id").as("k"),
+          (col("id") % 97).as("w"))
+        // the reduce must CONSUME payload from both sides — a bare
+        // count(1) lets Catalyst prune the join to key-only rows, and
+        // 4.5M copies of one constant long compress below any sane
+        // skew threshold (first probe run proved it: AQE coalesced,
+        // nothing to split). Summing o_totalprice (incompressible
+        // doubles) + w keeps real bytes on the hot partition.
+        def reduce(j: DataFrame) =
+          j.agg(count(lit(1)).as("n"), sum(col("o_totalprice")).as("sp"),
+            sum(col("w")).as("sw"))
+        // returns the EXECUTED reduce frame too: under AQE the final
+        // (skew-split) plan exists only on a query that ran
+        // per-run: rows, wall, max task s, max task read MB, read
+        // IMBALANCE (max/mean over shuffle-reading tasks — the
+        // straggler factor: 1.0 is perfectly balanced, the skewed
+        // join's is ~ hot_share × n_tasks), executed frame
+        def consume(j: DataFrame)
+            : (Long, Double, Double, Double, Double, DataFrame) = {
+          val q = reduce(j)
+          val (n, p) = profiler.measure(q.collect().head.getLong(0)) // 1-row reduce
+          val imb = p.readTaskMaxBytes.toDouble /
+            (p.readTaskSumBytes.toDouble / math.max(p.readTasks, 1L))
+          (n, p.wallS, p.readTaskMaxMs / 1e3, p.readTaskMaxBytes / 1e6, imb, q)
         }
-    })
-    val skewJoin: Option[String] =
-      if (onlyProbes.forall(_.contains("skew_join"))) Some {
-        val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
-        val bcWas = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        try {
-          // the dim side is 1000 rows — broadcast would dissolve the
-          // skew (correct at this size, but the probe models a dim far
-          // past broadcast size at 100 TB), so force the shuffle path
-          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-          val ord = spark.read.parquet(ordersShard())
-          val left = ord.select(
-            when(col("o_orderkey") % 10 < 3, 0L)
-              .otherwise(pmod(col("o_orderkey"), lit(1000L))).as("k"),
-            col("o_orderkey"), col("o_totalprice"))
-          val dim = spark.range(1000).select(col("id").as("k"),
-            (col("id") % 97).as("w"))
-          // the reduce must CONSUME payload from both sides — a bare
-          // count(1) lets Catalyst prune the join to key-only rows, and
-          // 4.5M copies of one constant long compress below any sane
-          // skew threshold (first probe run proved it: AQE coalesced,
-          // nothing to split). Summing o_totalprice (incompressible
-          // doubles) + w keeps real bytes on the hot partition.
-          def reduce(j: org.apache.spark.sql.DataFrame) =
-            j.agg(count(lit(1)).as("n"), sum(col("o_totalprice")).as("sp"),
-              sum(col("w")).as("sw"))
-          // returns the EXECUTED reduce frame too: under AQE the final
-          // (skew-split) plan exists only on a query that ran
-          // per-run: rows, wall, max task s, max task read MB, read
-          // IMBALANCE (max/mean over shuffle-reading tasks — the
-          // straggler factor: 1.0 is perfectly balanced, the skewed
-          // join's is ~ hot_share × n_tasks), executed frame
-          def consume(j: org.apache.spark.sql.DataFrame)
-              : (Long, Double, Double, Double, Double, org.apache.spark.sql.DataFrame) = {
-            val q = reduce(j)
-            org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-            maxTaskMs.set(0L); maxTaskRead.set(0L)
-            sumTaskRead.set(0L); nReadTasks.set(0L)
-            val t0 = System.nanoTime()
-            val n = q.collect().head.getLong(0) // 1-row reduce
-            val wall = (System.nanoTime() - t0) / 1e9
-            org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-            val imb = maxTaskRead.get().toDouble /
-              (sumTaskRead.get().toDouble / math.max(nReadTasks.get(), 1L))
-            (n, wall, maxTaskMs.get() / 1e3, maxTaskRead.get() / 1e6, imb, q)
-          }
-          spark.conf.set("spark.sql.adaptive.enabled", "false")
-          val plainJ = left.join(dim, "k")
-          val (nPlain, wallPlain, maxPlain, readPlain, imbPlain, _) = consume(plainJ)
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        val plainJ = left.join(dim, "k")
+        val (nPlain, wallPlain, maxPlain, readPlain, imbPlain, _) = consume(plainJ)
 
-          spark.conf.set("spark.sql.adaptive.enabled", "true")
-          // the hot partition is ~110 MB here — representative skew at
-          // this shard size but under AQE's 256 MB default threshold, so
-          // scale the knobs to the shard the way a cluster config would
-          // be sized to its executors (thresholds are runtime SQLConfs)
-          spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8m")
-          spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-          val aqeJ = left.join(dim, "k")
-          val (nAqe, wallAqe, maxAqe, readAqe, imbAqe, aqeQ) = consume(aqeJ)
-          val aqePlan = aqeQ.queryExecution
-            .explainString(org.apache.spark.sql.execution.SimpleMode)
-          require(aqePlan.contains("skew=true"),
-            s"AQE did not mark the join skewed:\n$aqePlan")
-          val skewMetrics = Explain.analyze(reduce(left.join(dim, "k")))
-            .filter(col("operator").contains("AQEShuffleRead") &&
-              col("metric").isin("numSkewedPartitions", "numSkewedSplits"))
-            .groupBy(col("metric")).agg(max(col("value")).as("v"))
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-          val skewParts = skewMetrics.getOrElse("numSkewedPartitions", -1L)
-          val skewSplits = skewMetrics.getOrElse("numSkewedSplits", -1L)
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        // the hot partition is ~110 MB here — representative skew at
+        // this shard size but under AQE's 256 MB default threshold, so
+        // scale the knobs to the shard the way a cluster config would
+        // be sized to its executors (thresholds are runtime SQLConfs)
+        spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8m")
+        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
+        val aqeJ = left.join(dim, "k")
+        val (nAqe, wallAqe, maxAqe, readAqe, imbAqe, aqeQ) = consume(aqeJ)
+        val aqePlan = aqeQ.queryExecution
+          .explainString(org.apache.spark.sql.execution.SimpleMode)
+        require(aqePlan.contains("skew=true"),
+          s"AQE did not mark the join skewed:\n$aqePlan")
+        val skewMetrics = Explain.analyze(reduce(left.join(dim, "k")))
+          .filter(col("operator").contains("AQEShuffleRead") &&
+            col("metric").isin("numSkewedPartitions", "numSkewedSplits"))
+          .groupBy(col("metric")).agg(max(col("value")).as("v"))
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        val skewParts = skewMetrics.getOrElse("numSkewedPartitions", -1L)
+        val skewSplits = skewMetrics.getOrElse("numSkewedSplits", -1L)
 
-          spark.conf.set("spark.sql.adaptive.enabled", "false")
-          // per-row discriminator salt: every row of the hot key carries
-          // a distinct o_orderkey, exactly the saltCols contract. 64
-          // salts (not 16): reducers are assigned by hash(k, salt) % 32,
-          // so a few of 16 hot sub-keys clustering into one reducer
-          // still left it ~3x the average (measured 16.4 MB vs 4.3 MB
-          // avg); at 64 salts each hot sub-key is ~0.65 MB and the
-          // clustering tail is bounded well under the 5x bar
-          val saltedJ = graft.ops.Scale.saltedJoin(left, dim, "k", 64,
-            Seq(col("o_orderkey")))
-          val (nSalted, wallSalted, maxSalted, readSalted, imbSalted, _) = consume(saltedJ)
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        // per-row discriminator salt: every row of the hot key carries
+        // a distinct o_orderkey, exactly the saltCols contract. 64
+        // salts (not 16): reducers are assigned by hash(k, salt) % 32,
+        // so a few of 16 hot sub-keys clustering into one reducer
+        // still left it ~3x the average (measured 16.4 MB vs 4.3 MB
+        // avg); at 64 salts each hot sub-key is ~0.65 MB and the
+        // clustering tail is bounded well under the 5x bar
+        val saltedJ = graft.ops.Scale.saltedJoin(left, dim, "k", 64,
+          Seq(col("o_orderkey")))
+        val (nSalted, wallSalted, maxSalted, readSalted, imbSalted, _) = consume(saltedJ)
 
-          require(nPlain == nAqe && nPlain == nSalted,
-            s"treatments disagree on cardinality: $nPlain / $nAqe / $nSalted")
-          require(skewParts > 0 && skewSplits > skewParts,
-            s"AQE reported no real splits: parts=$skewParts splits=$skewSplits")
-          // the claim under test, on the DETERMINISTIC axis (bytes, not
-          // wall — this sandbox has a multi-second task floor under
-          // co-tenant load that masks sub-5s duration ratios; at cluster
-          // scale the hot task is hours and the bytes ratio IS the wall
-          // ratio): untreated, one task's read is several times the
-          // mean (the hot key rides one reducer); both treatments must
-          // bring the straggler factor into the balanced regime AND cut
-          // the absolute hot-task bytes by ≥4x. The salted ceiling is
-          // reducer-count-bound: hash(k, salt) clusters a few hot
-          // sub-keys per reducer, so max/mean lands ~2, not 1.
-          require(imbPlain > 5,
-            f"hot key did not skew the untreated join: imbalance=$imbPlain%.1f")
-          require(imbAqe < 3.5 && imbSalted < 3.5,
-            f"treatment left the join unbalanced: aqe=$imbAqe%.1f salted=$imbSalted%.1f")
-          require(readPlain > 4 * readAqe,
-            f"AQE split did not spread the hot partition: $readPlain%.1f vs $readAqe%.1f MB")
-          require(readPlain > 4 * readSalted,
-            f"salting did not spread the hot partition: $readPlain%.1f vs $readSalted%.1f MB")
-          println(f"SKEW JOIN: rows=$nPlain " +
-            f"plain(max_read=$readPlain%.1fMB imb=$imbPlain%.1f max_task=$maxPlain%.1fs wall=$wallPlain%.1fs) " +
-            f"aqe(max_read=$readAqe%.1fMB imb=$imbAqe%.1f max_task=$maxAqe%.1fs wall=$wallAqe%.1fs parts=$skewParts splits=$skewSplits) " +
-            f"salted(max_read=$readSalted%.1fMB imb=$imbSalted%.1f max_task=$maxSalted%.1fs wall=$wallSalted%.1fs)")
-          def r1(v: Double): Double = math.rint(v * 10) / 10
-          s"""{"rows":$nPlain,"plain":{"wall_s":${r1(wallPlain)},"max_task_s":${r1(maxPlain)},"max_task_read_mb":${r1(readPlain)},"read_imbalance":${r1(imbPlain)}},""" +
-            s""""aqe":{"wall_s":${r1(wallAqe)},"max_task_s":${r1(maxAqe)},"max_task_read_mb":${r1(readAqe)},"read_imbalance":${r1(imbAqe)},"skewed_partitions":$skewParts,"skew_splits":$skewSplits},""" +
-            s""""salted":{"wall_s":${r1(wallSalted)},"max_task_s":${r1(maxSalted)},"max_task_read_mb":${r1(readSalted)},"read_imbalance":${r1(imbSalted)}}}"""
-        } finally {
-          spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcWas)
-          spark.conf.unset("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes")
-          spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-        }
-      } else None
-    // gated runs still record this row (merge-not-overwrite, same
-    // policy as SpillProbe): the full-run path includes it inline below
-    if (onlyProbes.isDefined && skewJoin.isDefined)
-      mergeArtifact(factor, "aqe_skew_join", skewJoin.get)
+        require(nPlain == nAqe && nPlain == nSalted,
+          s"treatments disagree on cardinality: $nPlain / $nAqe / $nSalted")
+        require(skewParts > 0 && skewSplits > skewParts,
+          s"AQE reported no real splits: parts=$skewParts splits=$skewSplits")
+        // the claim under test, on the DETERMINISTIC axis (bytes, not
+        // wall — this sandbox has a multi-second task floor under
+        // co-tenant load that masks sub-5s duration ratios; at cluster
+        // scale the hot task is hours and the bytes ratio IS the wall
+        // ratio): untreated, one task's read is several times the
+        // mean (the hot key rides one reducer); both treatments must
+        // bring the straggler factor into the balanced regime AND cut
+        // the absolute hot-task bytes by ≥4x. The salted ceiling is
+        // reducer-count-bound: hash(k, salt) clusters a few hot
+        // sub-keys per reducer, so max/mean lands ~2, not 1.
+        require(imbPlain > 5,
+          f"hot key did not skew the untreated join: imbalance=$imbPlain%.1f")
+        require(imbAqe < 3.5 && imbSalted < 3.5,
+          f"treatment left the join unbalanced: aqe=$imbAqe%.1f salted=$imbSalted%.1f")
+        require(readPlain > 4 * readAqe,
+          f"AQE split did not spread the hot partition: $readPlain%.1f vs $readAqe%.1f MB")
+        require(readPlain > 4 * readSalted,
+          f"salting did not spread the hot partition: $readPlain%.1f vs $readSalted%.1f MB")
+        println(f"SKEW JOIN: rows=$nPlain " +
+          f"plain(max_read=$readPlain%.1fMB imb=$imbPlain%.1f max_task=$maxPlain%.1fs wall=$wallPlain%.1fs) " +
+          f"aqe(max_read=$readAqe%.1fMB imb=$imbAqe%.1f max_task=$maxAqe%.1fs wall=$wallAqe%.1fs parts=$skewParts splits=$skewSplits) " +
+          f"salted(max_read=$readSalted%.1fMB imb=$imbSalted%.1f max_task=$maxSalted%.1fs wall=$wallSalted%.1fs)")
+        artifact.record("aqe_skew_join", s"""{"rows":$nPlain,"plain":{"wall_s":${r1(wallPlain)},"max_task_s":${r1(maxPlain)},"max_task_read_mb":${r1(readPlain)},"read_imbalance":${r1(imbPlain)}},""" +
+          s""""aqe":{"wall_s":${r1(wallAqe)},"max_task_s":${r1(maxAqe)},"max_task_read_mb":${r1(readAqe)},"read_imbalance":${r1(imbAqe)},"skewed_partitions":$skewParts,"skew_splits":$skewSplits},""" +
+          s""""salted":{"wall_s":${r1(wallSalted)},"max_task_s":${r1(maxSalted)},"max_task_read_mb":${r1(readSalted)},"read_imbalance":${r1(imbSalted)}}}""")
+      } finally {
+        spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcWas)
+        spark.conf.unset("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes")
+        spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+      }
+    }
 
     // ---- runtime bloom-filter join pruning ---------------------------
     // DPP (probe above) prunes PARTITIONS through a partition column;
@@ -1262,104 +1049,68 @@ object ScaleProbe {
     // broadcast size is the 100 TB premise — same rationale as the skew
     // probe) and the size gates are scaled to the shard exactly like the
     // AQE skew knobs (defaults expect a 10 GB fact scan).
-    val bloomJoin: Option[String] =
-      if (onlyProbes.forall(_.contains("bloom_join"))) Some {
-        val bcWas = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        try {
-          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-          spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "1")
-          spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "64MB")
-          val dimDir = s"$out/bloom_dim.parquet"
-          if (!Files.exists(Paths.get(s"$dimDir/_SUCCESS"))) {
-            spark.range(1000000L)
-              .select(col("id").as("k"), pmod(col("id"), lit(2999L)).as("grp"))
-              .write.mode("overwrite").parquet(dimDir)
-          }
-          val fact = spark.read.parquet(ordersShard())
-          // Filter-over-scan on the dim: the selective-predicate shape
-          // InjectRuntimeFilter keys on (an in-memory range() is not a
-          // scan and never triggers injection)
-          def dim = spark.read.parquet(dimDir).filter(col("grp") === 7)
-          // the reduce consumes o_totalprice so real fact payload rides
-          // the exchange (the count(1)-prunes-payload trap, see above)
-          def q() = fact.join(dim, col("o_orderkey") === col("k"))
-            .agg(count(lit(1)).as("n"), sum(col("o_totalprice")).as("sp"))
-          def run(): (Long, Double, Double, org.apache.spark.sql.DataFrame) = {
-            val frame = q()
-            org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-            sumTaskRead.set(0L); nReadTasks.set(0L)
-            maxTaskRead.set(0L); maxTaskMs.set(0L)
-            val t0 = System.nanoTime()
-            val n = frame.collect().head.getLong(0)
-            val wall = (System.nanoTime() - t0) / 1e9
-            org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-            (n, sumTaskRead.get() / 1e6, wall, frame)
-          }
-          spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-          val (nOff, mbOff, wallOff, _) = run()
-          spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-          val (nOn, mbOn, wallOn, onQ) = run()
-          // executed frame's own queryExecution: the injected subquery
-          // filter must be visible in the final plan
-          val plan = onQ.queryExecution
-            .explainString(org.apache.spark.sql.execution.SimpleMode)
-          require(plan.toLowerCase.contains("might_contain"),
-            s"no runtime bloom filter in the executed plan:\n$plan")
-          require(nOn == nOff && nOn > 0,
-            s"bloom changed the join result: $nOff vs $nOn")
-          // the claim, on the deterministic axis (bytes, not wall): the
-          // fact side must shed its exchange volume
-          require(mbOff > 5 * mbOn,
-            f"runtime bloom did not cut the shuffle: $mbOff%.1f vs $mbOn%.1f MB")
-          println(f"RUNTIME BLOOM JOIN: rows=$nOn shuffle ${mbOff}%.1f -> ${mbOn}%.1f MB " +
-            f"(wall $wallOff%.1fs -> $wallOn%.1fs)")
-          def r1(v: Double): Double = math.rint(v * 10) / 10
-          s"""{"rows":$nOn,"shuffle_mb_off":${r1(mbOff)},"shuffle_mb_on":${r1(mbOn)},""" +
-            s""""wall_off_s":${r1(wallOff)},"wall_on_s":${r1(wallOn)}}"""
-        } finally {
-          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcWas)
-          spark.conf.unset("spark.sql.optimizer.runtime.bloomFilter.enabled")
-          spark.conf.unset(
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
-          spark.conf.unset("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold")
+    if (onlyProbes.forall(_.contains("bloom_join"))) {
+      val bcWas = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      try {
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        spark.conf.set(
+          "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "1")
+        spark.conf.set(
+          "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "64MB")
+        val dimDir = s"$out/bloom_dim.parquet"
+        if (!Files.exists(Paths.get(s"$dimDir/_SUCCESS"))) {
+          spark.range(1000000L)
+            .select(col("id").as("k"), pmod(col("id"), lit(2999L)).as("grp"))
+            .write.mode("overwrite").parquet(dimDir)
         }
-      } else None
-    if (onlyProbes.isDefined && bloomJoin.isDefined)
-      mergeArtifact(factor, "runtime_bloom_join", bloomJoin.get)
-
-    if (onlyProbes.isEmpty) {
-      def r1(v: Double): Double = math.rint(v * 10) / 10
-      def r2(v: Double): Double = math.rint(v * 100) / 100
-      val json = rows.map { case (n, w, mb, pk, (lb, la), st) =>
-        s""""$n":{"wall_s":${r1(w)},"shuffle_mb":${r1(mb)},"peak_task_mem_mb":${r1(pk)},"loadavg":[${r2(lb)},${r2(la)}],"steal_ticks":$st}"""
-      }.mkString(
-        s"""{"factor":$factor,"docs":$nDocs,"vecs":$nVecs,""" +
-          (Seq(ivfPruning, incrBucketed, windowRange, windowRangePrefix,
-              zorderPruning).flatten ++
-            qualityCutAlt.map(s => s""""quality_cut_alternative":$s""") ++
-            vocabRankScale.map(s => s""""vocab_rank_scale":$s""") ++
-            dppPruning.map(s => s""""dpp_pruning":$s""") ++
-            compaction.map(s => s""""compaction":$s""") ++
-            skewJoin.map(s => s""""aqe_skew_join":$s""") ++
-            bloomJoin.map(s => s""""runtime_bloom_join":$s""") ++
-            // the checksum is computed on every run that includes the
-            // inverted index; persist it on unfiltered sweeps too, or a
-            // full rewrite of this file would clobber the merged key and
-            // silently downgrade SpillProbe's cross-run equality check
-            invChecksum.map(c =>
-              s""""inverted_index_checksum":{"checksum":$c}""") ++
-            bm25Ck.map(c => s""""bm25_checksum":{"checksum":$c}""") ++
-            e2eFunnel.map(s => s""""e2e_funnel":$s""") ++
-            e2eRemapFunnel.map(s => s""""e2e_funnel_remapped":$s"""))
-            .map(_ + ",").mkString + s""""probes":{""",
-        ",", "}}")
-      val outFile = sys.env.getOrElse("SPARK_GRAFT_PROBE_OUT_DIR",
-        "/root/repo") + s"/PROBE_LOCAL_${factor}x.json"
-      try Files.writeString(Paths.get(outFile), json + "\n")
-      catch { case e: Exception => System.err.println(s"[probe] write failed: $e") }
+        val fact = spark.read.parquet(ordersShard())
+        // Filter-over-scan on the dim: the selective-predicate shape
+        // InjectRuntimeFilter keys on (an in-memory range() is not a
+        // scan and never triggers injection)
+        def dim = spark.read.parquet(dimDir).filter(col("grp") === 7)
+        // the reduce consumes o_totalprice so real fact payload rides
+        // the exchange (the count(1)-prunes-payload trap, see above)
+        def q() = fact.join(dim, col("o_orderkey") === col("k"))
+          .agg(count(lit(1)).as("n"), sum(col("o_totalprice")).as("sp"))
+        def run(): (Long, Double, Double, DataFrame) = {
+          val frame = q()
+          val (n, p) = profiler.measure(frame.collect().head.getLong(0))
+          (n, p.readTaskSumBytes / 1e6, p.wallS, frame)
+        }
+        spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
+        val (nOff, mbOff, wallOff, _) = run()
+        spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+        val (nOn, mbOn, wallOn, onQ) = run()
+        // executed frame's own queryExecution: the injected subquery
+        // filter must be visible in the final plan
+        val plan = onQ.queryExecution
+          .explainString(org.apache.spark.sql.execution.SimpleMode)
+        require(plan.toLowerCase.contains("might_contain"),
+          s"no runtime bloom filter in the executed plan:\n$plan")
+        require(nOn == nOff && nOn > 0,
+          s"bloom changed the join result: $nOff vs $nOn")
+        // the claim, on the deterministic axis (bytes, not wall): the
+        // fact side must shed its exchange volume
+        require(mbOff > 5 * mbOn,
+          f"runtime bloom did not cut the shuffle: $mbOff%.1f vs $mbOn%.1f MB")
+        println(f"RUNTIME BLOOM JOIN: rows=$nOn shuffle ${mbOff}%.1f -> ${mbOn}%.1f MB " +
+          f"(wall $wallOff%.1fs -> $wallOn%.1fs)")
+        artifact.record("runtime_bloom_join",
+          s"""{"rows":$nOn,"shuffle_mb_off":${r1(mbOff)},"shuffle_mb_on":${r1(mbOn)},""" +
+            s""""wall_off_s":${r1(wallOff)},"wall_on_s":${r1(wallOn)}}""")
+      } finally {
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcWas)
+        spark.conf.unset("spark.sql.optimizer.runtime.bloomFilter.enabled")
+        spark.conf.unset(
+          "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
+        spark.conf.unset("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold")
+      }
     }
+
+    // a full sweep replaces the artifact with every key it recorded
+    // (walls are single-run ±30%; the shuffle-bytes column is
+    // deterministic and is the scale evidence)
+    artifact.write()
     // shard reclamation (r12 verdict task 5): the 1000x probe leaves
     // ~10 GB of generated shards, and the windows measured after it
     // degraded measurably (the r12 driver bench ran 39 minutes later

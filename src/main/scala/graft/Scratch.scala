@@ -2,8 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-/** Per-run `java.io.tmpdir` redirect for the diagnostic mains (Bench,
-  * ScaleProbe): everything Spark parks in tmpdir — memory-sink temp
+/** Per-run `java.io.tmpdir` redirect for the diagnostic mains (Bench
+  * and the probes, whose [[Profiler]] windows leftover debris would
+  * slow): everything Spark parks in tmpdir — memory-sink temp
   * checkpoints, RocksDB state-store working dirs, `spark.local.dir`
   * shuffle files, the scratch warehouse and replay layouts — lands in a
   * fresh per-pid root that is reclaimed at JVM exit, so a run can never

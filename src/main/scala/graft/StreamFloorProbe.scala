@@ -1,8 +1,6 @@
 package graft
 
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Per-batch wall breakdown for every declared streaming row (r15
   * verdict task 1): the claim "the streaming block is micro-batch
@@ -26,18 +24,16 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *    checks, sentinel/maxDay batch jobs, and the post-drain oracle
   *    projection through the noop sink.
   *
-  * Events ride the shared listener bus; the queue is cleared before and
-  * drained after each run, and rows run strictly one at a time, so
-  * attribution needs no name matching (foreachBatch/file-sink rows are
-  * anonymous). Results: printed table + JSON merged per row into
-  * plans/r16/STREAM_FLOOR.json.
+  * Each run is one [[Profiler]] window, and rows run strictly one at a
+  * time, so attribution needs no name matching (foreachBatch/file-sink
+  * rows are anonymous). Results: printed table + one JSON row per query
+  * in `SPARK_GRAFT_FLOOR_OUT` (default plans/r16/STREAM_FLOOR.json under
+  * the working directory), through [[ProbeArtifact]]: a full run rewrites
+  * the file, a gated run merges its rows into the existing one.
   *
   * Usage: tools/run.sh graft.StreamFloorProbe   (SPARK_GRAFT_ONLY filters)
   */
 object StreamFloorProbe {
-
-  private case class Batch(batchId: Long, rows: Long,
-    durations: Map[String, Long], stateCommitMs: Long, nSources: Int)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -45,63 +41,42 @@ object StreamFloorProbe {
       .map(_.split(",").map(_.trim).toSet)
     Scratch.install("streamfloor", preferTmpfs = true): Unit
     val spark = graft.engine.Engine.session()
+    val profiler = new Profiler(spark)
+    val artifact = new ProbeArtifact(java.nio.file.Paths.get(sys.env.getOrElse(
+      "SPARK_GRAFT_FLOOR_OUT", "plans/r16/STREAM_FLOOR.json")), merge = only.isDefined)
 
-    val events = new java.util.concurrent.ConcurrentLinkedQueue[Batch]()
-    val starts = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.streams.addListener(new StreamingQueryListener {
-      override def onQueryStarted(
-          e: StreamingQueryListener.QueryStartedEvent): Unit =
-        starts.incrementAndGet(): Unit
-      override def onQueryProgress(
-          e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        val p = e.progress
-        events.add(Batch(p.batchId, p.numInputRows,
-          p.durationMs.asScala.map { case (k, v) => k -> v.longValue() }.toMap,
-          p.stateOperators.map(_.commitTimeMs).sum, p.sources.length)): Unit
-      }
-      override def onQueryTerminated(
-          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    })
-
-    def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Double = {
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+        : Profile =
+      profiler.measure(
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save())._2
 
     val rows = graft.streaming.StreamQueries.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    val out = new StringBuilder("{")
-    rows.zipWithIndex.foreach { case ((name, fn), i) =>
-      runOnce(fn) // warmup: replay-dir build, codegen, sink JIT
-      val wall1 = runOnce(fn)
-      // instrument the second timed run: clear, run, drain, snapshot
-      org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-      events.clear(); starts.set(0L)
+    rows.foreach { case (name, fn) =>
+      run(fn) // warmup: replay-dir build, codegen, sink JIT
+      val wall1 = run(fn).wallS
       // the breakdown is run 2's, so `wall` (and `outside`) is run 2's
       // too; the faster run's wall is kept apart as `min_wall_s`
-      val wall = runOnce(fn)
+      val p = run(fn)
+      val wall = p.wallS
       val minWall = math.min(wall1, wall)
-      org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-      val bs = events.iterator().asScala.toList
-      val nq = starts.get()
-      def sum(key: String): Long = bs.map(_.durations.getOrElse(key, 0L)).sum
+      val bs = p.batches
+      val nq = p.queryStarts
+      def sum(key: String): Long = bs.map(_.durationMs.getOrElse(key, 0L)).sum
       val trigger = sum("triggerExecution")
       val addBatch = sum("addBatch")
       val planning = sum("queryPlanning")
       val wal = sum("walCommit") + sum("commitOffsets") +
         sum("latestOffset") + sum("getBatch") + sum("commitBatch")
       val stateCommit = bs.map(_.stateCommitMs).sum
-      val inRows = bs.map(_.rows).sum
+      val inRows = bs.map(_.inputRows).sum
       val outside = wall * 1000 - trigger
       println(f"$name%-28s wall=${wall}%6.2fs q=$nq b=${bs.size}%2d " +
         f"trig=${trigger / 1000.0}%5.2f add=${addBatch / 1000.0}%5.2f " +
         f"plan=${planning / 1000.0}%5.2f wal=${wal / 1000.0}%5.2f " +
         f"stCommit=${stateCommit / 1000.0}%5.2f outside=${outside / 1000.0}%5.2f " +
         f"rows=$inRows")
-      if (i > 0) out.append(",")
-      out.append(s""""$name":{"wall_s":${math.rint(wall * 100) / 100},""" +
+      artifact.record(name, s"""{"wall_s":${math.rint(wall * 100) / 100},""" +
         s""""min_wall_s":${math.rint(minWall * 100) / 100},""" +
         s""""n_queries":$nq,"n_batches":${bs.size},"trigger_ms":$trigger,""" +
         s""""add_batch_ms":$addBatch,"planning_ms":$planning,""" +
@@ -109,12 +84,7 @@ object StreamFloorProbe {
         s""""outside_ms":${math.rint(outside)},"input_rows":$inRows,""" +
         s""""n_sources":${bs.map(_.nSources).maxOption.getOrElse(0)}}""")
     }
-    out.append("}")
-    val f = java.nio.file.Paths.get(sys.env.getOrElse(
-      "SPARK_GRAFT_FLOOR_OUT", "/root/repo/plans/r16/STREAM_FLOOR.json"))
-    java.nio.file.Files.createDirectories(f.getParent)
-    java.nio.file.Files.writeString(f, out.toString + "\n")
-    println(s"[floor] wrote $f")
+    artifact.write()
     spark.stop()
   }
 }

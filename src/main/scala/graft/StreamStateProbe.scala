@@ -37,6 +37,7 @@ object StreamStateProbe {
     // reclaim checkpoint/state-store debris at exit (the ScaleProbe policy)
     Scratch.install("stateprobe", preferTmpfs = false): Unit
     val spark = graft.engine.Engine.session()
+    val artifact = ProbeArtifact.forFactor(100, merge = true)
     if (rocks) spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -91,7 +92,7 @@ object StreamStateProbe {
       println(f"STREAM STATE: events=$eventsTotal sessions_closed=$closed " +
         f"state_rows_final=${stateRows.last} state_mb_final=${stateMb.last}%.1f")
       def r1(v: Double): Double = math.rint(v * 10) / 10
-      ScaleProbe.mergeArtifact(100,
+      artifact.record(
         if (rocks) "sessionize_state_rocksdb" else "sessionize_state",
         s"""{"users":$users,"batches":$batches,"events_total":$eventsTotal,""" +
           s""""sessions_closed":$closed,"state_rows_max":${stateRows.max},""" +
@@ -142,7 +143,7 @@ object StreamStateProbe {
         // linear-growth refutation: final state ≪ everything ever buffered
         require(jRows(batches2 - 1) * 2 < rowsIn,
           s"join state ~ stream length: ${jRows.last} of $rowsIn rows retained")
-        ScaleProbe.mergeArtifact(100, "stream_join_state",
+        artifact.record("stream_join_state",
           s"""{"users":$users2,"batches":$batches2,"rows_in":$rowsIn,""" +
             s""""state_rows_at_fill":${jRows(5)},""" +
             s""""state_rows_final":${jRows.last}}""")

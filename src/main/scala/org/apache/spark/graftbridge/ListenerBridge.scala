@@ -3,11 +3,12 @@ package org.apache.spark.graftbridge
 import org.apache.spark.SparkContext
 
 /** Narrow accessor for SparkContext's `private[spark]` listener bus.
-  * ScaleProbe attributes per-task peak-memory to the query that just
-  * ran; TaskEnd events drain asynchronously, so without a real flush a
-  * straggling event lands after `peakTask.set(0)` and gets credited to
-  * the NEXT probe. `waitUntilEmpty` (10 s bound) replaces the former
-  * fixed 300 ms sleep with an actual empty-queue barrier. */
+  * `graft.Profiler` (the diagnostic mains' one task-metrics collector)
+  * attributes task metrics and streaming progress to the window that
+  * just ran; events drain asynchronously, so without a real flush a
+  * straggling event lands after the window's reset and gets credited to
+  * the NEXT window. `waitUntilEmpty` (10 s bound) is an actual
+  * empty-queue barrier, not a fixed sleep. */
 object ListenerBridge {
   def drain(sc: SparkContext): Unit =
     try sc.listenerBus.waitUntilEmpty()
