@@ -10,7 +10,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
-/** One streaming micro-batch's progress event. */
+/** One streaming micro-batch's progress event. `stateCommitMs` is
+  * state-store commit time summed over the batch's state-store
+  * partitions (task time, not wall): it can exceed the trigger's wall and
+  * is not a component of `durationMs("addBatch")`. */
 final case class BatchProgress(durationMs: Map[String, Long], inputRows: Long,
   stateCommitMs: Long, nSources: Int)
 

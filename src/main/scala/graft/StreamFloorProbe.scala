@@ -14,9 +14,12 @@ import org.apache.spark.sql.SparkSession
   *    watermark trajectory);
   *  - `trigger_ms` — Σ durationMs("triggerExecution") across batches:
   *    the in-engine time, further split into addBatch (the jobs),
-  *    queryPlanning (per-batch incremental planning), offset/commit WAL
-  *    writes, and state-store commit time (stateOperators.commitTimeMs,
-  *    a component of addBatch, reported separately);
+  *    queryPlanning (per-batch incremental planning) and offset/commit
+  *    WAL writes;
+  *  - `state_commit_ms` — Σ stateOperators.commitTimeMs: state-store
+  *    commit time summed over every state-store partition's task, so
+  *    TASK time, not wall; with partitions committing in parallel it can
+  *    exceed `trigger_ms`, and it is not a share of addBatch;
   *  - `wall_s` — wall of the second timed run, the one the breakdown
   *    comes from; `min_wall_s` is the faster of the two timed runs;
   *  - `outside_ms` — wall − Σtrigger: everything the micro-batch engine

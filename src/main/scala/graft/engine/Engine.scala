@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Session facade for the engine — the Spark analogue of the reference's
   * `build_ctx` (reference: src/lib.rs:21-60), which constructs a
@@ -16,6 +17,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * and the 32-bit sum aggregates (one class in two modes,
   * [[graft.udaf.Udafs]]); [[registerTestdata]] adds the testdata parquet
   * tables as views. [[build]] is both steps.
+  *
+  * [[table]] is the one table registry, like `build_ctx`'s one
+  * registration per table: every testdata read, batch or
+  * [[stream]], takes its schema from the file itself, inferred once and
+  * memoized by [[contentFingerprint]] (file names, sizes and mtimes, so
+  * a rewritten file gets a new key). The memo holds schemas only, never
+  * data; a warm read starts no Spark job.
   *
   * All SQL surface beyond the custom aggregates is inherited from Catalyst,
   * exactly as the reference inherits DataFusion's default SQL surface via
@@ -156,9 +164,10 @@ object Engine {
     * mtimes, MD5'd with a caller salt) — the shared cache key for
     * derivations that are pure functions of a source table
     * (q_partition_prune's partitioned rewrite, Replay's chunk
-    * layout): a regenerated source invalidates the key, two distinct
-    * source dirs can never collide the way a sanitized dir string
-    * could, and distinct salts keep distinct derivations apart. */
+    * layout, [[table]]'s schema memo): a regenerated source
+    * invalidates the key, two distinct source dirs can never collide
+    * the way a sanitized dir string could, and distinct salts keep
+    * distinct derivations apart. */
   private[graft] def contentFingerprint(
       src: java.nio.file.Path, salt: String): String = {
     import scala.jdk.CollectionConverters._
@@ -174,8 +183,42 @@ object Engine {
       .digest(files.getBytes("UTF-8")).map("%02x".format(_)).mkString
   }
 
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  // [[table]]'s schema memo: contentFingerprint(path, "schema") → schema
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  /** `$sfDir/$name.parquet` read with the schema inferred from the file
+    * on its first read. The inference (one Spark job over the footers)
+    * runs here, in this method's own frame, and only when the memo has
+    * no entry for the file's current content; two racing cold reads
+    * both infer and store the same schema. */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val key = contentFingerprint(java.nio.file.Paths.get(path), "schema")
+    val schema = schemas.get(key) match {
+      case null =>
+        val inferred = spark.read.parquet(path).schema
+        schemas.putIfAbsent(key, inferred)
+        inferred
+      case known => known
+    }
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** Streaming read of table `name` with the schema [[table]] resolves
+    * for `$sfDir/$name.parquet`. By default the stream is that one file
+    * (a file stream source reads a directory, hence the glob filter);
+    * `path` streams instead every parquet file in another directory of
+    * the same table's rows (a replay or work dir), at most
+    * `filesPerTrigger` files per micro-batch when given. */
+  def stream(spark: SparkSession, sfDir: String, name: String,
+      path: Option[String] = None, filesPerTrigger: Option[Int] = None): DataFrame = {
+    val reader = spark.readStream.schema(table(spark, sfDir, name).schema)
+    val capped = filesPerTrigger.fold(reader)(n =>
+      reader.option("maxFilesPerTrigger", n.toLong))
+    path.fold(capped.option("pathGlobFilter", s"$name.parquet").parquet(sfDir))(
+      capped.parquet)
+  }
 
   /** `events.ts` arrives as parquet TIMESTAMP(MICROS) without a zone —
     * Spark reads TIMESTAMP_NTZ, the driver's DuckDB oracle reads its own
@@ -219,9 +262,10 @@ object Engine {
   }
 
   // registerTestdata memo: session UUID → last-registered sfDir.
-  // Registration re-reads 10 parquet footers and re-plans 10 views — at
-  // ~1–4s it dominated the timed bodies of the view/EXPLAIN bench queries
-  // (round-4 "What's wrong" #2). Temp views are session-scoped, so the
+  // With every schema already in the [[table]] memo, registration still
+  // lists 10 files and re-plans 10 views: a median of ~200 ms per call at
+  // sf0.1 on 4 cores, which would land inside the timed bodies of the
+  // view/EXPLAIN bench queries. Temp views are session-scoped, so the
   // memo key is the session identity; the VALUE is the sfDir because the
   // views share names across scale factors — a session that switches
   // sfDir must re-register or it would silently serve the old scale.

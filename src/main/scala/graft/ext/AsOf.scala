@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Engine
+import graft.engine.Engine.{table => t}
 
 /** As-of (temporal) join — an operator Spark lacks natively (SURVEY §2.3
   * lists it as absent in both engines; DuckDB grew `ASOF JOIN`, which
@@ -17,9 +18,6 @@ import graft.engine.Engine
   * and skew follows the key distribution (saltable the usual way).
   */
 object AsOf {
-
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    Engine.table(spark, dir, name)
 
   /** For each probe row: the latest build row with build.ts <= probe.ts
     * and equal key (or, with `forward = true`, the EARLIEST build row

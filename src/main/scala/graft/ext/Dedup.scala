@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Engine
-import graft.engine.Engine.MaterializeOps
+import graft.engine.Engine.{MaterializeOps, table => t}
 
 /** Deduplication operators for training-data pipelines, designed for
   * 100 TB corpora:
@@ -28,9 +28,6 @@ import graft.engine.Engine.MaterializeOps
   * in the DuckDB oracle.
   */
 object Dedup {
-
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    Engine.table(spark, dir, name)
 
   /** Lowercased word tokens of `text` (native single-pass expression). */
   private def tokens(c: Column): Column =

@@ -4,8 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.engine.Engine
-import graft.engine.Engine.MaterializeOps
+import graft.engine.Engine.{MaterializeOps, table => t}
 
 /** Multimodal column plumbing: image/audio/video payloads as opaque
   * `binary` columns with typed metadata, processed by a per-partition
@@ -66,9 +65,6 @@ object Multimodal {
       }
     }
   }
-
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    Engine.table(spark, dir, name)
 
   /** Documents re-cast as a multimodal table: payload = utf-8 bytes of the
     * text (stand-in for image bytes), metadata struct alongside. */

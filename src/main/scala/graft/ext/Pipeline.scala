@@ -3,8 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.Engine
-import graft.engine.Engine.MaterializeOps
+import graft.engine.Engine.{MaterializeOps, table => t}
 
 /** Training-data pipeline primitives beyond the reference's own surface:
   * deterministic split, sequence packing, and weighted mixture sampling —
@@ -16,9 +15,6 @@ import graft.engine.Engine.MaterializeOps
   * exactly mirrorable in the DuckDB oracle.
   */
 object Pipeline {
-
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    Engine.table(spark, dir, name)
 
   private def md5Bucket(c: org.apache.spark.sql.Column, mod: Int) =
     graft.functions.HashExpressions.md5Bucket(c, mod)

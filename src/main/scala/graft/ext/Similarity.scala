@@ -3,8 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.Engine
-import graft.engine.Engine.MaterializeOps
+import graft.engine.Engine.{MaterializeOps, table => t}
 
 /** Similarity search over an embedding column (`Array[Float]`, dim 64).
   *
@@ -26,9 +25,6 @@ import graft.engine.Engine.MaterializeOps
   * frames, no UDF.
   */
 object Similarity {
-
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    Engine.table(spark, dir, name)
 
   import graft.functions.HashExpressions.dot_f32
 

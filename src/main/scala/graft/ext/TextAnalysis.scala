@@ -3,8 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.Engine
-import graft.engine.Engine.MaterializeOps
+import graft.engine.Engine.{MaterializeOps, table => t}
 
 /** Text-analysis operators for training-data curation: language ID
   * (stopword-density heuristic), quality scoring (length/punctuation/
@@ -17,9 +16,6 @@ import graft.engine.Engine.MaterializeOps
   * 1:1 in the DuckDB oracle SQL.
   */
 object TextAnalysis {
-
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    Engine.table(spark, dir, name)
 
   private[ext] val stopEn = Seq("the", "a", "and", "of", "to", "in", "is", "on", "for", "with")
   private val stopEs = Seq("el", "la", "de", "que", "y", "en", "un", "una", "es", "por")

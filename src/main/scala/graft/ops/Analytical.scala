@@ -4,15 +4,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Engine
+import graft.engine.Engine.{table => t}
 
 /** Full analytical pipelines in the TPC-H mold — multi-table joins +
   * aggregation + top-k, the shapes Catalyst's join planning exists for.
   * These exercise join reorder, broadcast selection, partial aggregation
   * and top-k pushdown together rather than operator-by-operator. */
 object Analytical {
-
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    Engine.table(spark, dir, name)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Engine
+import graft.engine.Engine.{table => t}
 
 /** Events time-series analytics, continued from the dense-grid family in
   * [[Relational]] (gap-fill / LOCF / 3σ anomaly): autocorrelation,
@@ -21,9 +22,6 @@ import graft.engine.Engine
   * order across engines.
   */
 object Events {
-
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    Engine.table(spark, dir, name)
 
   /** Round-half-up a/b onto the 1e-6 grid, entirely in BIGINT
     * (the q_events_gini presentation convention). */

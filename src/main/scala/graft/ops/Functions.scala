@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Engine
+import graft.engine.Engine.{table => t}
 
 /** SURVEY §2.8 scalar function families — string, math, date/time, regex,
   * conditional/null, array, struct/map, crypto/encoding, unnest — each
@@ -10,9 +10,6 @@ import graft.engine.Engine
   * are Spark built-ins (codegen'd, whole-stage-compatible).
   */
 object Functions {
-
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    Engine.table(spark, dir, name)
 
   /** Unicode fixture for q_text_normalize, shared verbatim by both
     * engines (embedded UTF-8 literals — Spark's chr() is ASCII-modular

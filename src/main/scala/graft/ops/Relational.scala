@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Engine
+import graft.engine.Engine.{table => t}
 
 /** SURVEY §2 relational operator inventory — scans, predicates, joins,
   * aggregations, windows, sorts, set ops, subqueries/CTEs — each as a
@@ -69,9 +70,6 @@ object Relational {
         col("w_n") >= 12L && col("dev2w") > col("var_w"))
       .drop("__dev")
   }
-
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    Engine.table(spark, dir, name)
 
   /** TPC-H Q1-style pricing summary — partial→final hash aggregation. */
   def q1Agg(spark: SparkSession, dir: String): DataFrame = {
@@ -478,7 +476,7 @@ object Relational {
           .select(col("k").cast("long").as("k"), col("v"))),
 
     // tumbling event-time bucket aggregation (batch analogue of the
-    // streaming pipeline; see graft.streaming for the readStream variant).
+    // streaming pipeline; see graft.streaming for the Engine.stream variant).
     // ts is TIMESTAMP_NTZ micros (see Engine.eventTs); the UTC cast gives
     // the instant semantics date_trunc/window expect, numerically exact.
     "q_events_window" -> ((s, dir) =>

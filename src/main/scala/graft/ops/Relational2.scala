@@ -4,15 +4,12 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Engine
-import graft.engine.Engine.MaterializeOps
+import graft.engine.Engine.{MaterializeOps, table => t}
 
 /** SURVEY §2 inventory, continued: value-window functions, RANGE frames,
   * distinct set ops + ALL variants, null-semantics predicates, try_cast,
   * recursive CTE, map functions, approx percentiles, HAVING/DISTINCT. */
 object Relational2 {
-
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    Engine.table(spark, dir, name)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Engine
+import graft.engine.Engine.{table => t}
 
 /** Scale-oriented join strategies, exercised as oracle-checked queries so
   * the rewrites are proven value-preserving:
@@ -228,9 +229,6 @@ object Scale {
   private def srcTag(dir: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    Engine.table(spark, dir, name)
 
   /** Equi-join `left ⋈ right` on `key`, with the left side salted S ways.
     * Result is identical to a plain inner join — verified by oracle.

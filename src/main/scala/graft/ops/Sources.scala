@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Engine
+import graft.engine.Engine.{table => t}
 
 /** SURVEY §2.1 sources & sinks beyond parquet scan: CSV and NDJSON
   * read/write roundtrips (header + schema inference, the reference's CSV
@@ -16,9 +17,6 @@ import graft.engine.Engine
   * overwritten on each run (idempotent).
   */
 object Sources {
-
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    Engine.table(spark, dir, name)
 
   private def scratch(tag: String): String = {
     val p = Paths.get(sys.props("java.io.tmpdir"), "graft_scratch", tag)

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Engine
+import graft.engine.Engine.{table => t}
 import graft.udaf.Udafs
 
 /** The reference's signature capability: the two custom 32-bit sum
@@ -14,9 +15,6 @@ import graft.udaf.Udafs
   * hash-match bit-for-bit despite the 32-bit arithmetic.
   */
 object Udaf {
-
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    Engine.table(spark, dir, name)
 
   private def withUdafs(spark: SparkSession): SparkSession = {
     Udafs.registerAll(spark); spark

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.Engine
+import graft.engine.Engine.{table => t}
 
 /** Warehouse-maintenance operators a lakehouse team runs daily, each
   * re-expressed as a declarative one-pass plan and oracle-checked:
@@ -24,9 +24,6 @@ import graft.engine.Engine
   *    and each union branch is an independent 2-exchange partial agg.
   */
 object Warehouse {
-
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    Engine.table(spark, dir, name)
 
   /** SCD2 compaction: rows where the tracked attribute actually changed
     * (vs the previous version in key order), each carrying

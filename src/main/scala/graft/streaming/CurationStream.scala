@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types._
 
 /** Streaming curation — the continuous-ingest form of the batch
   * `curation_pipeline`: documents arriving on a file stream are
@@ -30,13 +29,6 @@ import org.apache.spark.sql.types._
   */
 object CurationStream {
 
-  val docsSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType),
-    StructField("n_chars", LongType)))
-
   /** Deterministic arrival time: one doc per second from a fixed epoch
     * (a real ingest would carry its own event time). Duplicates in the
     * testdata arrive well inside the watermark → exact dedup. */
@@ -48,10 +40,7 @@ object CurationStream {
     val nTok = size(regexp_extract_all(col("text"), lit("[A-Za-z0-9]+"), lit(0)))
     val nStop = size(regexp_extract_all(lower(col("text")),
       lit("\\b(the|a|and|of|to|in|is|on|for|with)\\b"), lit(0)))
-    spark.readStream
-      .schema(docsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    graft.engine.Engine.stream(spark, dir, "documents")
       .withColumn("arrival", timestamp_micros(lit(baseUs) + col("doc_id") * 1000000L))
       // narrow projection BEFORE the stateful operator
       .select(col("doc_id"), col("lang"), col("arrival"),

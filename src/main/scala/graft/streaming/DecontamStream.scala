@@ -84,10 +84,7 @@ object DecontamStream {
     benchGh.foreach(bf.putLong)
     val bfB = spark.sparkContext.broadcast(bf)
     val ghB = spark.sparkContext.broadcast(benchGh)
-    spark.readStream
-      .schema(CurationStream.docsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    Engine.stream(spark, dir, "documents")
       .filter(col("doc_id") % 50 =!= 0)
       .select(col("doc_id"), transform(sh, g => xxhash64(g)).as("ghs"))
       .select(col("doc_id"),

@@ -20,10 +20,7 @@ object DedupStream {
 
   /** Distinct events by content hash within a 1-hour watermark. */
   def dedupedEvents(spark: SparkSession, dir: String): DataFrame = {
-    spark.readStream
-      .schema(EventsStream.eventsSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
+    graft.engine.Engine.stream(spark, dir, "events")
       .withColumn("tsx", graft.engine.Engine.eventTs(col("ts")))
       // content identity: the payload minus the per-delivery fields
       .withColumn("h", md5(concat_ws("|", col("user_id"), col("event_type"), col("props"))))

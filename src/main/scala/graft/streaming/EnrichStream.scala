@@ -25,10 +25,7 @@ object EnrichStream {
   /** Events stream enriched with `c_mktsegment`; inner join drops
     * events whose user has no customer row (the testdata overlap). */
   def enriched(spark: SparkSession, dir: String): DataFrame = {
-    val events = spark.readStream
-      .schema(EventsStream.eventsSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
+    val events = graft.engine.Engine.stream(spark, dir, "events")
     val customers = broadcast(
       graft.engine.Engine.table(spark, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment")))

@@ -3,36 +3,21 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types._
 
 /** Structured Streaming extension over the `events` table (SURVEY §2.10:
   * the reference is batch-only; this is the north-star streaming surface).
   *
   * The same tumbling-window aggregation as the batch `q_events_window`
-  * query, expressed as readStream → watermark → windowed agg →
+  * query, expressed as Engine.stream → watermark → windowed agg →
   * writeStream. At scale this is the standard continuous-ingest shape:
   * event-time windows tolerate late data up to the watermark, and state
   * is bounded because expired windows are evicted.
   */
 object EventsStream {
 
-  /** Parquet schema of events: ts is TIMESTAMP_NTZ (parquet
-    * TIMESTAMP(MICROS), no zone) — arithmetic on it goes through
-    * Engine.eventTs / Engine.eventTsMicros, never raw integers. */
-  val eventsSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", TimestampNTZType), // parquet TIMESTAMP(MICROS), no zone
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
   /** Hourly tumbling-window counts/sums per event_type as a streaming DF. */
   def hourlyAgg(spark: SparkSession, dir: String): DataFrame = {
-    spark.readStream
-      .schema(eventsSchema)
-      .option("pathGlobFilter", "events.parquet") // stream source needs a dir
-      .parquet(dir)
+    graft.engine.Engine.stream(spark, dir, "events")
       .withColumn("ts", graft.engine.Engine.eventTs(col("ts")))
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))

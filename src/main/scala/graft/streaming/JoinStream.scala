@@ -88,10 +88,7 @@ object JoinStream {
     * sources always read the same files at the same offsets), and the
     * oracle hash pins the output. */
   def attributed(spark: SparkSession, dir: String): DataFrame = {
-    val src = spark.readStream
-      .schema(EventsStream.eventsSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
+    val src = graft.engine.Engine.stream(spark, dir, "events")
       .withColumn("ts", graft.engine.Engine.eventTs(col("ts")))
     attribution(
       src.filter(col("event_type") === "click"),

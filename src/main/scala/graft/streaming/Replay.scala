@@ -73,7 +73,7 @@ object Replay {
     * events) as the last file. `extraTag` names the extra-frame
     * construction for the cache key — callers must give semantically
     * different extras different tags. Returns the dir to point
-    * `readStream.parquet` at. */
+    * `Engine.stream`'s `path` at. */
   def eventsDir(s: SparkSession, dir: String, chunks: Int,
       extra: Option[DataFrame] = None, extraTag: String = "plain"): String =
     eventsDirExtras(s, dir, chunks, extra.toSeq, extraTag)

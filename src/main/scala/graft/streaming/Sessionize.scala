@@ -109,10 +109,7 @@ object Sessionize {
   def run(spark: SparkSession, dir: String, name: String, gapMinutes: Int = 30,
       availableNow: Boolean = false): StreamingQuery = {
     import spark.implicits._
-    val events: Dataset[Event] = spark.readStream
-      .schema(EventsStream.eventsSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
+    val events: Dataset[Event] = graft.engine.Engine.stream(spark, dir, "events")
       .select(col("user_id"),
         graft.engine.Engine.eventTsMicros(col("ts")).as("ts_us"), col("event_type"))
       .as[Event]

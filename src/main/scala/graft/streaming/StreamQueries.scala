@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * windowed agg, `dropDuplicatesWithinWatermark`, stream-static join,
   * watermarked stream-stream join, `flatMapGroupsWithState` — through
   * the real micro-batch engine. Here the finite testdata parquet is
-  * replayed through readStream into a memory sink, drained to
+  * replayed through Engine.stream into a memory sink, drained to
   * completion, and the sink is projected onto a DETERMINISTIC surface
   * that one DuckDB oracle can hash:
   *
@@ -78,10 +78,9 @@ object StreamQueries {
         lit(-1L).as("user_id"), col("sv.event_type").as("event_type"),
         lit(0.0).as("value"), lit("{}").as("props"))
 
-  /** One-file-per-micro-batch parquet stream over a replay dir. */
-  private def replaySrc(s: SparkSession, rd: String): DataFrame =
-    s.readStream.schema(EventsStream.eventsSchema)
-      .option("maxFilesPerTrigger", "1").parquet(rd)
+  /** One-file-per-micro-batch `events` stream over a replay dir. */
+  private def replaySrc(s: SparkSession, dir: String, rd: String): DataFrame =
+    graft.engine.Engine.stream(s, dir, "events", Some(rd), Some(1))
 
   /** Probe-only (r10 verdict task 8, run by ScaleProbe — never a
     * driver-contract row): the recovery ROWS replay at
@@ -125,8 +124,7 @@ object StreamQueries {
           throw new IllegalStateException(s"cannot stamp mtime on $dst")
       }
       def drain(): Unit = {
-        val src = s.readStream.schema(EventsStream.eventsSchema)
-          .option("maxFilesPerTrigger", mft.toString).parquet(in.toString)
+        val src = graft.engine.Engine.stream(s, dir, "events", Some(in.toString), Some(mft))
           .select(col("user_id"),
             graft.engine.Engine.eventTs(col("ts")).as("ts"), col("event_type"))
           .as[Sessionize.TimedEvent]
@@ -182,7 +180,7 @@ object StreamQueries {
       val sink = "q_sessionize_stream_sink"
       val sentinel = sentinelEvents(s, dir, Seq(-1L -> "sentinel"))
       val rd = Replay.eventsDir(s, dir, 3, Some(sentinel), "sessionize-sentinel")
-      val src = replaySrc(s, rd)
+      val src = replaySrc(s, dir, rd)
         .select(col("user_id"),
           graft.engine.Engine.eventTs(col("ts")).as("ts"), col("event_type"))
         .as[Sessionize.TimedEvent]
@@ -251,8 +249,7 @@ object StreamQueries {
           throw new IllegalStateException(s"cannot stamp mtime on $dst")
       }
       def drain(): Unit = {
-        val src = s.readStream.schema(EventsStream.eventsSchema)
-          .option("maxFilesPerTrigger", "1").parquet(in.toString)
+        val src = graft.engine.Engine.stream(s, dir, "events", Some(in.toString), Some(1))
           .select(col("user_id"),
             graft.engine.Engine.eventTs(col("ts")).as("ts"), col("event_type"))
           .as[Sessionize.TimedEvent]
@@ -316,8 +313,7 @@ object StreamQueries {
       val clKey = "spark.sql.streaming.stateStore.rocksdb." +
         "changelogCheckpointing.enabled"
       def drain(): Unit = {
-        val src = s.readStream.schema(EventsStream.eventsSchema)
-          .option("maxFilesPerTrigger", "1").parquet(in.toString)
+        val src = graft.engine.Engine.stream(s, dir, "events", Some(in.toString), Some(1))
           .select(col("user_id"),
             graft.engine.Engine.eventTs(col("ts")).as("ts"), col("event_type"))
           .as[Sessionize.TimedEvent]
@@ -371,7 +367,7 @@ object StreamQueries {
       val sink = "q_sessionize_tws_sink"
       val sentinel = sentinelEvents(s, dir, Seq(-1L -> "sentinel"))
       val rd = Replay.eventsDir(s, dir, 3, Some(sentinel), "sessionize-sentinel")
-      val src = replaySrc(s, rd)
+      val src = replaySrc(s, dir, rd)
         .select(col("user_id"),
           graft.engine.Engine.eventTs(col("ts")).as("ts"), col("event_type"))
         .as[Sessionize.TimedEvent]
@@ -430,7 +426,7 @@ object StreamQueries {
       val sink = "q_stream_session_window_sink"
       val sentinel = sentinelEvents(s, dir, Seq(-1L -> "sentinel"))
       val rd = Replay.eventsDir(s, dir, 3, Some(sentinel), "sessionize-sentinel")
-      val agg = replaySrc(s, rd)
+      val agg = replaySrc(s, dir, rd)
         .withColumn("ts", graft.engine.Engine.eventTs(col("ts")))
         .withColumn("cents", round(col("value") * 100).cast("long"))
         .withWatermark("ts", "30 minutes")
@@ -474,7 +470,7 @@ object StreamQueries {
         .select((col("event_id") + 5000000L).as("event_id"), col("ts"),
           col("user_id"), col("event_type"), col("value"), col("props"))
       val rd = Replay.eventsDir(s, dir, 3, Some(late), "late-clones")
-      val agg = replaySrc(s, rd)
+      val agg = replaySrc(s, dir, rd)
         .withColumn("ts", graft.engine.Engine.eventTs(col("ts")))
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -531,7 +527,7 @@ object StreamQueries {
         Seq(sentinelEvents(s, dir, Seq(-1L -> "sentinel"), 30),
           sentinelEvents(s, dir, Seq(-2L -> "sentinel"), 60)),
         "dau-two-sentinels")
-      val stream = replaySrc(s, rd)
+      val stream = replaySrc(s, dir, rd)
         .withColumn("ts", graft.engine.Engine.eventTs(col("ts")))
         .withWatermark("ts", "1 hour")
         .select(col("user_id"), window(col("ts"), "1 day").as("w"))
@@ -627,7 +623,7 @@ object StreamQueries {
       // sources always read identical files at identical offsets), so
       // what is late and when closures fire is byte-identical — the
       // oracle hash is the gate.
-      val src = replaySrc(s, rd)
+      val src = replaySrc(s, dir, rd)
         .withColumn("ts", graft.engine.Engine.eventTs(col("ts")))
       val joined = JoinStream.attributionOuter(
         src.filter(col("event_type") === "click"),
@@ -702,8 +698,7 @@ object StreamQueries {
         .select(col("doc_id"), col("lang"), col("text"))
         .write.mode("overwrite").parquet(s"$root/corpus_v0")
       val ver = new java.util.concurrent.atomic.AtomicInteger(0)
-      val src = s.readStream.schema(CurationStream.docsSchema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val src = graft.engine.Engine.stream(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("text"))
       val q = src.writeStream
         .foreachBatch { (batchDf: DataFrame, _: Long) =>
@@ -742,8 +737,7 @@ object StreamQueries {
         .select(col("doc_id"), col("lang"), col("text"))
         .write.mode("overwrite").parquet(s"$root/corpus_v0")
       val ver = new java.util.concurrent.atomic.AtomicInteger(0)
-      val src = s.readStream.schema(CurationStream.docsSchema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val src = graft.engine.Engine.stream(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("text"))
       val q = src.writeStream
         .foreachBatch { (batchDf: DataFrame, _: Long) =>

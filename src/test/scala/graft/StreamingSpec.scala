@@ -383,9 +383,7 @@ class StreamingSpec extends SparkSpecBase {
       .select((col("event_id") + 5000000L).as("event_id"), col("ts"),
         col("user_id"), col("event_type"), col("value"), col("props"))
     val rd = graft.streaming.Replay.eventsDir(spark, sfDir, 3, Some(late), "late-clones")
-    val agg = spark.readStream
-      .schema(graft.streaming.EventsStream.eventsSchema)
-      .option("maxFilesPerTrigger", "1").parquet(rd)
+    val agg = graft.engine.Engine.stream(spark, sfDir, "events", Some(rd), Some(1))
       .withColumn("ts", graft.engine.Engine.eventTs(col("ts")))
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
