@@ -568,7 +568,7 @@ object Bench {
     // caps slightly less loose, never tighter than the base policy
     val schedRefMs = refSched.getOrElse(500.0)
     // the authoritative streaming-row set: registry membership, NOT a
-    // name substring — q_sessionize_tws is a writeStream/Replay
+    // name substring — q_sessionize_tws is a Replay
     // micro-batch query whose name a "stream" grep misses, and the
     // 2-run fast path must never apply to a streaming wall. The set is
     // also emitted in the artifact so tools/adopt_bench.py gates the

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming curation — the continuous-ingest form of the batch
   * `curation_pipeline`: documents arriving on a file stream are
@@ -34,7 +33,7 @@ object CurationStream {
     * testdata arrive well inside the watermark → exact dedup. */
   private val baseUs = 1700000000L * 1000000L
 
-  /** Curated stream: (doc_id, lang, n_tok, stop_ratio) of the surviving
+  /** Curated stream: (doc_id, h, lang, n_tok, stop_ratio) of the surviving
     * copy of each distinct normalized content that passes the gate. */
   def curatedDocs(spark: SparkSession, dir: String): DataFrame = {
     val nTok = size(regexp_extract_all(col("text"), lit("[A-Za-z0-9]+"), lit(0)))
@@ -53,16 +52,6 @@ object CurationStream {
       .withWatermark("arrival", "2 hours")
       .dropDuplicatesWithinWatermark("h", "lang")
       .filter(col("n_chars_norm").between(50, 5000) && col("n_tok") >= 10)
-  }
-
-  def runToMemory(spark: SparkSession, dir: String, name: String): StreamingQuery = {
-    // 8 state partitions: see StreamQueries.withStatePartitions
-    val q = StreamQueries.withStatePartitions(spark, 8) {
-      curatedDocs(spark, dir)
-        .select(col("doc_id"), col("h"), col("lang"), col("n_tok"), col("stop_ratio"))
-        .writeStream.outputMode("append").format("memory").queryName(name).start()
-    }
-    q.processAllAvailable()
-    q
+      .select(col("doc_id"), col("h"), col("lang"), col("n_tok"), col("stop_ratio"))
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import graft.engine.Engine
 import graft.functions.HashExpressions
 
@@ -97,12 +96,5 @@ object DecontamStream {
           HashExpressions.bloom_might_contain_any(col("ghs"), bfB) &&
             HashExpressions.sorted_longs_contain_any(col("ghs"), ghB),
           lit(false)).as("contaminated"))
-  }
-
-  def runToMemory(spark: SparkSession, dir: String, name: String): StreamingQuery = {
-    val q = flaggedDocs(spark, dir)
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q
   }
 }

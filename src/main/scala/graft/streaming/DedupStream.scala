@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming exact deduplication — the continuous-ingest form of
   * `dedup_exact`: documents/events arriving on a stream are deduped by
@@ -18,7 +17,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object DedupStream {
 
-  /** Distinct events by content hash within a 1-hour watermark. */
+  /** Distinct events (event_id, h) by content hash `h` within a 1-hour
+    * watermark. */
   def dedupedEvents(spark: SparkSession, dir: String): DataFrame = {
     graft.engine.Engine.stream(spark, dir, "events")
       .withColumn("tsx", graft.engine.Engine.eventTs(col("ts")))
@@ -26,16 +26,6 @@ object DedupStream {
       .withColumn("h", md5(concat_ws("|", col("user_id"), col("event_type"), col("props"))))
       .withWatermark("tsx", "1 hour")
       .dropDuplicatesWithinWatermark("h")
-  }
-
-  def runToMemory(spark: SparkSession, dir: String, name: String): StreamingQuery = {
-    // 8 state partitions: see StreamQueries.withStatePartitions
-    val q = StreamQueries.withStatePartitions(spark, 8) {
-      dedupedEvents(spark, dir)
-        .select(col("event_id"), col("h"))
-        .writeStream.outputMode("append").format("memory").queryName(name).start()
-    }
-    q.processAllAvailable()
-    q
+      .select(col("event_id"), col("h"))
   }
 }

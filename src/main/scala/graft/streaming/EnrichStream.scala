@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Stream-static dim enrichment (SURVEY §2.10 extension scope): the
   * continuous-ingest join every event pipeline runs — each arriving
@@ -33,14 +32,5 @@ object EnrichStream {
       .join(customers, events("user_id") === customers("c_custkey"))
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"), col("c_mktsegment"))
-  }
-
-  /** Drain the finite input through the memory sink; append mode — the
-    * join emits each enriched event exactly once, no state. */
-  def runToMemory(spark: SparkSession, dir: String, name: String): StreamingQuery = {
-    val q = enriched(spark, dir).writeStream
-      .outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q
   }
 }

@@ -2,16 +2,16 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Structured Streaming extension over the `events` table (SURVEY §2.10:
   * the reference is batch-only; this is the north-star streaming surface).
   *
   * The same tumbling-window aggregation as the batch `q_events_window`
-  * query, expressed as Engine.stream → watermark → windowed agg →
-  * writeStream. At scale this is the standard continuous-ingest shape:
-  * event-time windows tolerate late data up to the watermark, and state
-  * is bounded because expired windows are evicted.
+  * query, expressed as Engine.stream → watermark → windowed agg, run
+  * by StreamQueries.drain. At scale this is the standard
+  * continuous-ingest shape: event-time windows tolerate late data up to
+  * the watermark, and state is bounded because expired windows are
+  * evicted.
   */
 object EventsStream {
 
@@ -25,20 +25,5 @@ object EventsStream {
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
         col("event_type"), col("n"), col("total_value"))
-  }
-
-  /** Run the streaming query to completion against the (finite) parquet
-    * input via the memory sink; returns the query for inspection. */
-  def runToMemory(spark: SparkSession, dir: String, name: String): StreamingQuery = {
-    // 8 state partitions: see StreamQueries.withStatePartitions
-    val q = StreamQueries.withStatePartitions(spark, 8) {
-      hourlyAgg(spark, dir).writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    }
-    q.processAllAvailable()
-    q
   }
 }

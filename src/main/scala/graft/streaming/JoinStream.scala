@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Watermarked stream-stream join (SURVEY §2.10 extension scope): the
   * click→purchase attribution join — for every purchase, every click by
@@ -93,28 +92,5 @@ object JoinStream {
     attribution(
       src.filter(col("event_type") === "click"),
       src.filter(col("event_type") === "purchase"))
-  }
-
-  /** Drain the finite input through the memory sink; append mode — each
-    * attributed (purchase, click) pair is emitted exactly once.
-    *
-    * The drain runs with 8 state partitions, not the session's 32: a
-    * stream-stream join commits one state-store file PER PARTITION PER
-    * SIDE PER BATCH, and on this finite single-batch replay that fixed
-    * commit overhead dominates wall time (measured: the 32-partition
-    * drain spent most of its 6 s in store commits, not the join). The
-    * state-partition count is a per-QUERY layout choice fixed at first
-    * start — a production deployment sizes it to ingest rate × state
-    * volume, exactly like choosing shuffle partitions for a batch job;
-    * output content is partitioning-invariant (the oracle hash-compare
-    * is the proof). Session conf is restored after start — the
-    * partition count is baked into the query at plan time. */
-  def runToMemory(spark: SparkSession, dir: String, name: String): StreamingQuery = {
-    val q = StreamQueries.withStatePartitions(spark, 8) {
-      attributed(spark, dir).writeStream
-        .outputMode("append").format("memory").queryName(name).start()
-    }
-    q.processAllAvailable()
-    q
   }
 }

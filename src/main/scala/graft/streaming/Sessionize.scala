@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Custom-state streaming: per-user sessionization over `events` with
   * `flatMapGroupsWithState` (SURVEY §2.10 extension scope — the stateful
@@ -20,7 +19,8 @@ object Sessionize {
   case class Session(user_id: Long, start_us: Long, end_us: Long, n_events: Long)
 
   def sessionize(events: Iterator[Event], gapUs: Long): Iterator[Session] = {
-    // pure per-user fold, shared by the streaming path and tests
+    // pure per-user fold: the reference the specs hold the streaming
+    // sessionizers to
     val sorted = events.toSeq.sortBy(_.ts_us)
     val out = scala.collection.mutable.ArrayBuffer[Session]()
     var cur: Option[SessionState] = None
@@ -98,47 +98,5 @@ object Sessionize {
             out.iterator
           }
         })
-  }
-
-  /** Streaming sessionization over the finite events parquet: groups by
-    * user, folds with flatMapGroupsWithState. Finite-input variant: the
-    * whole group arrives in one micro-batch, so every session (including
-    * the trailing open one) is emitted immediately and state is dropped —
-    * no timeout is registered (`GroupStateTimeout.NoTimeout`). For the
-    * unbounded form see [[incremental]]. */
-  def run(spark: SparkSession, dir: String, name: String, gapMinutes: Int = 30,
-      availableNow: Boolean = false): StreamingQuery = {
-    import spark.implicits._
-    val events: Dataset[Event] = graft.engine.Engine.stream(spark, dir, "events")
-      .select(col("user_id"),
-        graft.engine.Engine.eventTsMicros(col("ts")).as("ts_us"), col("event_type"))
-      .as[Event]
-    val gapUs = gapMinutes.toLong * 60 * 1000 * 1000
-
-    val sessions = events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, Session](
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (user: Long, batch: Iterator[Event], state: GroupState[SessionState]) => {
-          // finite-input variant: fold the whole group, emit all sessions
-          val all = sessionize(batch, gapUs).toSeq
-          state.remove()
-          all.iterator
-        })
-
-    // AvailableNow: run micro-batches until the source is exhausted,
-    // then terminate — the batch-replay trigger the driver-gated
-    // q_sessionize_stream entry uses; the default path keeps the query
-    // alive for the specs that probe its state store
-    val writer = sessions.writeStream
-      .outputMode("append").format("memory").queryName(name)
-    // 8 state partitions: see StreamQueries.withStatePartitions
-    val q = StreamQueries.withStatePartitions(spark, 8) {
-      if (availableNow)
-        writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      else writer.start()
-    }
-    if (availableNow) q.awaitTermination() else q.processAllAvailable()
-    q
   }
 }

@@ -1,8 +1,12 @@
 package graft.streaming
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.engine.Engine
 
 /** Driver-gated entries that exercise the STREAMING code paths
   * themselves (SURVEY §2.10): the batch twins verify the SEMANTICS,
@@ -10,7 +14,7 @@ import org.apache.spark.sql.functions._
   * windowed agg, `dropDuplicatesWithinWatermark`, stream-static join,
   * watermarked stream-stream join, `flatMapGroupsWithState` — through
   * the real micro-batch engine. Here the finite testdata parquet is
-  * replayed through Engine.stream into a memory sink, drained to
+  * replayed through Engine.stream into a memory sink, run to
   * completion, and the sink is projected onto a DETERMINISTIC surface
   * that one DuckDB oracle can hash:
   *
@@ -28,37 +32,72 @@ import org.apache.spark.sql.functions._
   *    the documented nondeterminism of the operator itself, not of
   *    this harness.
   *
-  * Each entry stops its query after the drain so repeated runs (bench
-  * medians) never accumulate active streams against one sink name.
+  * Every entry runs its stream through [[drain]], which stops the query
+  * once the input is exhausted, so repeated runs (bench medians) never
+  * accumulate active streams against one sink name.
   */
 object StreamQueries {
 
-  /** Plan a streaming query with `n` state partitions instead of the
-    * session's one per core ([[graft.engine.Engine.session]]), restoring
-    * the session conf after `start` returns.
-    * A stateful operator commits one state-store file PER PARTITION
-    * (per side, for joins) PER BATCH; on the finite single-batch
-    * replays below that fixed commit overhead dominates wall time
-    * (measured on the stream-stream join: 6.1 s → 3.1 s). The
-    * state-partition count is a per-QUERY layout choice fixed at first
-    * start — a production deployment sizes it to ingest rate × state
-    * volume, exactly like sizing shuffle partitions for a batch job —
-    * and output content is partitioning-invariant (every drain below
-    * stays oracle-hash-checked). */
-  private[streaming] def withStatePartitions[T](spark: SparkSession, n: Int)(
-      start: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    try { spark.conf.set(key, n.toString); start }
-    finally spark.conf.set(key, prev)
+  /** Where [[drain]] writes: a memory table, a parquet directory with its
+    * checkpoint, or a function called once per micro-batch. */
+  sealed trait Sink
+  object Sink {
+    final case class Memory(table: String) extends Sink
+    final case class Parquet(path: String, checkpoint: String) extends Sink
+    final case class Batches(f: (DataFrame, Long) => Unit) extends Sink
   }
 
-  /** Drain a runToMemory-style stream and read back its sink table. */
-  private def drained(s: SparkSession, sink: String)(
-      run: => org.apache.spark.sql.streaming.StreamingQuery): DataFrame = {
-    val q = run
-    q.stop()
-    s.table(sink)
+  private val rocksDbConf = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    // changelog checkpointing: commit a per-batch delta instead of a full
+    // RocksDB snapshot upload — the production setting at real state
+    // sizes (snapshot cost ∝ total state, changelog ∝ batch writes)
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
+
+  /** Run the finite stream `df` to completion into `sink` — the one place
+    * a streaming query is started in src/main: AvailableNow trigger (every
+    * available file, then the closing no-data batch that fires pending
+    * watermark closures), await, stop. Returns the stopped query, whose
+    * progress stays readable.
+    *
+    * `statePartitions` is the shuffle-partition count the query is
+    * planned with instead of the session's one per core
+    * ([[graft.engine.Engine.session]]). A stateful operator commits one
+    * state-store file PER PARTITION (per side, for joins) PER BATCH; on
+    * the finite replays below that fixed commit overhead dominates wall
+    * time (measured on the stream-stream join: 6.1 s → 3.1 s). It is a
+    * per-QUERY layout choice fixed at first start — a production
+    * deployment sizes it to ingest rate × state volume, like shuffle
+    * partitions for a batch job — and output content is
+    * partitioning-invariant (every row stays oracle-hash-checked).
+    * `rocksDb` selects the RocksDB state store with changelog
+    * checkpointing (required by `transformWithState`). The query keeps
+    * the values it was started with; the session conf is restored as
+    * soon as `start` returns or throws, to what it was before, set or
+    * unset. */
+  def drain(df: DataFrame, sink: Sink, statePartitions: Int = 8,
+      rocksDb: Boolean = false, mode: String = "append"): StreamingQuery = {
+    val conf = df.sparkSession.conf
+    val set = ("spark.sql.shuffle.partitions" -> statePartitions.toString) +:
+      (if (rocksDb) rocksDbConf else Nil)
+    val explicit = conf.getAll
+    val prev = set.map { case (k, _) => k -> explicit.get(k) }
+    val q = try {
+      set.foreach { case (k, v) => conf.set(k, v) }
+      val w = df.writeStream.outputMode(mode).trigger(Trigger.AvailableNow())
+      (sink match {
+        case Sink.Memory(table) => w.format("memory").queryName(table)
+        case Sink.Parquet(path, checkpoint) => w.format("parquet")
+          .option("path", path).option("checkpointLocation", checkpoint)
+        case Sink.Batches(f) => w.foreachBatch(f)
+      }).start()
+    } finally prev.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+    try q.awaitTermination() finally q.stop()
+    q
   }
 
   /** Far-future heartbeat rows (user −1, max(ts) + 30 days), schema-
@@ -68,7 +107,7 @@ object StreamQueries {
     * replay dir would silently fork semantics. */
   private def sentinelEvents(s: SparkSession, dir: String,
       rows: Seq[(Long, String)], offsetDays: Int = 30): DataFrame =
-    graft.engine.Engine.table(s, dir, "events")
+    Engine.table(s, dir, "events")
       .agg(max(col("ts")).as("mts"))
       .select(explode(array(rows.map { case (id, tpe) =>
           struct(lit(id).as("event_id"), lit(tpe).as("event_type")) }: _*))
@@ -80,7 +119,82 @@ object StreamQueries {
 
   /** One-file-per-micro-batch `events` stream over a replay dir. */
   private def replaySrc(s: SparkSession, dir: String, rd: String): DataFrame =
-    graft.engine.Engine.stream(s, dir, "events", Some(rd), Some(1))
+    Engine.stream(s, dir, "events", Some(rd), Some(1))
+
+  /** The sessionize replay: 3 chronological chunks plus a far-future
+    * sentinel (user −1) as the last file, whose event time advances the
+    * watermark past every real session's last+gap. */
+  private def sessionizeReplay(s: SparkSession, dir: String): String =
+    Replay.eventsDir(s, dir, 3, Some(sentinelEvents(s, dir, Seq(-1L -> "sentinel"))),
+      "sessionize-sentinel")
+
+  /** Sessions (30-minute gap) of the events files under `path`, read
+    * `filesPerTrigger` files per micro-batch: `flatMapGroupsWithState`,
+    * or with `rocksDb` its `transformWithState` twin, which needs that
+    * state store. */
+  private def sessions(s: SparkSession, dir: String, path: String,
+      filesPerTrigger: Int, rocksDb: Boolean): DataFrame = {
+    import s.implicits._
+    val src = Engine.stream(s, dir, "events", Some(path), Some(filesPerTrigger))
+      .select(col("user_id"), Engine.eventTs(col("ts")).as("ts"), col("event_type"))
+      .as[Sessionize.TimedEvent]
+    (if (rocksDb) SessionizeTws.incremental(src, 30)
+     else Sessionize.incremental(src, 30)).toDF()
+  }
+
+  /** The batch twin's row surface of sink sessions: sentinel user
+    * projected out, sessions numbered per user by start (sessions of one
+    * user are time-disjoint, so this reproduces q_sessionize's
+    * cumulative sess_no). */
+  private def sessionRows(df: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("user_id")).orderBy(col("start_us"))
+    df.filter(col("user_id") =!= -1L)
+      .select(col("user_id"),
+        row_number().over(w).cast("long").as("sess_no"),
+        col("n_events"), col("start_us"), col("end_us"))
+      .orderBy(col("user_id"), col("sess_no"))
+  }
+
+  /** Kill-and-resume sessionization into a parquet file sink. The
+    * sessionize replay's files are copied into a fresh input dir (mtimes
+    * kept: FileStreamSource orders by them); with `kill`, phase 1 drains
+    * the first half and stops with sessions open in state and offsets
+    * committed, and phase 2, a NEW query on the same checkpoint, drains
+    * the rest. Without `kill` one query drains every file. Returns the
+    * sink dir; its `_spark_metadata` log is what makes the restart
+    * exactly-once, and a read through it can never see an uncommitted
+    * file. The work dir is a per-invocation temp that nothing here
+    * deletes (a caller's frame reads the sink lazily). */
+  private def killAndResume(s: SparkSession, dir: String,
+      filesPerTrigger: Int, rocksDb: Boolean, kill: Boolean = true): String = {
+    val files = {
+      val st = Files.list(Paths.get(sessionizeReplay(s, dir)))
+      try st.iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet"))
+        .toSeq.sortBy(_.getFileName.toString)
+      finally st.close()
+    }
+    val work = graft.Scratch.tempDir("graft_recovery")
+    val in = work.resolve("in")
+    Files.createDirectories(in)
+    val out = work.resolve("out").toString
+    val sink = Sink.Parquet(out, work.resolve("ckpt").toString)
+    def armAndDrain(batch: Seq[java.nio.file.Path]): Unit = {
+      batch.foreach { p =>
+        val dst = in.resolve(p.getFileName)
+        Files.copy(p, dst)
+        if (!dst.toFile.setLastModified(p.toFile.lastModified))
+          throw new IllegalStateException(s"cannot stamp mtime on $dst")
+      }
+      drain(sessions(s, dir, in.toString, filesPerTrigger, rocksDb), sink,
+        rocksDb = rocksDb): Unit
+    }
+    if (kill) {
+      armAndDrain(files.take(files.size / 2)) // killed with state in flight
+      armAndDrain(files.drop(files.size / 2)) // resumed from the checkpoint
+    } else armAndDrain(files)
+    out
+  }
 
   /** Probe-only (r10 verdict task 8, run by ScaleProbe — never a
     * driver-contract row): the recovery ROWS replay at
@@ -88,7 +202,7 @@ object StreamQueries {
     * offset/sink commits as many times as the input allows — which is
     * why their 100× walls are nearly all commit overhead. A production
     * deployment batches; this probe re-runs the SAME kill-and-resume
-    * sessionization at a production batch size (half the replay files
+    * sessionization at a production batch size (2 of the 4 replay files
     * per trigger ⇒ one batch per phase) and measures it against the
     * UNINTERRUPTED streaming run of the same input at the same
     * trigger. The restart's own cost — query re-start + offset-log +
@@ -97,52 +211,9 @@ object StreamQueries {
     * exactly (count + Σn_events), same bar as the contract rows.
     * Returns (uninterrupted_s, recovered_s, sessions). */
   private[graft] def recoveryAmortized(s: SparkSession, dir: String): (Double, Double, Long) = {
-    import s.implicits._
-    import java.nio.file.Files
-    val sentinel = sentinelEvents(s, dir, Seq(-1L -> "sentinel"))
-    val rd = Replay.eventsDir(s, dir, 3, Some(sentinel), "sessionize-sentinel")
-    val files = {
-      val st = Files.list(java.nio.file.Paths.get(rd))
-      try {
-        import scala.jdk.CollectionConverters._
-        st.iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .toSeq.sortBy(_.getFileName.toString)
-      } finally st.close()
-    }
-    val mft = math.max(files.size / 2, 1)
     def run(kill: Boolean): (Double, Long, Long) = {
-      val work = graft.Scratch.tempDir("graft_rec_amort")
-      val in = work.resolve("in")
-      Files.createDirectories(in)
-      val out = work.resolve("out").toString
-      val ckpt = work.resolve("ckpt").toString
-      def arm(names: Seq[java.nio.file.Path]): Unit = names.foreach { p =>
-        val dst = in.resolve(p.getFileName)
-        Files.copy(p, dst)
-        if (!dst.toFile.setLastModified(p.toFile.lastModified))
-          throw new IllegalStateException(s"cannot stamp mtime on $dst")
-      }
-      def drain(): Unit = {
-        val src = graft.engine.Engine.stream(s, dir, "events", Some(in.toString), Some(mft))
-          .select(col("user_id"),
-            graft.engine.Engine.eventTs(col("ts")).as("ts"), col("event_type"))
-          .as[Sessionize.TimedEvent]
-        val q = withStatePartitions(s, 8) {
-          Sessionize.incremental(src, 30).writeStream
-            .outputMode("append").format("parquet")
-            .option("path", out).option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        }
-        q.awaitTermination()
-        q.stop()
-      }
       val t0 = System.nanoTime()
-      if (kill) {
-        arm(files.take(files.size / 2)); drain()
-        arm(files.drop(files.size / 2)); drain()
-      } else { arm(files); drain() }
+      val out = killAndResume(s, dir, 2, rocksDb = false, kill = kill)
       val wall = (System.nanoTime() - t0) / 1e9
       val agg = s.read.parquet(out).filter(col("user_id") =!= -1L)
         .agg(count(lit(1)).as("n"), sum(col("n_events")).as("ev")).head()
@@ -161,6 +232,75 @@ object StreamQueries {
     (uWall, rWall, uN)
   }
 
+  /** Copy-on-write versioned corpus under `root`, the foreachBatch body
+    * of q_stream_upsert and q_stream_cdc: [[merge]] reads corpus_vN,
+    * drops the doc_ids `change` touches, appends the rows it yields and
+    * writes corpus_vN+1 (the table-format pattern; Spark cannot overwrite
+    * a path it is reading). `change` maps a micro-batch to (touched
+    * doc_ids, rows to append). Every per-key operation is idempotent and
+    * each doc arrives in one batch, so any split of the input into
+    * micro-batches folds to the same final corpus. */
+  private[graft] final class VersionedCorpus(root: String,
+      change: DataFrame => (DataFrame, DataFrame)) {
+    private val ver = new java.util.concurrent.atomic.AtomicInteger(0)
+    def path(v: Int): String = s"$root/corpus_v$v"
+    def version: Int = ver.get()
+    def merge(batch: DataFrame, batchId: Long): Unit = {
+      val v = ver.get()
+      val (touched, rows) = change(batch)
+      batch.sparkSession.read.parquet(path(v))
+        .join(touched, Seq("doc_id"), "left_anti").unionAll(rows)
+        .write.mode("overwrite").parquet(path(v + 1))
+      ver.set(v + 1)
+    }
+  }
+
+  /** q_stream_upsert's rule: recrawl updates of every 7th doc and new
+    * docs from every 13th, both replacing any doc with their id. */
+  private[graft] val upsertChange: DataFrame => (DataFrame, DataFrame) = batch => {
+    val updates = batch.filter(col("doc_id") % 7 === 0)
+      .select(col("doc_id"), col("lang"),
+        concat(col("text"), lit(" [recrawl]")).as("text"))
+    val inserts = batch.filter(col("doc_id") % 13 === 0)
+      .select((col("doc_id") + 10000000L).as("doc_id"), col("lang"),
+        concat(lit("NEW "), col("text")).as("text"))
+    val b = updates.unionAll(inserts)
+    (b.select(col("doc_id")), b)
+  }
+
+  /** q_stream_cdc's rule: deletes of every 11th doc, updates of every
+    * 7th not deleted (a key hit by both takes the delete —
+    * latest-op-wins, as in the batch twin), inserts from every 13th. */
+  private[graft] val cdcChange: DataFrame => (DataFrame, DataFrame) = batch => {
+    val dels = batch.filter(col("doc_id") % 11 === 0).select(col("doc_id"))
+    val ups = batch
+      .filter(col("doc_id") % 7 === 0 && col("doc_id") % 11 =!= 0)
+      .select(col("doc_id"), col("lang"),
+        concat(col("text"), lit(" [v2]")).as("text"))
+    val ins = batch.filter(col("doc_id") % 13 === 0)
+      .select((col("doc_id") + 20000000L).as("doc_id"), col("lang"),
+        concat(lit("CDC "), col("text")).as("text"))
+    (dels.unionAll(ups.select(col("doc_id"))), ups.unionAll(ins))
+  }
+
+  /** Stream `documents` through a [[VersionedCorpus]] seeded with the
+    * table itself and summarize the final version per language. */
+  private def corpusRow(s: SparkSession, dir: String, tag: String,
+      change: DataFrame => (DataFrame, DataFrame)): DataFrame = {
+    val docCols = Seq(col("doc_id"), col("lang"), col("text"))
+    val corpus = new VersionedCorpus(graft.Scratch.tempDir(tag).toString, change)
+    Engine.table(s, dir, "documents").select(docCols: _*)
+      .write.mode("overwrite").parquet(corpus.path(0))
+    drain(Engine.stream(s, dir, "documents").select(docCols: _*),
+      Sink.Batches(corpus.merge))
+    s.read.parquet(corpus.path(corpus.version))
+      .groupBy(col("lang"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(length(col("text")).cast("long")).as("sum_chars"),
+        max(col("doc_id")).as("max_id"))
+      .orderBy(col("lang"))
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // MULTI-batch sessionization through the UNBOUNDED operator
     // (Sessionize.incremental — event-time watermark + timeout): the
@@ -176,31 +316,10 @@ object StreamQueries {
     // Oracle: the batch twin unchanged — multi-batch replay of an
     // in-order chunking must reproduce the batch fold row for row.
     "q_sessionize_stream" -> ((s, dir) => {
-      import s.implicits._
       val sink = "q_sessionize_stream_sink"
-      val sentinel = sentinelEvents(s, dir, Seq(-1L -> "sentinel"))
-      val rd = Replay.eventsDir(s, dir, 3, Some(sentinel), "sessionize-sentinel")
-      val src = replaySrc(s, dir, rd)
-        .select(col("user_id"),
-          graft.engine.Engine.eventTs(col("ts")).as("ts"), col("event_type"))
-        .as[Sessionize.TimedEvent]
-      val q = withStatePartitions(s, 8) {
-        Sessionize.incremental(src, 30).writeStream
-          .outputMode("append").format("memory").queryName(sink)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      q.awaitTermination()
-      q.stop()
-      // sessions of one user are time-disjoint, so numbering by
-      // start_us reproduces the batch twin's cumulative sess_no
-      val w = Window.partitionBy(col("user_id")).orderBy(col("start_us"))
-      s.table(sink)
-        .filter(col("user_id") =!= -1L)
-        .select(col("user_id"),
-          row_number().over(w).cast("long").as("sess_no"),
-          col("n_events"), col("start_us"), col("end_us"))
-        .orderBy(col("user_id"), col("sess_no"))
+      drain(sessions(s, dir, sessionizeReplay(s, dir), 1, rocksDb = false),
+        Sink.Memory(sink))
+      sessionRows(s.table(sink))
     }),
 
     // EXACTLY-ONCE ACROSS RESTART — the one streaming behavior the
@@ -213,66 +332,16 @@ object StreamQueries {
     // log is what makes the restart exactly-once (a memory sink resets
     // on restart and would silently drop phase-1 emissions), and the
     // final read-back goes through that log, so an uncommitted file
-    // from the kill could never leak into the result. The drained
+    // from the kill could never leak into the result. The sink
     // output must hash-match the UNINTERRUPTED batch oracle — sessions
     // straddling the kill boundary prove state recovery; the offset
     // log proves no row is lost or replayed. The kill lands at a batch
     // boundary deliberately: Spark's commit protocol makes ANY
     // interruption resume from the last committed batch, so the
     // boundary is the deterministic representative of every kill
-    // point. Work dirs are per-invocation temps (the result frame
-    // reads `out` lazily, so nothing here may delete them).
-    "q_stream_recovery" -> ((s, dir) => {
-      import s.implicits._
-      import java.nio.file.Files
-      val sentinel = sentinelEvents(s, dir, Seq(-1L -> "sentinel"))
-      val rd = Replay.eventsDir(s, dir, 3, Some(sentinel), "sessionize-sentinel")
-      val work = graft.Scratch.tempDir("graft_recovery")
-      val in = work.resolve("in")
-      Files.createDirectories(in)
-      val out = work.resolve("out").toString
-      val ckpt = work.resolve("ckpt").toString
-      val files = {
-        val st = Files.list(java.nio.file.Paths.get(rd))
-        try {
-          import scala.jdk.CollectionConverters._
-          st.iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet"))
-            .toSeq.sortBy(_.getFileName.toString)
-        } finally st.close()
-      }
-      def arm(names: Seq[java.nio.file.Path]): Unit = names.foreach { p =>
-        val dst = in.resolve(p.getFileName)
-        Files.copy(p, dst)
-        // preserve the replay order key (FileStreamSource sorts by mtime)
-        if (!dst.toFile.setLastModified(p.toFile.lastModified))
-          throw new IllegalStateException(s"cannot stamp mtime on $dst")
-      }
-      def drain(): Unit = {
-        val src = graft.engine.Engine.stream(s, dir, "events", Some(in.toString), Some(1))
-          .select(col("user_id"),
-            graft.engine.Engine.eventTs(col("ts")).as("ts"), col("event_type"))
-          .as[Sessionize.TimedEvent]
-        val q = withStatePartitions(s, 8) {
-          Sessionize.incremental(src, 30).writeStream
-            .outputMode("append").format("parquet")
-            .option("path", out).option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        }
-        q.awaitTermination()
-        q.stop()
-      }
-      arm(files.take(2)); drain() // phase 1: killed with state in flight
-      arm(files.drop(2)); drain() // phase 2: recovery from the checkpoint
-      val w = Window.partitionBy(col("user_id")).orderBy(col("start_us"))
-      s.read.parquet(out)
-        .filter(col("user_id") =!= -1L)
-        .select(col("user_id"),
-          row_number().over(w).cast("long").as("sess_no"),
-          col("n_events"), col("start_us"), col("end_us"))
-        .orderBy(col("user_id"), col("sess_no"))
-    }),
+    // point.
+    "q_stream_recovery" -> ((s, dir) =>
+      sessionRows(s.read.parquet(killAndResume(s, dir, 1, rocksDb = false)))),
 
     // the SAME kill-and-resume on the PRODUCTION state backend:
     // transformWithState over RocksDB with changelog checkpointing.
@@ -284,132 +353,20 @@ object StreamQueries {
     // (named ValueState + registered event-time timers) surviving the
     // restart. Same oracle — the restart and the backend must both be
     // invisible in the output.
-    "q_stream_recovery_tws" -> ((s, dir) => {
-      import s.implicits._
-      import java.nio.file.Files
-      val sentinel = sentinelEvents(s, dir, Seq(-1L -> "sentinel"))
-      val rd = Replay.eventsDir(s, dir, 3, Some(sentinel), "sessionize-sentinel")
-      val work = graft.Scratch.tempDir("graft_recovery_tws")
-      val in = work.resolve("in")
-      Files.createDirectories(in)
-      val out = work.resolve("out").toString
-      val ckpt = work.resolve("ckpt").toString
-      val files = {
-        val st = Files.list(java.nio.file.Paths.get(rd))
-        try {
-          import scala.jdk.CollectionConverters._
-          st.iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet"))
-            .toSeq.sortBy(_.getFileName.toString)
-        } finally st.close()
-      }
-      def arm(names: Seq[java.nio.file.Path]): Unit = names.foreach { p =>
-        val dst = in.resolve(p.getFileName)
-        Files.copy(p, dst)
-        if (!dst.toFile.setLastModified(p.toFile.lastModified))
-          throw new IllegalStateException(s"cannot stamp mtime on $dst")
-      }
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val clKey = "spark.sql.streaming.stateStore.rocksdb." +
-        "changelogCheckpointing.enabled"
-      def drain(): Unit = {
-        val src = graft.engine.Engine.stream(s, dir, "events", Some(in.toString), Some(1))
-          .select(col("user_id"),
-            graft.engine.Engine.eventTs(col("ts")).as("ts"), col("event_type"))
-          .as[Sessionize.TimedEvent]
-        val prev = s.conf.getOption(provKey)
-        val prevCl = s.conf.getOption(clKey)
-        val q =
-          try {
-            s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-              "state.RocksDBStateStoreProvider")
-            s.conf.set(clKey, "true")
-            withStatePartitions(s, 8) {
-              SessionizeTws.incremental(src, 30).writeStream
-                .outputMode("append").format("parquet")
-                .option("path", out).option("checkpointLocation", ckpt)
-                .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-                .start()
-            }
-          } finally {
-            prev match {
-              case Some(v) => s.conf.set(provKey, v)
-              case None => s.conf.unset(provKey)
-            }
-            prevCl match {
-              case Some(v) => s.conf.set(clKey, v)
-              case None => s.conf.unset(clKey)
-            }
-          }
-        q.awaitTermination()
-        q.stop()
-      }
-      arm(files.take(2)); drain() // killed with RocksDB state in flight
-      arm(files.drop(2)); drain() // snapshot + changelog replay resume
-      val w = Window.partitionBy(col("user_id")).orderBy(col("start_us"))
-      s.read.parquet(out)
-        .filter(col("user_id") =!= -1L)
-        .select(col("user_id"),
-          row_number().over(w).cast("long").as("sess_no"),
-          col("n_events"), col("start_us"), col("end_us"))
-        .orderBy(col("user_id"), col("sess_no"))
-    }),
+    "q_stream_recovery_tws" -> ((s, dir) =>
+      sessionRows(s.read.parquet(killAndResume(s, dir, 1, rocksDb = true)))),
 
     // the SAME unbounded sessionization on transformWithState (Spark
     // 4's arbitrary stateful API — named typed state + explicit
     // event-time timers, RocksDB-backed state-v2): identical fold,
     // identical input replay, identical oracle — two independent
     // stateful-API implementations pinned to one hash. The RocksDB
-    // provider requirement is per-query conf, captured at start and
-    // restored after.
+    // provider requirement is per-query conf, set and restored by drain.
     "q_sessionize_tws" -> ((s, dir) => {
-      import s.implicits._
       val sink = "q_sessionize_tws_sink"
-      val sentinel = sentinelEvents(s, dir, Seq(-1L -> "sentinel"))
-      val rd = Replay.eventsDir(s, dir, 3, Some(sentinel), "sessionize-sentinel")
-      val src = replaySrc(s, dir, rd)
-        .select(col("user_id"),
-          graft.engine.Engine.eventTs(col("ts")).as("ts"), col("event_type"))
-        .as[Sessionize.TimedEvent]
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      // changelog checkpointing: commit a per-batch delta instead of a
-      // full RocksDB snapshot upload — the production setting at real
-      // state sizes (snapshot cost ∝ total state, changelog ∝ batch
-      // writes) and ~0.4s/run of the tws-vs-fMGWS bench gap here
-      val clKey = "spark.sql.streaming.stateStore.rocksdb." +
-        "changelogCheckpointing.enabled"
-      val prev = s.conf.getOption(provKey)
-      val prevCl = s.conf.getOption(clKey)
-      val q =
-        try {
-          s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-            "state.RocksDBStateStoreProvider")
-          s.conf.set(clKey, "true")
-          withStatePartitions(s, 8) {
-            SessionizeTws.incremental(src, 30).writeStream
-              .outputMode("append").format("memory").queryName(sink)
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-          }
-        } finally {
-          prev match {
-            case Some(v) => s.conf.set(provKey, v)
-            case None => s.conf.unset(provKey)
-          }
-          prevCl match {
-            case Some(v) => s.conf.set(clKey, v)
-            case None => s.conf.unset(clKey)
-          }
-        }
-      q.awaitTermination()
-      q.stop()
-      val w = Window.partitionBy(col("user_id")).orderBy(col("start_us"))
-      s.table(sink)
-        .filter(col("user_id") =!= -1L)
-        .select(col("user_id"),
-          row_number().over(w).cast("long").as("sess_no"),
-          col("n_events"), col("start_us"), col("end_us"))
-        .orderBy(col("user_id"), col("sess_no"))
+      drain(sessions(s, dir, sessionizeReplay(s, dir), 1, rocksDb = true),
+        Sink.Memory(sink), rocksDb = true)
+      sessionRows(s.table(sink))
     }),
 
     // NATIVE streaming session_window aggregation — the AGG-engine
@@ -424,22 +381,13 @@ object StreamQueries {
     // batch gaps-and-islands fold exactly.
     "q_stream_session_window" -> ((s, dir) => {
       val sink = "q_stream_session_window_sink"
-      val sentinel = sentinelEvents(s, dir, Seq(-1L -> "sentinel"))
-      val rd = Replay.eventsDir(s, dir, 3, Some(sentinel), "sessionize-sentinel")
-      val agg = replaySrc(s, dir, rd)
-        .withColumn("ts", graft.engine.Engine.eventTs(col("ts")))
+      val agg = replaySrc(s, dir, sessionizeReplay(s, dir))
+        .withColumn("ts", Engine.eventTs(col("ts")))
         .withColumn("cents", round(col("value") * 100).cast("long"))
         .withWatermark("ts", "30 minutes")
         .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
         .agg(count(lit(1)).as("n_events"), sum(col("cents")).as("cents"))
-      val q = withStatePartitions(s, 8) {
-        agg.writeStream.outputMode("append").format("memory")
-          .queryName(sink)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      q.awaitTermination()
-      q.stop()
+      drain(agg, Sink.Memory(sink))
       s.table(sink)
         .filter(col("user_id") =!= -1L)
         .select(col("user_id"),
@@ -464,14 +412,14 @@ object StreamQueries {
     // would emit duplicate window rows and hash-fail.
     "q_stream_late_drop" -> ((s, dir) => {
       val sink = "q_stream_late_drop_sink"
-      val ev = graft.engine.Engine.table(s, dir, "events")
+      val ev = Engine.table(s, dir, "events")
       val us = unix_micros(col("ts").cast("timestamp"))
       val late = ev.filter(us < Replay.firstChunkBoundUs(s, dir, 3))
         .select((col("event_id") + 5000000L).as("event_id"), col("ts"),
           col("user_id"), col("event_type"), col("value"), col("props"))
       val rd = Replay.eventsDir(s, dir, 3, Some(late), "late-clones")
       val agg = replaySrc(s, dir, rd)
-        .withColumn("ts", graft.engine.Engine.eventTs(col("ts")))
+        .withColumn("ts", Engine.eventTs(col("ts")))
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"),
@@ -479,14 +427,7 @@ object StreamQueries {
         .select(
           date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
           col("event_type"), col("n"), col("total_value"))
-      val q = withStatePartitions(s, 8) {
-        agg.writeStream.outputMode("append").format("memory")
-          .queryName(sink)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      q.awaitTermination()
-      q.stop()
+      drain(agg, Sink.Memory(sink))
       s.table(sink).orderBy(col("hour"), col("event_type"))
     }),
 
@@ -494,8 +435,8 @@ object StreamQueries {
     // complete mode = the final window states, the batch twin's frame
     "q_events_window_stream" -> ((s, dir) => {
       val sink = "q_events_window_stream_sink"
-      drained(s, sink)(EventsStream.runToMemory(s, dir, sink))
-        .orderBy(col("hour"), col("event_type"))
+      drain(EventsStream.hourlyAgg(s, dir), Sink.Memory(sink), mode = "complete")
+      s.table(sink).orderBy(col("hour"), col("event_type"))
     }),
 
     // streaming DAU — CHAINED stateful operators (Spark 3.4+'s
@@ -528,24 +469,17 @@ object StreamQueries {
           sentinelEvents(s, dir, Seq(-2L -> "sentinel"), 60)),
         "dau-two-sentinels")
       val stream = replaySrc(s, dir, rd)
-        .withColumn("ts", graft.engine.Engine.eventTs(col("ts")))
+        .withColumn("ts", Engine.eventTs(col("ts")))
         .withWatermark("ts", "1 hour")
         .select(col("user_id"), window(col("ts"), "1 day").as("w"))
         .dropDuplicates("user_id", "w")
         .groupBy(col("w")).agg(count(lit(1)).as("dau"))
         .select(date_format(col("w.start"), "yyyy-MM-dd").as("day"),
           col("dau"))
-      val q = withStatePartitions(s, 8) {
-        stream.writeStream
-          .outputMode("append").format("memory").queryName(sink)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      q.awaitTermination()
-      q.stop()
-      val maxDay = graft.engine.Engine.table(s, dir, "events")
+      drain(stream, Sink.Memory(sink))
+      val maxDay = Engine.table(s, dir, "events")
         .agg(date_format(max(to_date(
-          graft.engine.Engine.eventTs(col("ts")))), "yyyy-MM-dd").as("d"))
+          Engine.eventTs(col("ts")))), "yyyy-MM-dd").as("d"))
         .head().getString(0)
       s.table(sink).filter(col("day") <= maxDay).orderBy(col("day"))
     }),
@@ -554,16 +488,16 @@ object StreamQueries {
     // functions cannot run INSIDE a streaming agg (no rank over an
     // unfinished window), so the production shape is aggregate
     // in-stream / rank downstream: the watermarked windowed agg drains
-    // through the engine, the k-of-n cut runs on the drained (hour,
+    // through the engine, the k-of-n cut runs on the sink's (hour,
     // type)-sized frame — dashboard-sized, never event-sized, so the
     // rank window's state is bounded by types-per-hour at any ingest
     // rate. Oracle: batch hourly top-3 — the stream must reproduce it.
     "q_stream_topk" -> ((s, dir) => {
       val sink = "q_stream_topk_sink"
-      val agg = drained(s, sink)(EventsStream.runToMemory(s, dir, sink))
+      drain(EventsStream.hourlyAgg(s, dir), Sink.Memory(sink), mode = "complete")
       val w = Window.partitionBy(col("hour"))
         .orderBy(col("n").desc, col("event_type"))
-      agg.withColumn("rk", row_number().over(w).cast("long"))
+      s.table(sink).withColumn("rk", row_number().over(w).cast("long"))
         .filter(col("rk") <= 3)
         .select(col("hour"), col("rk"), col("event_type"), col("n"))
         .orderBy(col("hour"), col("rk"))
@@ -574,16 +508,16 @@ object StreamQueries {
     // identity set — exactly the operator's guaranteed output
     "q_stream_dedup" -> ((s, dir) => {
       val sink = "q_stream_dedup_sink"
-      drained(s, sink)(DedupStream.runToMemory(s, dir, sink))
-        .select(col("h")).distinct().orderBy(col("h"))
+      drain(DedupStream.dedupedEvents(s, dir), Sink.Memory(sink))
+      s.table(sink).select(col("h")).distinct().orderBy(col("h"))
     }),
 
     // stream-static broadcast enrichment: stateless, exactly-once per
     // event — the full joined frame is deterministic
     "q_stream_enrich" -> ((s, dir) => {
       val sink = "q_stream_enrich_sink"
-      drained(s, sink)(EnrichStream.runToMemory(s, dir, sink))
-        .orderBy(col("event_id"))
+      drain(EnrichStream.enriched(s, dir), Sink.Memory(sink))
+      s.table(sink).orderBy(col("event_id"))
     }),
 
     // watermarked stream-stream join: every (purchase, click-within-24h)
@@ -591,8 +525,8 @@ object StreamQueries {
     // cross-engine hash
     "q_stream_join" -> ((s, dir) => {
       val sink = "q_stream_join_sink"
-      drained(s, sink)(JoinStream.runToMemory(s, dir, sink))
-        .select(col("purchase_id"), col("click_id"), col("user_id"),
+      drain(JoinStream.attributed(s, dir), Sink.Memory(sink))
+      s.table(sink).select(col("purchase_id"), col("click_id"), col("user_id"),
           date_format(col("click_ts"), "yyyy-MM-dd HH:mm:ss").as("click_t"),
           date_format(col("purchase_ts"), "yyyy-MM-dd HH:mm:ss").as("purchase_t"),
           col("value"))
@@ -624,7 +558,7 @@ object StreamQueries {
       // what is late and when closures fire is byte-identical — the
       // oracle hash is the gate.
       val src = replaySrc(s, dir, rd)
-        .withColumn("ts", graft.engine.Engine.eventTs(col("ts")))
+        .withColumn("ts", Engine.eventTs(col("ts")))
       val joined = JoinStream.attributionOuter(
         src.filter(col("event_type") === "click"),
         src.filter(col("event_type") === "purchase"))
@@ -632,14 +566,7 @@ object StreamQueries {
       // join commits per partition PER SIDE PER BATCH (5 batches here),
       // so the fixed commit cost doubles relative to the single-batch
       // inner join — measured 8/4/2 partitions = 5.9/5.0/5.1 s
-      val q = withStatePartitions(s, 4) {
-        joined.writeStream.outputMode("append").format("memory")
-          .queryName(sink)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      q.awaitTermination()
-      q.stop()
+      drain(joined, Sink.Memory(sink), statePartitions = 4)
       s.table(sink)
         .filter(col("user_id") =!= -1L)
         .select(col("purchase_id"),
@@ -658,8 +585,8 @@ object StreamQueries {
     // deterministic surface; the survivor doc_id is not
     "q_stream_curation" -> ((s, dir) => {
       val sink = "q_stream_curation_sink"
-      drained(s, sink)(CurationStream.runToMemory(s, dir, sink))
-        .select(col("h"), col("lang"), col("n_tok"), col("stop_ratio"))
+      drain(CurationStream.curatedDocs(s, dir), Sink.Memory(sink))
+      s.table(sink).select(col("h"), col("lang"), col("n_tok"), col("stop_ratio"))
         .distinct() // robust to >watermark-apart re-emergence of a content key
         .orderBy(col("h"), col("lang"))
     }),
@@ -668,104 +595,24 @@ object StreamQueries {
     // is content-determined, row-identical to batch pipe_decontam
     "q_stream_decontam" -> ((s, dir) => {
       val sink = "q_stream_decontam_sink"
-      drained(s, sink)(DecontamStream.runToMemory(s, dir, sink))
-        .orderBy(col("doc_id"))
+      drain(DecontamStream.flaggedDocs(s, dir), Sink.Memory(sink))
+      s.table(sink).orderBy(col("doc_id"))
     }),
 
     // foreachBatch — the ONE sink API the memory-sink entries above
     // don't exercise, and the standard production pattern for
-    // non-append sinks: each micro-batch of recrawl updates/new docs is
-    // MERGED into a versioned parquet corpus with the same anti-join ∪
-    // batch copy-on-write rule as batch `pipe_upsert` (whose oracle
-    // this entry shares by reference — updates touch disjoint docs, so
-    // any micro-batch split folds to the same final corpus). Versioned
-    // dirs, not in-place overwrite: a batch reads corpus_vN and writes
-    // corpus_vN+1, the real table-format pattern (and Spark cannot
-    // overwrite a path it is reading).
-    // streaming CDC apply — q_cdc_apply's streaming twin and
-    // q_stream_upsert's completion: the change feed now carries
-    // DELETES as well as updates/inserts, applied per micro-batch by a
-    // foreachBatch MERGE (anti-join on the batch's touched keys, union
-    // the surviving changes) — the Delta/Iceberg streaming-ingest
-    // shape. Per-key operations are idempotent and each doc arrives in
-    // exactly one file, so the final snapshot is independent of how
-    // AvailableNow chunks the files into batches (what makes the batch
-    // oracle exact). Keys hit by both the update and delete rule take
-    // the delete — latest-op-wins, as in the batch twin.
-    "q_stream_cdc" -> ((s, dir) => {
-      val root = graft.Scratch.tempDir("stream_cdc").toString
-      graft.engine.Engine.table(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("text"))
-        .write.mode("overwrite").parquet(s"$root/corpus_v0")
-      val ver = new java.util.concurrent.atomic.AtomicInteger(0)
-      val src = graft.engine.Engine.stream(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("text"))
-      val q = src.writeStream
-        .foreachBatch { (batchDf: DataFrame, _: Long) =>
-          val v = ver.get()
-          val corpus = batchDf.sparkSession.read.parquet(s"$root/corpus_v$v")
-          val dels = batchDf.filter(col("doc_id") % 11 === 0)
-            .select(col("doc_id"))
-          val ups = batchDf
-            .filter(col("doc_id") % 7 === 0 && col("doc_id") % 11 =!= 0)
-            .select(col("doc_id"), col("lang"),
-              concat(col("text"), lit(" [v2]")).as("text"))
-          val ins = batchDf.filter(col("doc_id") % 13 === 0)
-            .select((col("doc_id") + 20000000L).as("doc_id"), col("lang"),
-              concat(lit("CDC "), col("text")).as("text"))
-          val touched = dels.unionAll(ups.select(col("doc_id")))
-          corpus.join(touched, Seq("doc_id"), "left_anti")
-            .unionAll(ups).unionAll(ins)
-            .write.mode("overwrite").parquet(s"$root/corpus_v${v + 1}")
-          ver.set(v + 1)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.parquet(s"$root/corpus_v${ver.get()}")
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(length(col("text")).cast("long")).as("sum_chars"),
-          max(col("doc_id")).as("max_id"))
-        .orderBy(col("lang"))
-    }),
-
-    "q_stream_upsert" -> ((s, dir) => {
-      val root = graft.Scratch.tempDir("stream_upsert").toString
-      graft.engine.Engine.table(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("text"))
-        .write.mode("overwrite").parquet(s"$root/corpus_v0")
-      val ver = new java.util.concurrent.atomic.AtomicInteger(0)
-      val src = graft.engine.Engine.stream(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("text"))
-      val q = src.writeStream
-        .foreachBatch { (batchDf: DataFrame, _: Long) =>
-          val v = ver.get()
-          val corpus = batchDf.sparkSession.read.parquet(s"$root/corpus_v$v")
-          val updates = batchDf.filter(col("doc_id") % 7 === 0)
-            .select(col("doc_id"), col("lang"),
-              concat(col("text"), lit(" [recrawl]")).as("text"))
-          val inserts = batchDf.filter(col("doc_id") % 13 === 0)
-            .select((col("doc_id") + 10000000L).as("doc_id"), col("lang"),
-              concat(lit("NEW "), col("text")).as("text"))
-          val b = updates.unionAll(inserts)
-          corpus.join(b.select(col("doc_id")), Seq("doc_id"), "left_anti")
-            .unionAll(b)
-            .write.mode("overwrite").parquet(s"$root/corpus_v${v + 1}")
-          ver.set(v + 1)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.parquet(s"$root/corpus_v${ver.get()}")
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(length(col("text")).cast("long")).as("sum_chars"),
-          max(col("doc_id")).as("max_id"))
-        .orderBy(col("lang"))
-    })
+    // non-append sinks: each micro-batch is MERGED into a versioned
+    // parquet corpus (see VersionedCorpus). Streaming CDC apply —
+    // q_cdc_apply's streaming twin: the change feed carries DELETES as
+    // well as updates/inserts, the Delta/Iceberg streaming-ingest shape.
+    // Per-key operations are idempotent and each doc arrives in exactly
+    // one file, so the final snapshot is independent of how AvailableNow
+    // chunks the files into batches (what makes the batch oracle exact).
+    "q_stream_cdc" -> ((s, dir) => corpusRow(s, dir, "stream_cdc", cdcChange)),
+    // recrawl updates/new docs with the same anti-join ∪ batch
+    // copy-on-write rule as batch `pipe_upsert`, whose oracle this entry
+    // shares by reference
+    "q_stream_upsert" -> ((s, dir) => corpusRow(s, dir, "stream_upsert", upsertChange))
   )
 
   /** Batch twins' oracles, shared by reference where one exists so the

@@ -6,7 +6,8 @@ import graft.engine.Engine
 /** The session factory is the single place sessions are built and the
   * core count is read: [[Engine.session]] and [[Engine.cores]]; the
   * table registry is the single place tables are opened:
-  * [[Engine.table]] and [[Engine.stream]]. */
+  * [[Engine.table]] and [[Engine.stream]]; the stream drain is the single
+  * place streaming queries are started: `StreamQueries.drain`. */
 class EngineSessionSpec extends AnyFunSuite {
 
   test("Engine.parseCores: unset falls back to the machine, a positive integer is taken") {
@@ -22,33 +23,43 @@ class EngineSessionSpec extends AnyFunSuite {
     }
   }
 
-  private val engine = java.nio.file.Paths.get("src/main/scala/graft/engine/Engine.scala")
+  private def mainFile(rel: String) = java.nio.file.Paths.get(s"src/main/scala/graft/$rel")
+  private val engine = mainFile("engine/Engine.scala")
 
-  /** Scala files under src/main, other than Engine.scala, whose source
+  /** Scala files under src/main, other than `allowed`, whose source
     * matches `offends`. */
-  private def outsideEngine(offends: String => Boolean): List[java.nio.file.Path] = {
+  private def outside(allowed: java.nio.file.Path*)(
+      offends: String => Boolean): List[java.nio.file.Path] = {
     import scala.jdk.CollectionConverters._
-    assert(java.nio.file.Files.exists(engine), s"missing $engine")
+    allowed.foreach(p => assert(java.nio.file.Files.exists(p), s"missing $p"))
     val st = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
     try st.iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") && p != engine)
+      .filter(p => p.toString.endsWith(".scala") && !allowed.contains(p))
       .filter(p => offends(java.nio.file.Files.readString(p))).toList
     finally st.close()
   }
 
   test("src/main builds sessions and reads SPARK_GRAFT_CPUS only in Engine.scala") {
     val builder = """SparkSession\s*\.\s*builder\s*\(""".r
-    val offenders = outsideEngine(src =>
+    val offenders = outside(engine)(src =>
       builder.findFirstIn(src).isDefined || src.contains("SPARK_GRAFT_CPUS"))
     assert(offenders.isEmpty,
       s"build sessions through Engine.session and read cores through Engine.cores: $offenders")
   }
 
   test("src/main opens testdata tables and streams only in Engine.scala") {
-    val offenders = outsideEngine(src =>
+    val offenders = outside(engine)(src =>
       src.contains("readStream") || src.contains("Engine.table(spark, dir, name)"))
     assert(offenders.isEmpty,
       "stream through Engine.stream and import Engine.{table => t} instead of " +
         s"wrapping it: $offenders")
+  }
+
+  test("src/main starts streaming queries only in StreamQueries.drain and StreamStateProbe") {
+    // StreamStateProbe keeps one long-running MemoryStream query whose
+    // state it reads between batches; every finite stream is drained
+    val offenders = outside(mainFile("streaming/StreamQueries.scala"),
+      mainFile("StreamStateProbe.scala"))(_.contains("writeStream"))
+    assert(offenders.isEmpty, s"run finite streams through StreamQueries.drain: $offenders")
   }
 }

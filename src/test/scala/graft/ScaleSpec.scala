@@ -490,16 +490,13 @@ class ScaleSpec extends SparkSpecBase {
   }
 
   test("streaming sessionization matches batch gaps-and-islands sessionize") {
-    val q = Sessionize.run(spark, sfDir, "sess_xcheck")
-    try {
-      val streamed = spark.sql(
-        "SELECT count(*) AS sessions, sum(n_events) AS events FROM sess_xcheck").head()
-      val batch = SparkEntry.queries("q_sessionize")(spark, sfDir)
-        .agg(count(lit(1)), sum(col("n_events"))).head()
-      assert(streamed.getLong(0) == batch.getLong(0),
-        s"session counts differ: stream=${streamed.getLong(0)} batch=${batch.getLong(0)}")
-      assert(streamed.getLong(1) == batch.getLong(1))
-    } finally q.stop()
+    val streamed = SparkEntry.queries("q_sessionize_stream")(spark, sfDir)
+      .agg(count(lit(1)), sum(col("n_events"))).head()
+    val batch = SparkEntry.queries("q_sessionize")(spark, sfDir)
+      .agg(count(lit(1)), sum(col("n_events"))).head()
+    assert(streamed.getLong(0) == batch.getLong(0),
+      s"session counts differ: stream=${streamed.getLong(0)} batch=${batch.getLong(0)}")
+    assert(streamed.getLong(1) == batch.getLong(1))
   }
 
   test("table checksum: partition-order independent, single-char sensitive") {
@@ -545,17 +542,15 @@ class ScaleSpec extends SparkSpecBase {
   }
 
   test("streaming sessionization emits sessions for every active user") {
-    val q = Sessionize.run(spark, sfDir, "sess_test")
-    try {
-      val sessions = spark.sql("SELECT count(*) AS n, count(DISTINCT user_id) AS u FROM sess_test").head()
-      val users = spark.read.parquet(s"$sfDir/events.parquet")
-        .select(countDistinct(col("user_id"))).head().getLong(0)
-      assert(sessions.getLong(1) == users, s"sessions for ${sessions.getLong(1)} of $users users")
-      assert(sessions.getLong(0) >= users)
-      // event conservation: session event counts sum to the event count
-      val total = spark.sql("SELECT sum(n_events) AS t FROM sess_test").head().getLong(0)
-      assert(total == 1000L)
-    } finally q.stop()
+    val stream = SparkEntry.queries("q_sessionize_stream")(spark, sfDir)
+    val sessions = stream.agg(count(lit(1)), countDistinct(col("user_id"))).head()
+    val users = spark.read.parquet(s"$sfDir/events.parquet")
+      .select(countDistinct(col("user_id"))).head().getLong(0)
+    assert(sessions.getLong(1) == users, s"sessions for ${sessions.getLong(1)} of $users users")
+    assert(sessions.getLong(0) >= users)
+    // event conservation: session event counts sum to the event count
+    val total = stream.agg(sum(col("n_events"))).head().getLong(0)
+    assert(total == 1000L)
   }
 
   test("skew report: shares and max·K/N factor on a hand-computed fixture") {

@@ -1,6 +1,7 @@
 package graft
 
-import graft.streaming.EventsStream
+import graft.streaming.{EventsStream, StreamQueries}
+import graft.streaming.StreamQueries.Sink
 
 /** Streaming extension: the windowed aggregation over events matches the
   * equivalent batch computation when the finite input is fully drained. */
@@ -114,86 +115,82 @@ class StreamingSpec extends SparkSpecBase {
 
   test("streaming dedup within watermark matches batch distinct") {
     import org.apache.spark.sql.functions._
-    val q = graft.streaming.DedupStream.runToMemory(spark, sfDir, "dedup_stream_test")
-    try {
-      val streamed = spark.table("dedup_stream_test").count()
-      val batch = graft.engine.Engine.table(spark, sfDir, "events")
-        .select(md5(concat_ws("|", col("user_id"), col("event_type"), col("props"))).as("h"))
-        .distinct().count()
-      // finite input arrives within one watermark window → exact dedup
-      assert(streamed == batch, s"streamed=$streamed batch=$batch")
-    } finally q.stop()
+    StreamQueries.drain(graft.streaming.DedupStream.dedupedEvents(spark, sfDir),
+      Sink.Memory("dedup_stream_test"))
+    val streamed = spark.table("dedup_stream_test").count()
+    val batch = graft.engine.Engine.table(spark, sfDir, "events")
+      .select(md5(concat_ws("|", col("user_id"), col("event_type"), col("props"))).as("h"))
+      .distinct().count()
+    // finite input arrives within one watermark window → exact dedup
+    assert(streamed == batch, s"streamed=$streamed batch=$batch")
   }
 
   test("streaming curation matches the batch dedup+gate per language") {
     import org.apache.spark.sql.functions._
-    val q = graft.streaming.CurationStream.runToMemory(spark, sfDir, "curation_stream_test")
-    try {
-      val streamed = spark.sql(
-        """SELECT lang, count(*) AS n_docs, sum(n_tok) AS total_tokens
-          |FROM curation_stream_test GROUP BY lang""".stripMargin)
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      // batch equivalent with the same copy-invariant stats: one survivor
-      // per (normalized-content hash, lang) — lang is in the dedup key
-      // because it is metadata, not derivable from the content (see
-      // CurationStream scaladoc) — then the same gate
-      val nTok = size(regexp_extract_all(col("text"), lit("[A-Za-z0-9]+"), lit(0)))
-      val batch = graft.engine.Engine.table(spark, sfDir, "documents")
-        .select(col("lang"),
-          md5(regexp_replace(trim(lower(col("text"))), "\\s+", " ")).as("h"),
-          length(regexp_replace(trim(lower(col("text"))), "\\s+", " "))
-            .as("n_chars_norm"),
-          nTok.cast("long").as("n_tok"))
-        .groupBy(col("h"), col("lang"))
-        .agg(min(col("n_chars_norm")).as("n_chars_norm"),
-          min(col("n_tok")).as("n_tok"))
-        .filter(col("n_chars_norm").between(50, 5000) && col("n_tok") >= 10)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("total_tokens"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      assert(streamed == batch, s"streamed=$streamed batch=$batch")
-      assert(streamed.nonEmpty)
-    } finally q.stop()
+    StreamQueries.drain(graft.streaming.CurationStream.curatedDocs(spark, sfDir),
+      Sink.Memory("curation_stream_test"))
+    val streamed = spark.sql(
+      """SELECT lang, count(*) AS n_docs, sum(n_tok) AS total_tokens
+        |FROM curation_stream_test GROUP BY lang""".stripMargin)
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    // batch equivalent with the same copy-invariant stats: one survivor
+    // per (normalized-content hash, lang) — lang is in the dedup key
+    // because it is metadata, not derivable from the content (see
+    // CurationStream scaladoc) — then the same gate
+    val nTok = size(regexp_extract_all(col("text"), lit("[A-Za-z0-9]+"), lit(0)))
+    val batch = graft.engine.Engine.table(spark, sfDir, "documents")
+      .select(col("lang"),
+        md5(regexp_replace(trim(lower(col("text"))), "\\s+", " ")).as("h"),
+        length(regexp_replace(trim(lower(col("text"))), "\\s+", " "))
+          .as("n_chars_norm"),
+        nTok.cast("long").as("n_tok"))
+      .groupBy(col("h"), col("lang"))
+      .agg(min(col("n_chars_norm")).as("n_chars_norm"),
+        min(col("n_tok")).as("n_tok"))
+      .filter(col("n_chars_norm").between(50, 5000) && col("n_tok") >= 10)
+      .groupBy(col("lang"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("total_tokens"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    assert(streamed == batch, s"streamed=$streamed batch=$batch")
+    assert(streamed.nonEmpty)
   }
 
   test("stream-static enrichment matches the batch join and holds ZERO state") {
     import org.apache.spark.sql.functions._
-    val q = graft.streaming.EnrichStream.runToMemory(spark, sfDir, "enrich_stream_test")
-    try {
-      val streamed = spark.table("enrich_stream_test")
-        .collect().map(r => (r.getLong(0), r.getString(4))).toSet
-      val ev = graft.engine.Engine.table(spark, sfDir, "events")
-      val cust = graft.engine.Engine.table(spark, sfDir, "customer")
-        .select(col("c_custkey"), col("c_mktsegment"))
-      val batch = ev.join(cust, ev("user_id") === cust("c_custkey"))
-        .select(col("event_id"), col("c_mktsegment"))
-        .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-      assert(streamed == batch, s"sizes: streamed=${streamed.size} batch=${batch.size}")
-      assert(streamed.nonEmpty)
-      // the scale property: dim enrichment is STATELESS — nothing in a
-      // state store, nothing that grows with stream length
-      assert(q.lastProgress.stateOperators.isEmpty,
-        s"expected no state operators, got ${q.lastProgress.stateOperators.toSeq}")
-    } finally q.stop()
+    val q = StreamQueries.drain(graft.streaming.EnrichStream.enriched(spark, sfDir),
+      Sink.Memory("enrich_stream_test"))
+    val streamed = spark.table("enrich_stream_test")
+      .collect().map(r => (r.getLong(0), r.getString(4))).toSet
+    val ev = graft.engine.Engine.table(spark, sfDir, "events")
+    val cust = graft.engine.Engine.table(spark, sfDir, "customer")
+      .select(col("c_custkey"), col("c_mktsegment"))
+    val batch = ev.join(cust, ev("user_id") === cust("c_custkey"))
+      .select(col("event_id"), col("c_mktsegment"))
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(streamed == batch, s"sizes: streamed=${streamed.size} batch=${batch.size}")
+    assert(streamed.nonEmpty)
+    // the scale property: dim enrichment is STATELESS — nothing in a
+    // state store, nothing that grows with stream length
+    assert(q.lastProgress.stateOperators.isEmpty,
+      s"expected no state operators, got ${q.lastProgress.stateOperators.toSeq}")
   }
 
   test("streaming decontamination matches batch pipe_decontam_bloom (and exact) rows") {
-    val q = graft.streaming.DecontamStream.runToMemory(spark, sfDir, "decontam_stream_test")
-    try {
-      val streamed = spark.table("decontam_stream_test")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-      val bloom = SparkEntry.queries("pipe_decontam_bloom")(spark, sfDir)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-      val exact = SparkEntry.queries("pipe_decontam")(spark, sfDir)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-      // stateless stream-static flagging is a pure per-row function, so
-      // the stream must reproduce the batch rows verbatim (set compare:
-      // micro-batch order is not meaningful). The stream's bloom is a
-      // prefilter with an exact binary-search verdict, so it equals BOTH
-      // batch paths, false positives killed.
-      assert(streamed.nonEmpty && streamed == bloom && streamed == exact,
-        s"streamed=${streamed.size} bloom=${bloom.size} exact=${exact.size}")
-    } finally q.stop()
+    StreamQueries.drain(graft.streaming.DecontamStream.flaggedDocs(spark, sfDir),
+      Sink.Memory("decontam_stream_test"))
+    val streamed = spark.table("decontam_stream_test")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+    val bloom = SparkEntry.queries("pipe_decontam_bloom")(spark, sfDir)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+    val exact = SparkEntry.queries("pipe_decontam")(spark, sfDir)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+    // stateless stream-static flagging is a pure per-row function, so
+    // the stream must reproduce the batch rows verbatim (set compare:
+    // micro-batch order is not meaningful). The stream's bloom is a
+    // prefilter with an exact binary-search verdict, so it equals BOTH
+    // batch paths, false positives killed.
+    assert(streamed.nonEmpty && streamed == bloom && streamed == exact,
+      s"streamed=${streamed.size} bloom=${bloom.size} exact=${exact.size}")
   }
 
   test("decontam broadcast guard: oversized bench set fails loudly, naming the batch fallback") {
@@ -210,15 +207,14 @@ class StreamingSpec extends SparkSpecBase {
   }
 
   test("streaming hourly agg matches batch q1 shape and totals") {
-    val q = EventsStream.runToMemory(spark, sfDir, "ev_stream_test")
-    try {
-      val streamed = spark.sql(
-        "SELECT sum(n) AS total FROM ev_stream_test").head().getLong(0)
-      val batch = SparkEntry.queries("q_events_window")(spark, sfDir)
-        .agg(org.apache.spark.sql.functions.sum("n")).head().getLong(0)
-      assert(streamed == batch, s"streamed=$streamed batch=$batch")
-      assert(streamed == 1000L) // sf0.001 events row count
-    } finally q.stop()
+    StreamQueries.drain(EventsStream.hourlyAgg(spark, sfDir),
+      Sink.Memory("ev_stream_test"), mode = "complete")
+    val streamed = spark.sql(
+      "SELECT sum(n) AS total FROM ev_stream_test").head().getLong(0)
+    val batch = SparkEntry.queries("q_events_window")(spark, sfDir)
+      .agg(org.apache.spark.sql.functions.sum("n")).head().getLong(0)
+    assert(streamed == batch, s"streamed=$streamed batch=$batch")
+    assert(streamed == 1000L) // sf0.001 events row count
   }
 
   test("chained distinct→count stream reproduces batch DAU exactly") {
@@ -245,28 +241,27 @@ class StreamingSpec extends SparkSpecBase {
 
   test("stream-stream attribution join matches the batch range join") {
     import org.apache.spark.sql.functions._
-    val q = graft.streaming.JoinStream.runToMemory(spark, sfDir, "join_stream_test")
-    try {
-      val streamed = spark.table("join_stream_test")
-        .select(col("purchase_id"), col("click_id"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val ev = graft.engine.Engine.table(spark, sfDir, "events")
-        .withColumn("tsq", graft.engine.Engine.eventTs(col("ts")))
-      val c = ev.filter(col("event_type") === "click")
-        .select(col("user_id").as("cu"), col("event_id").as("click_id"),
-          col("tsq").as("click_ts"))
-      val p = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("pu"), col("event_id").as("purchase_id"),
-          col("tsq").as("purchase_ts"))
-      val batch = c.join(p,
-          col("cu") === col("pu") &&
-            col("click_ts") <= col("purchase_ts") &&
-            col("click_ts") >= col("purchase_ts") - expr("INTERVAL 24 HOURS"))
-        .select(col("purchase_id"), col("click_id"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(batch.nonEmpty, "vacuous fixture: no attributable purchases")
-      assert(streamed == batch, s"streamed=${streamed.size} batch=${batch.size}")
-    } finally q.stop()
+    StreamQueries.drain(graft.streaming.JoinStream.attributed(spark, sfDir),
+      Sink.Memory("join_stream_test"))
+    val streamed = spark.table("join_stream_test")
+      .select(col("purchase_id"), col("click_id"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val ev = graft.engine.Engine.table(spark, sfDir, "events")
+      .withColumn("tsq", graft.engine.Engine.eventTs(col("ts")))
+    val c = ev.filter(col("event_type") === "click")
+      .select(col("user_id").as("cu"), col("event_id").as("click_id"),
+        col("tsq").as("click_ts"))
+    val p = ev.filter(col("event_type") === "purchase")
+      .select(col("user_id").as("pu"), col("event_id").as("purchase_id"),
+        col("tsq").as("purchase_ts"))
+    val batch = c.join(p,
+        col("cu") === col("pu") &&
+          col("click_ts") <= col("purchase_ts") &&
+          col("click_ts") >= col("purchase_ts") - expr("INTERVAL 24 HOURS"))
+      .select(col("purchase_id"), col("click_id"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(batch.nonEmpty, "vacuous fixture: no attributable purchases")
+    assert(streamed == batch, s"streamed=${streamed.size} batch=${batch.size}")
   }
 
   test("stream-stream join state collapses once both watermarks pass") {
@@ -420,7 +415,6 @@ class StreamingSpec extends SparkSpecBase {
     // foreachBatch over TWO MemoryStream batches and compare to the
     // one-shot batch merge of the union
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
@@ -429,31 +423,17 @@ class StreamingSpec extends SparkSpecBase {
     baseRows.toDF("doc_id", "text").withColumn("lang", lit("en"))
       .select(col("doc_id"), col("lang"), col("text"))
       .write.mode("overwrite").parquet(s"$root/corpus_v0")
-    val ver = new java.util.concurrent.atomic.AtomicInteger(0)
+    val corpus = new StreamQueries.VersionedCorpus(root, StreamQueries.upsertChange)
     val src = MemoryStream[(Long, String)]
     val q = src.toDF().toDF("doc_id", "text").withColumn("lang", lit("en"))
-      .writeStream.foreachBatch { (batchDf: DataFrame, _: Long) =>
-        val v = ver.get()
-        val corpus = batchDf.sparkSession.read.parquet(s"$root/corpus_v$v")
-        val updates = batchDf.filter(col("doc_id") % 7 === 0)
-          .select(col("doc_id"), col("lang"),
-            concat(col("text"), lit(" [recrawl]")).as("text"))
-        val inserts = batchDf.filter(col("doc_id") % 13 === 0)
-          .select((col("doc_id") + 10000000L).as("doc_id"), col("lang"),
-            concat(lit("NEW "), col("text")).as("text"))
-        val b = updates.unionAll(inserts)
-        corpus.join(b.select(col("doc_id")), Seq("doc_id"), "left_anti")
-          .unionAll(b)
-          .write.mode("overwrite").parquet(s"$root/corpus_v${v + 1}")
-        ver.set(v + 1)
-        ()
-      }.start()
+      .select(col("doc_id"), col("lang"), col("text"))
+      .writeStream.foreachBatch(corpus.merge _).start()
     try {
       src.addData((7L, "b2"), (14L, "d2"))  // batch 1: one update, one no-op
       q.processAllAvailable()
       src.addData((13L, "c2"), (20L, "e2")) // batch 2: update+insert, no-op
       q.processAllAvailable()
-      assert(ver.get() == 2, s"expected 2 merge versions, got ${ver.get()}")
+      assert(corpus.version == 2, s"expected 2 merge versions, got ${corpus.version}")
       val streamed = spark.read.parquet(s"$root/corpus_v2")
         .collect().map(r => (r.getLong(0), r.getString(2))).toSet
       // one-shot merge of the SAME four rows over the same base
@@ -482,7 +462,6 @@ class StreamingSpec extends SparkSpecBase {
     // produces the same final corpus, and a key hit by both the update
     // and delete rule takes the delete (latest-op-wins)
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
@@ -493,33 +472,17 @@ class StreamingSpec extends SparkSpecBase {
     baseRows.toDF("doc_id", "text").withColumn("lang", lit("en"))
       .select(col("doc_id"), col("lang"), col("text"))
       .write.mode("overwrite").parquet(s"$root/corpus_v0")
-    val ver = new java.util.concurrent.atomic.AtomicInteger(0)
+    val corpus = new StreamQueries.VersionedCorpus(root, StreamQueries.cdcChange)
     val src = MemoryStream[(Long, String)]
     val q = src.toDF().toDF("doc_id", "text").withColumn("lang", lit("en"))
-      .writeStream.foreachBatch { (batchDf: DataFrame, _: Long) =>
-        val v = ver.get()
-        val corpus = batchDf.sparkSession.read.parquet(s"$root/corpus_v$v")
-        val dels = batchDf.filter(col("doc_id") % 11 === 0).select(col("doc_id"))
-        val ups = batchDf
-          .filter(col("doc_id") % 7 === 0 && col("doc_id") % 11 =!= 0)
-          .select(col("doc_id"), col("lang"),
-            concat(col("text"), lit(" [v2]")).as("text"))
-        val ins = batchDf.filter(col("doc_id") % 13 === 0)
-          .select((col("doc_id") + 20000000L).as("doc_id"), col("lang"),
-            concat(lit("CDC "), col("text")).as("text"))
-        val touched = dels.unionAll(ups.select(col("doc_id")))
-        corpus.join(touched, Seq("doc_id"), "left_anti")
-          .unionAll(ups).unionAll(ins)
-          .write.mode("overwrite").parquet(s"$root/corpus_v${v + 1}")
-        ver.set(v + 1)
-        ()
-      }.start()
+      .select(col("doc_id"), col("lang"), col("text"))
+      .writeStream.foreachBatch(corpus.merge _).start()
     try {
       src.addData((7L, "b"), (77L, "e"))  // update 7; 77 hits BOTH rules
       q.processAllAvailable()
       src.addData((11L, "c"), (13L, "d")) // delete 11; insert from 13
       q.processAllAvailable()
-      assert(ver.get() == 2)
+      assert(corpus.version == 2)
       val fin = spark.read.parquet(s"$root/corpus_v2")
         .collect().map(r => (r.getLong(0), r.getString(2))).toSet
       assert(fin == Set(
@@ -529,6 +492,57 @@ class StreamingSpec extends SparkSpecBase {
         (20000013L, "CDC d")  // insert from 13
       ), s"got $fin")         // 11 and 77 deleted — 77 NOT updated
     } finally q.stop()
+  }
+
+  test("drain restores the session conf, set or unset, when start throws and when it succeeds") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
+    // explicitly set values only: an unset key must stay unset, not
+    // come back pinned to its default
+    def explicit() = keys.map(k => k -> spark.conf.getAll.get(k)).toMap
+    val session = explicit()
+    // append-mode streaming aggregation without a watermark: start throws
+    val unstartable = MemoryStream[Int].toDF().groupBy($"value").count()
+    val input = MemoryStream[Int]
+    input.addData(1, 2, 3)
+    val drainable = input.toDF()
+    def check(): Unit = {
+      val before = explicit()
+      intercept[org.apache.spark.sql.AnalysisException] {
+        StreamQueries.drain(unstartable, Sink.Memory("drain_conf_fail"),
+          statePartitions = 3, rocksDb = true)
+      }
+      assert(explicit() == before, "failed start leaked conf")
+      StreamQueries.drain(drainable, Sink.Memory("drain_conf_ok"),
+        statePartitions = 3, rocksDb = true)
+      assert(explicit() == before, "successful drain leaked conf")
+    }
+    try {
+      keys.foreach(spark.conf.unset)
+      check()
+      keys.zip(Seq("5", "org.example.Provider", "false"))
+        .foreach { case (k, v) => spark.conf.set(k, v) }
+      check()
+    } finally keys.foreach { k =>
+      session(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
+
+  test("amortized recovery probe: uninterrupted and recovered runs agree with the batch sessions") {
+    import org.apache.spark.sql.functions.{count, lit}
+    // recoveryAmortized itself requires the two runs' (count, Σn_events)
+    // to match; the count must also be the batch twin's, and non-zero
+    val (uninterruptedS, recoveredS, sessions) =
+      StreamQueries.recoveryAmortized(spark, sfDir)
+    val batch = SparkEntry.queries("q_sessionize")(spark, sfDir)
+      .agg(count(lit(1))).head().getLong(0)
+    assert(sessions > 0, "no sessions emitted")
+    assert(sessions == batch, s"probe sessions=$sessions batch=$batch")
+    assert(uninterruptedS > 0 && recoveredS > 0)
   }
 }
 
