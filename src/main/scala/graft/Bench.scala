@@ -1,5 +1,5 @@
 package graft
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -10,10 +10,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * suite-relative wall-clock second at which each `raw` run STARTED,
   * index-aligned with `raw` — it places any run against the
   * canary_series timeline. `schedMs` is the series reading that scaled
-  * the row's cap. */
+  * the row's cap. `last` is the last timed run's [[Profile]], the
+  * source of the row's `stream_floor` record. */
 private[graft] case class BenchRow(name: String, median: Double, min: Double,
     raw: Seq[Double], shufWriteB: Long, shufReadB: Long, gcMsRuns: Seq[Long],
-    schedMs: Double = -1.0, tSec: Seq[Double] = Seq.empty)
+    schedMs: Double = -1.0, tSec: Seq[Double] = Seq.empty,
+    last: Option[Profile] = None)
 
 /** Pure stat/guard policies for [[Bench]], extracted so they are
   * unit-testable without a SparkSession (BenchStatsSpec). Every flag
@@ -107,9 +109,9 @@ private[graft] object BenchStats {
     if (stable) 2 else 3
   }
 
-  /** Reference-snapshot acceptability (r13 verdict task 4): a committed
-    * BENCH_LOCAL.json that carries contamination flags must never
-    * become the readRefStats baseline — the r13 driver committed its
+  /** Reference-snapshot acceptability (r13 verdict task 4): a snapshot
+    * that carries contamination flags must never become the
+    * `BENCH_REF.json` baseline — the r13 round committed its
     * 621.4s / 261-degraded / 12-cap-killed run over the clean 208.6s
     * snapshot, and adopting it would loosen every per-query cap and
     * every env-guard ~3×. A snapshot is an acceptable reference only
@@ -147,6 +149,37 @@ private[graft] object BenchStats {
     * row appears in, '+'-joined in the caller's order, "" when clean. */
   def flagsOf(name: String, sets: Seq[(String, String => Boolean)]): String =
     sets.collect { case (tag, in) if in(name) => tag }.mkString("+")
+
+  /** A streaming row's floor decomposition, from one timed run's
+    * [[Profile]] (empty when the run drained no micro-batch):
+    *
+    *  - `n_queries` / `n_batches` — query starts and micro-batches (replay
+    *    semantics fix both: the chunk count IS the watermark trajectory);
+    *  - `trigger_ms` — Σ triggerExecution, the in-engine time, split into
+    *    `add_batch_ms` (the jobs), `planning_ms` (per-batch incremental
+    *    planning) and `offset_wal_ms` (offset/commit log writes, offset
+    *    listing and batch resolution);
+    *  - `state_commit_ms` — Σ state-store commit time over every state
+    *    partition's task: TASK time, not wall, so it can exceed
+    *    `trigger_ms` and is not a share of addBatch;
+    *  - `outside_ms` — wall − trigger: what the micro-batch engine does not
+    *    see (query analysis/start/stop, replay-dir checks, the row's batch
+    *    jobs and its projection through the noop sink);
+    *  - `input_rows`, and `n_sources` (the most sources any batch read). */
+  def streamFloor(p: Profile): Seq[(String, Long)] = if (p.batches.isEmpty) Seq.empty else {
+    val bs = p.batches
+    def sum(key: String): Long = bs.map(_.durationMs.getOrElse(key, 0L)).sum
+    val trigger = sum("triggerExecution")
+    Seq("n_queries" -> p.queryStarts, "n_batches" -> bs.size.toLong,
+      "trigger_ms" -> trigger, "add_batch_ms" -> sum("addBatch"),
+      "planning_ms" -> sum("queryPlanning"),
+      "offset_wal_ms" -> Seq("walCommit", "commitOffsets", "latestOffset",
+        "getBatch", "commitBatch").map(sum).sum,
+      "state_commit_ms" -> bs.map(_.stateCommitMs).sum,
+      "outside_ms" -> math.round(p.wallS * 1000 - trigger),
+      "input_rows" -> bs.map(_.inputRows).sum,
+      "n_sources" -> bs.map(_.nSources).max.toLong)
+  }
 }
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR.
@@ -363,13 +396,13 @@ object Bench {
     * co-tenant pressure; inflated shuffle bytes = a real plan change.
     * Each run also records its suite-relative start second via `tClock`,
     * which aligns it against the canary_series timeline. Returns the runs
-    * ((sec, shufW, shufR, gc, tStart) each) and whether any run was
-    * cap-killed. */
+    * ((sec, shufW, shufR, gc, tStart) each), whether any run was
+    * cap-killed, and the last run's [[Profile]]. */
   private def timedWindow(profiler: Profiler,
       spark: SparkSession, sfDir: String,
       fn: (SparkSession, String) => DataFrame, capSec: Double,
       tClock: () => Double, runs: Int, tag: String)
-      : (Seq[(Double, Long, Long, Long, Double)], Boolean) = {
+      : (Seq[(Double, Long, Long, Long, Double)], Boolean, Option[Profile]) = {
     var capped = false
     val measured = (1 to runs).map { _ =>
       val t = tClock()
@@ -377,9 +410,9 @@ object Bench {
         if (capped) (-1.0, false) // cap already blown — don't re-stall
         else timeOnceCapped(spark, fn(spark, sfDir), capSec, tag))
       capped ||= c
-      (sec, p.shuffleWriteBytes, p.shuffleReadBytes, p.gcMs, t)
+      ((sec, p.shuffleWriteBytes, p.shuffleReadBytes, p.gcMs, t), p)
     }
-    (measured, capped)
+    (measured.map(_._1), capped, measured.lastOption.map(_._2))
   }
 
   /** One parsed reference snapshot: per-query (median, min,
@@ -411,82 +444,36 @@ object Bench {
     (stats, acceptable, sched.minOption)
   }
 
-  /** The committed reference snapshot for the uniform-contamination
-    * guard and the cap policy. Read from git history, NOT the working
-    * file — in any local back-to-back run the FILE already holds the
-    * immediately previous (possibly contaminated) run's output, which
-    * would silently drift the 3× divergence baseline (r11 ADVICE).
-    * Walks back from HEAD to the MOST RECENT committed snapshot whose
-    * contamination flags are all clean (r13 verdict task 4: the driver
-    * committed its 621.4s / 12-cap-killed window artifact over the
-    * clean 208.6s snapshot at round end — taking HEAD blindly would
-    * loosen every cap and env-guard ~3×; a flagged snapshot is
-    * EVIDENCE, never a baseline). Falls back to the file only when git
-    * is unavailable AND the file itself is unflagged, then to empty.
-    * SPARK_GRAFT_BENCH_REF overrides everything (the explicit local
-    * escape hatch), annotated `:flagged` when it wouldn't have been
-    * accepted on its own. */
-  private def readRefStats(outFile: String)
-      : (Map[String, (Double, Double, Double)], String, Option[Double]) = {
-    sys.env.get("SPARK_GRAFT_BENCH_REF") match {
-      case Some(p) =>
-        try {
-          val body = Files.readString(Paths.get(p))
-          val (stats, ok, sched) = parseBenchSnapshot(body)
-          // content hash, not just the path: an env-supplied reference
-          // can arrive via process substitution (observed in r14 as
-          // `bench_ref: env:/dev/fd/63`, an unreproducible provenance
-          // string) — the sha12 pins WHAT was compared against even
-          // when the path says nothing
-          val sha12 = java.security.MessageDigest.getInstance("SHA-256")
-            .digest(body.getBytes("UTF-8")).take(6)
-            .map("%02x".format(_)).mkString
-          (stats, s"env:$p:sha256:$sha12" + (if (ok) "" else ":flagged"), sched)
-        } catch { case NonFatal(_) => (Map.empty, s"env:$p:unreadable", None) }
-      case None =>
-        val path = Paths.get(outFile).toAbsolutePath
-        val dir = path.getParent.toString
-        val name = path.getFileName.toString
-        def git(args: String*): Option[String] =
-          try {
-            val pb = new ProcessBuilder((Seq("git", "-C", dir) ++ args): _*)
-            val proc = pb.start()
-            val out = new String(proc.getInputStream.readAllBytes, "UTF-8")
-            if (proc.waitFor() == 0 && out.nonEmpty) Some(out) else None
-          } catch { case NonFatal(_) => None }
-        // depth 200 (was 50 — r14 ADVICE: a long flagged run between
-        // clean adoptions could silently exhaust the walk): the driver
-        // commits a (usually flagged) snapshot every round, so a short
-        // walk could exhaust before the last clean adoption and
-        // silently drop to "none" — unreferenced 600s caps, env-guard
-        // and fast path disabled. The walk stops at the first clean
-        // hit, so depth only costs in the failure case, which now
-        // warns on stderr instead of failing silently.
-        val shas = git("log", "--format=%H", "-n", "200", "HEAD", "--", name)
-          .map(_.linesIterator.toList).getOrElse(Nil)
-        var skippedFlagged = 0
-        val fromGit = shas.iterator.flatMap { sha =>
-          git("show", s"$sha:./$name").flatMap { body =>
-            try {
-              val (stats, ok, sched) = parseBenchSnapshot(body)
-              if (ok) Some((stats, s"git:${sha.take(7)}" +
-                (if (skippedFlagged > 0) s"+skipped:$skippedFlagged-flagged" else ""),
-                sched))
-              else { skippedFlagged += 1; None }
-            } catch { case NonFatal(_) => None }
-          }
-        }.nextOption()
-        if (fromGit.isEmpty && shas.nonEmpty)
-          System.err.println(s"[bench] WARNING: walked ${shas.size} committed " +
-            s"snapshots of $name without finding a clean one " +
-            s"($skippedFlagged flagged) — falling back to the working file")
-        fromGit.orElse {
-          try {
-            val (stats, ok, sched) = parseBenchSnapshot(Files.readString(path))
-            if (ok) Some((stats, s"file:$path", sched)) else None
-          } catch { case NonFatal(_) => None }
-        }.getOrElse((Map.empty, "none", None))
+  /** The checkout this build runs from (its classes sit in
+    * `<root>/target/scala-2.13/classes`): the adopted reference lives at
+    * its root, beside the default artifact, whatever
+    * `SPARK_GRAFT_BENCH_OUT` says. */
+  private[graft] val refFile: Path = Paths.get(classOf[BenchRow]
+    .getProtectionDomain.getCodeSource.getLocation.toURI)
+    .getParent.getParent.getParent.resolve("BENCH_REF.json")
+
+  /** The adopted reference for the cap policy and the uniform-
+    * contamination guard: the snapshot at `path`, written only by
+    * tools/adopt_bench.sh once tools/adopt_bench.py passed it. Its
+    * source is recorded as `<file name>:sha256:<12 hex>` of the content.
+    * A missing, unreadable or flagged file ([[BenchStats.refAcceptable]]:
+    * a flagged snapshot is evidence, never a baseline) leaves the run
+    * unreferenced — 600 s base caps, no env guard — with a warning. */
+  private[graft] def readRef(path: Path)
+      : Option[(Map[String, (Double, Double, Double)], String, Option[Double])] = {
+    def none(why: String) = {
+      System.err.println(s"[bench] WARNING: reference $path $why — the run is unreferenced")
+      None
     }
+    if (!Files.isRegularFile(path)) none("is missing")
+    else try {
+      val body = Files.readString(path)
+      val (stats, ok, sched) = parseBenchSnapshot(body)
+      val sha12 = java.security.MessageDigest.getInstance("SHA-256")
+        .digest(body.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
+      if (ok) Some((stats, s"${path.getFileName}:sha256:$sha12", sched))
+      else none("carries contamination flags")
+    } catch { case NonFatal(e) => none(s"is unreadable: $e") }
   }
 
   private def r3(v: Double): Double = math.rint(v * 1000) / 1000
@@ -500,8 +487,7 @@ object Bench {
     * finishes (r12 verdict task 1a: the r12 driver run was killed by an
     * external timeout and, because the old code wrote the file once at
     * the very end, left NOTHING — an interrupted sweep must still leave
-    * a parseable, mostly-complete artifact for readers and for the next
-    * run's readRefStats). */
+    * a parseable, mostly-complete artifact for its readers). */
   private[graft] def artifactJson(rows: Seq[BenchRow], envSuspects: Seq[String],
       partial: Boolean, degraded: Seq[String], capped: Seq[String],
       skipped: Seq[String], refSource: String, budgetSec: Double,
@@ -523,6 +509,9 @@ object Bench {
       r.name -> r.gcMsRuns.mkString("[", ",", "]")))
     val schedRows = obj(rows.filter(_.schedMs > 0).map(r =>
       r.name -> r2(r.schedMs).toString))
+    val floors = obj(rows.flatMap(r =>
+      r.last.map(BenchStats.streamFloor).filter(_.nonEmpty).map(f =>
+        r.name -> obj(f.map { case (k, v) => k -> v.toString }))))
     val series = canarySeries.map { case (i, tag, ms, steal) =>
       s"""{"i":$i,"tag":"$tag","sched_ms":${r2(ms)},"steal":$steal}"""
     }.mkString("[", ",", "]")
@@ -532,7 +521,7 @@ object Bench {
     val suspects = rows.collect {
       case r if BenchStats.isSuspect(r.median, r.min) => r.name
     }
-    s"""{"metric":"total","value":$total,"unit":"sec","partial":$partial,"queries":$medians,"min":$mins,"runs":$runs,"run_t":$runT,"shuffle_write_mb":$shufW,"shuffle_read_mb":$shufR,"gc_ms":$gc,"bench_ref":"$refSource","sched_ref_ms":${r2(schedRefMs)},"budget_sec":${r2(budgetSec)},"scratch":"$scratch","canary_ms":${obj(canaries.map { case (k, v) => k -> r2(v).toString })},"canary_series":$series,"sched_ms":$schedRows,"failed":${q(failed)},"suspect":${q(suspects)},"env_suspect":${q(envSuspects)},"degraded":${q(degraded)},"capped":${q(capped)},"host":${obj(host.map { case (k, v) => k -> v.toString })},"zombie_after":${q({ import scala.jdk.CollectionConverters._; zombies.iterator().asScala.toSeq })},"skipped":${q(skipped)},"streaming":${q(rows.map(_.name).filter(streamingNames.contains))},"sf":"$sfDir","timed_runs":${obj(timedRunsPlan.map { case (k, v) => k -> v.toString })},"runs_max":$Runs,"stat":"median","note":"every row is measured in ONE window and never re-measured; runs[0] is the untimed warmup, excluded from median/min (degraded rows have no warmup: their runs array holds the single timed run); run_t = suite-relative start second of each runs[] entry, index-aligned, for placing runs against canary_series; suspect = median/min > 2x (contaminated window); shuffle_* = median-run task totals (MB), gc_ms = per-timed-run JVM GC totals — same shuffle + high gc reads as environment pressure, higher shuffle as a plan change; env_suspect = min > 3x the committed reference min with an unchanged shuffle signature, read as uniform environment contamination, not code (bench_ref = most recent GIT-COMMITTED snapshot of this file whose own flag lists are all empty — a flagged snapshot is evidence, never a baseline); partial = the suite was still running when this file was last flushed (the file is rewritten after every completed row, so an externally killed sweep still leaves its finished rows here); capped = a run blew the per-query wall cap (max(60s, 10x committed reference median) x max(1, sched_now/sched_ref_ms), capped at 50x; 600s base when unreferenced), was cancelled and the row reports failed; canary_series = spot sched-canary readings (5 no-op 32-task jobs scaled x4 to the 20-job canary_ms unit) every 25 full-mode rows and before each degraded-mode row, with i = how many rows had completed and steal = cumulative /proc/stat steal ticks at the reading; sched_ms = the series reading that scaled the row's cap; host = cumulative /proc/stat steal ticks (USER_HZ, all-vCPU) and cgroup throttled ms at suite start/end; zombie_after = cap-killed workers that survived interrupt — rows measured after these entries may be contaminated by the un-reaped thread; degraded = measured past the suite wall budget (budget_sec) with a single timed run, no warmup; skipped = not run at all past 2x the budget — the hard stop that guarantees this artifact exists before any external timeout; timed_runs = planned timed runs per row (2 for rows whose committed reference median/min is within 5% and which are not streaming, else 3 = runs_max); streaming = the registry-derived micro-batch replay row set (StreamQueries.queries): always 3 timed runs, and the adoption gate's 1.3x-of-committed-min guard applies to exactly these rows; scratch = the medium (tmpfs|disk) of the per-run java.io.tmpdir root; canary_ms = fixed window-speed workloads at suite start/end (cpu = 20k md5 of 1KB single-core; sched = 20 no-op 32-task jobs) — compare against sched_ref_ms (the committed reference's clean-window sched canary; 500 when the reference predates the field) before adjudicating a wall delta"}"""
+    s"""{"metric":"total","value":$total,"unit":"sec","partial":$partial,"queries":$medians,"min":$mins,"runs":$runs,"run_t":$runT,"shuffle_write_mb":$shufW,"shuffle_read_mb":$shufR,"gc_ms":$gc,"bench_ref":"$refSource","sched_ref_ms":${r2(schedRefMs)},"budget_sec":${r2(budgetSec)},"scratch":"$scratch","canary_ms":${obj(canaries.map { case (k, v) => k -> r2(v).toString })},"canary_series":$series,"sched_ms":$schedRows,"stream_floor":$floors,"failed":${q(failed)},"suspect":${q(suspects)},"env_suspect":${q(envSuspects)},"degraded":${q(degraded)},"capped":${q(capped)},"host":${obj(host.map { case (k, v) => k -> v.toString })},"zombie_after":${q({ import scala.jdk.CollectionConverters._; zombies.iterator().asScala.toSeq })},"skipped":${q(skipped)},"streaming":${q(rows.map(_.name).filter(streamingNames.contains))},"sf":"$sfDir","timed_runs":${obj(timedRunsPlan.map { case (k, v) => k -> v.toString })},"runs_max":$Runs,"stat":"median","note":"every row is measured in ONE window and never re-measured; runs[0] is the untimed warmup, excluded from median/min (degraded rows have no warmup: their runs array holds the single timed run); run_t = suite-relative start second of each runs[] entry, index-aligned, for placing runs against canary_series; suspect = median/min > 2x (contaminated window); shuffle_* = median-run task totals (MB), gc_ms = per-timed-run JVM GC totals — same shuffle + high gc reads as environment pressure, higher shuffle as a plan change; env_suspect = min > 3x the committed reference min with an unchanged shuffle signature, read as uniform environment contamination, not code (bench_ref = BENCH_REF.json at the repo root, the snapshot tools/adopt_bench.sh adopted, named by content hash; none when that file is missing or carries flags — a flagged snapshot is evidence, never a baseline); partial = the suite was still running when this file was last flushed (the file is rewritten after every completed row, so an externally killed sweep still leaves its finished rows here); capped = a run blew the per-query wall cap (max(60s, 10x committed reference median) x max(1, sched_now/sched_ref_ms), capped at 50x; 600s base when unreferenced), was cancelled and the row reports failed; canary_series = spot sched-canary readings (5 no-op 32-task jobs scaled x4 to the 20-job canary_ms unit) every 25 full-mode rows and before each degraded-mode row, with i = how many rows had completed and steal = cumulative /proc/stat steal ticks at the reading; sched_ms = the series reading that scaled the row's cap; stream_floor = per row whose last timed run drained micro-batches, that run's breakdown: n_queries/n_batches, trigger_ms = sum of triggerExecution split into add_batch_ms, planning_ms and offset_wal_ms (walCommit + commitOffsets + latestOffset + getBatch + commitBatch), state_commit_ms (state-store commit task time, can exceed trigger), outside_ms = wall - trigger, input_rows and n_sources; host = cumulative /proc/stat steal ticks (USER_HZ, all-vCPU) and cgroup throttled ms at suite start/end; zombie_after = cap-killed workers that survived interrupt — rows measured after these entries may be contaminated by the un-reaped thread; degraded = measured past the suite wall budget (budget_sec) with a single timed run, no warmup; skipped = not run at all past 2x the budget — the hard stop that guarantees this artifact exists before any external timeout; timed_runs = planned timed runs per row (2 for rows whose committed reference median/min is within 5% and which are not streaming, else 3 = runs_max); streaming = the registry-derived micro-batch replay row set (StreamQueries.queries): always 3 timed runs, and the adoption gate's 1.3x-of-committed-min guard applies to exactly these rows; scratch = the medium (tmpfs|disk) of the per-run java.io.tmpdir root; canary_ms = fixed window-speed workloads at suite start/end (cpu = 20k md5 of 1KB single-core; sched = 20 no-op 32-task jobs) — compare against sched_ref_ms (the committed reference's clean-window sched canary; 500 when the reference predates the field) before adjudicating a wall delta"}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -559,7 +548,8 @@ object Bench {
     // shutdown hook reclaims it on exit, including the SIGTERM a driver
     // timeout delivers; only SIGKILL leaks, until reboot.
     val scratchMedium = Scratch.install("bench", preferTmpfs = true)
-    val (refStats, refSource, refSched) = readRefStats(outFile)
+    val (refStats, refSource, refSched) =
+      readRef(refFile).getOrElse((Map.empty[String, (Double, Double, Double)], "none", None))
     val refMinSw = refStats.map { case (n, (_, mn, sw)) => n -> (mn, sw) }
     // clean-window sched reference for cap scaling: the committed
     // snapshot's pinned canary when present, else 500ms — the r13
@@ -667,12 +657,12 @@ object Bench {
           case "degraded" =>
             degraded += name
             timedRunsPlan(name) = 1
-            val (runsM, c) =
+            val (runsM, c, last) =
               timedWindow(profiler, spark, sfDir, fn, capNow, elapsed _, runs = 1, tag = name)
             if (c) capped += name
             val sec = runsM.head._1
             BenchRow(name, sec, sec, runsM.map(_._1), runsM.head._2,
-              runsM.head._3, runsM.map(_._4), schedUsed, runsM.map(_._5))
+              runsM.head._3, runsM.map(_._4), schedUsed, runsM.map(_._5), last)
           case _ =>
             val nRuns = BenchStats.timedRuns(refStats.get(name).map(_._1),
               refStats.get(name).map(_._2), streamingNames.contains(name))
@@ -681,8 +671,8 @@ object Bench {
             val (warm, wCapped) = timeOnceCapped(spark, fn(spark, sfDir), capNow, name)
             // a failed warmup means the query itself fails — don't run
             // it N more times just to fail N more times
-            val (runsM, c) =
-              if (warm < 0) (Seq.fill(nRuns)((-1.0, 0L, 0L, 0L, elapsed())), false)
+            val (runsM, c, last) =
+              if (warm < 0) (Seq.fill(nRuns)((-1.0, 0L, 0L, 0L, elapsed())), false, None)
               else timedWindow(profiler, spark, sfDir, fn, capNow, elapsed _, runs = nRuns, tag = name)
             if (wCapped || c) capped += name
             val timed = runsM.map(_._1)
@@ -696,7 +686,7 @@ object Bench {
             def med(xs: Seq[Long]): Long = xs.sorted.apply(xs.size / 2)
             BenchRow(name, median, min, warm +: timed,
               med(runsM.map(_._2)), med(runsM.map(_._3)), runsM.map(_._4),
-              schedUsed, warmT +: runsM.map(_._5))
+              schedUsed, warmT +: runsM.map(_._5), last)
         }
         acc += row
         flush(acc.toSeq, partial = true)

@@ -2,15 +2,15 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-/** Per-run `java.io.tmpdir` redirect for the diagnostic mains (Bench
-  * and the probes, whose [[Profiler]] windows leftover debris would
-  * slow): everything Spark parks in tmpdir — memory-sink temp
-  * checkpoints, RocksDB state-store working dirs, `spark.local.dir`
-  * shuffle files, the scratch warehouse and replay layouts — lands in a
-  * fresh per-pid root that is reclaimed at JVM exit, so a run can never
-  * leave debris that degrades a later measurement window (the r12
-  * driver bench timed out in a window taxed by ~10 GB of probe-shard
-  * churn that nothing cleaned up). */
+/** Per-run `java.io.tmpdir` redirect for Verify, Bench and the probes
+  * (and the test JVM): everything Spark parks in tmpdir — memory-sink
+  * temp checkpoints, RocksDB state-store working dirs, `spark.local.dir`
+  * shuffle files, the scratch warehouse, replay layouts and every
+  * [[tempDir]] a row makes — lands in a fresh per-pid root that is
+  * reclaimed at JVM exit, so a run can never leave debris that fills
+  * /tmp or degrades a later measurement window (the r12 round's bench
+  * timed out in a window taxed by ~10 GB of probe-shard churn that
+  * nothing cleaned up). */
 object Scratch {
 
   /** A temp directory under the CURRENT `java.io.tmpdir` property.

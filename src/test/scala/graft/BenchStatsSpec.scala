@@ -2,9 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Unit tests for [[BenchStats]] — the bench's one-window flag, cap
-  * and budget policies, pure of any SparkSession — and for the
-  * artifact's render/parse round-trip. */
+/** Unit tests for [[BenchStats]] — the bench's one-window flag, cap,
+  * budget and stream-floor policies, pure of any SparkSession — and for
+  * the artifact's render/parse round-trip and the reference reader. */
 class BenchStatsSpec extends AnyFunSuite {
 
   test("median: odd and even run counts") {
@@ -101,25 +101,27 @@ class BenchStatsSpec extends AnyFunSuite {
     assert(!BenchStats.refAcceptable(partial = false, 0, 0, 0, 0, 0, zombies = 1))
   }
 
+  /** A two-row artifact, flagged by whatever `degraded` names. */
+  private def render(degraded: Seq[String]): String = Bench.artifactJson(
+    rows = Seq(
+      BenchRow("q_a", 2.0, 1.8, Seq(3.0, 2.0, 1.8), 1000000L, 500000L,
+        Seq(10L, 20L), schedMs = 300.0, tSec = Seq(5.0, 8.0, 10.0)),
+      BenchRow("q_b", 0.5, 0.4, Seq(0.9, 0.5, 0.4), 2000000L, 0L,
+        Seq(0L, 0L), schedMs = 310.0, tSec = Seq(12.0, 13.0, 13.6))),
+    envSuspects = Seq.empty, partial = false, degraded = degraded,
+    capped = Seq.empty, skipped = Seq.empty, refSource = "test",
+    budgetSec = 1500.0, sfDir = "/tmp/sf",
+    scratch = "tmpfs", canaries = Seq("cpu_start" -> 40.0,
+      "sched_start" -> 900.0, "cpu_end" -> 38.0, "sched_end" -> 350.0),
+    canarySeries = Seq((0, "start", 900.0, 100L), (0, "warm", 400.0, 101L)),
+    timedRunsPlan = Seq("q_a" -> 2, "q_b" -> 2), schedRefMs = 357.78,
+    streamingNames = Set.empty, host = Seq("steal_ticks_start" -> 7L))
+
   test("artifact render → reference parse round-trip (format-drift guard)") {
-    // the reference chain (readRefStats / tools/adopt_bench.py) parses
+    // the reference readers (Bench.readRef / tools/adopt_bench.py) parse
     // the same JSON artifactJson renders; a silent rename on either
     // side would detach every cap and env-guard from its baseline.
     // This is the only place the two private halves meet off-line.
-    def render(degraded: Seq[String]): String = Bench.artifactJson(
-      rows = Seq(
-        BenchRow("q_a", 2.0, 1.8, Seq(3.0, 2.0, 1.8), 1000000L, 500000L,
-          Seq(10L, 20L), schedMs = 300.0, tSec = Seq(5.0, 8.0, 10.0)),
-        BenchRow("q_b", 0.5, 0.4, Seq(0.9, 0.5, 0.4), 2000000L, 0L,
-          Seq(0L, 0L), schedMs = 310.0, tSec = Seq(12.0, 13.0, 13.6))),
-      envSuspects = Seq.empty, partial = false, degraded = degraded,
-      capped = Seq.empty, skipped = Seq.empty, refSource = "test",
-      budgetSec = 1500.0, sfDir = "/tmp/sf",
-      scratch = "tmpfs", canaries = Seq("cpu_start" -> 40.0,
-        "sched_start" -> 900.0, "cpu_end" -> 38.0, "sched_end" -> 350.0),
-      canarySeries = Seq((0, "start", 900.0, 100L), (0, "warm", 400.0, 101L)),
-      timedRunsPlan = Seq("q_a" -> 2, "q_b" -> 2), schedRefMs = 357.78,
-      streamingNames = Set.empty, host = Seq("steal_ticks_start" -> 7L))
     val (stats, acceptable, sched) = Bench.parseBenchSnapshot(render(Seq.empty))
     assert(acceptable, "a flag-free artifact must parse as an acceptable reference")
     // (median, min, shuffle_write_mb) — mb() renders bytes/1e6 at 2dp
@@ -130,6 +132,47 @@ class BenchStatsSpec extends AnyFunSuite {
     // any non-empty guard list vetoes the snapshot as a baseline
     val (_, flagged, _) = Bench.parseBenchSnapshot(render(Seq("q_b")))
     assert(!flagged)
+  }
+
+  test("readRef: nothing for a missing file, refuses a flagged one, takes a clean one") {
+    val dir = Scratch.tempDir("bench_ref")
+    try {
+      val ref = dir.resolve("BENCH_REF.json")
+      assert(Bench.readRef(ref).isEmpty)
+      java.nio.file.Files.writeString(ref, render(Seq("q_b")))
+      assert(Bench.readRef(ref).isEmpty, "a flagged snapshot is never a baseline")
+      java.nio.file.Files.writeString(ref, render(Seq.empty))
+      val Some((stats, source, sched)) = Bench.readRef(ref)
+      assert(stats.keySet == Set("q_a", "q_b") && sched.contains(350.0))
+      // named by content: the file name plus 12 hex of its sha256
+      assert(source.matches("BENCH_REF\\.json:sha256:[0-9a-f]{12}"), source)
+    } finally graft.ops.Scale.deleteTree(dir)
+  }
+
+  test("the committed BENCH_REF.json is an acceptable reference with a pinned sched canary") {
+    val Some((stats, source, sched)) = Bench.readRef(Bench.refFile)
+    assert(stats.size == 307, s"${stats.size} rows")
+    // the 181.023 s adoption: min(sched_start 939.86, sched_end 223.15)
+    assert(sched.contains(223.15))
+    assert(source.startsWith("BENCH_REF.json:sha256:"), source)
+  }
+
+  test("streamFloor folds a run's micro-batches; empty without any") {
+    def batch(trigger: Long, rows: Long, sources: Int) = BatchProgress(
+      Map("triggerExecution" -> trigger, "addBatch" -> 100L,
+        "queryPlanning" -> 10L, "walCommit" -> 1L, "commitOffsets" -> 2L,
+        "latestOffset" -> 4L, "getBatch" -> 8L, "commitBatch" -> 16L),
+      rows, stateCommitMs = 50L, nSources = sources)
+    val p = Profile(wallS = 1.5, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L,
+      queryStarts = 2L, batches = Seq(batch(400L, 7L, 1), batch(300L, 3L, 2)))
+    assert(BenchStats.streamFloor(p) == Seq("n_queries" -> 2L,
+      "n_batches" -> 2L, "trigger_ms" -> 700L, "add_batch_ms" -> 200L,
+      "planning_ms" -> 20L,
+      // walCommit + commitOffsets + latestOffset + getBatch + commitBatch
+      "offset_wal_ms" -> 62L, "state_commit_ms" -> 100L,
+      // wall − triggerExecution
+      "outside_ms" -> 800L, "input_rows" -> 10L, "n_sources" -> 2L))
+    assert(BenchStats.streamFloor(p.copy(batches = Seq.empty)).isEmpty)
   }
 
   test("flagsOf joins every matching adjudication list in caller order (r16 queries_detail)") {

@@ -26,17 +26,19 @@ class EngineSessionSpec extends AnyFunSuite {
   private def mainFile(rel: String) = java.nio.file.Paths.get(s"src/main/scala/graft/$rel")
   private val engine = mainFile("engine/Engine.scala")
 
-  /** Scala files under src/main, other than `allowed`, whose source
-    * matches `offends`. */
-  private def outside(allowed: java.nio.file.Path*)(
-      offends: String => Boolean): List[java.nio.file.Path] = {
+  /** Scala files under `roots` (default src/main), other than
+    * `allowed`, whose source matches `offends`. */
+  private def outside(allowed: java.nio.file.Path*)(offends: String => Boolean,
+      roots: Seq[String] = Seq("src/main")): List[java.nio.file.Path] = {
     import scala.jdk.CollectionConverters._
     allowed.foreach(p => assert(java.nio.file.Files.exists(p), s"missing $p"))
-    val st = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
-    try st.iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") && !allowed.contains(p))
-      .filter(p => offends(java.nio.file.Files.readString(p))).toList
-    finally st.close()
+    roots.toList.flatMap { root =>
+      val st = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      try st.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") && !allowed.contains(p))
+        .filter(p => offends(java.nio.file.Files.readString(p))).toList
+      finally st.close()
+    }
   }
 
   test("src/main builds sessions and reads SPARK_GRAFT_CPUS only in Engine.scala") {
@@ -61,5 +63,14 @@ class EngineSessionSpec extends AnyFunSuite {
     val offenders = outside(mainFile("streaming/StreamQueries.scala"),
       mainFile("StreamStateProbe.scala"))(_.contains("writeStream"))
     assert(offenders.isEmpty, s"run finite streams through StreamQueries.drain: $offenders")
+  }
+
+  test("src/main and src/test make temp dirs only through Scratch.tempDir") {
+    // the one-argument form resolves java.io.tmpdir once per JVM, before
+    // Scratch.install can redirect it, so its dirs leak into the real /tmp
+    val oneArg = """createTempDirectory\(([^(),]|\([^()]*\))*\)""".r
+    val offenders = outside(mainFile("Scratch.scala"))(
+      src => oneArg.findFirstIn(src).isDefined, Seq("src/main", "src/test"))
+    assert(offenders.isEmpty, s"use Scratch.tempDir: $offenders")
   }
 }

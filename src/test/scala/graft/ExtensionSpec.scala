@@ -2049,7 +2049,7 @@ class ExtensionSpec extends SparkSpecBase {
           1L, "view", 0.0, "{}")
       }
     }
-    val tmp = java.nio.file.Files.createTempDirectory(dirTag).toString
+    val tmp = graft.Scratch.tempDir(dirTag).toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$tmp/events.parquet")
     tmp

@@ -24,7 +24,7 @@ class MaterializeSpec extends SparkSpecBase {
   }
 
   test("configured checkpoint dir: materialize writes reliable checkpoint files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_spec")
+    val dir = Scratch.tempDir("graft_ckpt_spec")
     try {
       spark.sparkContext.setCheckpointDir(dir.toString)
       val m = Engine.materialize(probeDf, eager = true)
@@ -45,7 +45,7 @@ class MaterializeSpec extends SparkSpecBase {
   }
 
   test("configured checkpoint dir: unpersistMaterialized deletes the reliable checkpoint files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_spec")
+    val dir = Scratch.tempDir("graft_ckpt_spec")
     import scala.jdk.CollectionConverters._
     // the rdd-<id> directories a reliable checkpoint writes under the dir
     def rddDirs(): List[java.nio.file.Path] =

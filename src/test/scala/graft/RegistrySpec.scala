@@ -41,7 +41,7 @@ class RegistrySpec extends SparkSpecBase {
   }
 
   test("a second Engine.table on the same file starts no Spark job") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_registry").toString
+    val dir = Scratch.tempDir("graft_registry").toString
     spark.range(10).write.parquet(s"$dir/w.parquet")
     val cold = jobsOf("registry-cold")(Engine.table(spark, dir, "w"))
     assert(cold > 0, "the first read must infer the schema with a job")
@@ -49,7 +49,7 @@ class RegistrySpec extends SparkSpecBase {
   }
 
   test("a rewritten file is read with its new schema") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_registry").toString
+    val dir = Scratch.tempDir("graft_registry").toString
     val path = s"$dir/r.parquet"
     spark.range(5).write.parquet(path)
     assert(Engine.table(spark, dir, "r").columns.toSeq === Seq("id"))

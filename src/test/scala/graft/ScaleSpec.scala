@@ -526,7 +526,7 @@ class ScaleSpec extends SparkSpecBase {
     // and duplicated rows are exactly a migration failure mode
     val docs = graft.engine.Engine.table(spark, sfDir, "documents")
     for ((src, dst) <- Seq(docs -> "cksum3", mutated -> "cksum4")) {
-      val d = java.nio.file.Files.createTempDirectory(dst).toString
+      val d = graft.Scratch.tempDir(dst).toString
       src.unionAll(src).write.mode("overwrite").parquet(s"$d/documents.parquet")
       val r = SparkEntry.queries("q_table_checksum")(spark, d).head()
       assert(r.getLong(1) == 0L, s"paired xor should cancel: $r")

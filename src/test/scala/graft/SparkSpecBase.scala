@@ -25,3 +25,31 @@ trait SparkSpecBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
   val sfDir = "/root/testdata/sf0.001"
 }
+
+/** Runs a main class in a child JVM on this JVM's classpath and module
+  * flags, with `java.io.tmpdir` at `tmp`, working directory `cwd` and
+  * `env` added to this JVM's environment. Returns the exit code and the
+  * child's stdout lines (its stderr is discarded). */
+object ChildJvm {
+  def run(main: String, args: Seq[String], tmp: java.nio.file.Path,
+      cwd: java.nio.file.Path, env: Map[String, String] = Map.empty)
+      : (Int, List[String]) = {
+    import scala.jdk.CollectionConverters._
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.toSeq
+    val opens = jvmArgs.zipWithIndex.flatMap {
+      case (a, _) if a.startsWith("--add-opens=") => Seq(a)
+      case ("--add-opens", i) => Seq(s"--add-opens=${jvmArgs(i + 1)}")
+      case _ => Nil
+    }
+    val cmd = Seq(s"${sys.props("java.home")}/bin/java") ++ opens ++ Seq(
+      "-Xmx1g", s"-Djava.io.tmpdir=$tmp", "-cp", sys.props("java.class.path"),
+      main) ++ args
+    val pb = new ProcessBuilder(cmd: _*).directory(cwd.toFile)
+      .redirectError(ProcessBuilder.Redirect.DISCARD)
+    env.foreach { case (k, v) => pb.environment().put(k, v) }
+    val p = pb.start()
+    val out = scala.io.Source.fromInputStream(p.getInputStream).getLines().toList
+    (p.waitFor(), out)
+  }
+}

@@ -1,6 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.TypesTable
@@ -60,24 +59,12 @@ object TypesTableProbe {
     spark.stop()
   }
 
-  /** Runs [[main]] in a child JVM on this JVM's classpath and module
-    * flags; returns its last stdout line. */
+  /** Runs [[main]] in a child JVM ([[ChildJvm]]); returns its last
+    * stdout line. */
   def runIn(master: String): String = {
     val dir = Scratch.tempDir("types_probe")
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
-      .asScala.toSeq
-    val opens = jvmArgs.zipWithIndex.flatMap {
-      case (a, _) if a.startsWith("--add-opens=") => Seq(a)
-      case ("--add-opens", i) => Seq(s"--add-opens=${jvmArgs(i + 1)}")
-      case _ => Nil
-    }
-    val cmd = Seq(s"${sys.props("java.home")}/bin/java") ++ opens ++ Seq(
-      "-Xmx1g", s"-Djava.io.tmpdir=$dir", "-cp", sys.props("java.class.path"),
-      "graft.TypesTableProbe", master)
-    val p = new ProcessBuilder(cmd: _*).directory(dir.toFile)
-      .redirectError(ProcessBuilder.Redirect.DISCARD).start()
-    val out = scala.io.Source.fromInputStream(p.getInputStream).getLines().toList
-    assert(p.waitFor() == 0, s"probe under $master exited ${p.exitValue()}")
+    val (code, out) = ChildJvm.run("graft.TypesTableProbe", Seq(master), dir, dir)
+    assert(code == 0, s"probe under $master exited $code")
     out.last
   }
 }

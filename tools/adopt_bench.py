@@ -27,18 +27,17 @@ human in the loop:
      steady in the cleanest window measured) — the series median is
      the honest window-cleanliness estimator.
 
-The committed clean reference is resolved the same way Bench.scala's
-readRefStats does: walk `git log -- BENCH_LOCAL.json` to the most
-recent committed snapshot whose own flag lists are all empty (HEAD
-currently holds the driver's flagged 621.4s window artifact, which
-must never be a baseline).
+The reference is BENCH_REF.json at the repo root, the same file Bench
+reads: the last snapshot this gate passed, copied there by
+tools/adopt_bench.sh (HEAD's BENCH_LOCAL.json may hold a flagged
+window artifact, which must never be a baseline).
 
 Exit 0 = adoptable (tools/adopt_bench.sh then commits it, which pins
 its canary values as the new sched_ref for cap scaling). Exit 1 = keep
 the current reference; reasons on stdout.
 """
+import hashlib
 import json
-import subprocess
 import sys
 
 REPO = "/root/repo"
@@ -48,57 +47,21 @@ CPU_MAX_MS = 55.0
 STREAM_RATIO_MAX = 1.3
 FLAG_LISTS = ["failed", "degraded", "capped", "skipped", "env_suspect",
               "zombie_after", "suspect"]
-# the lists a COMMITTED snapshot must have empty to serve as the
-# baseline — exactly the set Bench.scala's refAcceptable vetoes
-# (suspect is tolerated there: a bimodal row is information; older
-# snapshots' capped_twice ⊆ failed and recovered ⊆ capped are covered
-# transitively). Before r15 this omitted zombie_after, so the gate
-# could compare streaming mins against a zombie-tainted baseline
-# Bench itself would refuse (ADVICE r14).
-CLEAN_LISTS = ["failed", "degraded", "capped", "skipped", "env_suspect",
-               "zombie_after"]
+REF = f"{REPO}/BENCH_REF.json"
 
 
-def git(*args):
-    r = subprocess.run(["git", "-C", REPO, *args], capture_output=True, text=True)
-    return r.stdout if r.returncode == 0 else None
-
-
-def is_clean(snap):
-    if snap.get("partial", False):
-        return False
-    return all(len(snap.get(k, [])) == 0 for k in CLEAN_LISTS)
-
-
-def committed_clean_ref(name="BENCH_LOCAL.json"):
-    # depth 200 (was 50 — ADVICE r14: a long run of flagged snapshots
-    # between clean adoptions could silently exhaust the walk and
-    # report "no clean reference"); the walk stops at the first clean
-    # hit, so the deeper bound only costs anything in the failure case,
-    # where it now also warns instead of failing silently
-    log = git("log", "--format=%H", "-n", "200", "HEAD", "--", name) or ""
-    shas = log.split()
-    for sha in shas:
-        body = git("show", f"{sha}:./{name}")
-        if not body:
-            continue
-        try:
-            snap = json.loads(body)
-        except ValueError:
-            continue
-        if is_clean(snap):
-            return sha[:7], snap
-    if shas:
-        print(f"WARNING: walked {len(shas)} committed snapshots of {name} "
-              "without finding a clean one — every one carries flags",
-              file=sys.stderr)
-    return None, None
+def committed_ref():
+    try:
+        body = open(REF, "rb").read()
+    except OSError:
+        return None, None
+    return hashlib.sha256(body).hexdigest()[:12], json.loads(body)
 
 
 def main():
     cand_path = sys.argv[1] if len(sys.argv) > 1 else f"{REPO}/BENCH_LOCAL.json"
     cand = json.load(open(cand_path))
-    ref_sha, ref = committed_clean_ref()
+    ref_sha, ref = committed_ref()
     problems = []
 
     if cand.get("partial", False):
@@ -172,7 +135,7 @@ def main():
     if h.get("steal_ticks_start", -1) >= 0 and h.get("steal_ticks_end", -1) >= 0:
         steal_note = f"  steal={h['steal_ticks_end'] - h['steal_ticks_start']}t"
     print(f"candidate: {cand_path}  total={total}s  rows={len(cand.get('queries', {}))}{steal_note}")
-    print(f"reference: git:{ref_sha}  total={ref_total}s" if ref else "reference: NONE")
+    print(f"reference: BENCH_REF.json:sha256:{ref_sha}  total={ref_total}s" if ref else "reference: NONE")
     if problems:
         print("NOT ADOPTABLE:")
         for p in problems:
