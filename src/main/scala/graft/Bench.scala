@@ -60,6 +60,16 @@ private[graft] object BenchStats {
     rows.collect { case (n, minNow, swNow) if refStats.get(n).exists {
       case (refMin, refSw) => sameSignature(refSw, swNow) && divergent(refMin, minNow) } => n }
 
+  /** The reference rows a run's timings may be compared with — for
+    * [[envSuspects]] and the [[timedRuns]] fast path: all of them when
+    * the reference ran on the run's core count, none otherwise. A 4-core
+    * min several times a 32-core min is the core count, not the
+    * environment, and a row's stability at one core count says nothing
+    * about another. */
+  def comparableRef[V](refStats: Map[String, V], refCores: Int,
+      cores: Int): Map[String, V] =
+    if (refCores == cores) refStats else Map.empty
+
   /** Per-query wall cap: a query that stalls — environment collapse, a
     * pathological plan, a hung stream — must be recorded failed at the
     * cap instead of eating the whole suite. 10× the committed reference
@@ -204,7 +214,9 @@ private[graft] object BenchStats {
   * `env_suspect` ([[BenchStats.envSuspects]]: unchanged shuffle
   * signature, min > 3× the committed reference min), `capped` (a run
   * blew the canary-scaled wall cap and was cancelled), `degraded` /
-  * `skipped` (past the suite budget) and `zombie_after`. Paired A/B
+  * `skipped` (past the suite budget) and `zombie_after`. `env_suspect`
+  * and the 2-run fast path read the reference only when it ran on the
+  * run's core count (`cores`, [[BenchStats.comparableRef]]). Paired A/B
   * runs, not re-windows, decide whether a change is faster. The stdout
   * line keeps `recovered`, `capped_twice` and `rewindowed` because its
   * reader JSON-decodes a fixed key set; they counted the outcomes of
@@ -419,10 +431,12 @@ object Bench {
     * shuffle_write_mb) — median feeds the per-query wall cap, (min, sw)
     * the uniform-contamination guard — plus whether the snapshot is
     * ACCEPTABLE as a reference (BenchStats.refAcceptable over its
-    * contamination flags) and its pinned clean-window sched canary
-    * (min of sched_start/sched_end; None for pre-canary snapshots). */
+    * contamination flags), its pinned clean-window sched canary
+    * (min of sched_start/sched_end; None for pre-canary snapshots) and
+    * the core count it ran on ([[RefCoresDefault]] for snapshots that
+    * predate the field). */
   private[graft] def parseBenchSnapshot(json: String)
-      : (Map[String, (Double, Double, Double)], Boolean, Option[Double]) = {
+      : (Map[String, (Double, Double, Double)], Boolean, Option[Double], Int) = {
     val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
     val meds = root.path("queries")
     val mins = root.path("min")
@@ -441,8 +455,13 @@ object Bench {
     val canary = root.path("canary_ms")
     val sched = Seq("sched_start", "sched_end")
       .map(canary.path(_)).filter(_.isNumber).map(_.asDouble())
-    (stats, acceptable, sched.minOption)
+    (stats, acceptable, sched.minOption,
+      root.path("cores").asInt(RefCoresDefault))
   }
+
+  /** Core count of a snapshot without a `cores` field: the default of
+    * tools/adopt_bench.sh, the only writer of the reference. */
+  private[graft] val RefCoresDefault = 32
 
   /** The checkout this build runs from (its classes sit in
     * `<root>/target/scala-2.13/classes`): the adopted reference lives at
@@ -460,7 +479,7 @@ object Bench {
     * a flagged snapshot is evidence, never a baseline) leaves the run
     * unreferenced — 600 s base caps, no env guard — with a warning. */
   private[graft] def readRef(path: Path)
-      : Option[(Map[String, (Double, Double, Double)], String, Option[Double])] = {
+      : Option[(Map[String, (Double, Double, Double)], String, Option[Double], Int)] = {
     def none(why: String) = {
       System.err.println(s"[bench] WARNING: reference $path $why — the run is unreferenced")
       None
@@ -468,10 +487,10 @@ object Bench {
     if (!Files.isRegularFile(path)) none("is missing")
     else try {
       val body = Files.readString(path)
-      val (stats, ok, sched) = parseBenchSnapshot(body)
+      val (stats, ok, sched, cores) = parseBenchSnapshot(body)
       val sha12 = java.security.MessageDigest.getInstance("SHA-256")
         .digest(body.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-      if (ok) Some((stats, s"${path.getFileName}:sha256:$sha12", sched))
+      if (ok) Some((stats, s"${path.getFileName}:sha256:$sha12", sched, cores))
       else none("carries contamination flags")
     } catch { case NonFatal(e) => none(s"is unreadable: $e") }
   }
@@ -491,7 +510,7 @@ object Bench {
   private[graft] def artifactJson(rows: Seq[BenchRow], envSuspects: Seq[String],
       partial: Boolean, degraded: Seq[String], capped: Seq[String],
       skipped: Seq[String], refSource: String, budgetSec: Double,
-      sfDir: String, scratch: String, canaries: Seq[(String, Double)],
+      sfDir: String, cores: Int, scratch: String, canaries: Seq[(String, Double)],
       canarySeries: Seq[(Int, String, Double, Long)],
       timedRunsPlan: Seq[(String, Int)], schedRefMs: Double,
       streamingNames: Set[String], host: Seq[(String, Long)]): String = {
@@ -521,7 +540,7 @@ object Bench {
     val suspects = rows.collect {
       case r if BenchStats.isSuspect(r.median, r.min) => r.name
     }
-    s"""{"metric":"total","value":$total,"unit":"sec","partial":$partial,"queries":$medians,"min":$mins,"runs":$runs,"run_t":$runT,"shuffle_write_mb":$shufW,"shuffle_read_mb":$shufR,"gc_ms":$gc,"bench_ref":"$refSource","sched_ref_ms":${r2(schedRefMs)},"budget_sec":${r2(budgetSec)},"scratch":"$scratch","canary_ms":${obj(canaries.map { case (k, v) => k -> r2(v).toString })},"canary_series":$series,"sched_ms":$schedRows,"stream_floor":$floors,"failed":${q(failed)},"suspect":${q(suspects)},"env_suspect":${q(envSuspects)},"degraded":${q(degraded)},"capped":${q(capped)},"host":${obj(host.map { case (k, v) => k -> v.toString })},"zombie_after":${q({ import scala.jdk.CollectionConverters._; zombies.iterator().asScala.toSeq })},"skipped":${q(skipped)},"streaming":${q(rows.map(_.name).filter(streamingNames.contains))},"sf":"$sfDir","timed_runs":${obj(timedRunsPlan.map { case (k, v) => k -> v.toString })},"runs_max":$Runs,"stat":"median","note":"every row is measured in ONE window and never re-measured; runs[0] is the untimed warmup, excluded from median/min (degraded rows have no warmup: their runs array holds the single timed run); run_t = suite-relative start second of each runs[] entry, index-aligned, for placing runs against canary_series; suspect = median/min > 2x (contaminated window); shuffle_* = median-run task totals (MB), gc_ms = per-timed-run JVM GC totals — same shuffle + high gc reads as environment pressure, higher shuffle as a plan change; env_suspect = min > 3x the committed reference min with an unchanged shuffle signature, read as uniform environment contamination, not code (bench_ref = BENCH_REF.json at the repo root, the snapshot tools/adopt_bench.sh adopted, named by content hash; none when that file is missing or carries flags — a flagged snapshot is evidence, never a baseline); partial = the suite was still running when this file was last flushed (the file is rewritten after every completed row, so an externally killed sweep still leaves its finished rows here); capped = a run blew the per-query wall cap (max(60s, 10x committed reference median) x max(1, sched_now/sched_ref_ms), capped at 50x; 600s base when unreferenced), was cancelled and the row reports failed; canary_series = spot sched-canary readings (5 no-op 32-task jobs scaled x4 to the 20-job canary_ms unit) every 25 full-mode rows and before each degraded-mode row, with i = how many rows had completed and steal = cumulative /proc/stat steal ticks at the reading; sched_ms = the series reading that scaled the row's cap; stream_floor = per row whose last timed run drained micro-batches, that run's breakdown: n_queries/n_batches, trigger_ms = sum of triggerExecution split into add_batch_ms, planning_ms and offset_wal_ms (walCommit + commitOffsets + latestOffset + getBatch + commitBatch), state_commit_ms (state-store commit task time, can exceed trigger), outside_ms = wall - trigger, input_rows and n_sources; host = cumulative /proc/stat steal ticks (USER_HZ, all-vCPU) and cgroup throttled ms at suite start/end; zombie_after = cap-killed workers that survived interrupt — rows measured after these entries may be contaminated by the un-reaped thread; degraded = measured past the suite wall budget (budget_sec) with a single timed run, no warmup; skipped = not run at all past 2x the budget — the hard stop that guarantees this artifact exists before any external timeout; timed_runs = planned timed runs per row (2 for rows whose committed reference median/min is within 5% and which are not streaming, else 3 = runs_max); streaming = the registry-derived micro-batch replay row set (StreamQueries.queries): always 3 timed runs, and the adoption gate's 1.3x-of-committed-min guard applies to exactly these rows; scratch = the medium (tmpfs|disk) of the per-run java.io.tmpdir root; canary_ms = fixed window-speed workloads at suite start/end (cpu = 20k md5 of 1KB single-core; sched = 20 no-op 32-task jobs) — compare against sched_ref_ms (the committed reference's clean-window sched canary; 500 when the reference predates the field) before adjudicating a wall delta"}"""
+    s"""{"metric":"total","value":$total,"unit":"sec","partial":$partial,"queries":$medians,"min":$mins,"runs":$runs,"run_t":$runT,"shuffle_write_mb":$shufW,"shuffle_read_mb":$shufR,"gc_ms":$gc,"bench_ref":"$refSource","sched_ref_ms":${r2(schedRefMs)},"budget_sec":${r2(budgetSec)},"scratch":"$scratch","canary_ms":${obj(canaries.map { case (k, v) => k -> r2(v).toString })},"canary_series":$series,"sched_ms":$schedRows,"stream_floor":$floors,"failed":${q(failed)},"suspect":${q(suspects)},"env_suspect":${q(envSuspects)},"degraded":${q(degraded)},"capped":${q(capped)},"host":${obj(host.map { case (k, v) => k -> v.toString })},"zombie_after":${q({ import scala.jdk.CollectionConverters._; zombies.iterator().asScala.toSeq })},"skipped":${q(skipped)},"streaming":${q(rows.map(_.name).filter(streamingNames.contains))},"sf":"$sfDir","cores":$cores,"timed_runs":${obj(timedRunsPlan.map { case (k, v) => k -> v.toString })},"runs_max":$Runs,"stat":"median","note":"every row is measured in ONE window and never re-measured; runs[0] is the untimed warmup, excluded from median/min (degraded rows have no warmup: their runs array holds the single timed run); run_t = suite-relative start second of each runs[] entry, index-aligned, for placing runs against canary_series; suspect = median/min > 2x (contaminated window); shuffle_* = median-run task totals (MB), gc_ms = per-timed-run JVM GC totals — same shuffle + high gc reads as environment pressure, higher shuffle as a plan change; env_suspect = min > 3x the committed reference min with an unchanged shuffle signature, read as uniform environment contamination, not code, and only when the reference ran on this run's cores (bench_ref = BENCH_REF.json at the repo root, the snapshot tools/adopt_bench.sh adopted, named by content hash; none when that file is missing or carries flags — a flagged snapshot is evidence, never a baseline); partial = the suite was still running when this file was last flushed (the file is rewritten after every completed row, so an externally killed sweep still leaves its finished rows here); capped = a run blew the per-query wall cap (max(60s, 10x committed reference median) x max(1, sched_now/sched_ref_ms), capped at 50x; 600s base when unreferenced), was cancelled and the row reports failed; canary_series = spot sched-canary readings (5 no-op 32-task jobs scaled x4 to the 20-job canary_ms unit) every 25 full-mode rows and before each degraded-mode row, with i = how many rows had completed and steal = cumulative /proc/stat steal ticks at the reading; sched_ms = the series reading that scaled the row's cap; stream_floor = per row whose last timed run drained micro-batches, that run's breakdown: n_queries/n_batches, trigger_ms = sum of triggerExecution split into add_batch_ms, planning_ms and offset_wal_ms (walCommit + commitOffsets + latestOffset + getBatch + commitBatch), state_commit_ms (state-store commit task time, can exceed trigger), outside_ms = wall - trigger, input_rows and n_sources; host = cumulative /proc/stat steal ticks (USER_HZ, all-vCPU) and cgroup throttled ms at suite start/end; zombie_after = cap-killed workers that survived interrupt — rows measured after these entries may be contaminated by the un-reaped thread; degraded = measured past the suite wall budget (budget_sec) with a single timed run, no warmup; skipped = not run at all past 2x the budget — the hard stop that guarantees this artifact exists before any external timeout; cores = local[N] of this run (a reference without the field ran on 32); timed_runs = planned timed runs per row (2 for rows whose committed reference, at this run's cores, has median/min within 5% and which are not streaming, else 3 = runs_max); streaming = the registry-derived micro-batch replay row set (StreamQueries.queries): always 3 timed runs, and the adoption gate's 1.3x-of-committed-min guard applies to exactly these rows; scratch = the medium (tmpfs|disk) of the per-run java.io.tmpdir root; canary_ms = fixed window-speed workloads at suite start/end (cpu = 20k md5 of 1KB single-core; sched = 20 no-op 32-task jobs) — compare against sched_ref_ms (the committed reference's clean-window sched canary; 500 when the reference predates the field) before adjudicating a wall delta"}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -548,9 +567,13 @@ object Bench {
     // shutdown hook reclaims it on exit, including the SIGTERM a driver
     // timeout delivers; only SIGKILL leaks, until reboot.
     val scratchMedium = Scratch.install("bench", preferTmpfs = true)
-    val (refStats, refSource, refSched) =
-      readRef(refFile).getOrElse((Map.empty[String, (Double, Double, Double)], "none", None))
-    val refMinSw = refStats.map { case (n, (_, mn, sw)) => n -> (mn, sw) }
+    val (refStats, refSource, refSched, refCores) = readRef(refFile)
+      .getOrElse((Map.empty[String, (Double, Double, Double)], "none", None, RefCoresDefault))
+    val cores = graft.engine.Engine.cores
+    // caps take every reference row (a safety stop, generous either
+    // way); timings are compared only at the reference's core count
+    val refSameCores = BenchStats.comparableRef(refStats, refCores, cores)
+    val refMinSw = refSameCores.map { case (n, (_, mn, sw)) => n -> (mn, sw) }
     // clean-window sched reference for cap scaling: the committed
     // snapshot's pinned canary when present, else 500ms — the r13
     // judge-measured clean-window full-canary range was 388-502ms, and
@@ -591,7 +614,7 @@ object Bench {
     def flush(rows: Seq[BenchRow], partial: Boolean): Unit = {
       val json = artifactJson(rows, envSuspectsOf(rows), partial,
         degraded.toSeq, capped.toSeq, skipped.toSeq, refSource, budgetSec,
-        sfDir, scratchMedium, canaries.toSeq, series.toSeq,
+        sfDir, cores, scratchMedium, canaries.toSeq, series.toSeq,
         timedRunsPlan.toSeq, schedRefMs, streamingNames, host.toSeq)
       // temp + atomic rename: an external kill landing mid-write must
       // never truncate the artifact the flush exists to preserve
@@ -664,8 +687,8 @@ object Bench {
             BenchRow(name, sec, sec, runsM.map(_._1), runsM.head._2,
               runsM.head._3, runsM.map(_._4), schedUsed, runsM.map(_._5), last)
           case _ =>
-            val nRuns = BenchStats.timedRuns(refStats.get(name).map(_._1),
-              refStats.get(name).map(_._2), streamingNames.contains(name))
+            val nRuns = BenchStats.timedRuns(refSameCores.get(name).map(_._1),
+              refSameCores.get(name).map(_._2), streamingNames.contains(name))
             timedRunsPlan(name) = nRuns
             val warmT = elapsed()
             val (warm, wCapped) = timeOnceCapped(spark, fn(spark, sfDir), capNow, name)

@@ -39,8 +39,15 @@ object Scratch {
     val root = base.resolve(s"graft_${tag}_${ProcessHandle.current().pid()}")
     Files.createDirectories(root)
     sys.props("java.io.tmpdir") = root.toString
+    // other shutdown hooks delete their own entries under `root` at the
+    // same time (Spark's temp dirs, the JFR repository a recording left
+    // in tmpdir); a walk that meets a vanished entry throws and deletes
+    // nothing, so walk again once they are done
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try graft.ops.Scale.deleteTree(root) catch { case _: Throwable => () }))
+      Iterator.range(0, 20).exists { _ =>
+        scala.util.Try(graft.ops.Scale.deleteTree(root)).isSuccess ||
+          { Thread.sleep(50); false }
+      }: Unit))
     if (useShm) "tmpfs" else "disk"
   }
 }

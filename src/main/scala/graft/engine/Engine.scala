@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.types.StructType
 
 /** Session facade for the engine — the Spark analogue of the reference's
@@ -12,7 +13,8 @@ import org.apache.spark.sql.types.StructType
   * one place a SparkSession is built: `local[cores]` with `cores`
   * shuffle partitions ([[cores]] reads `SPARK_GRAFT_CPUS`, else the
   * machine's processors), AQE with partition coalescing, the UTC session
-  * zone, UI off, WARN logging and the [[tune]] planner relaxation.
+  * zone, UI off, local file I/O that starts no child process, WARN
+  * logging and the [[tune]] planner relaxation.
   * [[configure]] then registers the seeded `types` view, the `test` CSV
   * and the 32-bit sum aggregates (one class in two modes,
   * [[graft.udaf.Udafs]]); [[registerTestdata]] adds the testdata parquet
@@ -97,9 +99,30 @@ object Engine {
   }
 
   /** Build (or reuse) the local session: `local[cores]`, one shuffle
-    * partition per core, AQE + coalescing, UTC, UI off, then [[tune]].
-    * Static confs a caller needs beyond these go in as `spark.*` JVM
-    * system properties before the call; SparkConf reads those. */
+    * partition per core, AQE + coalescing, UTC, UI off, fork-free local
+    * file I/O, then [[tune]]. Static confs a caller needs beyond these go
+    * in as `spark.*` JVM system properties before the call; SparkConf
+    * reads those.
+    *
+    * Fork-free local file I/O is two constants. Without `libhadoop`,
+    * Hadoop's local filesystem starts a child process per file: two
+    * `readlink` per `FileContext` rename and one `chmod` per created file
+    * or directory (3,436 process starts in one perfbench
+    * `sql_stream_write` run on a 4-vCPU host, counted with JFR
+    * `jdk.ProcessStart`; 10 with these constants).
+    *  - `checkpointFileManagerClass` = Spark's
+    *    `FileSystemBasedCheckpointFileManager`, which renames through
+    *    `FileSystem.rename` (`File.renameTo`) instead of `FileContext`.
+    *    On `file:` both managers check existence and then `rename(2)`,
+    *    so atomicity and overwrite behaviour are those of the default,
+    *    and every checkpoint a `local[N]` session writes is on `file:`.
+    *  - `fs.file.impl` = [[ForkFreeLocalFileSystem]], which sets modes
+    *    through `java.nio` instead of `chmod`; modes are unchanged.
+    * Together they keep offset and commit logs, state-store delta and
+    * checksum files, file-sink metadata and parquet writes in-process.
+    * Hadoop caches a filesystem per scheme and user, not per conf, so
+    * the first `file:` filesystem the JVM creates is the one it keeps:
+    * build the session before touching Hadoop paths. */
   def session(cores: Int = Engine.cores): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
@@ -109,6 +132,10 @@ object Engine {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[FileSystemBasedCheckpointFileManager].getName)
+      .config("spark.hadoop.fs.file.impl",
+        classOf[ForkFreeLocalFileSystem].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     tune(spark)

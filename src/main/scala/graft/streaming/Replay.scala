@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Ordered multi-file replay input for the streaming CORRECTNESS rows.
@@ -128,14 +128,17 @@ object Replay {
     root.toString
   }
 
-  /** The earliest-chunk bound (lo + span/chunks in epoch µs) — callers
-    * construct the deliberately-late frame from rows strictly below it
-    * so "late" is defined by the same arithmetic that defined chunk 0. */
-  def firstChunkBoundUs(s: SparkSession, dir: String, chunks: Int): Long = {
-    val ev = graft.engine.Engine.table(s, dir, "events")
+  /** The earliest-chunk bound (lo + span/chunks in epoch µs) as a
+    * scalar subquery over events — callers construct the deliberately-
+    * late frame from rows strictly below it so "late" is defined by the
+    * same integer arithmetic that defined chunk 0. The min/max scan runs
+    * only when that frame runs, i.e. on a cold [[eventsDir]] build, not
+    * on every query that merely plans it. */
+  def firstChunkBound(s: SparkSession, dir: String, chunks: Int): Column = {
     val us = unix_micros(col("ts").cast("timestamp"))
-    val r = ev.agg(min(us), max(us)).head()
-    val (lo, hi) = (r.getLong(0), r.getLong(1))
-    lo + (hi - lo + 1) / chunks
+    graft.engine.Engine.table(s, dir, "events")
+      .agg(min(us).as("lo"), max(us).as("hi"))
+      .select(expr(s"lo + (hi - lo + 1) div $chunks"))
+      .scalar()
   }
 }

@@ -414,7 +414,7 @@ object StreamQueries {
       val sink = "q_stream_late_drop_sink"
       val ev = Engine.table(s, dir, "events")
       val us = unix_micros(col("ts").cast("timestamp"))
-      val late = ev.filter(us < Replay.firstChunkBoundUs(s, dir, 3))
+      val late = ev.filter(us < Replay.firstChunkBound(s, dir, 3))
         .select((col("event_id") + 5000000L).as("event_id"), col("ts"),
           col("user_id"), col("event_type"), col("value"), col("props"))
       val rd = Replay.eventsDir(s, dir, 3, Some(late), "late-clones")

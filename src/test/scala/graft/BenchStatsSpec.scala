@@ -32,6 +32,16 @@ class BenchStatsSpec extends AnyFunSuite {
     assert(BenchStats.envSuspects(Seq(("new_query", 100.0, 50.0)), Map.empty).isEmpty)
   }
 
+  test("comparableRef: a reference on other cores flags no env_suspect") {
+    // a 4-core row 3.5x slower than the 32-core reference, same shuffle:
+    // the core count, not the environment
+    val ref = Map("q" -> (1.0, 10.0))
+    val row = Seq(("q", 3.5, 10.0))
+    assert(BenchStats.envSuspects(row, BenchStats.comparableRef(ref, 32, 4)).isEmpty)
+    // the same row against a reference on its own core count is flagged
+    assert(BenchStats.envSuspects(row, BenchStats.comparableRef(ref, 4, 4)) == Seq("q"))
+  }
+
   test("capSeconds: 10x reference median with a 60s floor; 600s unreferenced") {
     // sub-second rows must not be cap-killed by one GC pause
     assert(BenchStats.capSeconds(Some(0.5)) == 60.0)
@@ -110,7 +120,7 @@ class BenchStatsSpec extends AnyFunSuite {
         Seq(0L, 0L), schedMs = 310.0, tSec = Seq(12.0, 13.0, 13.6))),
     envSuspects = Seq.empty, partial = false, degraded = degraded,
     capped = Seq.empty, skipped = Seq.empty, refSource = "test",
-    budgetSec = 1500.0, sfDir = "/tmp/sf",
+    budgetSec = 1500.0, sfDir = "/tmp/sf", cores = 4,
     scratch = "tmpfs", canaries = Seq("cpu_start" -> 40.0,
       "sched_start" -> 900.0, "cpu_end" -> 38.0, "sched_end" -> 350.0),
     canarySeries = Seq((0, "start", 900.0, 100L), (0, "warm", 400.0, 101L)),
@@ -122,15 +132,16 @@ class BenchStatsSpec extends AnyFunSuite {
     // the same JSON artifactJson renders; a silent rename on either
     // side would detach every cap and env-guard from its baseline.
     // This is the only place the two private halves meet off-line.
-    val (stats, acceptable, sched) = Bench.parseBenchSnapshot(render(Seq.empty))
+    val (stats, acceptable, sched, cores) = Bench.parseBenchSnapshot(render(Seq.empty))
     assert(acceptable, "a flag-free artifact must parse as an acceptable reference")
     // (median, min, shuffle_write_mb) — mb() renders bytes/1e6 at 2dp
     assert(stats("q_a") == ((2.0, 1.8, 1.0)))
     assert(stats("q_b") == ((0.5, 0.4, 2.0)))
     // sched_ref pins min(sched_start, sched_end)
     assert(sched.contains(350.0))
+    assert(cores == 4)
     // any non-empty guard list vetoes the snapshot as a baseline
-    val (_, flagged, _) = Bench.parseBenchSnapshot(render(Seq("q_b")))
+    val (_, flagged, _, _) = Bench.parseBenchSnapshot(render(Seq("q_b")))
     assert(!flagged)
   }
 
@@ -142,7 +153,7 @@ class BenchStatsSpec extends AnyFunSuite {
       java.nio.file.Files.writeString(ref, render(Seq("q_b")))
       assert(Bench.readRef(ref).isEmpty, "a flagged snapshot is never a baseline")
       java.nio.file.Files.writeString(ref, render(Seq.empty))
-      val Some((stats, source, sched)) = Bench.readRef(ref)
+      val Some((stats, source, sched, _)) = Bench.readRef(ref)
       assert(stats.keySet == Set("q_a", "q_b") && sched.contains(350.0))
       // named by content: the file name plus 12 hex of its sha256
       assert(source.matches("BENCH_REF\\.json:sha256:[0-9a-f]{12}"), source)
@@ -150,8 +161,10 @@ class BenchStatsSpec extends AnyFunSuite {
   }
 
   test("the committed BENCH_REF.json is an acceptable reference with a pinned sched canary") {
-    val Some((stats, source, sched)) = Bench.readRef(Bench.refFile)
+    val Some((stats, source, sched, cores)) = Bench.readRef(Bench.refFile)
     assert(stats.size == 307, s"${stats.size} rows")
+    // it predates the cores field: read as tools/adopt_bench.sh's 32
+    assert(cores == 32)
     // the 181.023 s adoption: min(sched_start 939.86, sched_end 223.15)
     assert(sched.contains(223.15))
     assert(source.startsWith("BENCH_REF.json:sha256:"), source)

@@ -367,7 +367,7 @@ class StreamingSpec extends SparkSpecBase {
     import org.apache.spark.sql.functions._
     val ev = graft.engine.Engine.table(spark, sfDir, "events")
     val us = unix_micros(col("ts").cast("timestamp"))
-    val bound = graft.streaming.Replay.firstChunkBoundUs(spark, sfDir, 3)
+    val bound = graft.streaming.Replay.firstChunkBound(spark, sfDir, 3)
     val nClones = ev.filter(us < bound).count()
     assert(nClones > 0, "vacuous fixture: empty first chunk")
     val nCloneWindows = ev.filter(us < bound)
