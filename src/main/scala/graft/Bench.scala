@@ -256,7 +256,7 @@ object Bench {
     * Both are read at suite start/end and at every spot canary (two
     * file reads, microseconds), emitted cumulatively; a reader takes
     * deltas across any window of interest. −1 = unreadable. */
-  private[graft] def hostStealTicks(): Long =
+  private def hostStealTicks(): Long =
     try {
       val cpu = Files.readString(Paths.get("/proc/stat")).linesIterator
         .find(_.startsWith("cpu ")).getOrElse("")
@@ -545,7 +545,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_LOCAL.json")
+    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+      refFile.resolveSibling("BENCH_LOCAL.json").toString)
     // suite wall budget (r12 verdict task 1c): the r12 driver bench was
     // externally killed at ~55 min with nothing written. Default 25 min:
     // a clean full sweep runs ~16 min, so the budget only bites when the

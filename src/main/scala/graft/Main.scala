@@ -64,11 +64,7 @@ object Main {
         splitStatements(text).foreach(runOne(spark, _))
       case (None, Some(q)) =>
         // one-shot SQL also lands in history (reference: src/main.rs:38)
-        try java.nio.file.Files.writeString(
-          historyPath, q + "\n",
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.APPEND)
-        catch { case _: java.io.IOException => }
+        appendHistory(q)
         runOne(spark, q)
       case (None, None) => repl(spark)
     }
@@ -118,6 +114,14 @@ object Main {
   }
 
   private val historyPath = java.nio.file.Paths.get(".history.txt")
+
+  /** Appends one statement to `.history.txt` as a single line. History
+    * is best-effort: a file that cannot be written never stops a query. */
+  private def appendHistory(stmt: String): Unit =
+    try java.nio.file.Files.writeString(historyPath, stmt.replace('\n', ' ') + "\n",
+      java.nio.file.StandardOpenOption.CREATE,
+      java.nio.file.StandardOpenOption.APPEND): Unit
+    catch { case _: java.io.IOException => }
 
   /** Continuation rule for the interactive REPL: accept on ACCEPT_LINE
     * iff the buffer is a complete statement — quit word, `;`-terminated,
@@ -233,11 +237,7 @@ object Main {
           .trim.replaceAll(";+\\s*$", "").trim
         if (Set("q", "exit", "quit").contains(stmt)) return
         if (stmt.nonEmpty) {
-          try java.nio.file.Files.writeString( // history is best-effort
-            historyPath, stmt.replace('\n', ' ') + "\n",
-            java.nio.file.StandardOpenOption.CREATE,
-            java.nio.file.StandardOpenOption.APPEND)
-          catch { case _: java.io.IOException => }
+          appendHistory(stmt)
           runOne(spark, stmt)
         }
       }
@@ -253,9 +253,7 @@ object Main {
       val trimmed = line.trim
       if (Set("q", "exit", "quit").contains(trimmed)) return
       if (trimmed.nonEmpty) {
-        java.nio.file.Files.writeString(
-          historyPath, trimmed + "\n",
-          java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+        appendHistory(trimmed)
         runOne(spark, trimmed)
       }
       print(">> ")

@@ -2,8 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-/** Per-run `java.io.tmpdir` redirect for Verify, Bench and the probes
-  * (and the test JVM): everything Spark parks in tmpdir — memory-sink
+/** Per-run `java.io.tmpdir` redirect for Verify and Bench (and the test
+  * JVM): everything Spark parks in tmpdir — memory-sink
   * temp checkpoints, RocksDB state-store working dirs, `spark.local.dir`
   * shuffle files, the scratch warehouse, replay layouts and every
   * [[tempDir]] a row makes — lands in a fresh per-pid root that is

@@ -55,7 +55,7 @@ object Dedup {
     * reproduces the buckets bit-for-bit (same prefix both sides — the
     * md5Hash64/'0x'||substr pattern the signature slots already use;
     * 15 hex chars keeps Spark's conv() inside the signed-long range,
-    * the ScaleProbe checksum precedent). A 60-bit prefix collision
+    * the probe checksums' precedent). A 60-bit prefix collision
     * (~10⁻⁵ at 5M buckets) merely MERGES two buckets identically in
     * both engines — candidates stay a superset and the exact Jaccard
     * verify decides membership, so results are unchanged even then.
@@ -97,10 +97,11 @@ object Dedup {
   // shingles stay; the verification sides are narrow dedicated frames
   // (below) so no minhash pass is wasted on them.
   //
-  // NOTE 2 (measured, ScaleProbe r6): the OTHER verify alternative —
-  // carrying shingle arrays into the banding shuffle and computing
-  // Jaccard inside each bucket's collected structs, skipping the
-  // two-sided re-join ([[minhashLshInBucket]]) — is a 5-8× shuffle LOSS
+  // NOTE 2 (measured by the r6 scale probe, recorded as
+  // `dedup_minhash_inbucket` in PROBE_LOCAL_{10,100}x.json): the OTHER
+  // verify alternative — carrying shingle arrays into the banding
+  // shuffle and computing Jaccard inside each bucket's collected
+  // structs, skipping the two-sided re-join — is a 5-8× shuffle LOSS
   // (10×: 668 vs 85 MB; 100×: 2964 vs 545 MB) and 1.2-2.3× wall: every
   // doc's array rides all 16 band buckets, where the re-join ships it
   // once per verify side. Its only win is peak task memory (10-26 vs
@@ -159,47 +160,6 @@ object Dedup {
         .as("p"))
       .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
       .distinct()
-  }
-
-  /** PROBE-ONLY alternative to `dedup_minhash_lsh`'s verify stage, for a
-    * measured comparison in ScaleProbe (never a `queries` entry): carry
-    * each document's shingle array INTO the banding shuffle and compute
-    * Jaccard inside the bucket's collected structs, skipping the
-    * two-sided candidate⋈shingles re-join entirely.
-    *
-    * The trade being measured: the re-join design ships every shingle
-    * array twice (once per verify side) but candidate ids are cheap; the
-    * in-bucket design ships every shingle array once PER BAND (16×) but
-    * never re-joins. Same final output as dedup_minhash_lsh by
-    * construction (identical buckets, identical Jaccard, identical
-    * verdict tail). */
-  private[graft] def minhashLshInBucket(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val sig = signatures(docs)
-    val banded = sig.select(col("doc_id"), col("sh"),
-      posexplode(bandKeys(col("sig"))).as(Seq("band", "bkey")))
-    val buckets = banded
-      .groupBy(col("band"), col("bkey"))
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("sh")))).as("ms"))
-      .filter(size(col("ms")).between(2, 64))
-    val verified = buckets
-      .select(explode(flatten(transform(col("ms"), (x, i) =>
-        transform(slice(col("ms"), i + 2, size(col("ms"))),
-          y => struct(x.getField("doc_id").as("a"), y.getField("doc_id").as("b"),
-            jaccard(x.getField("sh"), y.getField("sh")).as("j"))))))
-        .as("p"))
-      .filter(col("p.j") >= 0.7)
-      .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
-      .distinct()
-    val dupOf = verified.select(col("doc_b").as("doc_id"), col("doc_a").as("partner"))
-      .union(verified.select(col("doc_a").as("doc_id"), col("doc_b").as("partner")))
-      .groupBy(col("doc_id")).agg(min(col("partner")).as("dup_partner"))
-    sig.select(col("doc_id"), size(col("sh")).cast("long").as("n_shingles"),
-        lower(lpad(hex(element_at(col("sig"), 1)), 16, "0")).as("minhash_0"))
-      .join(dupOf, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_shingles"), col("minhash_0"),
-        coalesce(col("dup_partner") < col("doc_id"), lit(false)).as("is_near_dup"))
-      .orderBy(col("doc_id"))
   }
 
   /** Connected-component labels (doc_id → min doc_id of its near-dup

@@ -1110,7 +1110,7 @@ object Pipeline {
     // shape) with pairs restricted to survivors, the bench gram set
     // broadcasts, budget admission is the two-phase bucket cut, packing
     // windows per (lang, shard).
-    "pipe_end_to_end" -> ((s, dir) => endToEndStages(s, dir).last._2),
+    "pipe_end_to_end" -> ((s, dir) => endToEnd(s, dir)),
 
     // dataset card / corpus statistics report — the per-language summary
     // a training-data release ships (HF dataset-card style): doc and
@@ -1283,17 +1283,16 @@ object Pipeline {
     })
   )
 
-  /** Stage boundaries of the end-to-end corpus build, exposed so the
-    * 100× probe can record the survivor FUNNEL (`e2e_funnel` in
-    * PROBE_LOCAL_100x.json). On the adversarial near-dup shard the
+  /** The end-to-end corpus build, stage by stage. The r16 scale probe
+    * recorded its survivor FUNNEL per stage (`e2e_funnel` in
+    * PROBE_LOCAL_100x.json). On that adversarial near-dup shard the
     * funnel is the evidence: replicas collapse in the near-dup stage,
     * and the shard's bench-id arithmetic ((orig·100+k) % 50 = 0 ⇔
     * k ∈ {0, 50}) puts EVERY original text in the bench gram set, so
     * decontamination legitimately empties the corpus — AQE then
     * propagates EmptyRelation through the tail stages. The driver
     * contract runs at sf dirs where the funnel stays populated. */
-  private[graft] def endToEndStages(
-      s: SparkSession, dir: String): Seq[(String, DataFrame)] = {
+  private def endToEnd(s: SparkSession, dir: String): DataFrame = {
       val ctxLen = 512L
       val budget = 2000L
       val docs = t(s, dir, "documents")
@@ -1393,7 +1392,7 @@ object Pipeline {
       val wPack = Window.partitionBy(col("lang"), col("shard"))
         .orderBy(col("doc_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val packed = selected
+      selected
         .withColumn("shard",
           md5Bucket(col("doc_id").cast("string"), packShards).cast("long"))
         .withColumn("pk_end", sum(col("n_tok")).over(wPack))
@@ -1402,10 +1401,6 @@ object Pipeline {
           (col("pk_end") - col("n_tok")).as("tok_start"),
           expr(s"(pk_end - n_tok) div $ctxLen").as("bin"))
         .orderBy(col("doc_id"))
-      Seq("gated" -> gated, "exact_kept" -> exactKept,
-        "dedup_survivors" -> surv, "decontaminated" -> clean,
-        "mixed" -> mixed, "budget_selected" -> selected,
-        "packed" -> packed)
   }
 
   private val oracleSql0: Map[String, String] = Map(

@@ -283,9 +283,9 @@ object Similarity {
     // cell assignment is a one-time map pass and each query touches
     // ~P/C of the corpus; cells are the partitioning key so a probe is
     // partition-pruned, not a full scan — MEASURED, not asserted:
-    // ScaleProbe writes the 100× shard partitionBy("cell") and a
-    // 6-of-16-cell probe scan shows PartitionFilters at the source and
-    // reads 192 of 513 files (PROBE_LOCAL_100x.json "ivf_pruning").
+    // the r16 scale probe wrote the 100× shard partitionBy("cell") and
+    // a 6-of-16-cell probe scan showed PartitionFilters at the source
+    // and read 192 of 513 files (PROBE_LOCAL_100x.json "ivf_pruning").
     "ann_ivf" -> ((s, dir) => {
       // recall on UNclustered (uniform random) data is ~nProbe/nCells by
       // construction; real embedding corpora cluster, which is what IVF

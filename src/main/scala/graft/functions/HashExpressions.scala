@@ -514,7 +514,7 @@ object HashExpressions {
     * winnowing postings): 8 bytes per row on the wire instead of the
     * 36-byte hex string, measured 10-40% off the LSH-family shuffles
     * when it replaced the band keys in r11 (acf1768). 15 hex chars keep
-    * Spark's `conv()` inside the signed-long range (the ScaleProbe
+    * Spark's `conv()` inside the signed-long range (the scale-probe
     * checksum precedent); DuckDB reproduces it bit-for-bit as
     * `('0x' || substr(h, 1, 15))::BIGINT`.
     *

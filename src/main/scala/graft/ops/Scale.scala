@@ -296,8 +296,8 @@ object Scale {
     * is COMPUTE (1324s vs 27s on the same shard) that no spill can buy
     * back. Parallelism for both paths is bounded by the number of
     * distinct partition keys — inherent to per-key window semantics,
-    * not to this rewrite. The spill claim is itself measured
-    * ([[graft.SpillProbe]], artifact key `window_range_prefix_spill`):
+    * not to this rewrite. The spill claim is itself measured (r16
+    * record `window_range_prefix_spill` in PROBE_LOCAL_100x.json):
     * under a 394 MiB pool — 20× below that peak — the rewrite spills
     * 1.4 GB to disk and finishes in 32.1s vs 26.8s, identical totals.
     */
@@ -366,8 +366,8 @@ object Scale {
     * the multi-dimensional cousin of bucketing: a one-time layout cost
     * that every later scan with a 2-D predicate amortizes. At 100 TB the
     * layout is the difference between reading the whole table and
-    * reading the predicate's rectangle (measured: ScaleProbe
-    * `zorder_pruning`).
+    * reading the predicate's rectangle (measured: r16 record
+    * `zorder_pruning` in PROBE_LOCAL_100x.json).
     *
     * The two min/max pairs are planning literals (one 1-row agg — same
     * class as a broadcast build, never row data on the driver).
@@ -479,9 +479,9 @@ object Scale {
     // z-ordered layout is value-invariant: a 2-D box query over the
     // rewritten table must hash-match the oracle over the ORIGINAL
     // parquet — the layout may only change what gets READ, never what
-    // gets returned. (The pruning win itself is measured in ScaleProbe's
-    // zorder_pruning block; this entry proves correctness + exercises
-    // the layout writer in the driver contract.)
+    // gets returned. (The pruning win itself is the r16 record
+    // zorder_pruning in PROBE_LOCAL_100x.json; this entry proves
+    // correctness + exercises the layout writer in the driver contract.)
     "q_zorder_scan" -> ((s, dir) => {
       val wh = Paths.get(sys.props("java.io.tmpdir"), "graft_warehouse").toString
       // fingerprint cache key — see q_bucketed_join

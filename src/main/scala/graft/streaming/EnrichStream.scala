@@ -14,10 +14,11 @@ import org.apache.spark.sql.functions._
   * for this join, and the operator is STATELESS: no watermark, no state
   * store, nothing grows with stream length (asserted in the spec via
   * empty `stateOperators`). Contrast [[Sessionize.incremental]], whose
-  * per-user state is the bounded-but-nonzero case, measured by
-  * `graft.StreamStateProbe`. A dim too large to broadcast falls back to
-  * a per-batch shuffle join — correct, but the cue to pre-bucket the
-  * dim (see the `incremental_bucketed` probe) instead.
+  * per-user state is the bounded-but-nonzero case, measured in the r16
+  * record `sessionize_state` (PROBE_LOCAL_100x.json). A dim too large
+  * to broadcast falls back to a per-batch shuffle join — correct, but
+  * the cue to pre-bucket the dim (see the `incremental_bucketed` record)
+  * instead.
   */
 object EnrichStream {
 

@@ -165,7 +165,7 @@ object StreamQueries {
     * exactly-once, and a read through it can never see an uncommitted
     * file. The work dir is a per-invocation temp that nothing here
     * deletes (a caller's frame reads the sink lazily). */
-  private def killAndResume(s: SparkSession, dir: String,
+  private[graft] def killAndResume(s: SparkSession, dir: String,
       filesPerTrigger: Int, rocksDb: Boolean, kill: Boolean = true): String = {
     val files = {
       val st = Files.list(Paths.get(sessionizeReplay(s, dir)))
@@ -194,42 +194,6 @@ object StreamQueries {
       armAndDrain(files.drop(files.size / 2)) // resumed from the checkpoint
     } else armAndDrain(files)
     out
-  }
-
-  /** Probe-only (r10 verdict task 8, run by ScaleProbe — never a
-    * driver-contract row): the recovery ROWS replay at
-    * maxFilesPerTrigger=1 on purpose, exercising per-batch state/
-    * offset/sink commits as many times as the input allows — which is
-    * why their 100× walls are nearly all commit overhead. A production
-    * deployment batches; this probe re-runs the SAME kill-and-resume
-    * sessionization at a production batch size (2 of the 4 replay files
-    * per trigger ⇒ one batch per phase) and measures it against the
-    * UNINTERRUPTED streaming run of the same input at the same
-    * trigger. The restart's own cost — query re-start + offset-log +
-    * state reload — is the only delta, so the ratio shows recovery
-    * amortizing once commits stop dominating. Outputs must agree
-    * exactly (count + Σn_events), same bar as the contract rows.
-    * Returns (uninterrupted_s, recovered_s, sessions). */
-  private[graft] def recoveryAmortized(s: SparkSession, dir: String): (Double, Double, Long) = {
-    def run(kill: Boolean): (Double, Long, Long) = {
-      val t0 = System.nanoTime()
-      val out = killAndResume(s, dir, 2, rocksDb = false, kill = kill)
-      val wall = (System.nanoTime() - t0) / 1e9
-      val agg = s.read.parquet(out).filter(col("user_id") =!= -1L)
-        .agg(count(lit(1)).as("n"), sum(col("n_events")).as("ev")).head()
-      (wall, agg.getLong(0), agg.getLong(1))
-    }
-    // discarded warm-up: the first drain pays replay-dir build, codegen
-    // and sink-format JIT that neither measured variant should carry —
-    // without it the uninterrupted run (measured first) reads SLOWER
-    // than the recovered one and the ratio dips below 1 for the wrong
-    // reason (r11's first cut measured 0.8)
-    run(kill = false)
-    val (uWall, uN, uEv) = run(kill = false)
-    val (rWall, rN, rEv) = run(kill = true)
-    require(uN == rN && uEv == rEv,
-      s"recovered output diverged: uninterrupted ($uN, $uEv) vs killed ($rN, $rEv)")
-    (uWall, rWall, uN)
   }
 
   /** Copy-on-write versioned corpus under `root`, the foreachBatch body

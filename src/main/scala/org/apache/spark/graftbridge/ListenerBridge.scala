@@ -3,7 +3,7 @@ package org.apache.spark.graftbridge
 import org.apache.spark.SparkContext
 
 /** Narrow accessor for SparkContext's `private[spark]` listener bus.
-  * `graft.Profiler` (the diagnostic mains' one task-metrics collector)
+  * `graft.Profiler` (Bench's one task-metrics collector)
   * attributes task metrics and streaming progress to the window that
   * just ran; events drain asynchronously, so without a real flush a
   * straggling event lands after the window's reset and gets credited to

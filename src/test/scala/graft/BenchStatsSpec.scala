@@ -176,7 +176,7 @@ class BenchStatsSpec extends AnyFunSuite {
         "queryPlanning" -> 10L, "walCommit" -> 1L, "commitOffsets" -> 2L,
         "latestOffset" -> 4L, "getBatch" -> 8L, "commitBatch" -> 16L),
       rows, stateCommitMs = 50L, nSources = sources)
-    val p = Profile(wallS = 1.5, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L,
+    val p = Profile(wallS = 1.5, 0L, 0L, 0L,
       queryStarts = 2L, batches = Seq(batch(400L, 7L, 1), batch(300L, 3L, 2)))
     assert(BenchStats.streamFloor(p) == Seq("n_queries" -> 2L,
       "n_batches" -> 2L, "trigger_ms" -> 700L, "add_batch_ms" -> 200L,

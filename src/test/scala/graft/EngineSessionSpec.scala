@@ -57,12 +57,17 @@ class EngineSessionSpec extends AnyFunSuite {
         s"wrapping it: $offenders")
   }
 
-  test("src/main starts streaming queries only in StreamQueries.drain and StreamStateProbe") {
-    // StreamStateProbe keeps one long-running MemoryStream query whose
-    // state it reads between batches; every finite stream is drained
-    val offenders = outside(mainFile("streaming/StreamQueries.scala"),
-      mainFile("StreamStateProbe.scala"))(_.contains("writeStream"))
+  test("src/main starts streaming queries only in StreamQueries.drain") {
+    val offenders = outside(mainFile("streaming/StreamQueries.scala"))(
+      _.contains("writeStream"))
     assert(offenders.isEmpty, s"run finite streams through StreamQueries.drain: $offenders")
+  }
+
+  test("src/main defines mains only in Main, Verify, Bench and Explain") {
+    val offenders = outside(
+      Seq("Main", "Verify", "Bench", "Explain").map(m => mainFile(s"$m.scala")): _*)(
+      _.contains("def main("))
+    assert(offenders.isEmpty, s"a new main needs a reader; measure through Bench: $offenders")
   }
 
   test("src/main and src/test make temp dirs only through Scratch.tempDir") {

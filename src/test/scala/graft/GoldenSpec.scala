@@ -39,6 +39,18 @@ class GoldenSpec extends SparkSpecBase {
     assert(stmts(2) == "SELECT 'it''s; fine' AS esc")
   }
 
+  test("piped REPL prints every result and exits 0 when .history.txt is unwritable") {
+    val dir = Scratch.tempDir("repl_history")
+    try {
+      java.nio.file.Files.createDirectory(dir.resolve(".history.txt"))
+      val (code, out) = ChildJvm.run("graft.Main", Nil, dir, dir,
+        stdin = "select 41 + 1 as x\nselect 'b' || 'c' as y\n")
+      assert(code == 0, s"REPL exited $code: ${out.mkString("\n")}")
+      assert(out.exists(_.contains("|42 |")) && out.exists(_.contains("|bc |")), out)
+      assert(out.count(_.contains("Total execution time")) == 2, out)
+    } finally graft.ops.Scale.deleteTree(dir)
+  }
+
   test("reference README queries replay VERBATIM under the reference's names") {
     // the three queries published in the reference's README benchmark
     // table (reference: README.md:71-75), names and all — sum_cudarc /

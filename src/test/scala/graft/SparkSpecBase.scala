@@ -28,11 +28,13 @@ trait SparkSpecBase extends AnyFunSuite {
 
 /** Runs a main class in a child JVM on this JVM's classpath and module
   * flags, with `java.io.tmpdir` at `tmp`, working directory `cwd` and
-  * `env` added to this JVM's environment. Returns the exit code and the
-  * child's stdout lines (its stderr is discarded). */
+  * `env` added to this JVM's environment, fed `stdin` and then
+  * end-of-input. Returns the exit code and the child's stdout lines
+  * (its stderr is discarded). */
 object ChildJvm {
   def run(main: String, args: Seq[String], tmp: java.nio.file.Path,
-      cwd: java.nio.file.Path, env: Map[String, String] = Map.empty)
+      cwd: java.nio.file.Path, env: Map[String, String] = Map.empty,
+      stdin: String = "")
       : (Int, List[String]) = {
     import scala.jdk.CollectionConverters._
     val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
@@ -49,6 +51,8 @@ object ChildJvm {
       .redirectError(ProcessBuilder.Redirect.DISCARD)
     env.foreach { case (k, v) => pb.environment().put(k, v) }
     val p = pb.start()
+    val in = p.getOutputStream
+    try in.write(stdin.getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally in.close()
     val out = scala.io.Source.fromInputStream(p.getInputStream).getLines().toList
     (p.waitFor(), out)
   }

@@ -533,16 +533,23 @@ class StreamingSpec extends SparkSpecBase {
   }
 
   test("amortized recovery probe: uninterrupted and recovered runs agree with the batch sessions") {
-    import org.apache.spark.sql.functions.{count, lit}
-    // recoveryAmortized itself requires the two runs' (count, Σn_events)
-    // to match; the count must also be the batch twin's, and non-zero
-    val (uninterruptedS, recoveredS, sessions) =
-      StreamQueries.recoveryAmortized(spark, sfDir)
+    import org.apache.spark.sql.functions.{col, count, lit, sum}
+    // the recovery rows replay one file per trigger; here the same
+    // kill-and-resume runs at 2 files per trigger (one batch per phase),
+    // and the killed and uninterrupted runs must emit the same sessions
+    def sessions(kill: Boolean): (Long, Long) = {
+      val out = StreamQueries.killAndResume(spark, sfDir, 2, rocksDb = false, kill = kill)
+      val agg = spark.read.parquet(out).filter(col("user_id") =!= -1L)
+        .agg(count(lit(1)), sum(col("n_events"))).head()
+      (agg.getLong(0), agg.getLong(1))
+    }
+    val (uN, uEv) = sessions(kill = false)
+    val (rN, rEv) = sessions(kill = true)
+    assert((rN, rEv) == ((uN, uEv)), s"killed ($rN, $rEv) vs uninterrupted ($uN, $uEv)")
     val batch = SparkEntry.queries("q_sessionize")(spark, sfDir)
       .agg(count(lit(1))).head().getLong(0)
-    assert(sessions > 0, "no sessions emitted")
-    assert(sessions == batch, s"probe sessions=$sessions batch=$batch")
-    assert(uninterruptedS > 0 && recoveredS > 0)
+    assert(uN > 0, "no sessions emitted")
+    assert(uN == batch, s"stream sessions=$uN batch=$batch")
   }
 }
 

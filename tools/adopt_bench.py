@@ -38,9 +38,10 @@ the current reference; reasons on stdout.
 """
 import hashlib
 import json
+import os
 import sys
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SCHED_MAX_MS = 650.0
 SERIES_MEDIAN_MAX_MS = 500.0
 CPU_MAX_MS = 55.0

@@ -10,7 +10,7 @@
 #
 # Usage: tools/adopt_bench.sh [K]   (default 3 attempts)
 set -u -o pipefail
-cd /root/repo
+cd "$(dirname "$0")/.." || exit 2
 K="${1:-3}"
 
 # 10s host-steal pre-probe (r15): a full sweep costs ~15-25 min; when

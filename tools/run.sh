@@ -2,6 +2,7 @@
 # Direct JVM runner for graft mains (faster than sbt, real stdin).
 # Usage: tools/run.sh <mainClass> [args...]
 MAIN="$1"; shift
+ROOT=$(cd "$(dirname "$0")/.." && pwd)
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
@@ -13,5 +14,5 @@ done
 exec java $OPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" \
   "$MAIN" "$@"
