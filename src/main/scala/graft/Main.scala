@@ -20,7 +20,14 @@ import graft.engine.Engine
   */
 object Main {
 
-  def main(args: Array[String]): Unit = {
+  /** Everything the CLI prints goes out as UTF-8, whatever the locale:
+    * under a POSIX locale the JVM's own stdout would print the timing
+    * line's `µ`, and any non-ASCII result cell, as `?`. */
+  def main(args: Array[String]): Unit =
+    Console.withOut(new java.io.PrintStream(new java.io.FileOutputStream(
+      java.io.FileDescriptor.out), true, java.nio.charset.StandardCharsets.UTF_8))(run(args))
+
+  private def run(args: Array[String]): Unit = {
     var sql: Option[String] = None
     var script: Option[String] = None
     var len = 1024L // reference default (src/main.rs:16-17)

@@ -1,8 +1,22 @@
 package graft.engine
 
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.{CSVInferSchema, CSVOptions}
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, NullType, StructType}
 
 /** Session facade for the engine — the Spark analogue of the reference's
   * `build_ctx` (reference: src/lib.rs:21-60), which constructs a
@@ -25,7 +39,10 @@ import org.apache.spark.sql.types.StructType
   * [[stream]], takes its schema from the file itself, inferred once and
   * memoized by [[contentFingerprint]] (file names, sizes and mtimes, so
   * a rewritten file gets a new key). The memo holds schemas only, never
-  * data; a warm read starts no Spark job.
+  * data. Both schemas set-up needs, the `test` CSV's ([[csvSchema]])
+  * and each parquet file's ([[parquetSchema]]), are inferred on the
+  * driver by Spark's own inference code, so [[build]] and
+  * [[registerTestdata]] start no Spark job.
   *
   * All SQL surface beyond the custom aggregates is inherited from Catalyst,
   * exactly as the reference inherits DataFusion's default SQL surface via
@@ -173,12 +190,44 @@ object Engine {
     TypesTable.generate(spark, opts.typesTableLength, opts.seed)
       .createOrReplaceTempView("types")
     opts.csvPath.foreach { p =>
-      // reference: CsvReadOptions::default() = header + type inference (src/lib.rs:57-58)
-      spark.read.option("header", "true").option("inferSchema", "true").csv(p)
+      // reference: CsvReadOptions::default() = header + type inference
+      // (src/lib.rs:57-58); the types are inferred here, without a job
+      spark.read.schema(csvSchema(spark, p)).option("header", "true").csv(p)
         .createOrReplaceTempView("test")
     }
     graft.udaf.Udafs.registerAll(spark)
     spark
+  }
+
+  /** The schema Spark's header + type inference gives the one CSV file
+    * `path`, computed on the driver with the code Spark runs for it
+    * (`CSVUtils`, `CSVInferSchema`) instead of in two Spark jobs: a
+    * `take(1)` for the header line and an `aggregate` that folds
+    * `inferRowType` over the rows. The fold here is that aggregate's:
+    * comment and blank lines dropped, every copy of the header line
+    * dropped, each column starting from `NullType`. */
+  private[graft] def csvSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.conf
+    val opts = new CSVOptions(Map("header" -> "true", "inferSchema" -> "true"),
+      conf.csvColumnPruning, conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
+    // Hadoop's line reader, which Spark's text scan uses, drops a UTF-8
+    // byte-order mark and ends lines at \n, \r or \r\n, as String.lines does
+    val text = new String(Files.readAllBytes(Paths.get(path)), StandardCharsets.UTF_8)
+    val lines = CSVUtils.filterCommentAndEmpty(
+      text.stripPrefix("\uFEFF").lines().iterator().asScala, opts).toVector
+    val parser = new CsvParser(opts.asParserSettings)
+    lines.headOption match {
+      case None => new StructType() // no header line: Spark infers no column
+      case Some(first) =>
+        val header = CSVUtils.makeSafeHeader(
+          parser.parseLine(first), conf.caseSensitiveAnalysis, opts)
+        val infer = new CSVInferSchema(opts)
+        val types = SQLConf.withExistingConf(conf) {
+          CSVUtils.filterHeaderLine(lines.iterator, first, opts).map(parser.parseLine)
+            .foldLeft(Array.fill[DataType](header.length)(NullType))(infer.inferRowType)
+        }
+        StructType(infer.toStructFields(types, header))
+    }
   }
 
   /** Testdata tables (TESTDATA.md). Reading per-query keeps the parquet
@@ -197,7 +246,6 @@ object Engine {
     * distinct derivations apart. */
   private[graft] def contentFingerprint(
       src: java.nio.file.Path, salt: String): String = {
-    import scala.jdk.CollectionConverters._
     val files = (if (java.nio.file.Files.isDirectory(src)) {
         val st = java.nio.file.Files.list(src)
         try st.iterator().asScala.toSeq finally st.close()
@@ -214,17 +262,49 @@ object Engine {
   private val schemas =
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
+  /** The schema Spark's parquet reader infers for `path`, read on the
+    * driver from one footer instead of in a Spark job. The footer is the
+    * one Spark's `ParquetUtils.inferSchema` reads when `mergeSchema` is
+    * off: a `_common_metadata`, else a `_metadata` summary, else the
+    * first data file by path; names starting with `_` or `.` are not
+    * data (a `_SUCCESS` marker, `.crc` checksums). A directory is read
+    * flat, as [[contentFingerprint]] keys it: no partition subdirectories.
+    * The footer is converted as Spark converts it: the Spark schema the
+    * writer stored in it, else the parquet schema under the session's
+    * conversion settings. */
+  private[graft] def parquetSchema(spark: SparkSession, path: String): StructType = {
+    val root = Paths.get(path)
+    val files =
+      if (!Files.isDirectory(root)) Seq(root)
+      else {
+        val st = Files.list(root)
+        try st.iterator().asScala.filter(Files.isRegularFile(_)).toSeq.sortBy(_.toString)
+        finally st.close()
+      }
+    def name(p: java.nio.file.Path) = p.getFileName.toString
+    val chosen = Seq("_common_metadata", "_metadata")
+      .flatMap(summary => files.find(name(_) == summary)).headOption
+      .orElse(files.find(p => !name(p).startsWith("_") && !name(p).startsWith(".")))
+      .getOrElse(throw new java.io.FileNotFoundException(s"no parquet data file under $path"))
+    val file = new HPath(chosen.toUri)
+    val meta = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromPath(file, spark.sessionState.newHadoopConf()),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file, meta),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
   /** `$sfDir/$name.parquet` read with the schema inferred from the file
-    * on its first read. The inference (one Spark job over the footers)
-    * runs here, in this method's own frame, and only when the memo has
-    * no entry for the file's current content; two racing cold reads
-    * both infer and store the same schema. */
+    * ([[parquetSchema]], no Spark job) on its first read. The inference
+    * runs only when the memo has no entry for the file's current
+    * content; two racing cold reads both infer and store the same
+    * schema. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val key = contentFingerprint(java.nio.file.Paths.get(path), "schema")
+    val key = contentFingerprint(Paths.get(path), "schema")
     val schema = schemas.get(key) match {
       case null =>
-        val inferred = spark.read.parquet(path).schema
+        val inferred = parquetSchema(spark, path)
         schemas.putIfAbsent(key, inferred)
         inferred
       case known => known
@@ -290,8 +370,9 @@ object Engine {
 
   // registerTestdata memo: session UUID → last-registered sfDir.
   // With every schema already in the [[table]] memo, registration still
-  // lists 10 files and re-plans 10 views: a median of ~200 ms per call at
-  // sf0.1 on 4 cores, which would land inside the timed bodies of the
+  // fingerprints 10 files and re-plans 10 views: a median of 225 ms per
+  // call at sf0.1 (30 calls on fresh sessions of one local[4] context,
+  // 4 vCPUs), which would land inside the timed bodies of the
   // view/EXPLAIN bench queries. Temp views are session-scoped, so the
   // memo key is the session identity; the VALUE is the sfDir because the
   // views share names across scale factors — a session that switches

@@ -112,12 +112,15 @@ object Sources {
         .orderBy(col("c_mktsegment"))
     }),
 
-    // CTAS-shaped parquet sink → scan (predicate applied pre-sink)
+    // CTAS-shaped parquet sink → scan (predicate applied pre-sink). The
+    // scan's schema is read from a footer without a job, and not through
+    // Engine.table: `out` is rewritten every run, so its schema memo would
+    // grow by one entry per run
     "q_parquet_ctas" -> ((s, dir) => {
       val out = scratch("pq_bigorders")
       t(s, dir, "orders").filter(col("o_totalprice") > 200000)
         .write.mode("overwrite").parquet(out)
-      s.read.parquet(out)
+      s.read.schema(Engine.parquetSchema(s, out)).parquet(out)
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"), round(avg(col("o_totalprice")), 4).as("avg_price"))
         .orderBy(col("o_orderpriority"))

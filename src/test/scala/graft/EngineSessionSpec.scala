@@ -63,6 +63,14 @@ class EngineSessionSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"run finite streams through StreamQueries.drain: $offenders")
   }
 
+  test("Engine.scala infers no schema in a Spark job: no inferSchema option, no schemaless parquet read") {
+    val src = java.nio.file.Files.readString(engine)
+    assert("""option\s*\(\s*"inferSchema"""".r.findFirstIn(src).isEmpty,
+      "infer the CSV schema with Engine.csvSchema")
+    assert("""read\s*\.\s*parquet\s*\(""".r.findFirstIn(src).isEmpty,
+      "read parquet with .schema(Engine.parquetSchema(...))")
+  }
+
   test("src/main defines mains only in Main, Verify, Bench and Explain") {
     val offenders = outside(
       Seq("Main", "Verify", "Bench", "Explain").map(m => mainFile(s"$m.scala")): _*)(

@@ -43,11 +43,15 @@ class GoldenSpec extends SparkSpecBase {
     val dir = Scratch.tempDir("repl_history")
     try {
       java.nio.file.Files.createDirectory(dir.resolve(".history.txt"))
+      // under the POSIX locale a JVM's own stdout encodes µ as ?; the
+      // REPL's output is UTF-8 whatever the locale
       val (code, out) = ChildJvm.run("graft.Main", Nil, dir, dir,
+        env = Map("LC_ALL" -> "C"),
         stdin = "select 41 + 1 as x\nselect 'b' || 'c' as y\n")
       assert(code == 0, s"REPL exited $code: ${out.mkString("\n")}")
       assert(out.exists(_.contains("|42 |")) && out.exists(_.contains("|bc |")), out)
-      assert(out.count(_.contains("Total execution time")) == 2, out)
+      val timings = out.filter(_.contains("Total execution time"))
+      assert(timings.size == 2 && timings.forall(_.matches(".*: \\d+µs")), out)
     } finally graft.ops.Scale.deleteTree(dir)
   }
 
@@ -71,14 +75,24 @@ class GoldenSpec extends SparkSpecBase {
   }
 
   test("CSV `test` table registration (reference datasets/test.csv contract)") {
-    val csv = graft.Scratch.tempDir("graft_csv").resolve("test.csv")
-    java.nio.file.Files.writeString(csv,
+    val dir = graft.Scratch.tempDir("graft_csv")
+    /** Registers `text` as `test` and checks the view against Spark's own
+      * header + inferSchema read of the same file: same schema, same rows. */
+    def register(name: String, text: String): Unit = {
+      val csv = dir.resolve(name)
+      java.nio.file.Files.writeString(csv, text)
+      Engine.configure(spark, Engine.Options(csvPath = Some(csv.toString)))
+      val inferred = spark.read.option("header", "true").option("inferSchema", "true")
+        .csv(csv.toString)
+      assert(spark.table("test").schema === inferred.schema, name)
+      assert(spark.table("test").collect().toSeq === inferred.collect().toSeq, name)
+    }
+    register("test.csv",
       """c1,c2,c3
         |a,1,0.5
         |b,2,1.5
         |a,3,2.5
         |""".stripMargin)
-    Engine.configure(spark, Engine.Options(csvPath = Some(csv.toString)))
     val rows = spark.sql(
       "SELECT c1, sum(c2) AS s FROM test GROUP BY c1 ORDER BY c1").collect()
     assert(rows.toSeq == Seq(Row("a", 4L), Row("b", 2L)))
@@ -86,6 +100,22 @@ class GoldenSpec extends SparkSpecBase {
     val sch = spark.table("test").schema
     assert(sch("c2").dataType.typeName == "integer")
     assert(sch("c3").dataType.typeName == "double")
+    // blank lines, the header repeated, a quoted comma, an empty and a
+    // duplicated column name, an integer past the Long range, a date and
+    // a null
+    register("edge.csv",
+      """
+        |,dup,dup,n,big,d,q
+        |a,1,x,1.5,12345678901234567890123,2024-01-15,"p, q"
+        |
+        |,dup,dup,n,big,d,q
+        |b,,y,2,-99999999999999999999,2024-02-29,r
+        |c,3,z,,1,,"s"
+        |""".stripMargin)
+    val edge = spark.table("test").schema
+    assert(edge.fieldNames.toSeq == Seq("_c0", "dup1", "dup2", "n", "big", "d", "q"), edge)
+    assert(edge("big").dataType.typeName == "decimal(23,0)" &&
+      edge("d").dataType.typeName == "date" && edge("n").dataType.typeName == "double", edge)
   }
 
   test("bundled aggregate_test_100 fixture registers as `test` by default") {

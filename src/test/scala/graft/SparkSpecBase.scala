@@ -29,8 +29,8 @@ trait SparkSpecBase extends AnyFunSuite {
 /** Runs a main class in a child JVM on this JVM's classpath and module
   * flags, with `java.io.tmpdir` at `tmp`, working directory `cwd` and
   * `env` added to this JVM's environment, fed `stdin` and then
-  * end-of-input. Returns the exit code and the child's stdout lines
-  * (its stderr is discarded). */
+  * end-of-input. Returns the exit code and the child's stdout lines,
+  * decoded as UTF-8 (its stderr is discarded). */
 object ChildJvm {
   def run(main: String, args: Seq[String], tmp: java.nio.file.Path,
       cwd: java.nio.file.Path, env: Map[String, String] = Map.empty,
@@ -53,7 +53,7 @@ object ChildJvm {
     val p = pb.start()
     val in = p.getOutputStream
     try in.write(stdin.getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally in.close()
-    val out = scala.io.Source.fromInputStream(p.getInputStream).getLines().toList
+    val out = scala.io.Source.fromInputStream(p.getInputStream, "UTF-8").getLines().toList
     (p.waitFor(), out)
   }
 }
